@@ -17,6 +17,7 @@ from collections import defaultdict
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
 from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming.listener import JStreamingQueryListener, QueryProgressEvent
 
 
 # prometheus.DefBuckets — the reference registers its duration histograms
@@ -44,15 +45,18 @@ class MetricsRegistry:
         with self._lock:
             self.counters[(name, tuple(sorted(labels.items())))] += by
 
-    def observe(self, name: str, labels: dict[str, str], seconds: float) -> None:
+    def observe(
+        self, name: str, labels: dict[str, str], seconds: float, count: int = 1
+    ) -> None:
+        """Record ``count`` observations of ``seconds`` each."""
         key = (name, tuple(sorted(labels.items())))
         with self._lock:
-            self.dur_sum[key] += seconds
-            self.dur_count[key] += 1
+            self.dur_sum[key] += seconds * count
+            self.dur_count[key] += count
             counts = self.dur_buckets.setdefault(key, [0] * len(self.buckets))
             for i, le in enumerate(self.buckets):
                 if seconds <= le:
-                    counts[i] += 1
+                    counts[i] += count
 
     @staticmethod
     def _fmt_labels(labels: tuple) -> str:
@@ -81,14 +85,41 @@ class MetricsRegistry:
         return "\n".join(out) + "\n"
 
 
+class _JsonProgressListener(JStreamingQueryListener):
+    """Hands each progress event to Python as ONE JSON string.
+
+    PySpark's default bridge converts a progress event field by field over
+    py4j, and every Java-map iteration in it ends in a
+    ``NoSuchElementException`` whose conversion probes the class path:
+    hundreds of round trips per event. ``progress().json()`` is two."""
+
+    def onQueryProgress(self, jevent) -> None:  # noqa: N802 (Spark API name)
+        self.pylistener.onQueryProgress(
+            QueryProgressEvent.fromJson({"progress": json.loads(jevent.progress().json())})
+        )
+
+
 class ConnectorMetricsListener(StreamingQueryListener):
     """Maps streaming progress to the reference's metric names:
     `connector_change_event_processing_duration_seconds` (per-event duration,
-    prometheus.go:18-26) — observed here as batch duration spread over batch
-    rows — and input counters per pipeline."""
+    prometheus.go:18-26) — the batch duration spread over the batch's rows,
+    one observation per event like the reference's per-event ``Observe`` —
+    and input counters per pipeline."""
 
     def __init__(self, registry: MetricsRegistry) -> None:
         self.registry = registry
+
+    @property
+    def _jlistener(self):
+        # addListener registers this JVM-side wrapper; it routes progress
+        # events through the JSON bridge above
+        if not hasattr(self, "_jlistenerobj"):
+            from pyspark import SparkContext
+
+            self._jlistenerobj = SparkContext._jvm.PythonStreamingQueryListenerWrapper(
+                _JsonProgressListener(self)
+            )
+        return self._jlistenerobj
 
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API name)
         pass
@@ -101,13 +132,12 @@ class ConnectorMetricsListener(StreamingQueryListener):
         labels = {"collection": str(name)}
         self.registry.inc("connector_events_total", labels, rows)
         if rows:
-            per_event = batch_s / rows
-            for _ in range(min(int(rows), 1)):  # one observation per batch
-                self.registry.observe(
-                    "connector_change_event_processing_duration_seconds",
-                    labels,
-                    per_event,
-                )
+            self.registry.observe(
+                "connector_change_event_processing_duration_seconds",
+                labels,
+                batch_s / rows,
+                count=int(rows),
+            )
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass

@@ -19,6 +19,12 @@ is single-threaded (client.go:217-257). Here each micro-batch is sorted by
 resume token and written atomically per epoch; batch N+1 only commits after
 N (epoch serialization) — the same per-collection total order with batch
 granularity.
+
+Cost per epoch: the transform and the invalidate check are column
+expressions built once per pipeline, and the check is an ``Observation``
+riding the sink's write. In total-order mode the sink's window follows its
+``coalesce(1)``, so no Exchange is planned and the epoch is ONE Spark job;
+per-key mode adds the map stage of its shuffle on the document key.
 """
 
 from __future__ import annotations
@@ -27,7 +33,7 @@ import threading
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -42,6 +48,26 @@ from mongodb_nats_connector_spark.sources.change_events import read_change_event
 from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
 
 
+def change_event_columns(
+    stream_name: str, keep_document_key: bool = False
+) -> tuple[Column, list[Column]]:
+    """O4-O8 as column expressions: the publishable-op predicate (O5) and the
+    message projection — msg id, routing subject (O8), relaxed-ExtJSON body
+    (O7), cluster time and, for the sink's per-key-ordered mode, the document
+    key. Built once per pipeline and applied to every epoch."""
+    cols = [
+        F.col("_id_data").alias("msg_id"),  # Nats-Msg-Id (nats/client.go:124)
+        F.concat(
+            F.lit(stream_name), F.lit("."), F.col("operation_type")
+        ).alias("subject"),
+        envelope_to_extjson().alias("data"),
+        F.col("cluster_time"),
+    ]
+    if keep_document_key:
+        cols.append(F.col("document_key_id").alias("document_key"))
+    return F.col("operation_type").isin(*PUBLISHABLE_OPERATION_TYPES), cols
+
+
 def transform_change_events(
     events: DataFrame, stream_name: str, keep_document_key: bool = False
 ) -> DataFrame:
@@ -53,24 +79,8 @@ def transform_change_events(
     map-only stage at any scale. ``keep_document_key`` carries the document
     key through for the sink's per-key-ordered mode.
     """
-    cols = [
-        F.col("_id_data").alias("msg_id"),  # Nats-Msg-Id (nats/client.go:124)
-        F.concat(
-            F.lit(stream_name), F.lit("."), F.col("operation_type")
-        ).alias("subject"),
-        envelope_to_extjson().alias("data"),
-        F.col("cluster_time"),
-    ]
-    if keep_document_key:
-        cols.append(F.col("document_key_id").alias("document_key"))
-    return events.filter(
-        F.col("operation_type").isin(*PUBLISHABLE_OPERATION_TYPES)
-    ).select(*cols)
-
-
-def detect_invalidate(events: DataFrame) -> DataFrame:
-    """O6: invalidate markers terminate the stream (client.go:232-235)."""
-    return events.filter(F.col("operation_type") == INVALIDATE_OPERATION_TYPE)
+    publishable, cols = change_event_columns(stream_name, keep_document_key)
+    return events.filter(publishable).select(*cols)
 
 
 @dataclass
@@ -146,14 +156,30 @@ class Connector:
         """foreachBatch body: publish the batch's publishable events, then —
         O6 — if the batch carries an invalidate marker, flag the pipeline and
         stop its query after the epoch (client.go:232-235: the reference
-        stops resuming the dropped collection; siblings keep running)."""
+        stops resuming the dropped collection; siblings keep running).
+
+        The invalidate check is an ``Observation`` on the raw batch, so it
+        rides the publish job instead of re-scanning the batch; the filter
+        and projection are built once, here, not per epoch."""
+        publishable, cols = change_event_columns(
+            stream_name, keep_document_key=self.order_within_key
+        )
+        invalidates = F.count_if(
+            F.col("operation_type") == INVALIDATE_OPERATION_TYPE
+        ).alias("invalidates")
+        document_key = F.col("document_key_id")
 
         def handle(batch: DataFrame, epoch_id: int) -> None:
-            out = transform_change_events(
-                batch, stream_name, keep_document_key=self.order_within_key
-            )
+            if self.order_within_key:
+                # The sink's per-key window reuses this shuffle. Placing it
+                # under the observation keeps the invalidate count when no
+                # row is publishable: AQE replaces a shuffle stage without
+                # output by an empty relation, observations inside it too.
+                batch = batch.repartition(document_key)
+            seen = Observation()
+            out = batch.observe(seen, invalidates).filter(publishable).select(*cols)
             sink.publish_batch(out, epoch_id)
-            if not detect_invalidate(batch).isEmpty():
+            if seen.get["invalidates"]:
                 lifecycle["invalidated"] = True
                 query = lifecycle.get("query")
                 if query is not None:

@@ -14,6 +14,12 @@ commit re-publishes the same batch into the same location — at-least-once
 publish, msg-id-keyed storage, exactly-once observable state. Consumers read
 through ``read_messages`` which additionally dedups by msg_id, mirroring the
 NATS consumer-side dedup window.
+
+In total-order mode an epoch's publish is ONE Spark job: the ``coalesce(1)``
+comes before the ordering window, so no Exchange is planned and a single task
+reads, serializes, sorts and writes. The NATS counts (and the pipeline's
+invalidate check) are ``Observation`` aggregates riding the write, in either
+mode.
 """
 
 from __future__ import annotations
@@ -21,9 +27,11 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from mongodb_nats_connector_spark.config import PUBLISHABLE_OPERATION_TYPES
 
 
 class JetStreamLikeSink:
@@ -49,70 +57,67 @@ class JetStreamLikeSink:
         ``nats_messages_published_total{subject}`` /
         ``nats_messages_failed_total{subject}`` counters and
         ``nats_message_duration_seconds{subject}`` — observed once per epoch
-        here (the reference observes per message; counter VALUES match)."""
+        here (the reference observes per message; counter VALUES match).
+
+        The sequence column and the metric aggregates are built here, once:
+        every epoch applies the same column expressions to a new batch, and
+        each ``functions`` call costs round trips to the JVM."""
         self.spark = spark
         self.stream_dir = stream_dir
         self.stream_name = stream_name
         self.order_within_key = order_within_key
         self.metrics = metrics
         self.messages_dir = os.path.join(stream_dir, "messages")
+        order = (
+            Window.partitionBy("document_key") if order_within_key else Window
+        ).orderBy("msg_id")
+        self._seq_in_epoch = F.row_number().over(order)
+        # Subjects are enumerable — `<STREAM>.<operationType>` over the four
+        # publishable op types — so the NATS counts are a row of conditional
+        # counts riding the write job (no extra Spark job per epoch).
+        self._subjects = [f"{stream_name}.{op}" for op in PUBLISHABLE_OPERATION_TYPES]
+        self._subject_counts = [
+            F.count_if(F.col("subject") == s).alias(f"n_{i}")
+            for i, s in enumerate(self._subjects)
+        ] + [F.count(F.lit(1)).alias("n_total")]
 
     # O13 — idempotent DDL bootstrap (AddStream)
     def add_stream(self) -> None:
         os.makedirs(self.messages_dir, exist_ok=True)
 
-    # O9 — publish with idempotency key; called per epoch by foreachBatch
-    def publish_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def epoch_messages(self, batch: DataFrame, epoch_id: int) -> DataFrame:
+        """The epoch's messages as written: ``batch`` plus ``seq_in_epoch``
+        (its position in token order) and ``epoch``.
+
+        Total order (the reference's order is token order, client.go:217-257)
+        coalesces to one partition BEFORE the unpartitioned window: a single
+        partition already satisfies the window's all-rows distribution, so no
+        Exchange is planned and one task reads, serializes, sorts and writes
+        the epoch — the price of a total order, exactly like the reference's
+        single-threaded loop. Per-key order numbers rows within each
+        ``document_key``; different documents write concurrently behind the
+        window's one shuffle on the key."""
         if self.order_within_key:
             if "document_key" not in batch.columns:
                 raise ValueError(
                     "order_within_key sink requires a document_key column "
                     "(transform_change_events(..., keep_document_key=True))"
                 )
-            # Per-key order: rows for one document are numbered in token
-            # order; different documents write concurrently. No coalesce —
-            # the epoch write parallelizes across all partitions.
-            w = Window.partitionBy("document_key").orderBy("msg_id")
-            ordered = batch.withColumn(
-                "seq_in_epoch", F.row_number().over(w)
-            ).withColumn("epoch", F.lit(int(epoch_id)))
-            writer = ordered
         else:
-            # Per-collection total order within the epoch: sort by resume
-            # token (the reference's order is token order, client.go:217-257)
-            # and tag each row with its in-epoch sequence so consumers can
-            # verify order. The global window forces one task per epoch —
-            # the price of a total order, exactly like the reference's
-            # single-threaded loop.
-            w = Window.partitionBy().orderBy("msg_id")
-            ordered = batch.withColumn(
-                "seq_in_epoch", F.row_number().over(w)
-            ).withColumn("epoch", F.lit(int(epoch_id)))
-            writer = ordered.coalesce(1)
-        # Per-subject message counts for the NATS metrics ride the WRITE job
-        # itself via Observation (no extra Spark job per epoch). Subjects are
-        # enumerable — `<STREAM>.<operationType>` over the four publishable
-        # op types — so the observation is a row of conditional counts.
-        observation = None
-        op_subjects: list[str] = []
-        if self.metrics is not None:
-            from pyspark.sql import Observation
+            batch = batch.coalesce(1)
+        return batch.withColumns(
+            {"seq_in_epoch": self._seq_in_epoch, "epoch": F.lit(int(epoch_id))}
+        )
 
-            op_subjects = [
-                f"{self.stream_name}.{op}"
-                for op in ("insert", "update", "replace", "delete")
-            ]
+    # O9 — publish with idempotency key; called per epoch by foreachBatch.
+    # An epoch without publishable rows writes an empty partition: the
+    # consumer view is unchanged, and no job is spent checking first.
+    def publish_batch(self, batch: DataFrame, epoch_id: int) -> None:
+        writer = self.epoch_messages(batch, epoch_id)
+        observation = None
+        if self.metrics is not None:
             observation = Observation()
-            writer = writer.observe(
-                observation,
-                *[
-                    F.count_if(F.col("subject") == s).alias(f"n_{i}")
-                    for i, s in enumerate(op_subjects)
-                ],
-                F.count(F.lit(1)).alias("n_total"),
-            )
+            writer = writer.observe(observation, *self._subject_counts)
         t0 = time.perf_counter()
         try:
             # Epoch-keyed overwrite = replay-safe (idempotent) publish.
@@ -137,7 +142,7 @@ class JetStreamLikeSink:
             elapsed = time.perf_counter() - t0
             got = observation.get  # blocks until the write's listener fires
             counted = 0
-            for i, subject in enumerate(op_subjects):
+            for i, subject in enumerate(self._subjects):
                 n = int(got[f"n_{i}"])
                 counted += n
                 if n:

@@ -10,25 +10,51 @@ Scenario sources (reference files under /root/reference/):
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.config import CollectionConfig, ConnectorConfig
 from mongodb_nats_connector_spark.functions.extjson import (
+    CHANGE_EVENT_SCHEMA,
     envelope_to_extjson,
     extjson_get_date,
     extjson_get_oid,
 )
 from mongodb_nats_connector_spark.sources.change_events import (
+    generate_change_event_rows,
     generate_change_events,
     write_change_event_feed,
 )
+from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
 from mongodb_nats_connector_spark.streaming.pipeline import (
     Connector,
-    detect_invalidate,
     transform_change_events,
 )
+from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
+
+COLL1 = ConnectorConfig(
+    collections=[CollectionConfig(db_name="test-connector-db", coll_name="coll1")]
+)
+
+
+def _land(spark, feed, rows):
+    """Append one feed file holding ``rows`` (a later arrival)."""
+    spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(feed)
+
+
+def _jobs_since(spark, group, before):
+    """Spark jobs of job group ``group`` not in ``before``, with their stages,
+    through SparkStatusTracker (a query tags its jobs with its runId)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener events
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in set(tracker.getJobIdsForGroup(group)) - before]
+    stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+    return jobs, stages
 
 
 def _connector(spark, tmp_path, n_docs=10, **feed_kw):
@@ -269,13 +295,164 @@ def test_nats_publish_metrics_exposed(spark, tmp_path):
     assert "nats_messages_failed_total" not in text  # nothing failed
 
 
-def test_invalidate_detected(spark):
+def test_invalidate_detected(spark, tmp_path):
     """O6: invalidate markers are detectable for stream termination
-    (client.go:232-235)."""
-    ev = generate_change_events(spark, n_docs=2, with_noise_tail=True)
-    inv = detect_invalidate(ev)
-    assert inv.count() == 1
-    assert inv.first().operation_type == "invalidate"
+    (client.go:232-235): the batch handler flags a batch that carries one,
+    and only such a batch."""
+    sink = JetStreamLikeSink(spark, str(tmp_path / "stream"), "COLL1")
+    sink.add_stream()
+    conn = Connector(spark, COLL1, {}, sink_root=str(tmp_path / "sink"))
+    for epoch, noise in enumerate((False, True)):
+        lifecycle: dict = {}
+        ev = generate_change_events(spark, n_docs=2, with_noise_tail=noise)
+        assert ev.filter(F.col("operation_type") == "invalidate").count() == int(noise)
+        conn._batch_handler(sink, "COLL1", lifecycle)(ev, epoch)
+        assert lifecycle.get("invalidated", False) is noise, f"epoch {epoch}"
+
+
+@pytest.mark.parametrize("order_within_key, n_jobs", [(False, 1), (True, 2)])
+def test_invalidate_flagged_by_the_publish_job(spark, tmp_path, order_within_key, n_jobs):
+    """O6 (client.go:232-235): the handler flags a batch carrying an
+    invalidate marker — and not one without — also when no event of the
+    batch is publishable (a dropped collection's drop + invalidate). The
+    check rides the publish job: one Spark job per epoch in total-order
+    mode, the shuffle's map stage and the write in per-key mode."""
+    sink = JetStreamLikeSink(
+        spark, str(tmp_path / "stream"), "COLL1", order_within_key=order_within_key
+    )
+    sink.add_stream()
+    conn = Connector(
+        spark, COLL1, {}, sink_root=str(tmp_path / "sink"), order_within_key=order_within_key
+    )
+    sc = spark.sparkContext
+    cases = [(2, False, False), (2, True, True), (0, True, True)]  # docs, noise tail, flagged
+    for epoch, (n_docs, noise, flagged) in enumerate(cases):
+        lifecycle: dict = {}
+        handle = conn._batch_handler(sink, "COLL1", lifecycle)
+        group = f"invalidate-check-{order_within_key}-{epoch}"
+        sc.setJobGroup(group, "one epoch of the batch handler")
+        try:
+            batch = generate_change_events(
+                spark, n_docs=n_docs, with_noise_tail=noise, with_duplicates=False
+            )
+            handle(batch, epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert lifecycle.get("invalidated", False) is flagged, f"epoch {epoch}"
+        jobs, _ = _jobs_since(spark, group, set())
+        assert len(jobs) == n_jobs, f"epoch {epoch} ran {len(jobs)} jobs"
+    assert sink.message_count(deduped=False) == 2 * 8  # noise never published
+
+
+@pytest.mark.parametrize("order_within_key, n_jobs", [(False, 1), (True, 2)])
+def test_epoch_job_shape(spark, tmp_path, monkeypatch, order_within_key, n_jobs):
+    """One epoch is one Spark job in total-order mode: the window follows the
+    ``coalesce(1)``, so the executed plan has no Exchange and one task reads,
+    serializes, sorts and writes, with the invalidate check and the NATS
+    counts riding it. Per-key mode runs two: its document_key shuffle's map
+    stage and the write."""
+    plans: list[str] = []
+    epoch_messages = JetStreamLikeSink.epoch_messages
+
+    def record(sink, batch, epoch_id):
+        out = epoch_messages(sink, batch, epoch_id)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(JetStreamLikeSink, "epoch_messages", record)
+    rows = generate_change_event_rows(n_docs=20, with_noise_tail=False, with_duplicates=False)
+    feed = str(tmp_path / "feed")
+    _land(spark, feed, rows[:40])
+    conn = Connector(
+        spark, COLL1, {"test-connector-db.coll1": feed}, sink_root=str(tmp_path / "sink"),
+        order_within_key=order_within_key, metrics=MetricsRegistry(),
+    )
+    # small scan splits, so the epoch's input spans several partitions
+    split = {"spark.sql.files.maxPartitionBytes": "2k", "spark.sql.files.openCostInBytes": "0"}
+    saved = {k: spark.conf.get(k) for k in split}
+    for k, v in split.items():
+        spark.conf.set(k, v)
+    try:
+        (h,) = conn.start()
+        conn.process_all_available()
+        group = str(h.query.runId)
+        before, _ = _jobs_since(spark, group, set())
+        _land(spark, feed, rows[40:])
+        conn.process_all_available()
+        assert h.query.lastProgress["batchId"] == 1
+        jobs, stages = _jobs_since(spark, group, {j.jobId for j in before})
+    finally:
+        conn.stop()
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(jobs) == n_jobs, f"batch 1 ran {len(jobs)} jobs"
+    if order_within_key:
+        assert plans[-1].count("Exchange") == 1, plans[-1]
+        assert "Exchange hashpartitioning(document_key_id" in plans[-1], plans[-1]
+        assert max(st.numTasks for st in stages) > 1  # the map stage: one task per split
+    else:
+        assert "Exchange" not in plans[-1], plans[-1]
+        assert [st.numTasks for st in stages] == [1]
+    assert h.sink.message_count() == 80
+
+
+@pytest.mark.parametrize("order_within_key", [False, True])
+def test_epoch_of_only_drop_rename_publishes_nothing(spark, tmp_path, order_within_key):
+    """An epoch whose file holds only drop/rename events commits and writes
+    an empty partition: the deduped view and the NATS counters do not move,
+    and a later file still publishes in token order (per key, in per-key
+    mode)."""
+    rows = generate_change_event_rows(n_docs=3, with_duplicates=False)
+    first, noise = rows[:12], rows[12:14]  # docs 0-2; drop, rename
+    assert {r[1] for r in noise} == {"drop", "rename"}
+    later = generate_change_event_rows(n_docs=10, with_noise_tail=False, with_duplicates=False)[16:]
+    feed = str(tmp_path / "feed")
+    _land(spark, feed, first)
+    registry = MetricsRegistry()
+    conn = Connector(
+        spark, COLL1, {"test-connector-db.coll1": feed},
+        sink_root=str(tmp_path / "sink"), order_within_key=order_within_key, metrics=registry,
+    )
+    (h,) = conn.start()
+
+    def view():
+        order = ("document_key",) if order_within_key else ()
+        return [
+            (r.msg_id, r.epoch, r.seq_in_epoch, r.data)
+            for r in h.sink.read_messages().orderBy(*order, "epoch", "seq_in_epoch").collect()
+        ]
+
+    def nats():
+        return {k: v for k, v in registry.counters.items() if k[0].startswith("nats_")}, dict(
+            registry.dur_count
+        )
+
+    try:
+        conn.process_all_available()
+        before, counters = view(), nats()
+        _land(spark, feed, noise)
+        conn.process_all_available()
+        assert h.query.lastProgress["batchId"] == 1
+        checkpoint = str(tmp_path / "sink" / "checkpoints" / COLL1.collections[0].checkpoint_name)
+        assert os.path.exists(os.path.join(checkpoint, "commits", "1")), "epoch 1 not committed"
+        assert view() == before
+        assert nats() == counters
+        _land(spark, feed, later)
+        conn.process_all_available()
+    finally:
+        conn.stop()
+    assert not h.invalidated
+    msgs = h.sink.read_messages().collect()
+    assert sorted(m.msg_id for m in msgs) == sorted(r[0] for r in first + later)
+    streams: dict = {}  # the whole stream, or one per document key
+    for m in sorted(msgs, key=lambda m: (m.epoch, m.seq_in_epoch)):
+        streams.setdefault(m.document_key if order_within_key else None, []).append(m.msg_id)
+    for ids in streams.values():
+        assert ids == sorted(ids), "token order violated"
+    published = sum(
+        v for (name, _), v in registry.counters.items() if name == "nats_messages_published_total"
+    )
+    assert published == len(first) + len(later)
 
 
 def test_extjson_envelope_roundtrip(spark):

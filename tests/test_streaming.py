@@ -184,6 +184,12 @@ def test_observability_endpoints(spark, events_feed):
             and 'collection="obs_q"' in ln
         )
         assert cum[-1] == int(count_line.rsplit(" ", 1)[1])
+        # one observation per event, like the reference's per-event Observe
+        events_line = next(
+            ln for ln in metrics.splitlines()
+            if ln.startswith('connector_events_total{collection="obs_q"}')
+        )
+        assert int(count_line.rsplit(" ", 1)[1]) == int(events_line.rsplit(" ", 1)[1]) > 0
         # 404 handling
         try:
             urllib.request.urlopen(f"http://127.0.0.1:{server.port}/nope")
