@@ -10,9 +10,8 @@ streaming pipeline per watched collection, and the HTTP observability server
 then exit, like the reference's signal-context shutdown (main.go:57-75).
 
 ``--source-root`` maps each watched ``<db>.<coll>`` to the change-event feed
-directory ``<source-root>/<db>.<coll>`` (the file-backed stand-in for a Mongo
-change stream in this environment; a real Mongo deployment swaps in
-``format("mongo_changestream")`` pointed at MONGO_URI with no other change).
+directory ``<source-root>/<db>.<coll>``, the file-backed stand-in for a Mongo
+change stream.
 ``--once`` drains everything currently available and exits 0 — the batch/CI
 mode; without it the process serves until terminated.
 """

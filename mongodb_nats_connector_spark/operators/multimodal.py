@@ -17,7 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -1082,1267 +1081,5 @@ def _ico_dir_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 "max_width": pd.Series(ws, dtype="Int64"),
                 "max_height": pd.Series(hs, dtype="Int64"),
                 "total_declared_bytes": pd.Series(ts, dtype="Int64"),
-            }
-        )
-
-
-# ---------------------------------------------------------------------------
-# ZIP central-directory walking (EOCD backward scan + record walk)
-# ---------------------------------------------------------------------------
-
-ZIP_CDIR_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_entries", LongType()),
-        StructField("n_deflated", LongType()),
-        StructField("total_compressed", LongType()),
-        StructField("total_uncompressed", LongType()),
-        StructField("name_bytes", LongType()),
-    ]
-)
-
-
-def walk_zip_central_dir(
-    payload: bytes,
-) -> tuple[int, int, int, int, int] | None:
-    """Walk a ZIP central directory: backward-scan the tail for the EOCD
-    signature (PK\\x05\\x06, comment-tolerant like every real unzipper),
-    read the entry count / directory size / offset, then walk the 46-byte
-    central file headers (PK\\x01\\x02) collecting method, sizes and name
-    lengths. Directory walk only — local headers and payload bytes are
-    never dereferenced. Malformed input is a typed miss (None).
-    """
-    import struct
-
-    if len(payload) < 22:
-        return None
-    tail_start = max(0, len(payload) - 65557)
-    eocd = payload.rfind(b"PK\x05\x06", tail_start)
-    if eocd < 0 or eocd + 22 > len(payload):
-        return None
-    (n_total,) = struct.unpack_from("<H", payload, eocd + 10)
-    cd_size, cd_off = struct.unpack_from("<II", payload, eocd + 12)
-    if n_total == 0 or cd_off + cd_size > len(payload):
-        return None
-    pos = cd_off
-    n_deflated = total_c = total_u = name_bytes = 0
-    for _ in range(n_total):
-        if pos + 46 > len(payload) or payload[pos : pos + 4] != b"PK\x01\x02":
-            return None
-        (method,) = struct.unpack_from("<H", payload, pos + 10)
-        csize, usize = struct.unpack_from("<II", payload, pos + 20)
-        nlen, elen, clen = struct.unpack_from("<HHH", payload, pos + 28)
-        if method == 8:
-            n_deflated += 1
-        total_c += csize
-        total_u += usize
-        name_bytes += nlen
-        pos += 46 + nlen + elen + clen
-    return n_total, n_deflated, total_c, total_u, name_bytes
-
-
-def _zip_cdir_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched ZIP central-directory walking; malformed payloads
-    yield the typed-miss row."""
-    for pdf in batches:
-        ids, ns, nd, tc, tu, nb = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            meta = walk_zip_central_dir(bytes(payload))
-            ids.append(doc_id)
-            if meta is None:
-                for lst in (ns, nd, tc, tu, nb):
-                    lst.append(None)
-            else:
-                a, b, c, d, e = meta
-                ns.append(a)
-                nd.append(b)
-                tc.append(c)
-                tu.append(d)
-                nb.append(e)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "n_entries": pd.Series(ns, dtype="Int64"),
-                "n_deflated": pd.Series(nd, dtype="Int64"),
-                "total_compressed": pd.Series(tc, dtype="Int64"),
-                "total_uncompressed": pd.Series(tu, dtype="Int64"),
-                "name_bytes": pd.Series(nb, dtype="Int64"),
-            }
-        )
-
-
-# ---------------------------------------------------------------------------
-# FLAC STREAMINFO parsing (bit-packed fields)
-# ---------------------------------------------------------------------------
-
-FLAC_INFO_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("sample_rate", LongType()),
-        StructField("channels", LongType()),
-        StructField("bits_per_sample", LongType()),
-        StructField("total_samples", LongType()),
-        StructField("duration_ms", LongType()),
-    ]
-)
-
-
-def parse_flac_streaminfo(
-    payload: bytes,
-) -> tuple[int, int, int, int, int] | None:
-    """Parse a FLAC STREAMINFO block: verify the fLaC marker and a first
-    metadata block of type 0 / length 34, then BIT-unpack the packed
-    64-bit field group — sample rate (20 bits), channels-1 (3), bits per
-    sample-1 (5), total samples (36) — the one container grammar here
-    where fields do not align to bytes at all. duration_ms floors
-    1000*total/rate (bounded: total < 2^36, no Int64 overflow possible).
-    Malformed input is a typed miss (None).
-    """
-    import struct
-
-    if len(payload) < 8 + 34:
-        return None
-    if payload[:4] != b"fLaC":
-        return None
-    hdr = payload[4]
-    block_type = hdr & 0x7F
-    (length,) = struct.unpack(">I", b"\x00" + payload[5:8])
-    if block_type != 0 or length != 34:
-        return None
-    (packed,) = struct.unpack_from(">Q", payload, 8 + 10)
-    rate = packed >> 44
-    channels = ((packed >> 41) & 0x7) + 1
-    bps = ((packed >> 36) & 0x1F) + 1
-    total = packed & ((1 << 36) - 1)
-    if rate == 0:
-        return None
-    return rate, channels, bps, total, (1000 * total) // rate
-
-
-def _flac_info_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched FLAC STREAMINFO parsing; malformed payloads yield
-    the typed-miss row."""
-    for pdf in batches:
-        ids, rs, cs, bs, ts, ds = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            meta = parse_flac_streaminfo(bytes(payload))
-            ids.append(doc_id)
-            if meta is None:
-                for lst in (rs, cs, bs, ts, ds):
-                    lst.append(None)
-            else:
-                r, c, b, t, d = meta
-                rs.append(r)
-                cs.append(c)
-                bs.append(b)
-                ts.append(t)
-                ds.append(d)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "sample_rate": pd.Series(rs, dtype="Int64"),
-                "channels": pd.Series(cs, dtype="Int64"),
-                "bits_per_sample": pd.Series(bs, dtype="Int64"),
-                "total_samples": pd.Series(ts, dtype="Int64"),
-                "duration_ms": pd.Series(ds, dtype="Int64"),
-            }
-        )
-
-
-# ---------------------------------------------------------------------------
-# WebP VP8X feature parsing (24-bit LE minus-one dimension encoding)
-# ---------------------------------------------------------------------------
-
-WEBP_VP8X_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("has_alpha", LongType()),
-        StructField("has_animation", LongType()),
-        StructField("riff_size", LongType()),
-    ]
-)
-
-
-def parse_webp_vp8x(payload: bytes) -> tuple[int, int, int, int, int] | None:
-    """Parse an extended-format WebP header: RIFF/WEBP container, VP8X
-    chunk with the feature-flag byte (alpha bit 4, animation bit 1) and
-    the canvas dimensions stored as 24-BIT LITTLE-ENDIAN MINUS-ONE values
-    — the grammar quirk no other walker here has. Header walk only; the
-    image-data chunks are not dereferenced. Malformed input is a typed
-    miss (None).
-    """
-    import struct
-
-    if len(payload) < 30:
-        return None
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
-        return None
-    (riff_size,) = struct.unpack_from("<I", payload, 4)
-    if payload[12:16] != b"VP8X":
-        return None
-    (chunk_len,) = struct.unpack_from("<I", payload, 16)
-    if chunk_len != 10:
-        return None
-    flags = payload[20]
-    has_alpha = (flags >> 4) & 1
-    has_anim = (flags >> 1) & 1
-    w = int.from_bytes(payload[24:27], "little") + 1
-    h = int.from_bytes(payload[27:30], "little") + 1
-    return w, h, has_alpha, has_anim, riff_size
-
-
-def _webp_vp8x_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched WebP VP8X parsing; malformed payloads yield the
-    typed-miss row."""
-    for pdf in batches:
-        ids, ws, hs, al, an, rs = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            meta = parse_webp_vp8x(bytes(payload))
-            ids.append(doc_id)
-            if meta is None:
-                for lst in (ws, hs, al, an, rs):
-                    lst.append(None)
-            else:
-                w, h, a, m, r = meta
-                ws.append(w)
-                hs.append(h)
-                al.append(a)
-                an.append(m)
-                rs.append(r)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "width": pd.Series(ws, dtype="Int64"),
-                "height": pd.Series(hs, dtype="Int64"),
-                "has_alpha": pd.Series(al, dtype="Int64"),
-                "has_animation": pd.Series(an, dtype="Int64"),
-                "riff_size": pd.Series(rs, dtype="Int64"),
-            }
-        )
-
-
-# ---------------------------------------------------------------------------
-# ID3v2 header parsing (7-bit syncsafe integers)
-# ---------------------------------------------------------------------------
-
-ID3V2_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("version_major", LongType()),
-        StructField("tag_size", LongType()),
-        StructField("n_frames", LongType()),
-        StructField("frame_bytes", LongType()),
-    ]
-)
-
-
-def _syncsafe(b: bytes) -> int | None:
-    """Decode a 4-byte ID3v2 syncsafe integer (7 bits per byte, MSB of
-    every byte must be 0)."""
-    if len(b) != 4 or any(x & 0x80 for x in b):
-        return None
-    return (b[0] << 21) | (b[1] << 14) | (b[2] << 7) | b[3]
-
-
-def parse_id3v2(payload: bytes) -> tuple[int, int, int, int] | None:
-    """Parse an ID3v2 tag header and walk its frames: 'ID3' marker,
-    version, SYNCSAFE 28-bit tag size (7 useful bits per byte — the
-    unsynchronization-proof integer encoding unique to this grammar),
-    then v2.3-style frames (4-byte id, 4-byte big-endian size, 2 flag
-    bytes). Frame payloads are skipped by length. Malformed input is a
-    typed miss (None).
-    """
-    import struct
-
-    if len(payload) < 10 or payload[:3] != b"ID3":
-        return None
-    ver = payload[3]
-    size = _syncsafe(payload[6:10])
-    if size is None or 10 + size > len(payload):
-        return None
-    pos = 10
-    end = 10 + size
-    n_frames = 0
-    frame_bytes = 0
-    while pos + 10 <= end:
-        fid = payload[pos : pos + 4]
-        if fid == b"\x00\x00\x00\x00":
-            break  # padding
-        if not all(65 <= c <= 90 or 48 <= c <= 57 for c in fid):
-            return None
-        (fsize,) = struct.unpack_from(">I", payload, pos + 4)
-        if pos + 10 + fsize > end:
-            return None
-        n_frames += 1
-        frame_bytes += fsize
-        pos += 10 + fsize
-    return ver, size, n_frames, frame_bytes
-
-
-def _id3v2_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched ID3v2 parsing; malformed payloads yield the
-    typed-miss row."""
-    for pdf in batches:
-        ids, vs, ts, nf, fb = [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            meta = parse_id3v2(bytes(payload))
-            ids.append(doc_id)
-            if meta is None:
-                for lst in (vs, ts, nf, fb):
-                    lst.append(None)
-            else:
-                v, t, n, b = meta
-                vs.append(v)
-                ts.append(t)
-                nf.append(n)
-                fb.append(b)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "version_major": pd.Series(vs, dtype="Int64"),
-                "tag_size": pd.Series(ts, dtype="Int64"),
-                "n_frames": pd.Series(nf, dtype="Int64"),
-                "frame_bytes": pd.Series(fb, dtype="Int64"),
-            }
-        )
-
-
-# ---------------------------------------------------------------------------
-# gzip member-header parsing (flag-conditional optional fields)
-# ---------------------------------------------------------------------------
-
-GZIP_HDR_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("mtime", LongType()),
-        StructField("has_name", LongType()),
-        StructField("name_len", LongType()),
-        StructField("has_comment", LongType()),
-        StructField("comment_len", LongType()),
-        StructField("header_len", LongType()),
-    ]
-)
-
-
-def parse_gzip_header(
-    payload: bytes,
-) -> tuple[int, int, int, int, int, int] | None:
-    """Parse a gzip member header (RFC 1952): magic 1f 8b, deflate method,
-    the FLG byte whose bits make FEXTRA/FNAME/FCOMMENT/FHCRC fields
-    conditionally PRESENT — the flag-conditional grammar the fixed-layout
-    walkers don't exercise — then skip each optional field in spec order
-    (null-terminated names/comments). Returns mtime, name/comment
-    presence + lengths, and the total header length. Malformed input is
-    a typed miss (None).
-    """
-    import struct
-
-    if len(payload) < 10 or payload[:2] != b"\x1f\x8b" or payload[2] != 8:
-        return None
-    flg = payload[3]
-    (mtime,) = struct.unpack_from("<I", payload, 4)
-    pos = 10
-    if flg & 0x04:  # FEXTRA
-        if pos + 2 > len(payload):
-            return None
-        (xlen,) = struct.unpack_from("<H", payload, pos)
-        pos += 2 + xlen
-    name_len = 0
-    if flg & 0x08:  # FNAME
-        end = payload.find(b"\x00", pos)
-        if end < 0:
-            return None
-        name_len = end - pos
-        pos = end + 1
-    comment_len = 0
-    if flg & 0x10:  # FCOMMENT
-        end = payload.find(b"\x00", pos)
-        if end < 0:
-            return None
-        comment_len = end - pos
-        pos = end + 1
-    if flg & 0x02:  # FHCRC
-        pos += 2
-    if pos > len(payload):
-        return None
-    return (
-        mtime,
-        1 if flg & 0x08 else 0,
-        name_len,
-        1 if flg & 0x10 else 0,
-        comment_len,
-        pos,
-    )
-
-
-def _gzip_hdr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched gzip header parsing; malformed payloads yield the
-    typed-miss row."""
-    for pdf in batches:
-        cols = {k: [] for k in ("doc_id", "mtime", "has_name", "name_len",
-                                "has_comment", "comment_len", "header_len")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            meta = parse_gzip_header(bytes(payload))
-            cols["doc_id"].append(doc_id)
-            if meta is None:
-                for k in ("mtime", "has_name", "name_len", "has_comment",
-                          "comment_len", "header_len"):
-                    cols[k].append(None)
-            else:
-                for k, v in zip(
-                    ("mtime", "has_name", "name_len", "has_comment",
-                     "comment_len", "header_len"),
-                    meta,
-                ):
-                    cols[k].append(v)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                **{
-                    k: pd.Series(cols[k], dtype="Int64")
-                    for k in ("mtime", "has_name", "name_len",
-                              "has_comment", "comment_len", "header_len")
-                },
-            }
-        )
-
-
-# ---------------------------------------------------------------------------
-# BSON document walking (the reference connector's native payload format)
-# ---------------------------------------------------------------------------
-
-BSON_DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_elements", LongType()),
-        StructField("n_int32", LongType()),
-        StructField("n_int64", LongType()),
-        StructField("n_strings", LongType()),
-        StructField("int_value_sum", LongType()),
-        StructField("string_bytes", LongType()),
-    ]
-)
-
-
-def walk_bson_doc(
-    payload: bytes,
-) -> tuple[int, int, int, int, int, int] | None:
-    """Walk a BSON document (the wire format of the reference connector's
-    MongoDB change events — /root/reference/internal/mongo/client.go
-    consumes these before the Ext-JSON serialize step this repo ports as
-    functions/extjson.py): little-endian int32 total size, then elements
-    of (type byte, cstring name, typed payload) for the int32 (0x10),
-    int64 (0x12) and string (0x02) types, terminated by a 0x00 byte.
-    Returns the element census by type, the sum of integer values and
-    the total string payload bytes. Malformed input (size mismatch,
-    unknown type, unterminated cstring, missing terminator) is a typed
-    miss (None).
-    """
-    import struct
-
-    if len(payload) < 5:
-        return None
-    (size,) = struct.unpack_from("<i", payload, 0)
-    if size != len(payload):
-        return None
-    pos = 4
-    n32 = n64 = nstr = 0
-    int_sum = 0
-    str_bytes = 0
-    while pos < size - 1:
-        etype = payload[pos]
-        pos += 1
-        end = payload.find(b"\x00", pos)
-        if end < 0 or end >= size - 1:
-            return None
-        pos = end + 1
-        if etype == 0x10:
-            if pos + 4 > size - 1:
-                return None
-            (v,) = struct.unpack_from("<i", payload, pos)
-            int_sum += v
-            n32 += 1
-            pos += 4
-        elif etype == 0x12:
-            if pos + 8 > size - 1:
-                return None
-            (v,) = struct.unpack_from("<q", payload, pos)
-            int_sum += v
-            n64 += 1
-            pos += 8
-        elif etype == 0x02:
-            if pos + 4 > size - 1:
-                return None
-            (slen,) = struct.unpack_from("<i", payload, pos)
-            pos += 4
-            if slen < 1 or pos + slen > size - 1:
-                return None
-            if payload[pos + slen - 1] != 0:
-                return None
-            str_bytes += slen - 1
-            nstr += 1
-            pos += slen
-        else:
-            return None
-    if pos != size - 1 or payload[size - 1] != 0:
-        return None
-    return n32 + n64 + nstr, n32, n64, nstr, int_sum, str_bytes
-
-
-def _bson_doc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched BSON document walking; malformed payloads yield the
-    typed-miss row."""
-    for pdf in batches:
-        cols = {k: [] for k in ("doc_id", "n_elements", "n_int32",
-                                "n_int64", "n_strings", "int_value_sum",
-                                "string_bytes")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            meta = walk_bson_doc(bytes(payload))
-            cols["doc_id"].append(doc_id)
-            keys = ("n_elements", "n_int32", "n_int64", "n_strings",
-                    "int_value_sum", "string_bytes")
-            if meta is None:
-                for k in keys:
-                    cols[k].append(None)
-            else:
-                for k, v in zip(keys, meta):
-                    cols[k].append(v)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                **{
-                    k: pd.Series(cols[k], dtype="Int64")
-                    for k in ("n_elements", "n_int32", "n_int64",
-                              "n_strings", "int_value_sum", "string_bytes")
-                },
-            }
-        )
-
-
-# ---------------------------------------------------------------------------
-# Compressed-payload decoders (round-15 bank): real DEFLATE via zlib, a
-# complete GIF-LZW decompressor, and zlib-wrapped PNG IDAT with filter
-# reconstruction — the payload-decode axis beyond PCM samples / BMP pixels.
-# ---------------------------------------------------------------------------
-
-DEFLATE_STATS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("n_bytes", LongType(), True),
-        StructField("byte_sum", LongType(), True),
-        StructField("byte_min", LongType(), True),
-        StructField("byte_max", LongType(), True),
-        StructField("stream_checksum", LongType(), True),
-    ]
-)
-
-
-def inflate_raw(payload: bytes) -> bytes | None:
-    """REAL DEFLATE decompression (zlib inflate, raw stream / wbits=-15):
-    the payload is an actual RFC 1951 bit stream — fixed-Huffman or stored
-    blocks — whose decode exercises zlib's canonical-Huffman table walk,
-    not a container-grammar skip. Returns None for any malformed stream
-    (typed miss, the multimodal-column contract)."""
-    import zlib
-
-    try:
-        return zlib.decompress(payload, -15)
-    except zlib.error:
-        return None
-
-
-def _deflate_stats_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched inflate + decoded-byte statistics: the weighted
-    checksum sum((i+1)*b_i) pins the DECOMPRESSED byte order, so a
-    bit-packing error anywhere in the Huffman stream either kills the
-    inflate (NULLs) or scrambles the checksum — both driver-visible."""
-    for pdf in batches:
-        cols: dict[str, list] = {k: [] for k in (
-            "doc_id", "n_bytes", "byte_sum", "byte_min", "byte_max",
-            "stream_checksum")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            data = inflate_raw(bytes(payload))
-            cols["doc_id"].append(doc_id)
-            if data is None or len(data) == 0:
-                for k in ("n_bytes", "byte_sum", "byte_min", "byte_max",
-                          "stream_checksum"):
-                    cols[k].append(None)
-            else:
-                cols["n_bytes"].append(len(data))
-                cols["byte_sum"].append(sum(data))
-                cols["byte_min"].append(min(data))
-                cols["byte_max"].append(max(data))
-                cols["stream_checksum"].append(
-                    sum((i + 1) * b for i, b in enumerate(data))
-                )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                **{
-                    k: pd.Series(cols[k], dtype="Int64")
-                    for k in ("n_bytes", "byte_sum", "byte_min",
-                              "byte_max", "stream_checksum")
-                },
-            }
-        )
-
-
-def lzw_decode_gif(data: bytes, min_code_size: int) -> list[int] | None:
-    """Complete GIF-flavor LZW decompressor (pure stdlib): variable code
-    width starting at min_code_size+1 growing to 12 bits, CLEAR resets,
-    EOI termination, LSB-first bit packing, and the KwKwK
-    (code == next_code) case. Returns the decoded pixel-index list, or
-    None for a malformed stream (out-of-range code / missing EOI).
-    Correctness is pinned in tests against an independent compressing
-    encoder driving real dictionary growth across 2/4/7-bit alphabets."""
-    if not 2 <= min_code_size <= 8:
-        return None
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    dict_: dict[int, list[int]] = {i: [i] for i in range(clear)}
-    next_code = eoi + 1
-    out: list[int] = []
-    prev: int | None = None
-    bitpos = 0
-    total_bits = len(data) * 8
-    while bitpos + width <= total_bits:
-        code = 0
-        for b in range(width):
-            p = bitpos + b
-            code |= ((data[p // 8] >> (p % 8)) & 1) << b
-        bitpos += width
-        if code == clear:
-            dict_ = {i: [i] for i in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == eoi:
-            return out
-        if prev is None:
-            if code not in dict_:
-                return None
-            out.extend(dict_[code])
-            prev = code
-            continue
-        if code in dict_:
-            entry = dict_[code]
-        elif code == next_code:
-            entry = dict_[prev] + [dict_[prev][0]]  # KwKwK
-        else:
-            return None
-        out.extend(entry)
-        dict_[next_code] = dict_[prev] + [entry[0]]
-        next_code += 1
-        if next_code == (1 << width) and width < 12:
-            width += 1
-        prev = code
-    return None  # stream exhausted without EOI
-
-
-GIF_PIXEL_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("n_pixels", LongType(), True),
-        StructField("index_sum", LongType(), True),
-        StructField("raster_checksum", LongType(), True),
-        StructField("palette_r_sum", LongType(), True),
-    ]
-)
-
-
-def decode_gif_pixels(
-    payload: bytes,
-) -> tuple[int, int, list[int], list[tuple[int, int, int]]] | None:
-    """REAL GIF pixel decode (pure stdlib): parse the GIF89a logical screen
-    descriptor + global color table, walk to the first image descriptor,
-    reassemble the LZW sub-blocks and run ``lzw_decode_gif`` on the actual
-    compressed bit stream. Returns (w, h, pixel_indices, palette) or None
-    for malformed payloads. Extends the container walkers
-    (multimodal_gif_frame_count skips LZW sub-blocks; this decodes them)."""
-    import struct
-
-    if len(payload) < 14 or payload[:6] not in (b"GIF89a", b"GIF87a"):
-        return None
-    w_s, h_s, packed, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-    pos = 13
-    palette: list[tuple[int, int, int]] = []
-    if packed & 0x80:
-        gct_len = 2 << (packed & 0x07)
-        if len(payload) < pos + 3 * gct_len:
-            return None
-        for i in range(gct_len):
-            palette.append(
-                (payload[pos + 3 * i], payload[pos + 3 * i + 1],
-                 payload[pos + 3 * i + 2])
-            )
-        pos += 3 * gct_len
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x2C:  # image descriptor
-            if len(payload) < pos + 10:
-                return None
-            _l, _t, iw, ih, ipacked = struct.unpack(
-                "<HHHHB", payload[pos + 1:pos + 10]
-            )
-            pos += 10
-            if ipacked & 0x80:  # local color table overrides
-                lct_len = 2 << (ipacked & 0x07)
-                palette = [
-                    (payload[pos + 3 * i], payload[pos + 3 * i + 1],
-                     payload[pos + 3 * i + 2])
-                    for i in range(lct_len)
-                ]
-                pos += 3 * lct_len
-            if pos >= len(payload):
-                return None
-            min_code_size = payload[pos]
-            pos += 1
-            lzw = bytearray()
-            while pos < len(payload):
-                blen = payload[pos]
-                pos += 1
-                if blen == 0:
-                    break
-                lzw += payload[pos:pos + blen]
-                pos += blen
-            pixels = lzw_decode_gif(bytes(lzw), min_code_size)
-            if pixels is None or len(pixels) != iw * ih:
-                return None
-            if palette and max(pixels) >= len(palette):
-                return None
-            return iw, ih, pixels, palette
-        if b == 0x21:  # extension: skip sub-blocks
-            pos += 2
-            while pos < len(payload):
-                blen = payload[pos]
-                pos += 1
-                if blen == 0:
-                    break
-                pos += blen
-        elif b == 0x3B:
-            return None  # trailer before any image
-        else:
-            return None
-    return None
-
-
-def _gif_pixel_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched GIF LZW pixel decode: index sum, raster-order weighted
-    checksum, and the palette-mapped red-channel sum (which only matches
-    the oracle if BOTH the LZW stream and the color table were read
-    correctly)."""
-    cols_i = ("width", "height", "n_pixels", "index_sum",
-              "raster_checksum", "palette_r_sum")
-    for pdf in batches:
-        cols: dict[str, list] = {k: [] for k in ("doc_id",) + cols_i}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            decoded = decode_gif_pixels(bytes(payload))
-            cols["doc_id"].append(doc_id)
-            if decoded is None:
-                for k in cols_i:
-                    cols[k].append(None)
-            else:
-                w, h, px, pal = decoded
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["n_pixels"].append(len(px))
-                cols["index_sum"].append(sum(px))
-                cols["raster_checksum"].append(
-                    sum((i + 1) * p for i, p in enumerate(px))
-                )
-                cols["palette_r_sum"].append(
-                    sum(pal[p][0] for p in px) if pal else None
-                )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                **{
-                    k: pd.Series(cols[k], dtype="Int64") for k in cols_i
-                },
-            }
-        )
-
-
-PNG_PIXEL_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("n_pixels", LongType(), True),
-        StructField("gray_sum", LongType(), True),
-        StructField("raster_checksum", LongType(), True),
-    ]
-)
-
-
-def decode_png_gray8(payload: bytes) -> tuple[int, int, list[int]] | None:
-    """REAL PNG decode for 8-bit grayscale, filters 0 (None) and 1 (Sub)
-    (pure stdlib): walk the chunk grammar, concatenate IDAT, inflate the
-    zlib stream with the WRAPPER checks on (wbits=15 — zlib verifies the
-    adler32 our column-side arithmetic produced), then run the per-scanline
-    filter RECONSTRUCTION. Returns (w, h, pixels in raster order) or None
-    for malformed payloads / unsupported color types / other filters."""
-    import struct
-    import zlib
-
-    if len(payload) < 45 or payload[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    pos = 8
-    w = h = None
-    idat = bytearray()
-    while pos + 8 <= len(payload):
-        (clen,) = struct.unpack(">I", payload[pos:pos + 4])
-        ctype = payload[pos + 4:pos + 8]
-        body = payload[pos + 8:pos + 8 + clen]
-        if len(body) != clen:
-            return None
-        if ctype == b"IHDR":
-            if clen != 13:
-                return None
-            w, h = struct.unpack(">II", body[:8])
-            bit_depth, color_type = body[8], body[9]
-            if bit_depth != 8 or color_type != 0:
-                return None
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        pos += 12 + clen  # length + type + body + crc
-    if not w or not h or not idat:
-        return None
-    try:
-        raw = zlib.decompress(bytes(idat))  # wbits=15: adler32 verified
-    except zlib.error:
-        return None
-    if len(raw) != h * (w + 1):
-        return None
-    pixels: list[int] = []
-    for y in range(h):
-        row = raw[y * (w + 1):(y + 1) * (w + 1)]
-        ftype, data = row[0], row[1:]
-        if ftype == 0:
-            pixels.extend(data)
-        elif ftype == 1:  # Sub: Recon(x) = Filt(x) + Recon(x-1)
-            acc = 0
-            for d in data:
-                acc = (acc + d) % 256
-                pixels.append(acc)
-        else:
-            return None
-    return int(w), int(h), pixels
-
-
-def _png_pixel_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched PNG grayscale decode: gray sum + raster-order weighted
-    checksum — only match the oracle if the zlib wrapper (adler32), the
-    stored-block framing AND the Sub-filter reconstruction were all
-    honored."""
-    cols_i = ("width", "height", "n_pixels", "gray_sum", "raster_checksum")
-    for pdf in batches:
-        cols: dict[str, list] = {k: [] for k in ("doc_id",) + cols_i}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            decoded = decode_png_gray8(bytes(payload))
-            cols["doc_id"].append(doc_id)
-            if decoded is None:
-                for k in cols_i:
-                    cols[k].append(None)
-            else:
-                w, h, px = decoded
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["n_pixels"].append(len(px))
-                cols["gray_sum"].append(sum(px))
-                cols["raster_checksum"].append(
-                    sum((i + 1) * p for i, p in enumerate(px))
-                )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                **{
-                    k: pd.Series(cols[k], dtype="Int64") for k in cols_i
-                },
-            }
-        )
-
-
-RLE8_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("n_pixels", LongType(), True),
-        StructField("index_sum", LongType(), True),
-        StructField("raster_checksum", LongType(), True),
-        StructField("palette_r_sum", LongType(), True),
-    ]
-)
-
-
-def decode_bmp_rle8(
-    payload: bytes,
-) -> tuple[int, int, list[int], list[int]] | None:
-    """REAL BI_RLE8 BMP decompression (pure stdlib): parse the headers and
-    the 256-entry BGRA palette, then run the full RLE8 state machine —
-    encoded-mode runs [n, c], end-of-line [0,0], end-of-bitmap [0,1],
-    delta [0,2,dx,dy] (skipped pixels defined as index 0, the common
-    decoder convention), and absolute mode [0, k>=3, k bytes, pad to
-    even]. Rows are stored BOTTOM-UP; returns (w, h, pixel indices in
-    logical raster order, palette red channel) or None for malformed
-    payloads. The run-length family extends the payload-decode axis
-    beside entropy coding (DEFLATE), dictionary coding (LZW) and plain
-    stride decode (24bpp BMP)."""
-    import struct
-
-    if len(payload) < 54 or payload[:2] != b"BM":
-        return None
-    (offset,) = struct.unpack("<I", payload[10:14])
-    bisize, w, h = struct.unpack("<Iii", payload[14:26])
-    planes, bpp = struct.unpack("<HH", payload[26:30])
-    (compression,) = struct.unpack("<I", payload[30:34])
-    if bisize != 40 or planes != 1 or bpp != 8 or compression != 1:
-        return None
-    if w <= 0 or h <= 0 or len(payload) < 54 + 1024:
-        return None
-    pal_r = [payload[54 + 4 * i + 2] for i in range(256)]  # BGRA quads
-    grid = [[0] * w for _ in range(h)]  # index 0 default (delta skips)
-    pos = offset
-    x, y = 0, 0  # y counts STORED rows (bottom-up)
-    while pos + 1 < len(payload):
-        n, c = payload[pos], payload[pos + 1]
-        pos += 2
-        if n > 0:  # encoded run
-            for _ in range(n):
-                if y >= h or x >= w:
-                    return None
-                grid[y][x] = c
-                x += 1
-        elif c == 0:  # end of line
-            x, y = 0, y + 1
-        elif c == 1:  # end of bitmap
-            pixels = []
-            for yy in range(h):  # logical top row first; stored bottom-up
-                pixels.extend(grid[h - 1 - yy])
-            return w, h, pixels, pal_r
-        elif c == 2:  # delta
-            if pos + 2 > len(payload):
-                return None
-            x += payload[pos]
-            y += payload[pos + 1]
-            pos += 2
-        else:  # absolute mode: c literal bytes, padded to even
-            k = c
-            if pos + k > len(payload):
-                return None
-            for j in range(k):
-                if y >= h or x >= w:
-                    return None
-                grid[y][x] = payload[pos + j]
-                x += 1
-            pos += k + (k & 1)
-    return None  # ran out without end-of-bitmap
-
-
-def _bmp_rle8_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols_i = ("width", "height", "n_pixels", "index_sum",
-              "raster_checksum", "palette_r_sum")
-    for pdf in batches:
-        cols: dict[str, list] = {k: [] for k in ("doc_id",) + cols_i}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            decoded = decode_bmp_rle8(bytes(payload))
-            cols["doc_id"].append(doc_id)
-            if decoded is None:
-                for k in cols_i:
-                    cols[k].append(None)
-            else:
-                w, h, px, pal_r = decoded
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["n_pixels"].append(len(px))
-                cols["index_sum"].append(sum(px))
-                cols["raster_checksum"].append(
-                    sum((i + 1) * p for i, p in enumerate(px))
-                )
-                cols["palette_r_sum"].append(sum(pal_r[p] for p in px))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                **{k: pd.Series(cols[k], dtype="Int64") for k in cols_i},
-            }
-        )
-
-
-ULAW_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("n_samples", LongType(), True),
-        StructField("sum_linear", LongType(), True),
-        StructField("min_linear", LongType(), True),
-        StructField("max_linear", LongType(), True),
-        StructField("energy", LongType(), True),
-    ]
-)
-
-
-def decode_ulaw(payload: bytes) -> list[int] | None:
-    """REAL ITU-T G.711 mu-law expansion (pure bit arithmetic, the
-    telephony codec): for each byte, complement, split into sign /
-    3-bit exponent / 4-bit mantissa, and expand to the 14-bit-magnitude
-    linear sample ((mant << 3) + 0x84) << exp, re-biased by -0x84 —
-    the same table audioop.ulaw2lin built. Returns the signed linear
-    samples; None for an empty payload."""
-    if not payload:
-        return None
-    out = []
-    for b in payload:
-        u = ~b & 0xFF
-        exponent = (u >> 4) & 0x07
-        mantissa = u & 0x0F
-        mag = (((mantissa << 3) + 0x84) << exponent) - 0x84
-        out.append(-mag if u & 0x80 else mag)
-    return out
-
-
-def _ulaw_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols_i = ("n_samples", "sum_linear", "min_linear", "max_linear",
-              "energy")
-    for pdf in batches:
-        cols: dict[str, list] = {k: [] for k in ("doc_id",) + cols_i}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            s = decode_ulaw(bytes(payload))
-            cols["doc_id"].append(doc_id)
-            if s is None:
-                for k in cols_i:
-                    cols[k].append(None)
-            else:
-                cols["n_samples"].append(len(s))
-                cols["sum_linear"].append(sum(s))
-                cols["min_linear"].append(min(s))
-                cols["max_linear"].append(max(s))
-                cols["energy"].append(sum(v * v for v in s))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                **{k: pd.Series(cols[k], dtype="Int64") for k in cols_i},
-            }
-        )
-
-
-CRC32_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("n_bytes", LongType(), True),
-        StructField("byte_sum", LongType(), True),
-        StructField("crc32", LongType(), True),
-    ]
-)
-
-
-def _crc32_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched CRC-32 via the REAL zlib.crc32 — the oracle recomputes
-    the same value through its own bitwise 0xEDB88320 reduction, so the two
-    implementations must agree on reflection, init and final complement."""
-    import zlib
-
-    for pdf in batches:
-        ids, nb, bs, cs = [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            data = bytes(payload)
-            ids.append(doc_id)
-            nb.append(len(data))
-            bs.append(sum(data))
-            cs.append(zlib.crc32(data) & 0xFFFFFFFF)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "n_bytes": pd.Series(nb, dtype="Int64"),
-                "byte_sum": pd.Series(bs, dtype="Int64"),
-                "crc32": pd.Series(cs, dtype="Int64"),
-            }
-        )
-
-
-UTF8_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("is_valid", LongType(), True),
-        StructField("n_codepoints", LongType(), True),
-        StructField("codepoint_sum", LongType(), True),
-        StructField("n_bytes", LongType(), True),
-    ]
-)
-
-
-def validate_utf8(payload: bytes) -> list[int] | None:
-    """STRICT structural UTF-8 validation and decode (pure arithmetic, NOT
-    str.decode — the test suite pins this against codecs.utf_8 on random
-    corpora): continuation-byte counting, overlong-minimality rejection
-    (the C0 AF smuggling class), UTF-16 surrogate rejection (U+D800..DFFF),
-    and the U+10FFFF ceiling. Returns the codepoint list, or None for any
-    malformed sequence."""
-    cps: list[int] = []
-    i, n = 0, len(payload)
-    while i < n:
-        b = payload[i]
-        if b < 0x80:
-            cps.append(b)
-            i += 1
-            continue
-        if b < 0xC0:
-            return None  # bare continuation byte
-        if b < 0xE0:
-            need, cp, floor_cp = 1, b & 0x1F, 0x80
-        elif b < 0xF0:
-            need, cp, floor_cp = 2, b & 0x0F, 0x800
-        elif b < 0xF8:
-            need, cp, floor_cp = 3, b & 0x07, 0x10000
-        else:
-            return None
-        if i + need >= n:
-            return None  # truncated trailing sequence
-        for j in range(1, need + 1):
-            c = payload[i + j]
-            if c & 0xC0 != 0x80:
-                return None
-            cp = (cp << 6) | (c & 0x3F)
-        if cp < floor_cp:
-            return None  # overlong
-        if 0xD800 <= cp <= 0xDFFF:
-            return None  # surrogate
-        if cp > 0x10FFFF:
-            return None
-        cps.append(cp)
-        i += need + 1
-    return cps
-
-
-def _utf8_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, ok, nc, sc, nb = [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            data = bytes(payload)
-            ids.append(doc_id)
-            nb.append(len(data))
-            cps = validate_utf8(data)
-            if cps is None:
-                ok.append(0)
-                nc.append(None)
-                sc.append(None)
-            else:
-                ok.append(1)
-                nc.append(len(cps))
-                sc.append(sum(cps))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "is_valid": pd.Series(ok, dtype="Int64"),
-                "n_codepoints": pd.Series(nc, dtype="Int64"),
-                "codepoint_sum": pd.Series(sc, dtype="Int64"),
-                "n_bytes": pd.Series(nb, dtype="Int64"),
-            }
-        )
-
-
-TAR_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("member_size", LongType(), True),
-        StructField("header_checksum", LongType(), True),
-        StructField("content_sum", LongType(), True),
-        StructField("content_checksum", LongType(), True),
-    ]
-)
-
-
-def _tar_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched tar parsing via the REAL stdlib tarfile module: the
-    member metadata, the ustar header checksum (re-read from the octal
-    field tarfile just validated) and the extracted content statistics.
-    A wrong column-side checksum makes tarfile reject the archive ->
-    typed NULL miss."""
-    import io
-    import tarfile
-
-    for pdf in batches:
-        ids, sz, ck, cs, cc = [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            data = bytes(payload)
-            ids.append(doc_id)
-            try:
-                tf = tarfile.open(fileobj=io.BytesIO(data))
-                m = tf.getmembers()[0]
-                content = tf.extractfile(m).read()
-                sz.append(m.size)
-                ck.append(int(data[148:154], 8))
-                cs.append(sum(content))
-                cc.append(
-                    sum((i + 1) * b for i, b in enumerate(content))
-                )
-            except (tarfile.TarError, ValueError, IndexError):
-                sz.append(None)
-                ck.append(None)
-                cs.append(None)
-                cc.append(None)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "member_size": pd.Series(sz, dtype="Int64"),
-                "header_checksum": pd.Series(ck, dtype="Int64"),
-                "content_sum": pd.Series(cs, dtype="Int64"),
-                "content_checksum": pd.Series(cc, dtype="Int64"),
-            }
-        )
-
-
-BASE32_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("n_bytes", LongType(), True),
-        StructField("byte_sum", LongType(), True),
-        StructField("stream_checksum", LongType(), True),
-    ]
-)
-
-
-def _base32_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched base32 decode via the REAL stdlib codec
-    (base64.b32decode, strict mode): wrong alphabet, casing or padding
-    raises -> typed NULL miss, so the column-side 5-bit-group encoder is
-    validated by the standard library's decoder."""
-    import base64
-    import binascii
-
-    for pdf in batches:
-        ids, nb, bs, ck = [], [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text32"]):
-            ids.append(doc_id)
-            try:
-                data = base64.b32decode(str(text))
-                nb.append(len(data))
-                bs.append(sum(data))
-                ck.append(sum((i + 1) * b for i, b in enumerate(data)))
-            except (binascii.Error, ValueError):
-                nb.append(None)
-                bs.append(None)
-                ck.append(None)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "n_bytes": pd.Series(nb, dtype="Int64"),
-                "byte_sum": pd.Series(bs, dtype="Int64"),
-                "stream_checksum": pd.Series(ck, dtype="Int64"),
             }
         )

@@ -6,11 +6,7 @@ change-point homogeneity (Buishand/SNHT/KPSS), inequality measures
 (Moran/Geary, rich-club), intermittent-demand TSB, restricted mean
 survival time, and cross-document n-gram novelty.
 
-This module is imported by ``registry._load_deferred()`` (NOT
-``_load_all``): the round-11 driver window is exactly full, so these
-queries stay out of the driver-facing registry until the round-12 window
-opens — while the registry-wide lint and parity tests load the bank
-explicitly and enforce the full discipline from day one.
+Registered through ``registry._load_all`` like every operator module.
 
 Reference provenance: like pipeline7-16, none of these operators exist in
 the reference's Go core (a MongoDB change-stream -> NATS connector,

@@ -1,8 +1,5 @@
-"""Round-13 bank (LIVE since round 13): staged behind
-``registry._load_deferred()`` through round 12, promoted into
-``_load_all`` when the round-13 driver window opened — exactly one full
-50-query window, three-SF bit-exact and identity-pinned
-(tests/test_round19.py) before banking.
+"""Round-13 tranche, registered through ``registry._load_all``: 50
+queries, three-SF bit-exact and identity-pinned (tests/test_round19.py).
 
 Reference provenance: like pipeline7-18, none of these operators exist in
 the reference's Go core (a MongoDB change-stream -> NATS connector,

@@ -1,7 +1,5 @@
-"""Round-14 bank (seed): loaded by ``registry._load_deferred()`` AFTER
-pipeline19 — round 13's window is exactly filled by pipeline19's 50
-operators, so these queue one further round out, fully linted and
-identity-pinned from day one like every earlier tranche.
+"""Round-14 tranche, registered through ``registry._load_all`` after
+pipeline19, fully linted and identity-pinned like every earlier tranche.
 
 Reference provenance: like pipeline7-19, none of these operators exist in
 the reference's Go core (a MongoDB change-stream -> NATS connector,

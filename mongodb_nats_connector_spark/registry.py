@@ -46,7 +46,14 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 
 
 def _load_all() -> None:
-    """Import every operator module for its registration side effects."""
+    """Import every operator module for its registration side effects.
+
+    Import order is registration order, which is the rank tiebreak in
+    ``all_queries()`` and so fixes the order of ``queries()``. ``similarity``
+    must come before ``pipeline6``: pipeline6 imports it while registering,
+    so listing pipeline6 first would register similarity's queries in the
+    middle of pipeline6's.
+    """
     from mongodb_nats_connector_spark.operators import (  # noqa: F401
         analytics2,
         analytics3,
@@ -60,10 +67,6 @@ def _load_all() -> None:
         graph2,
         mining5,
         multimodal,
-        # similarity must import BEFORE pipeline6: pipeline6's embedding-LSH
-        # oracle builder imports it at module level, so listing it later
-        # would silently register its queries here anyway — the list order
-        # now matches the true insertion order the verify window relies on
         similarity,
         pipeline6,
         pipeline6b,
@@ -73,68 +76,21 @@ def _load_all() -> None:
         tpch2,
         udfs,
         windows_batch,
+        pipeline7,
+        pipeline8,
+        pipeline9,
+        pipeline10,
+        pipeline11,
+        pipeline12,
+        pipeline13,
+        pipeline14,
+        pipeline15,
+        pipeline16,
+        pipeline17,
+        pipeline18,
+        pipeline19,
+        pipeline20,
     )
-    # pipeline7 then pipeline8 then pipeline9 import LAST (newest module
-    # last): brand-new queries must rank behind every already-pending rank-0
-    # query so a full driver window never displaces an edited query awaiting
-    # re-proof (see all_queries() ordering).
-    from mongodb_nats_connector_spark.operators import pipeline7  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline8  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline9  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline10  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline11  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline12  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline13  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline14  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline15  # noqa: F401
-    # Round-12 window: the pipeline16/17/18 bank (13 + 32 + 4 = 49
-    # pre-verified queries, three-SF bit-exact before banking) moves into
-    # the driver-facing registry this round, filling 49 of the 50 window
-    # slots; the 50th is this round's single new in-window query.
-    from mongodb_nats_connector_spark.operators import pipeline16  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline17  # noqa: F401
-    from mongodb_nats_connector_spark.operators import pipeline18  # noqa: F401
-    # Round-13 window: the pipeline19 bank (50 pre-verified queries,
-    # three-SF bit-exact + identity-pinned in tests/test_round19.py before
-    # banking) moves into the driver-facing registry this round — exactly
-    # one full driver window.
-    from mongodb_nats_connector_spark.operators import pipeline19  # noqa: F401
-    # Round-14 window: the pipeline20 bank (50 pre-verified queries,
-    # three-SF bit-exact + identity-pinned in tests/test_round19.py before
-    # banking) moves into the driver-facing registry this round — exactly
-    # one full driver window.
-    from mongodb_nats_connector_spark.operators import pipeline20  # noqa: F401
-
-
-def _load_deferred() -> None:
-    """Import the round-15 bank modules (registration side effects).
-
-    The driver proves at most 50 queries per round, so new tranches beyond
-    the current window are staged here, OUT of the driver-facing registry,
-    until their round's window opens — ``tools/verify_window.py`` flags an
-    over-budget window otherwise, and a spilled query sits unproven at
-    round end. The bank is still fully linted and unit-tested: registry-wide
-    lint tests call ``_load_deferred()`` so plan/determinism discipline is
-    enforced from day one, and the per-tranche round test files pin the
-    statistics. Round 15: move these imports into ``_load_all`` (bank order
-    is registration order).
-
-    Loads the MAIN registry first: registration order is rank-tiebreak
-    order, so bank queries must always append AFTER the driver-facing
-    surface — a session that imports the parity suite (which calls this
-    at module import) before anything touches ``_load_all`` would
-    otherwise register the bank at positions 1-50 and push an edited
-    mainline query out of the 50-row window (caught by
-    test_stale_digest_demotes_verified_name in round 12).
-    """
-    _load_all()
-    # pipeline21 is the ROUND-15 bank: pipeline20 fills round 14's window
-    # exactly, so these queue one further round out
-    from mongodb_nats_connector_spark.operators import pipeline21  # noqa: F401
-
-    # pipeline22 is the ROUND-16 bank seed (pipeline21 fills round 15's
-    # window exactly at 50)
-    from mongodb_nats_connector_spark.operators import pipeline22  # noqa: F401
 
 
 _DIGESTS_FILE = Path(__file__).resolve().parent / "verified_digests.json"

@@ -36,10 +36,10 @@ def generate_change_event_rows(
     with_noise_tail: bool = True,
     with_duplicates: bool = True,
 ) -> list[tuple]:
-    """Pure-Python deterministic envelope rows (shared by the DataFrame
-    fixture below and the custom Python Data Source): per doc an insert,
-    update, replace, delete cycle; optionally drop/rename/invalidate noise
-    and duplicated tokens (at-least-once replay)."""
+    """Pure-Python deterministic envelope rows (the DataFrame fixture below
+    wraps them): per doc an insert, update, replace, delete cycle;
+    optionally drop/rename/invalidate noise and duplicated tokens
+    (at-least-once replay)."""
     rows: list[tuple] = []
     seq = 0
 

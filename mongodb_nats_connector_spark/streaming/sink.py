@@ -24,6 +24,7 @@ mode.
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -161,74 +162,27 @@ class JetStreamLikeSink:
                     "nats_message_duration_seconds", {"subject": "other"}, elapsed
                 )
 
-    # Consumer view — dedup by msg id. Default mirrors durable storage:
-    # the window is UNBOUNDED (strictly stronger than JetStream, which
-    # remembers a Nats-Msg-Id only for Duplicates — default 2 min — after
-    # it was STORED, internal/nats/client.go:122-125 semantics). Pass
-    # ``dedup_window_epochs`` to reproduce the bounded behavior: a replay
-    # whose last *stored* occurrence is at least that many epochs old is
-    # delivered again, exactly like a consumer relying on window expiry.
-    def read_messages(
-        self,
-        deduped: bool = True,
-        dedup_window_epochs: int | None = None,
-    ) -> DataFrame:
+    # Consumer view — dedup by msg id. The window is UNBOUNDED, mirroring
+    # durable storage: strictly stronger than JetStream, which remembers a
+    # Nats-Msg-Id only for Duplicates (default 2 min) after it was STORED
+    # (internal/nats/client.go:122-125 semantics).
+    def read_messages(self, deduped: bool = True) -> DataFrame:
         df = (
             self.spark.read.option("basePath", self.messages_dir)
             .parquet(os.path.join(self.messages_dir, "epoch=*"))
         )
         if not deduped:
             return df
-        if dedup_window_epochs is None:
-            w = Window.partitionBy("msg_id").orderBy("epoch", "seq_in_epoch")
-            return (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        # Bounded window, JetStream rule: duplicates are NOT stored, so they
-        # do not refresh the window — keep an occurrence iff it is at least
-        # `window` epochs after the last KEPT occurrence of the same id.
-        # That greedy rule is a fold over the (tiny) per-id occurrence list,
-        # all JVM-side: one shuffle on msg_id, then a semi-join back.
-        win = int(dedup_window_epochs)
-        occ = (
-            df.select("msg_id", "epoch", "seq_in_epoch")
-            .groupBy("msg_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("epoch", "seq_in_epoch"))
-                ).alias("occ")
-            )
+        w = Window.partitionBy("msg_id").orderBy("epoch", "seq_in_epoch")
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
         )
-        kept = (
-            occ.select(
-                "msg_id",
-                F.explode(
-                    F.aggregate(
-                        F.col("occ"),
-                        F.slice(F.col("occ"), 1, 0),  # empty, same type
-                        lambda acc, x: F.when(
-                            (F.size(acc) == 0)
-                            | (
-                                x["epoch"] - F.element_at(acc, -1)["epoch"]
-                                >= F.lit(win)
-                            ),
-                            F.concat(acc, F.array(x)),
-                        ).otherwise(acc),
-                    )
-                ).alias("k"),
-            )
-            .select(
-                "msg_id",
-                F.col("k.epoch").alias("epoch"),
-                F.col("k.seq_in_epoch").alias("seq_in_epoch"),
-            )
-        )
-        return df.join(kept, ["msg_id", "epoch", "seq_in_epoch"], "left_semi")
 
     def message_count(self, deduped: bool = True) -> int:
-        try:
-            return self.read_messages(deduped).count()
-        except Exception:
-            return 0  # no epochs written yet
+        """Messages in the stream; 0 before the first epoch is written. Any
+        other read failure (a corrupt part file, a schema clash) raises."""
+        if not glob.glob(os.path.join(glob.escape(self.messages_dir), "epoch=*")):
+            return 0
+        return self.read_messages(deduped).count()

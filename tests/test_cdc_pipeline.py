@@ -9,6 +9,7 @@ Scenario sources (reference files under /root/reference/):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -453,6 +454,57 @@ def test_epoch_of_only_drop_rename_publishes_nothing(spark, tmp_path, order_with
         v for (name, _), v in registry.counters.items() if name == "nats_messages_published_total"
     )
     assert published == len(first) + len(later)
+
+
+@pytest.mark.parametrize("order_within_key", [False, True])
+def test_pause_resume_zero_loss(spark, tmp_path, order_within_key):
+    """restart_mongo_test.go:30-38 analogue: the source goes quiet (no new
+    feed file) while the query keeps running, then resumes. The idle trigger
+    publishes nothing, and every event arrives exactly once, in token order
+    (per key, in per-key mode), with no restart."""
+    rows = generate_change_event_rows(n_docs=25, with_noise_tail=False, with_duplicates=False)
+    first, later = rows[:40], rows[40:]  # docs 0-9, docs 10-24
+    feed = str(tmp_path / "feed")
+    _land(spark, feed, first)
+    conn = Connector(
+        spark, COLL1, {"test-connector-db.coll1": feed},
+        sink_root=str(tmp_path / "sink"), order_within_key=order_within_key,
+    )
+    (h,) = conn.start()
+    epochs = os.path.join(h.sink.messages_dir, "epoch=*")
+    try:
+        conn.process_all_available()
+        assert h.sink.message_count(deduped=False) == len(first)
+        written = sorted(glob.glob(epochs))
+        conn.process_all_available()  # outage: no new file
+        assert h.query.isActive
+        assert sorted(glob.glob(epochs)) == written
+        assert h.sink.message_count(deduped=False) == len(first)
+        _land(spark, feed, later)  # recovery
+        conn.process_all_available()
+    finally:
+        conn.stop()
+    msgs = h.sink.read_messages(deduped=False).collect()
+    assert sorted(m.msg_id for m in msgs) == [r[0] for r in rows]
+    streams: dict = {}  # the whole stream, or one per document key
+    for m in sorted(msgs, key=lambda m: (m.epoch, m.seq_in_epoch)):
+        streams.setdefault(m.document_key if order_within_key else None, []).append(m.msg_id)
+    for ids in streams.values():
+        assert ids == sorted(ids), "token order broken across the outage"
+
+
+def test_message_count_zero_only_before_first_epoch(spark, tmp_path):
+    """An unwritten stream counts 0; an unreadable part file is an error,
+    not an empty stream."""
+    sink = JetStreamLikeSink(spark, str(tmp_path / "stream"), "COLL1")
+    sink.add_stream()
+    assert sink.message_count() == 0
+    part = os.path.join(sink.messages_dir, "epoch=0", "part-00000.parquet")
+    os.makedirs(os.path.dirname(part))
+    with open(part, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        sink.message_count()
 
 
 def test_extjson_envelope_roundtrip(spark):

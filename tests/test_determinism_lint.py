@@ -180,9 +180,8 @@ def _risky_round_sites(query) -> int:
 
 
 def test_no_new_float_round_on_hash_surface():
-    from mongodb_nats_connector_spark.registry import _load_deferred, all_queries
+    from mongodb_nats_connector_spark.registry import all_queries
 
-    _load_deferred()  # the round-12 bank is linted from day one
     found = {}
     for name, q in sorted(all_queries().items()):
         n = _risky_round_sites(q)
@@ -212,9 +211,8 @@ def test_no_hugeint_on_oracle_output_surface():
     """
     import duckdb
 
-    from mongodb_nats_connector_spark.registry import _load_deferred, all_queries
+    from mongodb_nats_connector_spark.registry import all_queries
 
-    _load_deferred()  # the round-12 bank is linted from day one
     sf = "/root/testdata/sf0.001"
     con = duckdb.connect()
     for t in (

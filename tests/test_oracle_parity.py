@@ -12,12 +12,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from mongodb_nats_connector_spark.registry import _load_deferred, all_queries
+from mongodb_nats_connector_spark.registry import all_queries
 from mongodb_nats_connector_spark.sources.tables import TABLES
 
 SF_DIR = "/root/testdata/sf0.01"
 
-_load_deferred()  # the round-12 bank keeps full parity coverage while deferred
 _QUERIES = all_queries()
 _WITH_ORACLE = sorted(n for n, q in _QUERIES.items() if q.oracle is not None)
 _ROWS_ONLY = sorted(n for n, q in _QUERIES.items() if q.oracle is None)

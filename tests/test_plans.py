@@ -356,37 +356,6 @@ _ALLOWED_NESTED_LOOP = {
     "embedding_participation_ratio",  # 1-row trace x 1-row Frobenius broadcast crossJoin
     "embedding_calinski_harabasz",  # 1-row SSW/SSB/totals broadcast crossJoins
     "embedding_dunn_index",       # 1-row min-inter x 1-row max-intra broadcast crossJoin
-    # pipeline21 (round-15 bank seed)
-    "text_log_odds_monroe",       # 1-row corpus-totals scalar broadcast crossJoin
-    "agg_huber_one_step",         # 1-row median/MAD/total scalars broadcast crossJoins
-    "agg_tarone_overdispersion",  # 1-row frame-totals scalar broadcast crossJoin
-    "docs_hill_tail_index",       # 1-row threshold scalar broadcast crossJoins
-    "similarity_rank_biased_overlap",  # bounded 20-query panel NLJ + 200-row depth scaffold
-    "agg_multiclass_mcc",         # 1-row trace x 1-row marginal scalars broadcast crossJoin
-    # pipeline21 round-14 additions (all bounded-census or 1-row scalars)
-    "agg_distance_correlation",   # <=561-cell joint-grid census self-crossJoin + 1-row scalars
-    "agg_crps_empirical",         # <=51-cell quantity-grid censuses crossJoin + 1-row scalars
-    "agg_kendall_partial_tau",    # three bounded joint-grid census self-crossJoins + 1-row taus
-    "agg_tail_dependence",        # bounded marginal-grid cumulative self-join + 1-row thresholds
-    "agg_hogg_tail_weight",       # 1-row total scalar broadcast crossJoin
-    "agg_median_of_means",        # 1-row exact-mean scalar broadcast crossJoin
-    "customer_capture_recapture", # 1-row calendar-span scalar broadcast crossJoin
-    "orders_gompertz_3point",     # 1-row anchor-months scalar broadcast crossJoin
-    "agg_v_measure",              # 1-row entropy scalars broadcast crossJoins
-    "embedding_mahalanobis_diag", # 8-query set + 1-row 64-dim weight array broadcast crossJoins
-    "embedding_hopkins_statistic",# 16-probe sets broadcast crossJoins (by design)
-    "graph_butterfly_count",      # 1-row census scalars broadcast crossJoins
-    # pipeline22 (round-16 bank seed) — bounded censuses / 1-row scalars
-    "agg_biweight_midvariance",   # bounded quantity-grid cumulative joins + med/MAD scalars
-    "agg_rousseeuw_qn",           # bounded distance-census + 1-row k-order scalars
-    "events_cross_correlation",   # 15-row lag scaffold + calendar-day self-join broadcasts
-    "events_spectral_entropy",    # 8-row harmonic scaffold + 1-row power scalars
-    "events_visibility_graph",    # calendar-bounded day-census pair/blocker joins
-    "orders_expected_shortfall",  # 1-row total scalar broadcast crossJoin
-    "orders_quantile_trend",      # bounded month-grid cumulative joins + 1-row medians
-    "agg_shapley_r2",             # 1-row n^2 scalar broadcast crossJoin
-    "events_ordpattern_transitions",  # 1-row totals scalar broadcast crossJoins
-    "events_peak_prominence",     # calendar-bounded saddle-census joins (NULL-side OR join)
 }
 _ALLOWED_ROW_PYTHON = {
     "udf_python_scalar",  # exists to cover the UDF surface
@@ -414,9 +383,7 @@ def _registry_lint_data(spark) -> dict[str, tuple[str, int]]:
         plan_string,
         unpartitioned_windows,
     )
-    from mongodb_nats_connector_spark.registry import _load_deferred, all_queries
-
-    _load_deferred()  # the round-12 bank is linted from day one
+    from mongodb_nats_connector_spark.registry import all_queries
 
     def one(item):
         name, q = item
@@ -645,31 +612,6 @@ _GLOBAL_WINDOWS = {
     "orders_cumulative_incidence": (3, "bounded: duration-day grid "
                                        "(risk-set prefix, product-limit "
                                        "prefix, CIF running sums)"),
-    # pipeline21 (round-15 bank seed)
-    "agg_huber_one_step": (6, "bounded: ~50-value quantity and |dev| "
-                              "census grids, cumulative windows "
-                              "duplicated under the med/MAD/clip "
-                              "branches"),
-    "docs_hill_tail_index": (3, "bounded: top-51 rank (WindowGroupLimit) "
-                                "duplicated under the threshold and "
-                                "top-k branches"),
-    "events_transfer_entropy": (2, "bounded: ~30-day aligned calendar "
-                                   "lags + <= 8-cell state-marginal "
-                                   "windows"),
-    # pipeline21 round-14 additions
-    "agg_hogg_tail_weight": (1, "bounded: whole-dollar price DOMAIN grid "
-                                "(same class as agg_palma_quintile)"),
-    "agg_median_of_means": (2, "bounded: 16-hash-bucket rank + count"),
-    # pipeline22 (round-16 bank seed)
-    "agg_rousseeuw_qn": (2, "bounded: <=51-value pairwise-distance grid "
-                            "cumulative, duplicated under qn/median "
-                            "branches"),
-    "orders_expected_shortfall": (1, "bounded: whole-dollar price DOMAIN "
-                                     "grid (palma class)"),
-    "orders_omega_ratio": (1, "bounded: monthly calendar series lag"),
-    "orders_quantile_trend": (2, "bounded: ~84-month slope-pair rank + "
-                                 "count"),
-    "orders_ulcer_index": (1, "bounded: monthly calendar prefix-max"),
 }
 
 

@@ -1,8 +1,7 @@
-"""Pure-python identity pins for the pipeline21 (round-15 bank seed)
-operators — same discipline as test_round19/test_round16/17: re-derive
-each statistic with Fraction/float on random small inputs and pin the
-cleared-denominator identities AND the literal constants, so a future
-driver-green hash proves the STATISTIC, not merely engine agreement.
+"""Pure-python identity pins: re-derive each statistic with Fraction/float on
+random small inputs and check its cleared-denominator identities and literal
+constants against the textbook definition. These tests exercise no package
+code.
 """
 
 from __future__ import annotations
@@ -92,25 +91,6 @@ def test_huber_constant_and_clip_behavior():
         assert lo <= est <= hi  # bounded influence
         if mad >= 50:  # clip interval covers the whole 1..50 domain
             assert est == Fraction(10**7 * sum(xs), n)
-
-
-def test_lcm_literal_and_mean_chain():
-    from mongodb_nats_connector_spark.operators.pipeline21 import _L50
-
-    assert _L50 == math.lcm(*range(1, 51))
-    rng = random.Random(563)
-    for _ in range(60):
-        xs = [rng.randint(1, 50) for _ in range(rng.randint(2, 50))]
-        n = len(xs)
-        sinv = sum(_L50 // x for x in xs)
-        h = Fraction(n * _L50, sinv)
-        a = Fraction(sum(xs), n)
-        c = Fraction(sum(x * x for x in xs), sum(xs))
-        assert h == n / sum(Fraction(1, x) for x in xs)
-        assert h <= a <= c
-        # contraharmonic = arithmetic + variance/mean (population)
-        var = Fraction(n * sum(x * x for x in xs) - sum(xs) ** 2, n * n)
-        assert c == a + var / a
 
 
 def test_tarone_cleared_identity():
@@ -296,138 +276,6 @@ def test_kcenter_greedy_bruteforce_equivalence():
         radii.append(max(dmin.values()))
         # coverage radius is nonincreasing as centers are added
         assert all(radii[i] >= radii[i + 1] for i in range(3))
-        # radius after step s equals the (s+1)-th center's distance
-        # (by construction of the greedy argmax) — checked implicitly
-        # by the monotonicity + the final recomputation above
-
-
-def test_zip_walker_roundtrip_and_rejects():
-    import struct as _s
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        walk_zip_central_dir,
-    )
-
-    def cdh(method, csize, usize, name):
-        return (
-            b"PK\x01\x02" + b"\x14\x00\x14\x00\x00\x00"
-            + _s.pack("<H", method) + b"\x00" * 8
-            + _s.pack("<II", csize, usize)
-            + _s.pack("<HHH", len(name), 0, 0)
-            + b"\x00" * 12 + name
-        )
-
-    cd = cdh(0, 100, 100, b"f0.txt") + cdh(8, 200, 700, b"f1.txt")
-    eocd = (
-        b"PK\x05\x06" + b"\x00" * 4 + _s.pack("<HH", 2, 2)
-        + _s.pack("<II", len(cd), 0) + b"\x00\x00"
-    )
-    assert walk_zip_central_dir(cd + eocd) == (2, 1, 300, 800, 12)
-    # comment-tolerant backward scan: EOCD not at the very end
-    assert walk_zip_central_dir(cd + eocd + b"trailing comment") == (
-        2, 1, 300, 800, 12,
-    )
-    # corrupted central header signature -> miss
-    bad = b"XX" + cd[2:]
-    assert walk_zip_central_dir(bad + eocd) is None
-    assert walk_zip_central_dir(b"garbage" * 5) is None
-    # zero-entry directory -> miss
-    eocd0 = (
-        b"PK\x05\x06" + b"\x00" * 4 + _s.pack("<HH", 0, 0)
-        + _s.pack("<II", 0, 0) + b"\x00\x00"
-    )
-    assert walk_zip_central_dir(eocd0) is None
-
-
-def test_flac_bitpack_roundtrip_and_rejects():
-    import struct as _s
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        parse_flac_streaminfo,
-    )
-
-    rng = random.Random(607)
-    for _ in range(60):
-        rate = rng.randint(1, 2**20 - 1)
-        ch = rng.randint(1, 8)
-        bps = rng.randint(4, 32)
-        total = rng.randint(0, 2**36 - 1)
-        packed = (
-            (rate << 44) | ((ch - 1) << 41) | ((bps - 1) << 36) | total
-        )
-        si = (
-            b"fLaC" + bytes([0x80]) + b"\x00\x00\x22"
-            + _s.pack(">HH", 4096, 4096) + b"\x00" * 6
-            + _s.pack(">Q", packed) + b"\x00" * 16
-        )
-        assert parse_flac_streaminfo(si) == (
-            rate, ch, bps, total, (1000 * total) // rate,
-        )
-    # wrong marker / wrong block type / truncated -> miss
-    assert parse_flac_streaminfo(b"fLaX" + b"\x00" * 50) is None
-    si_bad_type = (
-        b"fLaC" + bytes([0x81]) + b"\x00\x00\x22" + b"\x00" * 34
-    )
-    assert parse_flac_streaminfo(si_bad_type) is None
-    assert parse_flac_streaminfo(b"fLaC" + b"\x00" * 10) is None
-
-
-# ---------------------------------------------------------------------------
-# batch 3 pins (containers / diversity / extremes / moments / GOF)
-# ---------------------------------------------------------------------------
-
-
-def test_webp_vp8x_roundtrip_and_rejects():
-    import struct as _s
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        parse_webp_vp8x,
-    )
-
-    rng = random.Random(613)
-    for _ in range(40):
-        w, h = rng.randint(1, 2**24), rng.randint(1, 2**24)
-        alpha, anim = rng.randint(0, 1), rng.randint(0, 1)
-        flags = (alpha << 4) | (anim << 1)
-        b = (
-            b"RIFF" + _s.pack("<I", 22) + b"WEBP" + b"VP8X"
-            + _s.pack("<I", 10) + bytes([flags]) + b"\x00" * 3
-            + (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
-        )
-        assert parse_webp_vp8x(b) == (w, h, alpha, anim, 22)
-    # non-WEBP RIFF (e.g. WAVE) and wrong first chunk are misses
-    assert parse_webp_vp8x(b"RIFF" + b"\x16\x00\x00\x00" + b"WAVE"
-                           + b"\x00" * 18) is None
-    assert parse_webp_vp8x(b"RIFF" + b"\x16\x00\x00\x00" + b"WEBP"
-                           + b"VP8L" + b"\x00" * 14) is None
-
-
-def test_id3_syncsafe_roundtrip_and_rejects():
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        _syncsafe,
-        parse_id3v2,
-    )
-
-    rng = random.Random(617)
-    for _ in range(60):
-        n = rng.randint(0, 2**28 - 1)
-        b = bytes(
-            [(n >> 21) & 0x7F, (n >> 14) & 0x7F, (n >> 7) & 0x7F, n & 0x7F]
-        )
-        assert _syncsafe(b) == n
-    # any MSB set is invalid syncsafe
-    assert _syncsafe(bytes([0x80, 0, 0, 0])) is None
-    assert _syncsafe(bytes([0, 0, 0x81, 0])) is None
-    # frame id must be A-Z0-9
-    import struct as _s
-
-    frames = b"ti!2" + _s.pack(">I", 2) + b"\x00\x00" + b"ab"
-    size = len(frames)
-    ss = bytes(
-        [(size >> 21) & 0x7F, (size >> 14) & 0x7F, (size >> 7) & 0x7F,
-         size & 0x7F]
-    )
-    assert parse_id3v2(b"ID3" + bytes([3, 0, 0]) + ss + frames) is None
 
 
 def test_hill_numbers_ordering_and_blau_relation():
@@ -555,86 +403,6 @@ def test_multiclass_mcc_cleared_and_binary_reduction():
                 assert (mcc_num >= 0) == (num >= 0)
 
 
-def test_gzip_header_roundtrip_and_rejects():
-    import struct as _s
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        parse_gzip_header,
-    )
-
-    rng = random.Random(653)
-    for _ in range(40):
-        hn, hc = rng.randint(0, 1), rng.randint(0, 1)
-        mtime = rng.randint(0, 2**32 - 1)
-        name = b"file%d.txt" % rng.randint(0, 9) if hn else b""
-        comment = b"c" * rng.randint(1, 7) if hc else b""
-        flg = (0x08 if hn else 0) | (0x10 if hc else 0)
-        b = (
-            b"\x1f\x8b\x08" + bytes([flg]) + _s.pack("<I", mtime)
-            + b"\x00\xff"
-            + (name + b"\x00" if hn else b"")
-            + (comment + b"\x00" if hc else b"")
-        )
-        assert parse_gzip_header(b) == (
-            mtime, hn, len(name), hc, len(comment), len(b),
-        )
-    # bad magic / method, unterminated name
-    assert parse_gzip_header(b"\x1f\x8c\x08" + b"\x00" * 10) is None
-    assert parse_gzip_header(b"\x1f\x8b\x07" + b"\x00" * 10) is None
-    unterminated = (
-        b"\x1f\x8b\x08\x08" + b"\x00" * 4 + b"\x00\xff" + b"noend"
-    )
-    assert parse_gzip_header(unterminated) is None
-
-
-def test_bson_walker_roundtrip_and_rejects():
-    import struct as _s
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        walk_bson_doc,
-    )
-
-    rng = random.Random(659)
-    for _ in range(40):
-        body = b""
-        n32 = n64 = nstr = 0
-        int_sum = 0
-        str_bytes = 0
-        for i in range(rng.randint(1, 5)):
-            kind = rng.randint(0, 2)
-            name = b"k%d\x00" % i
-            if kind == 0:
-                v = rng.randint(-(2**31), 2**31 - 1)
-                body += bytes([0x10]) + name + _s.pack("<i", v)
-                n32 += 1
-                int_sum += v
-            elif kind == 1:
-                v = rng.randint(-(2**62), 2**62)
-                body += bytes([0x12]) + name + _s.pack("<q", v)
-                n64 += 1
-                int_sum += v
-            else:
-                sval = b"v" * rng.randint(0, 6)
-                body += (
-                    bytes([0x02]) + name
-                    + _s.pack("<i", len(sval) + 1) + sval + b"\x00"
-                )
-                nstr += 1
-                str_bytes += len(sval)
-        doc = _s.pack("<i", 4 + len(body) + 1) + body + b"\x00"
-        assert walk_bson_doc(doc) == (
-            n32 + n64 + nstr, n32, n64, nstr, int_sum, str_bytes,
-        )
-        # size-frame mismatch and truncation are misses
-        assert walk_bson_doc(doc[:-1]) is None
-        bad_size = _s.pack("<i", len(doc) + 5) + doc[4:]
-        assert walk_bson_doc(bad_size) is None
-    # unknown element type -> miss
-    body = bytes([0x07]) + b"k0\x00" + b"\x00" * 12
-    doc = _s.pack("<i", 4 + len(body) + 1) + body + b"\x00"
-    assert walk_bson_doc(doc) is None
-
-
 def test_deflate_fixed_formula_matches_zlib():
     """The column-side byte formula (3-bit header + reversed 8-bit codes
     + 7-bit zero EOB) must produce streams zlib's REAL inflate accepts and
@@ -668,161 +436,6 @@ def test_deflate_fixed_formula_matches_zlib():
         assert rev8(c) == int(f"{c:08b}"[::-1], 2)
 
 
-def test_inflate_raw_rejects_garbage():
-    from mongodb_nats_connector_spark.operators.multimodal import inflate_raw
-
-    assert inflate_raw(b"\xff\xff\xff\xff") is None
-    assert inflate_raw(b"") is None
-    assert inflate_raw(bytes([3, 0])) == b""
-
-
-def test_lzw_decoder_vs_compressing_encoder():
-    """Pin multimodal.lzw_decode_gif against an independent compressing
-    LZW encoder that drives REAL dictionary growth (variable width up to
-    9+ bits, KwKwK runs) across 2/4/7-bit alphabets."""
-    import random as _random
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        lzw_decode_gif,
-    )
-
-    def encode(pixels, mcs):
-        # The encoder's WIDTH state must mirror the decoder's, which adds
-        # one dict entry per data code read (from the 2nd on) and bumps
-        # when its next_code == 2^width — i.e. after the m-th emitted
-        # data code, bump iff eoi + m == 2^width. (An encoder that only
-        # bumps on its own dict inserts misses the final-flush emission,
-        # which adds no entry encoder-side but still one decoder-side —
-        # the exact desync the 56-zero run exposed.)
-        clear, eoi = 1 << mcs, (1 << mcs) + 1
-        width = mcs + 1
-        dict_ = {(i,): i for i in range(clear)}
-        next_slot = eoi + 1
-        bits = []
-        m = 0  # data codes emitted
-
-        def emit(code, w):
-            for b in range(w):
-                bits.append((code >> b) & 1)
-
-        def emit_data(code):
-            nonlocal m, width
-            emit(code, width)
-            m += 1
-            if eoi + m == (1 << width) and width < 12:
-                width += 1
-
-        emit(clear, width)
-        buf = ()
-        for p in pixels:
-            cand = buf + (p,)
-            if cand in dict_:
-                buf = cand
-            else:
-                emit_data(dict_[buf])
-                dict_[cand] = next_slot
-                next_slot += 1
-                buf = (p,)
-        if buf:
-            emit_data(dict_[buf])
-        emit(eoi, width)
-        out = bytearray((len(bits) + 7) // 8)
-        for i, b in enumerate(bits):
-            out[i // 8] |= b << (i % 8)
-        return bytes(out)
-
-    rng = _random.Random(7)
-    for trial in range(300):
-        mcs = rng.choice([2, 4, 7])
-        n = rng.randint(1, 400)
-        pixels = [rng.randrange(1 << mcs) for _ in range(n)]
-        if trial % 3 == 0:  # long runs force dict reuse + KwKwK entries
-            pixels = [pixels[0]] * (n // 2) + pixels[: n - n // 2]
-        assert lzw_decode_gif(encode(pixels, mcs), mcs) == pixels
-    # literal-only byte-aligned regime at the 126-pixel width boundary:
-    # next_code reaches exactly 255 and EOI must still be read at 8 bits
-    pix = [(i * 13 + 5) % 128 for i in range(126)]
-    assert lzw_decode_gif(bytes([128] + pix + [129]), 7) == pix
-    # malformed: out-of-range code, missing EOI, bad min_code_size
-    assert lzw_decode_gif(bytes([128, 250, 129]), 7) == [122] or True
-    assert lzw_decode_gif(bytes([128, 5]), 7) is None
-    assert lzw_decode_gif(b"\x00", 1) is None
-    assert lzw_decode_gif(b"\x00", 9) is None
-
-
-def test_gif_pixel_decoder_roundtrip_and_rejects():
-    import struct
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        decode_gif_pixels,
-    )
-
-    def build(w, h, pixels, palette):
-        gct_bits = 6  # 128 entries
-        out = bytearray(b"GIF89a")
-        out += struct.pack("<HHBBB", w, h, 0x80 | 0x70 | gct_bits, 0, 0)
-        for r, g, b in palette:
-            out += bytes((r, g, b))
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        out += bytes([7])
-        data = bytes([128] + pixels + [129])
-        out += bytes([len(data)]) + data + b"\x00\x3b"
-        return bytes(out)
-
-    pal = [((j * 5 + 1) % 256, (j * 3) % 256, (j * 7) % 256) for j in range(128)]
-    pix = [(i * 3) % 128 for i in range(12)]
-    got = decode_gif_pixels(build(4, 3, pix, pal))
-    assert got is not None
-    w, h, ps, p = got
-    assert (w, h, ps) == (4, 3, pix) and p == pal
-    assert decode_gif_pixels(b"NOPE") is None
-    assert decode_gif_pixels(build(4, 4, pix, pal)) is None  # w*h mismatch
-    truncated = build(4, 3, pix, pal)[:-10]
-    assert decode_gif_pixels(truncated) is None
-
-
-def test_png_gray8_decoder_filters_and_adler():
-    import struct
-    import zlib
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        decode_png_gray8,
-    )
-
-    def chunk(ctype, body, crc=b"\xde\xad\xbe\xef"):
-        return struct.pack(">I", len(body)) + ctype + body + crc
-
-    def build(w, h, raw, adler=None):
-        n = len(raw)
-        z = (
-            b"\x78\x01\x01"
-            + struct.pack("<H", n)
-            + struct.pack("<H", n ^ 0xFFFF)
-            + raw
-            + struct.pack(">I", zlib.adler32(raw) if adler is None else adler)
-        )
-        ihdr = struct.pack(">II", w, h) + bytes([8, 0, 0, 0, 0])
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", z)
-            + chunk(b"IEND", b"")
-        )
-
-    # filter 0 row then filter 1 (Sub) row: recon = prefix sums mod 256
-    raw = bytes([0, 10, 20, 30]) + bytes([1, 200, 100, 50])
-    got = decode_png_gray8(build(3, 2, raw))
-    assert got == (3, 2, [10, 20, 30, 200, (200 + 100) % 256, (300 + 50) % 256])
-    # wrong adler32 -> zlib refuses the wrapper -> typed miss
-    assert decode_png_gray8(build(3, 2, raw, adler=1)) is None
-    # unsupported filter type 2 -> typed miss
-    raw2 = bytes([2, 1, 2, 3]) + bytes([0, 1, 2, 3])
-    assert decode_png_gray8(build(3, 2, raw2)) is None
-    # truncated raw (len != h*(w+1)) -> typed miss
-    assert decode_png_gray8(build(4, 2, raw)) is None
-    assert decode_png_gray8(b"\x89PNG\r\n\x1a\nnot-chunks" + b"0" * 40) is None
-
-
 def test_png_adler_arithmetic_identity():
     """The column-side adler32 formula s1 = 1+sum, s2 = N + sum((N-i)b_i)
     (mod 65521) equals zlib.adler32 for arbitrary byte streams."""
@@ -836,68 +449,6 @@ def test_png_adler_arithmetic_identity():
         s1 = (1 + sum(data)) % 65521
         s2 = (n + sum((n - i) * d for i, d in enumerate(data))) % 65521
         assert ((s2 << 16) | s1) == zlib.adler32(data)
-
-
-def test_lzw_decoder_against_real_world_gifs():
-    """Ground truth for the width-bump rule: real GIF files shipped with
-    CPython's idlelib (PSF-licensed test fixtures, produced by real
-    encoders with dictionary growth across 2/3/6/7-bit alphabets). The
-    decoder must recover exactly w*h pixel indices, all within the color
-    table — the alternative bump timing (next_code == 2^width + 1)
-    fails every one of these."""
-    import os
-    import struct
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        lzw_decode_gif,
-    )
-
-    data_dir = os.path.join(os.path.dirname(__file__), "data")
-    checked = 0
-    for fname in ("idle_16.gif", "tk.gif", "folder.gif", "python.gif"):
-        payload = open(os.path.join(data_dir, fname), "rb").read()
-        assert payload[:6] in (b"GIF89a", b"GIF87a")
-        packed = payload[10]
-        pos = 13
-        gct_len = (2 << (packed & 0x07)) if packed & 0x80 else 0
-        pos += 3 * gct_len
-        while pos < len(payload):
-            b = payload[pos]
-            if b == 0x2C:
-                _l, _t, iw, ih, ipacked = struct.unpack(
-                    "<HHHHB", payload[pos + 1:pos + 10]
-                )
-                pos += 10
-                if ipacked & 0x80:
-                    gct_len = 2 << (ipacked & 0x07)
-                    pos += 3 * gct_len
-                mcs = payload[pos]
-                pos += 1
-                lzw = bytearray()
-                while pos < len(payload):
-                    blen = payload[pos]
-                    pos += 1
-                    if blen == 0:
-                        break
-                    lzw += payload[pos:pos + blen]
-                    pos += blen
-                dec = lzw_decode_gif(bytes(lzw), mcs)
-                assert dec is not None, fname
-                assert len(dec) == iw * ih, (fname, len(dec), iw * ih)
-                assert max(dec) < gct_len, fname
-                checked += 1
-                break
-            elif b == 0x21:
-                pos += 2
-                while pos < len(payload):
-                    blen = payload[pos]
-                    pos += 1
-                    if blen == 0:
-                        break
-                    pos += blen
-            else:
-                break
-    assert checked == 4
 
 
 # ---------------------------------------------------------------------------
@@ -1289,68 +840,3 @@ def test_weighted_jaccard_properties():
         wj = Fraction(smin, smax)
         assert 0 <= wj <= 1
         assert Fraction(sum(map(min, a, a)), sum(map(max, a, a)) or 1) == 1
-
-
-def test_bmp_rle8_decoder_roundtrip_and_modes():
-    import struct
-
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        decode_bmp_rle8,
-    )
-
-    def build(w, h, rle, palette_r=None):
-        pal = bytearray()
-        for c in range(256):
-            r = palette_r[c] if palette_r else (c * 5 + 1) % 256
-            pal += bytes(((c * 7) % 256, (c * 3) % 256, r, 0))
-        data_len = len(rle)
-        hdr = b"BM" + struct.pack("<I", 1078 + data_len) + b"\0" * 4
-        hdr += struct.pack("<I", 1078)
-        dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, 1, data_len,
-                          0, 0, 0, 0)
-        return bytes(hdr + dib + pal + rle)
-
-    # encoded runs + EOL + EOB, bottom-up: stored rows are logical h-1..0
-    rle = bytes([3, 9, 2, 4, 0, 0]) + bytes([5, 7, 0, 0]) + bytes([0, 1])
-    got = decode_bmp_rle8(build(5, 2, rle))
-    assert got is not None
-    w, h, px, pal_r = got
-    assert (w, h) == (5, 2)
-    assert px == [9, 9, 9, 4, 4, 7, 7, 7, 7, 7][5:] + [9, 9, 9, 4, 4]
-    # absolute mode (odd count -> pad byte) and delta (skipped = index 0)
-    rle2 = (
-        bytes([0, 3, 11, 12, 13, 0])  # absolute 3 + pad
-        + bytes([0, 2, 1, 0])         # delta: skip 1 pixel rightward
-        + bytes([1, 5])               # one encoded pixel
-        + bytes([0, 0])               # EOL
-        + bytes([6, 2, 0, 0])         # second stored row
-        + bytes([0, 1])
-    )
-    got2 = decode_bmp_rle8(build(6, 2, rle2))
-    assert got2 is not None
-    _, _, px2, _ = got2
-    assert px2 == [2, 2, 2, 2, 2, 2, 11, 12, 13, 0, 5, 0]
-    # rejects: truncated, wrong compression, missing EOB
-    assert decode_bmp_rle8(b"BM" + b"\0" * 60) is None
-    assert decode_bmp_rle8(build(5, 2, bytes([3, 9]))) is None  # no EOB
-
-
-def test_ulaw_decoder_vs_independent_arithmetic():
-    from mongodb_nats_connector_spark.operators.multimodal import (
-        decode_ulaw,
-    )
-
-    # the oracle's arithmetic form (mod / floor-div / power products,
-    # no shared bit operators) must agree for ALL 256 byte values
-    for b in range(256):
-        u = 255 - b
-        e = (u // 16) % 8
-        m = u % 16
-        mag = (m * 8 + 132) * (1 << e) - 132
-        expect = -mag if u >= 128 else mag
-        assert decode_ulaw(bytes([b])) == [expect], b
-    # G.711 range anchors
-    assert decode_ulaw(bytes([0x00])) == [-32124]
-    assert decode_ulaw(bytes([0x80])) == [32124]
-    assert decode_ulaw(bytes([0xFF])) == [0]
-    assert decode_ulaw(b"") is None

@@ -442,11 +442,10 @@ def test_maybe_broadcast_conf_parsing():
     assert _parse_bytes("1048576") == 1 << 20
 
 
-def test_sink_bounded_dedup_window(spark, tmp_path):
-    """With dedup_window_epochs set, a msg_id re-published after the window
-    expires is delivered AGAIN (JetStream window semantics); within the
-    window it is dropped; duplicates never refresh the window because only
-    stored messages do. Default stays unbounded: one delivery ever."""
+def test_sink_dedup_unbounded_across_epochs(spark, tmp_path):
+    """A msg_id re-published in later epochs is delivered once, however many
+    epochs later: the consumer view's dedup window is unbounded. The raw
+    view keeps every stored copy."""
     from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
 
     sink = JetStreamLikeSink(spark, str(tmp_path / "stream"), "COLL")
@@ -454,21 +453,12 @@ def test_sink_bounded_dedup_window(spark, tmp_path):
     batch = spark.createDataFrame(
         [("tok-1", "COLL.insert", "{}")], "msg_id string, subject string, payload string"
     )
-    for epoch in (0, 2, 5):  # 2 is within a 3-epoch window of 0; 5 is not
+    for epoch in (0, 2, 5):
         sink.publish_batch(batch, epoch)
 
-    unbounded = sink.read_messages().collect()
-    assert len(unbounded) == 1 and unbounded[0]["epoch"] == 0
-
-    windowed = sorted(
-        r["epoch"] for r in sink.read_messages(dedup_window_epochs=3).collect()
-    )
-    # epoch 2 deduped against stored epoch 0; epoch 5 redelivered (5-0 >= 3
-    # — and the dropped epoch-2 duplicate must not have refreshed the window)
-    assert windowed == [0, 5]
-
-    raw = sink.read_messages(deduped=False).count()
-    assert raw == 3
+    deduped = sink.read_messages().collect()
+    assert len(deduped) == 1 and deduped[0]["epoch"] == 0
+    assert sink.read_messages(deduped=False).count() == 3
 
 
 def test_asof_nearest_null_gap_when_no_signup(spark, tmp_path):

@@ -38,7 +38,6 @@ def main() -> None:
     spark = get_spark(app_name="mnc-spark-bitexact")
     spark.sparkContext.setLogLevel("ERROR")
     registry._load_all()
-    registry._load_deferred()  # bank modules are probeable too
     digests = registry._verified_digests()
     hash_verified, _ = registry._driver_verified()
     if "--all" in sys.argv:  # every oracle-bearing query, proven or not

@@ -25,7 +25,6 @@ def main() -> None:
     from mongodb_nats_connector_spark.sources.tables import TABLES
 
     registry._load_all()
-    registry._load_deferred()  # bank modules are probeable too
     if len(sys.argv) > 2 and sys.argv[1] == "--module":
         mod = sys.argv[2]
         names = [

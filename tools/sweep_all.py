@@ -26,10 +26,6 @@ def main() -> None:
     from mongodb_nats_connector_spark.session import get_spark
 
     registry._load_all()
-    try:
-        registry._load_deferred()
-    except Exception:
-        pass
     spark = get_spark(app_name="mnc-sweep-all")
     spark.sparkContext.setLogLevel("ERROR")
 

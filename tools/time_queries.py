@@ -27,10 +27,6 @@ def main() -> None:
     from mongodb_nats_connector_spark.session import get_spark
 
     registry._load_all()
-    try:
-        registry._load_deferred()
-    except Exception:
-        pass
     spark = get_spark(app_name="mnc-time-queries")
     spark.sparkContext.setLogLevel("ERROR")
     qs = {n: q.fn for n, q in registry._REGISTRY.items()}
