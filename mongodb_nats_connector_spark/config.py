@@ -85,7 +85,6 @@ class ConnectorConfig:
     nats_url: str = "nats://localhost:4222"
     server_addr: str = "127.0.0.1:8080"
     log_level: str = "info"
-    checkpoint_root: str = "/tmp/mnc-spark-checkpoints"
 
     def __post_init__(self) -> None:
         if not self.mongo_uri:

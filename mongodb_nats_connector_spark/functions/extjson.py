@@ -105,8 +105,3 @@ def extjson_get_oid(json_col: Column, path: str) -> Column:
 def extjson_get_date(json_col: Column, path: str) -> Column:
     """Extract a relaxed {"$date": iso} as a timestamp."""
     return F.to_timestamp(F.get_json_object(json_col, f"{path}.$date"))
-
-
-def extjson_get_timestamp_secs(json_col: Column, path: str) -> Column:
-    """Extract the seconds component of a {"$timestamp":{t,i}}."""
-    return F.get_json_object(json_col, f"{path}.$timestamp.t").cast("bigint")

@@ -170,14 +170,37 @@ def _driver_verified(root: Path | None = None) -> tuple[set[str], set[str]]:
     return hash_verified, rows_only_seen
 
 
+def needs_driver_proof(
+    hash_verified: set[str] | None = None, digests: dict[str, str] | None = None
+) -> list[str]:
+    """Oracle-bearing queries the driver has not proven in their current
+    form, in registration order: no green hash row in any
+    ``CORRECTNESS_r*.json`` artifact, or one recorded for another digest
+    (the query or its oracle was edited since). ``hash_verified`` and
+    ``digests`` default to the repo's artifacts and ``verified_digests.json``.
+    """
+    _load_all()
+    if hash_verified is None:
+        hash_verified, _ = _driver_verified()
+    if digests is None:
+        digests = _verified_digests()
+    return [
+        n
+        for n, q in _REGISTRY.items()
+        if q.oracle is not None
+        and not (n in hash_verified and digests.get(n) == query_digest(q))
+    ]
+
+
 def all_queries() -> dict[str, RegisteredQuery]:
     """All registered queries, ordered so unverified ones come first.
 
-    Rank 0: has an oracle but no green driver hash row yet (the driver's
-    next 50-query window should spend its budget here). Rank 1: no oracle
-    and never executed by the driver (gets a rows-only record). Rank 2:
-    already driver-verified (hash-matched, or rows-only and still
-    oracle-less). Stable registration order within each rank.
+    Rank 0: has an oracle but no green driver hash row yet
+    (``needs_driver_proof``; the driver's next 50-query window should spend
+    its budget here). Rank 1: no oracle and never executed by the driver
+    (gets a rows-only record). Rank 2: already driver-verified
+    (hash-matched, or rows-only and still oracle-less). Stable registration
+    order within each rank.
 
     A past green row only counts while the implementation it proved is the
     current one: verification is keyed by ``query_digest`` (oracle SQL +
@@ -186,21 +209,17 @@ def all_queries() -> dict[str, RegisteredQuery]:
     digest, demoting it back to rank 0/1 so the next driver window re-proves
     it instead of silently trusting a stale artifact.
     """
-    _load_all()
     hash_verified, rows_only_seen = _driver_verified()
     digests = _verified_digests()
-
-    def current(name: str) -> bool:
-        return digests.get(name) == query_digest(_REGISTRY[name])
+    pending = set(needs_driver_proof(hash_verified, digests))
+    proven = hash_verified | rows_only_seen
 
     def rank(q: RegisteredQuery) -> int:
-        if q.name in hash_verified and current(q.name):
-            return 2
-        if q.oracle is None:
-            return 2 if q.name in rows_only_seen and current(q.name) else 1
-        return 0
+        if q.oracle is not None:
+            return 0 if q.name in pending else 2
+        return 2 if q.name in proven and digests.get(q.name) == query_digest(q) else 1
 
-    ordered = sorted(_REGISTRY.values(), key=lambda q: rank(q))
+    ordered = sorted(_REGISTRY.values(), key=rank)
     return {q.name: q for q in ordered}
 
 

@@ -122,9 +122,3 @@ def _maybe_repartition(spark: SparkSession, df: DataFrame, parallel: bool) -> Da
     if not parallel:
         return df
     return df.repartition(spark.sparkContext.defaultParallelism)
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() queries."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

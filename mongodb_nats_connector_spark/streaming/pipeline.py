@@ -20,6 +20,12 @@ resume token and written atomically per epoch; batch N+1 only commits after
 N (epoch serialization) — the same per-collection total order with batch
 granularity.
 
+Invalidate (O6): the batch handler only flags the pipeline; the
+``Connector`` stops a flagged query itself, on the caller's thread, from the
+calls every driver of it already makes (``process_all_available`` and the
+serve loop's ``await_any_termination``) — the reference's watch loop likewise
+returns on an invalidate (client.go:232-235).
+
 Cost per epoch: the transform and the invalidate check are column
 expressions built once per pipeline, and the check is an ``Observation``
 riding the sink's write. In total-order mode the sink's window follows its
@@ -29,8 +35,6 @@ per-key mode adds the map stage of its shuffle on the document key.
 
 from __future__ import annotations
 
-import threading
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -45,6 +49,7 @@ from mongodb_nats_connector_spark.config import (
 )
 from mongodb_nats_connector_spark.functions.extjson import envelope_to_extjson
 from mongodb_nats_connector_spark.sources.change_events import read_change_event_stream
+from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
 from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
 
 
@@ -88,39 +93,15 @@ class PipelineHandle:
     config: CollectionConfig
     query: StreamingQuery
     sink: JetStreamLikeSink
-    # set by the batch handler when an invalidate marker is observed; the
-    # query is then stopped gracefully (reference client.go:232-235 returns
-    # from the watch loop without error — the connector stays alive)
+    # {"invalidated": True} once the batch handler saw an invalidate marker;
+    # the Connector's next control call then stops the query gracefully
+    # (reference client.go:232-235 returns from the watch loop without
+    # error — the connector stays alive)
     lifecycle: dict = field(default_factory=dict)
 
     @property
     def invalidated(self) -> bool:
         return bool(self.lifecycle.get("invalidated"))
-
-
-def _stop_after_epoch(query: StreamingQuery, timeout: float = 30.0) -> None:
-    """Stop a StreamingQuery once its in-flight trigger (if any) finishes.
-
-    Runs on a helper thread: stop() from inside foreachBatch would interrupt
-    the very epoch that carried the invalidate marker before its commit.
-    Waiting for the trigger to go idle lets the final publishable events of
-    that epoch commit; if the wait races the next trigger, the epoch-keyed
-    idempotent sink makes the replay harmless.
-    """
-    deadline = time.monotonic() + timeout
-    while time.monotonic() < deadline:
-        try:
-            if not query.isActive:
-                return
-            if not query.status.get("isTriggerActive", False):
-                break
-        except Exception:
-            break
-        time.sleep(0.1)
-    try:
-        query.stop()
-    except Exception:
-        pass  # already terminated
 
 
 class Connector:
@@ -149,14 +130,17 @@ class Connector:
         self.source_paths = source_paths
         self.sink_root = sink_root
         self.order_within_key = order_within_key
-        self.metrics = metrics  # optional MetricsRegistry for NATS counters
+        # the NATS counters of every pipeline's sink; None: a fresh registry
+        self.metrics = MetricsRegistry() if metrics is None else metrics
         self.handles: list[PipelineHandle] = []
 
     def _batch_handler(self, sink: JetStreamLikeSink, stream_name: str, lifecycle: dict):
         """foreachBatch body: publish the batch's publishable events, then —
-        O6 — if the batch carries an invalidate marker, flag the pipeline and
-        stop its query after the epoch (client.go:232-235: the reference
-        stops resuming the dropped collection; siblings keep running).
+        O6 — if the batch carries an invalidate marker, flag the pipeline
+        (client.go:232-235: the reference stops resuming the dropped
+        collection; siblings keep running). The query is not stopped here:
+        that would interrupt this very epoch before its commit. The
+        Connector's next control call stops it (``_stop_invalidated``).
 
         The invalidate check is an ``Observation`` on the raw batch, so it
         rides the publish job instead of re-scanning the batch; the filter
@@ -181,11 +165,6 @@ class Connector:
             sink.publish_batch(out, epoch_id)
             if seen.get["invalidates"]:
                 lifecycle["invalidated"] = True
-                query = lifecycle.get("query")
-                if query is not None:
-                    threading.Thread(
-                        target=_stop_after_epoch, args=(query,), daemon=True
-                    ).start()
 
         return handle
 
@@ -212,26 +191,31 @@ class Connector:
                 .queryName(f"cdc-{coll.stream_name}")
                 .start()
             )
-            lifecycle["query"] = query
-            if lifecycle.get("invalidated"):
-                # the first trigger raced us and already saw the invalidate
-                threading.Thread(
-                    target=_stop_after_epoch, args=(query,), daemon=True
-                ).start()
             self.handles.append(PipelineHandle(coll, query, sink, lifecycle))
         return self.handles
 
+    def _stop_invalidated(self) -> None:
+        """Stop each flagged, still-active query unless it is running a
+        micro-batch with data. The flag is set inside such a batch, before
+        its commit; once the query's status shows no trigger with data in
+        flight, that batch has committed and ``stop()`` ends the query
+        gracefully (``exception()`` stays None). A trigger that only polls
+        the source for new files is safe to interrupt, so the test is not
+        ``isTriggerActive`` alone: a file source polls every few ms, and
+        ``processAllAvailable()`` returns from inside such a poll."""
+        for h in self.handles:
+            if h.invalidated and h.query.isActive:
+                status = h.query.status
+                if not (status["isTriggerActive"] and status["isDataAvailable"]):
+                    h.query.stop()
+
     def process_all_available(self) -> None:
         for h in self.handles:
-            try:
-                h.query.processAllAvailable()
-            except Exception:
-                # a query stopped mid-wait by the invalidate handler is a
-                # graceful completion, not a failure
-                if not h.invalidated:
-                    raise
+            h.query.processAllAvailable()
+        self._stop_invalidated()
 
     def await_any_termination(self, timeout: float | None = None):
+        self._stop_invalidated()
         terminated = self.spark.streams.awaitAnyTermination(timeout)
         if terminated and any(h.query.isActive for h in self.handles):
             # One terminated handle (e.g. an invalidated collection) would

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mongodb_nats_connector_spark.config import PUBLISHABLE_OPERATION_TYPES
+from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
 
 
 class JetStreamLikeSink:
@@ -53,8 +54,9 @@ class JetStreamLikeSink:
         full partition parallelism, and ``seq_in_epoch`` numbers within the
         key. Requires the batch to carry a ``document_key`` column.
 
-        ``metrics`` (a ``streaming.observability.MetricsRegistry``) enables
-        the reference's NATS exposition (internal/prometheus/prometheus.go):
+        ``metrics`` (a ``streaming.observability.MetricsRegistry``; None: a
+        fresh one) receives the reference's NATS exposition
+        (internal/prometheus/prometheus.go) on every publish:
         ``nats_messages_published_total{subject}`` /
         ``nats_messages_failed_total{subject}`` counters and
         ``nats_message_duration_seconds{subject}`` — observed once per epoch
@@ -67,7 +69,7 @@ class JetStreamLikeSink:
         self.stream_dir = stream_dir
         self.stream_name = stream_name
         self.order_within_key = order_within_key
-        self.metrics = metrics
+        self.metrics = MetricsRegistry() if metrics is None else metrics
         self.messages_dir = os.path.join(stream_dir, "messages")
         order = (
             Window.partitionBy("document_key") if order_within_key else Window
@@ -114,11 +116,10 @@ class JetStreamLikeSink:
     # An epoch without publishable rows writes an empty partition: the
     # consumer view is unchanged, and no job is spent checking first.
     def publish_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        writer = self.epoch_messages(batch, epoch_id)
-        observation = None
-        if self.metrics is not None:
-            observation = Observation()
-            writer = writer.observe(observation, *self._subject_counts)
+        observation = Observation()
+        writer = self.epoch_messages(batch, epoch_id).observe(
+            observation, *self._subject_counts
+        )
         t0 = time.perf_counter()
         try:
             # Epoch-keyed overwrite = replay-safe (idempotent) publish.
@@ -128,39 +129,31 @@ class JetStreamLikeSink:
                 .save(os.path.join(self.messages_dir, f"epoch={int(epoch_id)}"))
             )
         except Exception:
-            if self.metrics is not None:
-                # the observation never materialized — fall back to counting
-                # the failed batch directly so failure counters stay labeled
-                # (rare path; one extra job only on publish failure)
-                for r in (
-                    batch.groupBy("subject").agg(F.count(F.lit(1)).alias("n")).collect()
-                ):
-                    self.metrics.inc(
-                        "nats_messages_failed_total", {"subject": r["subject"]}, r["n"]
-                    )
-            raise
-        if self.metrics is not None:
-            elapsed = time.perf_counter() - t0
-            got = observation.get  # blocks until the write's listener fires
-            counted = 0
-            for i, subject in enumerate(self._subjects):
-                n = int(got[f"n_{i}"])
-                counted += n
-                if n:
-                    self.metrics.inc(
-                        "nats_messages_published_total", {"subject": subject}, n
-                    )
-                    self.metrics.observe(
-                        "nats_message_duration_seconds", {"subject": subject}, elapsed
-                    )
-            other = int(got["n_total"]) - counted
-            if other:
+            # the observation never materialized — fall back to counting
+            # the failed batch directly so failure counters stay labeled
+            # (rare path; one extra job only on publish failure)
+            for r in batch.groupBy("subject").agg(F.count(F.lit(1)).alias("n")).collect():
                 self.metrics.inc(
-                    "nats_messages_published_total", {"subject": "other"}, other
+                    "nats_messages_failed_total", {"subject": r["subject"]}, r["n"]
                 )
+            raise
+        elapsed = time.perf_counter() - t0
+        got = observation.get  # blocks until the write's listener fires
+        counted = 0
+        for i, subject in enumerate(self._subjects):
+            n = int(got[f"n_{i}"])
+            counted += n
+            if n:
+                self.metrics.inc("nats_messages_published_total", {"subject": subject}, n)
                 self.metrics.observe(
-                    "nats_message_duration_seconds", {"subject": "other"}, elapsed
+                    "nats_message_duration_seconds", {"subject": subject}, elapsed
                 )
+        other = int(got["n_total"]) - counted
+        if other:
+            self.metrics.inc("nats_messages_published_total", {"subject": "other"}, other)
+            self.metrics.observe(
+                "nats_message_duration_seconds", {"subject": "other"}, elapsed
+            )
 
     # Consumer view — dedup by msg id. The window is UNBOUNDED, mirroring
     # durable storage: strictly stronger than JetStream, which remembers a

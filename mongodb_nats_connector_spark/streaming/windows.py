@@ -112,56 +112,6 @@ def per_key_offsets(stream: DataFrame) -> DataFrame:
     )
 
 
-# --- transformWithStateInPandas: the Spark 4 stateful API (successor to
-#     applyInPandasWithState) — same offset-tracking semantics, richer state
-#     model (typed value state, TTL, timers), RocksDB-backed ---
-
-
-def per_key_offsets_tws(stream: DataFrame) -> DataFrame:
-    """groupBy(user).transformWithStateInPandas with a ValueState holding
-    (max_event_id, n_events). Functionally identical to per_key_offsets;
-    exists because TWS is the forward path for custom stateful operators
-    (timers, TTL state, multiple state variables) that the connector's
-    offset logic (internal/mongo/client.go:186-199) generalizes into.
-
-    NOTE: requires google.protobuf at runtime (optional pyspark dep, absent
-    in this container — the test is skipif-gated); per_key_offsets above is
-    the dependency-free equivalent used by default."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class OffsetTracker(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("offsets", OFFSET_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            if self._state.exists():
-                max_id, n = self._state.get()
-            else:
-                max_id, n = -1, 0
-            for pdf in rows:
-                if len(pdf):
-                    max_id = max(max_id, int(pdf["event_id"].max()))
-                    n += len(pdf)
-            self._state.update((max_id, n))
-            (user_id,) = key
-            yield pd.DataFrame(
-                {"user_id": [user_id], "max_event_id": [max_id], "n_events": [n]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        OffsetTracker(),
-        outputStructType=OFFSET_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 # --- stateful funnel pattern matching: the streaming analogue of the batch
 #     window_pattern_match query (operators/mining5.py) ---
 
@@ -410,81 +360,6 @@ def cusum_from_daily_state(state: DataFrame) -> DataFrame:
             ),
             (F.col("rk") == 1).alias("is_changepoint"),
         )
-    )
-
-
-# --- streaming K-Minimum-Values distinct sketch (round 8) ---
-#
-# The streaming sibling of agg_kmv_distinct_setops (operators/pipeline7.py).
-# KMV is the sketch you WANT under at-least-once delivery: "keep the k
-# smallest distinct hashes" is a lattice operation (idempotent, commutative,
-# associative), so duplicated, reordered, or replayed micro-batches converge
-# to the identical sketch WITHOUT any dedup state — unlike counting
-# aggregations (moment_state_stream), which need a watermarked event-id
-# dedup in front. State is O(k) per key, forever; at 100 TB the same k
-# 8-byte hashes per cohort are all that ever lives in the state store.
-
-KMV_STREAM_K = 64  # matches operators/pipeline7.KMV_K
-_KMV_STREAM_M = float(1 << 60)  # 60-bit md5-derived hash domain
-KMV_STREAM_STATE_SCHEMA = "hs ARRAY<BIGINT>"
-KMV_STREAM_OUTPUT_SCHEMA = (
-    "event_type STRING, n_sketch INT, kth_hash BIGINT, est_distinct BIGINT"
-)
-
-
-def kmv_estimate(n_sketch: int, kth_hash: int) -> int:
-    """The KMV cardinality estimate: exact below k (the sketch IS the
-    distinct set), (k-1) * M / h_(k) once full. Shared by the streaming
-    processor and the stream-vs-batch tests so the two sides can never
-    disagree on rounding."""
-    if n_sketch < KMV_STREAM_K:
-        return n_sketch
-    return int(round((KMV_STREAM_K - 1) * _KMV_STREAM_M / kth_hash))
-
-
-def _merge_kmv(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Merge the micro-batch's hashes into the k-smallest-set state.
-    min-k(min-k(A) ∪ B) = min-k(A ∪ B), so truncating between batches
-    loses nothing and replays are absorbed by the set union."""
-    (etype,) = key
-    hs = set(state.get[0]) if state.exists else set()
-    for pdf in pdfs:
-        hs.update(int(h) for h in pdf["h"])
-    sk = sorted(hs)[:KMV_STREAM_K]
-    state.update((sk,))
-    n = len(sk)
-    yield pd.DataFrame(
-        {
-            "event_type": [etype],
-            "n_sketch": [n],
-            "kth_hash": [sk[-1] if sk else None],
-            "est_distinct": [kmv_estimate(n, sk[-1]) if sk else 0],
-        }
-    )
-
-
-def kmv_sketch_stream(stream: DataFrame) -> DataFrame:
-    """Per-event-type streaming KMV distinct-user sketch: emits the current
-    (sketch size, k-th hash, cardinality estimate) row for every key
-    touched by the micro-batch. The hash is the same 60-bit md5 prefix the
-    batch operator uses, JVM-side, so the streaming sketch is bit-equal to
-    the batch sketch over the same rows (pinned in tests)."""
-    from mongodb_nats_connector_spark.operators.graph_common import md5_hash60
-
-    rows = stream.filter(
-        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
-    ).select(
-        "event_type",
-        md5_hash60(F.col("user_id").cast("string")).alias("h"),
-    )
-    return rows.groupBy("event_type").applyInPandasWithState(
-        _merge_kmv,
-        outputStructType=KMV_STREAM_OUTPUT_SCHEMA,
-        stateStructType=KMV_STREAM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
     )
 
 

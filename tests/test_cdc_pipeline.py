@@ -238,6 +238,45 @@ def test_invalidate_stops_pipeline_siblings_keep_running(spark, tmp_path):
     conn.stop()
 
 
+def test_invalidate_stops_pipeline_from_the_serve_loop(spark, tmp_path):
+    """O6 driven the way ``python -m`` serves (no ``--once``): only
+    ``await_any_termination`` is called, never ``process_all_available``.
+    The invalidated pipeline stops on that thread after its epoch commits,
+    gracefully; the sibling keeps running."""
+    import time
+
+    rows = generate_change_event_rows(n_docs=3, with_duplicates=False)
+    feeds = {"db1.coll1": str(tmp_path / "feed_coll1"), "db1.coll2": str(tmp_path / "feed_coll2")}
+    _land(spark, feeds["db1.coll1"], rows[:8])  # epoch 0: docs 0-1
+    _land(spark, feeds["db1.coll1"], rows[8:])  # epoch 1: doc 2, drop, rename, invalidate
+    write_change_event_feed(
+        spark, feeds["db1.coll2"], n_docs=3, ns_coll="coll2",
+        with_noise_tail=False, with_duplicates=False,
+    )
+    cfg = ConnectorConfig(
+        collections=[
+            CollectionConfig(db_name="db1", coll_name="coll1"),
+            CollectionConfig(db_name="db1", coll_name="coll2"),
+        ]
+    )
+    conn = Connector(spark, cfg, feeds, sink_root=str(tmp_path / "sink"))
+    h1, h2 = conn.start()
+    try:
+        deadline = time.monotonic() + 60
+        while h1.query.isActive and time.monotonic() < deadline:
+            conn.await_any_termination(timeout=1.0)
+        assert h1.invalidated, "invalidate marker not detected"
+        assert not h1.query.isActive, "invalidated pipeline should stop"
+        assert h1.query.exception() is None, "stop must be graceful, not a failure"
+        checkpoint = tmp_path / "sink" / "checkpoints" / cfg.collections[0].checkpoint_name
+        assert (checkpoint / "commits" / "1").exists(), "the invalidate epoch was not committed"
+        assert h2.query.isActive, "sibling pipeline must keep running"
+        assert not h2.invalidated
+        assert h1.sink.message_count() == 12
+    finally:
+        conn.stop()
+
+
 def test_order_within_key_mode_exactly_once_per_key_order(spark, tmp_path):
     """Per-key-ordered sink mode: the epoch write parallelizes (no global
     coalesce) while each document's events stay in token order — the

@@ -22,6 +22,7 @@ from mongodb_nats_connector_spark.streaming.windows import (
     dedup_within_watermark,
     per_key_offsets,
     session_counts,
+    sliding_counts,
     tumbling_counts,
 )
 
@@ -75,6 +76,25 @@ def test_streaming_tumbling_matches_batch(spark, events_feed):
     b = batch.sort_values(key).reset_index(drop=True)
     assert len(s) == len(b)
     assert (s["n"].values == b["n"].values).all()
+
+
+def test_streaming_sliding_matches_batch(spark, events_feed):
+    """Streaming sliding-window agg (1 h length, 30 min slide) == the
+    registered batch query ``stream_sliding_window`` at the same scale
+    factor (complete mode so open windows are visible)."""
+    from mongodb_nats_connector_spark.operators.windows_batch import stream_sliding_window
+
+    streamed = _run_to_memory(
+        spark, sliding_counts(_stream(spark, events_feed)), "complete"
+    )
+    batch = stream_sliding_window(spark, SF).toPandas()
+    s = streamed.sort_values("window_start").reset_index(drop=True)
+    b = batch.sort_values("window_start").reset_index(drop=True)
+    assert list(s.columns) == list(b.columns)
+    assert len(s) == len(b)
+    assert (s["window_start"].values == b["window_start"].values).all()
+    assert (s["n"].values == b["n"].values).all()
+    assert (s["total_value"].values == b["total_value"].values).all()
 
 
 def test_streaming_session_matches_batch(spark, events_feed):
@@ -230,58 +250,6 @@ def test_stream_static_enrichment_join(spark, events_feed):
     s = out.sort_values("event_id").reset_index(drop=True)
     b = batch.sort_values("event_id").reset_index(drop=True)
     assert (s["category"] == b["category"]).all()
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas requires google.protobuf (optional "
-    "pyspark dependency, not installed in this container; the environment "
-    "has no package index access — `pip download protobuf` returns 'no "
-    "matching distribution' — and no wheel is cached on disk, so the dep "
-    "cannot be vendored either; re-verified round 7). The "
-    "applyInPandasWithState variant covers the same semantics above and "
-    "this test runs unmodified the moment protobuf exists",
-)
-def test_stateful_offsets_transform_with_state(spark, events_feed):
-    """transformWithStateInPandas (Spark 4 stateful API) tracks the same
-    per-key offsets as applyInPandasWithState — final state row per user
-    matches the batch max/count."""
-    from mongodb_nats_connector_spark.streaming.windows import per_key_offsets_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = _run_to_memory(spark, per_key_offsets_tws(_stream(spark, events_feed)), "update")
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    # last emitted row per user == batch truth
-    final = out.groupby("user_id").last()
-    batch = (
-        table(spark, SF, "events")
-        .groupBy("user_id")
-        .agg(F.max("event_id").alias("max_event_id"), F.count("*").alias("n_events"))
-        .toPandas()
-        .set_index("user_id")
-    )
-    assert len(final) == len(batch)
-    for uid, row in final.iterrows():
-        assert row["max_event_id"] == batch.loc[uid, "max_event_id"]
-        assert row["n_events"] == batch.loc[uid, "n_events"]
 
 
 def test_stream_stream_interval_join(spark, events_feed):

@@ -38,22 +38,12 @@ def main() -> None:
     spark = get_spark(app_name="mnc-spark-bitexact")
     spark.sparkContext.setLogLevel("ERROR")
     registry._load_all()
-    digests = registry._verified_digests()
-    hash_verified, _ = registry._driver_verified()
     if "--all" in sys.argv:  # every oracle-bearing query, proven or not
         pending = [
             n for n, q in registry._REGISTRY.items() if q.oracle is not None
         ]
     else:
-        pending = [
-            n
-            for n, q in registry._REGISTRY.items()
-            if q.oracle is not None
-            and not (
-                n in hash_verified
-                and digests.get(n) == registry.query_digest(q)
-            )
-        ]
+        pending = registry.needs_driver_proof()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

@@ -29,17 +29,7 @@ def main() -> None:
         return
     newest = artifacts[-1]
     digests = registry.refresh_verified_digests(newest)
-    hash_verified, rows_only = registry._driver_verified()
-    qs = registry.queries()
-    rank0 = [
-        n
-        for n in qs
-        if registry._REGISTRY[n].oracle is not None
-        and not (
-            n in hash_verified
-            and digests.get(n) == registry.query_digest(registry._REGISTRY[n])
-        )
-    ]
+    rank0 = registry.needs_driver_proof()
     print(f"recorded digests from {newest.name}: {len(digests)} total")
     print(f"{len(rank0)} oracle-bearing queries still need driver proof; "
           f"{max(0, len(rank0) - 50)} will spill past the 50-query window")

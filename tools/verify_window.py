@@ -22,17 +22,8 @@ WINDOW = 50
 
 
 def main() -> None:
-    registry._load_all()  # required: _REGISTRY is lazily populated
-    digests = registry._verified_digests()
-    hash_verified, rows_only = registry._driver_verified()
-    changed = [
-        n
-        for n, q in registry._REGISTRY.items()
-        if q.oracle is not None
-        and not (
-            n in hash_verified and digests.get(n) == registry.query_digest(q)
-        )
-    ]
+    hash_verified, _ = registry._driver_verified()
+    changed = registry.needs_driver_proof(hash_verified)
     total = len(registry._REGISTRY)
     print(f"{total} registered queries; {len(changed)} need driver proof "
           f"(window = {WINDOW})")
