@@ -54,15 +54,12 @@ def ext_date(ts_col: Column) -> Column:
     return F.concat(F.lit('{"$date":"'), F.date_format(ts_col, _ISO_MS), F.lit('"}'))
 
 
-def ext_timestamp(ts_col: Column, increment: Column | None = None) -> Column:
-    """Timestamp -> BSON-Timestamp ExtJSON {"$timestamp":{"t":secs,"i":inc}}."""
-    inc = increment if increment is not None else F.lit(1)
+def ext_timestamp(ts_col: Column) -> Column:
+    """Timestamp -> BSON-Timestamp ExtJSON {"$timestamp":{"t":secs,"i":1}}."""
     return F.concat(
         F.lit('{"$timestamp":{"t":'),
         F.unix_timestamp(ts_col).cast("string"),
-        F.lit(',"i":'),
-        inc.cast("string"),
-        F.lit("}}"),
+        F.lit(',"i":1}}'),
     )
 
 

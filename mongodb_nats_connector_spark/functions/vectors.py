@@ -1,35 +1,12 @@
-"""Vector math over `array<double>` columns — pure Spark SQL expressions.
-
-No Python UDFs: dot products and norms are built from higher-order functions
-(`zip_with`/`transform`/`aggregate`) that execute JVM-side, so similarity
-queries stay inside Tungsten and scale with executors. The fold is sequential
-left-to-right, which keeps results bit-deterministic for a given row — the
-property the DuckDB oracle comparison relies on.
+"""Vector math over `array<double>` columns: cosine similarity as an
+Arrow-vectorized pandas UDF (see ``cosine_fast`` for why not Spark's
+higher-order functions). Each row's products are summed in a fixed order,
+so a given row's result is the same on every run.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Elementwise dot product via zip_with + aggregate (JVM-side)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def cosine_fast(a: Column, b: Column) -> Column:
@@ -44,8 +21,7 @@ def cosine_fast(a: Column, b: Column) -> Column:
 
     @pandas_udf("double")
     def _cos(xa, xb):
-        # Null/ragged rows yield NaN (matching the expression form's
-        # null-out behavior) instead of failing the whole batch.
+        # Null/ragged rows yield NaN instead of failing the whole batch.
         la = xa.map(lambda v: -1 if v is None else len(v))
         lb = xb.map(lambda v: -1 if v is None else len(v))
         ok = (la.values == lb.values) & (la.values > 0)

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mongodb_nats_connector_spark.functions.exactsum import double_sum as _dsum
 from mongodb_nats_connector_spark.plans.caching import (
     persist_until_collected,
     release_on_gc,
@@ -39,20 +40,6 @@ from mongodb_nats_connector_spark.plans.caching import (
 from mongodb_nats_connector_spark.plans.hints import maybe_broadcast
 from mongodb_nats_connector_spark.registry import register
 from mongodb_nats_connector_spark.sources.tables import table
-
-
-def _dsum(expr: F.Column) -> F.Column:
-    """Exact order-independent sum for integer-valued terms whose total can
-    exceed 2^63: DECIMAL(38,0) accumulation (the oracles' HUGEINT twin),
-    cast to DOUBLE once at the final scalar arithmetic.
-
-    HASH-SURFACE BOUND: the final integer->double cast is only bit-portable
-    while the total stays under 2^53 — above it DuckDB TRUNCATES
-    HUGEINT/DECIMAL->DOUBLE while Spark rounds to nearest (caught live in
-    orders_tukey_pairwise at sf0.1). For totals that can cross 2^53 at the
-    verified scale, keep the numerator exact and integer-`div` it below
-    2^53 first (the ssw_m recipe in orders_tukey_pairwise)."""
-    return F.sum(expr.cast("decimal(38,0)")).cast("double")
 
 
 # ---------------------------------------------------------------------------

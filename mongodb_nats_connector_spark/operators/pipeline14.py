@@ -30,17 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mongodb_nats_connector_spark.functions.exactsum import decimal_sum as _dsum
 from mongodb_nats_connector_spark.plans.caching import release_on_gc
 from mongodb_nats_connector_spark.plans.hints import maybe_broadcast
 from mongodb_nats_connector_spark.registry import register
 from mongodb_nats_connector_spark.sources.tables import table
-
-
-def _dsum(expr: F.Column) -> F.Column:
-    """Exact order-independent sum for integer terms whose total can cross
-    2^63: DECIMAL(38,0) accumulation (the oracles' HUGEINT twin). The
-    caller must floor-divide below 2^53 before any double conversion."""
-    return F.sum(expr.cast("decimal(38,0)"))
 
 
 def _le_hex(col: F.Column, nbytes: int) -> F.Column:

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mongodb_nats_connector_spark.functions.exactsum import double_sum as _dsum
 from mongodb_nats_connector_spark.plans.caching import (
     persist_until_collected,
     release_on_gc,
@@ -42,13 +43,6 @@ from mongodb_nats_connector_spark.plans.caching import (
 from mongodb_nats_connector_spark.plans.hints import maybe_broadcast
 from mongodb_nats_connector_spark.registry import register
 from mongodb_nats_connector_spark.sources.tables import table
-
-def _dsum(expr: F.Column) -> F.Column:
-    """Exact order-independent sum for integer-valued terms that can
-    exceed 2^53 (or whose total can exceed 2^63): accumulate as
-    DECIMAL(38,0) — the Spark twin of the oracles' HUGEINT sums — and
-    hand back a DOUBLE only once, at the final scalar arithmetic."""
-    return F.sum(expr.cast("decimal(38,0)")).cast("double")
 
 
 # ---------------------------------------------------------------------------

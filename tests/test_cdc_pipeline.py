@@ -12,11 +12,16 @@ from __future__ import annotations
 import glob
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from mongodb_nats_connector_spark.config import CollectionConfig, ConnectorConfig
+from mongodb_nats_connector_spark.config import (
+    PUBLISHABLE_OPERATION_TYPES,
+    CollectionConfig,
+    ConnectorConfig,
+)
 from mongodb_nats_connector_spark.functions.extjson import (
     CHANGE_EVENT_SCHEMA,
     envelope_to_extjson,
@@ -333,6 +338,33 @@ def test_nats_publish_metrics_exposed(spark, tmp_path):
         assert f'nats_messages_published_total{{subject="COLL1.{op}"}} 3' in text, text
     assert 'nats_message_duration_seconds_bucket{subject="COLL1.insert",le="+Inf"}' in text
     assert "nats_messages_failed_total" not in text  # nothing failed
+
+
+def test_publish_failure_counted_per_subject(spark, tmp_path):
+    """A publish whose parquet write fails counts every message of the batch
+    in ``nats_messages_failed_total{subject}``, publishes nothing, and
+    re-raises the write's own error. The write fails because a regular file
+    sits where the sink's ``messages`` directory must go."""
+    rows = generate_change_event_rows(n_docs=4)
+    op = CHANGE_EVENT_SCHEMA.fieldNames().index("operation_type")
+    expected = Counter(
+        f"COLL1.{r[op]}" for r in rows if r[op] in PUBLISHABLE_OPERATION_TYPES
+    )
+    assert len(set(expected.values())) > 1  # per-subject counts differ
+
+    sink = JetStreamLikeSink(spark, str(tmp_path / "COLL1"), "COLL1")
+    os.makedirs(sink.stream_dir)
+    open(sink.messages_dir, "w").close()
+    batch = transform_change_events(
+        spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), "COLL1"
+    )
+    with pytest.raises(Exception, match="ParentNotDirectoryException"):
+        sink.publish_batch(batch, 0)
+
+    counted: dict[str, dict[str, int]] = {}
+    for (name, labels), n in sink.metrics.counters.items():
+        counted.setdefault(name, {})[dict(labels)["subject"]] = n
+    assert counted == {"nats_messages_failed_total": expected}
 
 
 def test_invalidate_detected(spark, tmp_path):

@@ -1,12 +1,10 @@
 """Round-10 additions: pipeline10 operator pins (Kendall tau-b vs scipy-free
 exact pair counting, MMR greedy invariants, Boruvka-vs-Kruskal MST
-agreement) and the streaming daily-moment CUSUM's stream-vs-batch
-equivalence."""
+agreement)."""
 
 from __future__ import annotations
 
 import math
-import uuid
 
 import numpy as np
 import pytest
@@ -248,95 +246,6 @@ def test_mst_matches_kruskal(spark):
 # ---------------------------------------------------------------------------
 # streaming daily-moment CUSUM
 # ---------------------------------------------------------------------------
-
-
-def test_streaming_daily_cusum_matches_batch(spark):
-    """The streamed per-(event_type, day) state across overlapping
-    replay-like micro-batches must equal the batch distinct-aggregation,
-    and the shared stateless CUSUM projection over both must agree row for
-    row — the streaming closure of events_cusum_changepoint."""
-    import tempfile
-
-    from mongodb_nats_connector_spark.streaming.windows import (
-        EVENTS_DDL,
-        cusum_from_daily_state,
-        daily_moment_state_stream,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    with tempfile.TemporaryDirectory() as td:
-        path = f"{td}/cusum_feed"
-        ev.filter(F.col("event_id") % 3 == 0).write.parquet(path, mode="append")
-        ev.filter(F.col("event_id") % 3 != 0).write.parquet(path, mode="append")
-        ev.filter(F.col("event_id") % 5 == 0).write.parquet(path, mode="append")
-
-        stream = spark.readStream.schema(EVENTS_DDL).parquet(path)
-        name = "cusum" + uuid.uuid4().hex[:10]
-        q = (
-            daily_moment_state_stream(stream, dedup_watermark="3650 days")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-        streamed_state = spark.sql(f"SELECT * FROM {name}")
-        streamed = {
-            (r["event_type"], r["day"]): (r["n"], r["s1"])
-            for r in streamed_state.collect()
-        }
-
-        batch_state = (
-            ev.filter(
-                F.col("value").isNotNull()
-                & F.col("event_id").isNotNull()
-                & F.col("ts").isNotNull()
-            )
-            .dropDuplicates(["event_id"])
-            .select(
-                "event_type",
-                F.col("ts").cast("date").alias("day"),
-                F.round(F.col("value") * 10000).cast("bigint").alias("v4"),
-            )
-            .groupBy("event_type", "day")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum("v4").cast("bigint").alias("s1"),
-            )
-        )
-        batch = {
-            (r["event_type"], r["day"]): (r["n"], r["s1"])
-            for r in batch_state.collect()
-        }
-        assert streamed == batch
-        assert len(streamed) > 0
-
-        key = lambda r: (r["event_type"], r["day"])  # noqa: E731
-        got = {
-            key(r): (r["n"], r["s1"], r["cusum"], r["is_changepoint"])
-            for r in cusum_from_daily_state(streamed_state).collect()
-        }
-        exp = {
-            key(r): (r["n"], r["s1"], r["cusum"], r["is_changepoint"])
-            for r in cusum_from_daily_state(batch_state).collect()
-        }
-        assert got == exp
-        q.stop()
-        # exactly one changepoint flagged per event type
-        from collections import Counter
-
-        cps = Counter(
-            et for (et, _d), (_n, _s, _c, is_cp) in got.items() if is_cp
-        )
-        assert set(cps.values()) == {1}
-        # CUSUM returns to ~0 at the final day of each type's series
-        # (sum of deviations over the whole series is identically 0)
-        last = {}
-        for (et, d), (_n, _s, c, _cp) in got.items():
-            if et not in last or d > last[et][0]:
-                last[et] = (d, c)
-        for et, (_d, c) in last.items():
-            assert abs(c) < 1e-6
 
 
 # ---------------------------------------------------------------------------

@@ -591,96 +591,6 @@ def test_cohen_kappa_matches_po_pe_form(spark):
     assert -1.0 <= r["cohen_kappa"] <= 1.0
 
 
-def test_streaming_page_hinkley_matches_batch(spark):
-    """The shared stateless Page-Hinkley projection over the streamed
-    per-(event_type, day) state (across overlapping replay-like
-    micro-batches) must agree row-for-row with the same projection over a
-    batch aggregate, and must replay the n-scaled recurrence per type."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from mongodb_nats_connector_spark.streaming.windows import (
-        EVENTS_DDL,
-        daily_moment_state_stream,
-        page_hinkley_from_daily_state,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    with tempfile.TemporaryDirectory() as td:
-        path = f"{td}/ph_feed"
-        ev.filter(F.col("event_id") % 2 == 0).write.parquet(
-            path, mode="append"
-        )
-        ev.filter(F.col("event_id") % 2 == 1).write.parquet(
-            path, mode="append"
-        )
-        ev.filter(F.col("event_id") % 7 == 0).write.parquet(
-            path, mode="append"
-        )
-        stream = spark.readStream.schema(EVENTS_DDL).parquet(path)
-        name = "ph" + uuid.uuid4().hex[:10]
-        q = (
-            daily_moment_state_stream(stream, dedup_watermark="3650 days")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-        streamed = {
-            (r["event_type"], r["day"]): r
-            for r in page_hinkley_from_daily_state(
-                spark.sql(f"SELECT * FROM {name}")
-            ).collect()
-        }
-    batch_state = (
-        ev.filter(
-            F.col("value").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("ts").isNotNull()
-        )
-        .dropDuplicates(["event_id"])
-        .select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            F.round(F.col("value") * 10000).cast("bigint").alias("v4"),
-        )
-        .groupBy("event_type", "day")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("v4").cast("bigint").alias("s1"),
-        )
-    )
-    batch = {
-        (r["event_type"], r["day"]): r
-        for r in page_hinkley_from_daily_state(batch_state).collect()
-    }
-    assert set(streamed) == set(batch) and len(streamed) > 0
-    for k, r in batch.items():
-        s = streamed[k]
-        for col in ("value_x10k", "m_scaled", "ph_inc", "ph_dec",
-                    "is_upshift_peak", "is_downshift_peak"):
-            assert s[col] == r[col], (k, col)
-    # per-type recurrence replay on the batch side
-    by_type = {}
-    for (et, day), r in sorted(batch.items()):
-        by_type.setdefault(et, []).append(r)
-    for et, rows in by_type.items():
-        rows.sort(key=lambda r: r["day"])
-        t, s = len(rows), sum(r["value_x10k"] for r in rows)
-        cum, mn, mx = 0, None, None
-        for i, r in enumerate(rows):
-            cum += r["value_x10k"]
-            m = t * cum - (i + 1) * s
-            mn = m if mn is None else min(mn, m)
-            mx = m if mx is None else max(mx, m)
-            assert r["m_scaled"] == m
-            assert r["ph_inc"] == m - mn and r["ph_dec"] == mx - m
-        assert rows[-1]["m_scaled"] == 0
-
-
 def test_hellinger_matches_numpy(spark):
     """BC and H must match the numpy sum-of-sqrt over the same bucketed
     histograms, and satisfy 0 <= BC <= 1, H = sqrt(1-BC)."""
@@ -738,95 +648,6 @@ def test_tukey_pairwise_matches_anova_pooling(spark):
         assert abs(r["mean_diff"] - diff) < 1e-9
         assert abs(r["se_diff"] - se) < 1e-9
         assert abs(r["t_stat"] - abs(diff) / se) < 1e-9
-
-
-def test_streaming_burst_matches_batch_and_replay(spark):
-    """The shared stateless burst projection over the streamed state must
-    agree row-for-row with the batch-aggregate projection, and must replay
-    the per-type hysteresis machine exactly."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from mongodb_nats_connector_spark.streaming.windows import (
-        EVENTS_DDL,
-        burst_from_daily_state,
-        daily_moment_state_stream,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    with tempfile.TemporaryDirectory() as td:
-        path = f"{td}/burst_feed"
-        ev.filter(F.col("event_id") % 2 == 0).write.parquet(
-            path, mode="append"
-        )
-        ev.write.parquet(path, mode="append")  # full replay overlap
-        stream = spark.readStream.schema(EVENTS_DDL).parquet(path)
-        name = "burst" + uuid.uuid4().hex[:10]
-        q = (
-            daily_moment_state_stream(stream, dedup_watermark="3650 days")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-        streamed = {
-            (r["event_type"], r["day"]): r
-            for r in burst_from_daily_state(
-                spark.sql(f"SELECT * FROM {name}")
-            ).collect()
-        }
-    batch_state = (
-        ev.filter(
-            F.col("value").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("ts").isNotNull()
-        )
-        .dropDuplicates(["event_id"])
-        .select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            F.round(F.col("value") * 10000).cast("bigint").alias("v4"),
-        )
-        .groupBy("event_type", "day")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("v4").cast("bigint").alias("s1"),
-        )
-    )
-    batch = {
-        (r["event_type"], r["day"]): r
-        for r in burst_from_daily_state(batch_state).collect()
-    }
-    assert set(streamed) == set(batch) and len(streamed) > 0
-    for k, r in batch.items():
-        s = streamed[k]
-        for col in ("n_events", "state", "is_burst_start", "burst_id"):
-            assert s[col] == r[col], (k, col)
-    # per-type hysteresis replay
-    by_type = {}
-    for (et, day), r in sorted(batch.items()):
-        by_type.setdefault(et, []).append(r)
-    for et, rows in by_type.items():
-        rows.sort(key=lambda r: r["day"])
-        t = len(rows)
-        total = sum(r["n_events"] for r in rows)
-        state, bid = 0, 0
-        for r in rows:
-            lhs = 50 * r["n_events"] * t
-            prev = state
-            if lhs > 51 * total:
-                state = 1
-            elif lhs < 49 * total:
-                state = 0
-            start = state == 1 and prev == 0
-            if start:
-                bid += 1
-            assert r["state"] == state
-            assert r["is_burst_start"] == start
-            assert r["burst_id"] == (bid if state == 1 else 0)
 
 
 def test_clustering_coefficient_matches_bruteforce(spark):

@@ -155,100 +155,3 @@ def test_flesch_matches_direct_formula(spark):
             r["fk_grade"] - (0.39 * (w / s) + 11.8 * (syl / w) - 15.59)
         ) < 1e-9
 
-
-def test_pettitt_stream_matches_batch_projection(spark):
-    """The streaming Pettitt projection over the daily-moment state table
-    must agree bit-for-bit with the same projection over a batch daily
-    aggregate (including under a duplicated, out-of-order replay feed),
-    and must replay the midrank identity per type: U_t = cum(mr2) -
-    t*(n+1), with U_n == 0 and the changepoint at the earliest argmax."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from mongodb_nats_connector_spark.streaming.windows import (
-        EVENTS_DDL,
-        daily_moment_state_stream,
-        pettitt_from_daily_state,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    with tempfile.TemporaryDirectory() as td:
-        path = f"{td}/pt_feed"
-        ev.filter(F.col("event_id") % 2 == 0).write.parquet(
-            path, mode="append"
-        )
-        ev.filter(F.col("event_id") % 2 == 1).write.parquet(
-            path, mode="append"
-        )
-        ev.filter(F.col("event_id") % 5 == 0).write.parquet(
-            path, mode="append"
-        )
-        stream = spark.readStream.schema(EVENTS_DDL).parquet(path)
-        name = "pt" + uuid.uuid4().hex[:10]
-        q = (
-            daily_moment_state_stream(stream, dedup_watermark="3650 days")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-        streamed = {
-            (r["event_type"], r["day"]): r
-            for r in pettitt_from_daily_state(
-                spark.sql(f"SELECT * FROM {name}")
-            ).collect()
-        }
-    batch_state = (
-        ev.filter(
-            F.col("value").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("ts").isNotNull()
-        )
-        .dropDuplicates(["event_id"])
-        .select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            F.round(F.col("value") * 10000).cast("bigint").alias("v4"),
-        )
-        .groupBy("event_type", "day")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("v4").cast("bigint").alias("s1"),
-        )
-    )
-    batch = {
-        (r["event_type"], r["day"]): r
-        for r in pettitt_from_daily_state(batch_state).collect()
-    }
-    assert set(streamed) == set(batch) and len(streamed) > 0
-    for k, r in batch.items():
-        s = streamed[k]
-        for col in ("value_x10k", "mr2", "u_stat", "is_changepoint"):
-            assert s[col] == r[col], (k, col)
-    # per-type midrank-identity replay on the batch side
-    by_type = {}
-    for (et, day), r in sorted(batch.items()):
-        by_type.setdefault(et, []).append(r)
-    for et, rows in by_type.items():
-        rows.sort(key=lambda r: r["day"])
-        n = len(rows)
-        vals = sorted(r["value_x10k"] for r in rows)
-        for r in rows:
-            lt = sum(1 for v in vals if v < r["value_x10k"])
-            eq = sum(1 for v in vals if v == r["value_x10k"])
-            assert r["mr2"] == 2 * lt + eq + 1
-        cum = 0
-        u_by_day = []
-        for t, r in enumerate(rows, start=1):
-            cum += r["mr2"]
-            assert r["u_stat"] == cum - t * (n + 1)
-            u_by_day.append((abs(r["u_stat"]), r["day"]))
-        assert rows[-1]["u_stat"] == 0
-        best = max(u_by_day, key=lambda p: (p[0], -p[1].toordinal()))
-        for r in rows:
-            assert r["is_changepoint"] == (
-                abs(r["u_stat"]) == best[0] and r["day"] == best[1]
-            )

@@ -541,49 +541,6 @@ def test_assortativity_matches_numpy(spark):
     assert row["n_dir_edges"] == 2 * len(edges)
 
 
-def test_streaming_latest_state_matches_batch(spark, tmp_path):
-    """The streaming latest-state view (max_by per key, complete mode,
-    3 overlapping micro-batches simulating at-least-once replay) must
-    produce the IDENTICAL per-key newest rows as the batch
-    latest_state_per_key window over the same events."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from mongodb_nats_connector_spark.operators.cdc import latest_state_per_key
-    from mongodb_nats_connector_spark.streaming.windows import (
-        EVENTS_DDL,
-        latest_state_stream,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    path = str(tmp_path / "ls_feed")
-    ev.filter(F.col("event_id") % 3 == 0).write.parquet(path, mode="append")
-    ev.filter(F.col("event_id") % 3 != 0).write.parquet(path, mode="append")
-    ev.filter(F.col("event_id") % 5 == 0).write.parquet(path, mode="append")
-
-    stream = spark.readStream.schema(EVENTS_DDL).parquet(path)
-    name = "ls" + uuid.uuid4().hex[:10]
-    q = (
-        latest_state_stream(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    streamed = {
-        r["user_id"]: (r["last_event_type"], r["last_value"], r["last_ts"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    q.stop()
-    batch = {
-        r["user_id"]: (r["last_event_type"], r["last_value"], r["last_ts"])
-        for r in latest_state_per_key(ev).collect()
-    }
-    assert streamed == batch
-
-
 def _write_orders(spark, path, rows):
     """rows: (o_orderkey, o_custkey, o_totalprice, o_orderdate str)."""
     df = spark.createDataFrame(
@@ -789,63 +746,6 @@ def test_contamination_check_matches_numpy(spark):
         else:
             assert abs(got[k][1] - exp[k][1]) < 1e-9
             assert got[k][2] == exp[k][2]
-
-
-def test_streaming_latest_state_survives_restart(spark, tmp_path):
-    """The latest-state view's aggregation state must survive a
-    stop/restart from checkpoint: batch 1 runs, the query stops, batch 2
-    (with replayed duplicates) lands, a NEW query restarts from the same
-    checkpoint — the final snapshot equals the batch compaction over ALL
-    events, proving state recovery + replay idempotence together."""
-    from pyspark.sql import functions as F
-
-    from mongodb_nats_connector_spark.operators.cdc import latest_state_per_key
-    from mongodb_nats_connector_spark.streaming.windows import (
-        EVENTS_DDL,
-        latest_state_stream,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    feed = str(tmp_path / "feed")
-    snap = str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-
-    def start():
-        stream = spark.readStream.schema(EVENTS_DDL).parquet(feed)
-
-        def write_snapshot(batch_df, _epoch):
-            batch_df.write.mode("overwrite").parquet(snap)
-
-        return (
-            latest_state_stream(stream)
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(write_snapshot)
-            .start()
-        )
-
-    ev.filter(F.col("event_id") % 2 == 0).write.parquet(feed, mode="append")
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-    # second delivery overlaps the first (at-least-once replay) and adds
-    # the remaining events
-    ev.filter(
-        (F.col("event_id") % 2 == 1) | (F.col("event_id") % 6 == 0)
-    ).write.parquet(feed, mode="append")
-    q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
-
-    streamed = {
-        r["user_id"]: (r["last_event_type"], r["last_value"], r["last_ts"])
-        for r in spark.read.parquet(snap).collect()
-    }
-    batch = {
-        r["user_id"]: (r["last_event_type"], r["last_value"], r["last_ts"])
-        for r in latest_state_per_key(ev).collect()
-    }
-    assert streamed == batch
 
 
 def test_paired_ttest_matches_pandas(spark):

@@ -613,70 +613,6 @@ def test_mutual_information_single_type_zero_rows(spark, tmp_path):
     assert agg_mutual_information(spark, str(tmp_path)).count() == 0
 
 
-def test_streaming_moment_state_matches_batch(spark, tmp_path):
-    """The streaming (n, sum, sumsq) state behind the event_id dedup must
-    equal the batch distinct-aggregation over the same rows, across 3
-    overlapping (replay-like) micro-batches — the property that makes a
-    streaming control chart exactly-once."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from mongodb_nats_connector_spark.streaming.windows import (
-        EVENTS_DDL,
-        moment_state_stream,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    path = str(tmp_path / "mom_feed")
-    ev.filter(F.col("event_id") % 3 == 0).write.parquet(path, mode="append")
-    ev.filter(F.col("event_id") % 3 != 0).write.parquet(path, mode="append")
-    ev.filter(F.col("event_id") % 5 == 0).write.parquet(path, mode="append")
-
-    stream = spark.readStream.schema(EVENTS_DDL).parquet(path)
-    name = "mom" + uuid.uuid4().hex[:10]
-    # horizon spans the fixture's whole time range so every replayed
-    # duplicate falls inside the watermarked dedup buffer
-    q = (
-        moment_state_stream(stream, dedup_watermark="3650 days")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    streamed = {
-        r["event_type"]: (r["n"], r["s1"], int(r["s2"]))
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    q.stop()
-    batch = {
-        r["event_type"]: (r["n"], r["s1"], int(r["s2"]))
-        for r in ev.filter(
-            F.col("value").isNotNull() & F.col("event_id").isNotNull()
-        )
-        .dropDuplicates(["event_id"])
-        .select(
-            "event_type",
-            F.round(F.col("value") * 10000).cast("bigint").alias("v4"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("v4").cast("bigint").alias("s1"),
-            F.sum((F.col("v4") * F.col("v4")).cast("decimal(38,0)")).alias("s2"),
-        )
-        .collect()
-    }
-    assert streamed == batch
-    # the derived 3-sigma limits are a stateless projection over the state
-    for et, (n, s1, s2) in streamed.items():
-        if n > 1:
-            mean = s1 / n
-            var = (s2 - s1 * s1 / n) / (n - 1)
-            assert var >= 0
-
-
 def test_triplet_mining_matches_bruteforce(spark):
     from mongodb_nats_connector_spark.operators.pipeline9 import (
         TRIPLET_ANCHORS,
@@ -775,74 +711,6 @@ def test_power_analysis_formula_and_monotonicity(spark):
         assert r["currently_powered"] == (
             1 if r["n_users"] // 2 >= expect else 0
         )
-
-
-def test_streaming_moment_state_survives_restart(spark, tmp_path):
-    """The moment state (and its event_id dedup buffer) must survive a
-    stop/restart from checkpoint: batch 1 runs, the query stops, batch 2
-    (with replayed duplicates) lands, a NEW query restarts from the same
-    checkpoint — final moments equal the batch distinct-aggregation over
-    ALL events, proving state recovery + replay idempotence together."""
-    from pyspark.sql import functions as F
-
-    from mongodb_nats_connector_spark.streaming.windows import (
-        EVENTS_DDL,
-        moment_state_stream,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    feed = str(tmp_path / "feed")
-    snap = str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-
-    def start():
-        stream = spark.readStream.schema(EVENTS_DDL).parquet(feed)
-
-        def write_snapshot(batch_df, _epoch):
-            batch_df.write.mode("overwrite").parquet(snap)
-
-        return (
-            moment_state_stream(stream, dedup_watermark="3650 days")
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(write_snapshot)
-            .start()
-        )
-
-    ev.filter(F.col("event_id") % 2 == 0).write.parquet(feed, mode="append")
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-    ev.filter(
-        (F.col("event_id") % 2 == 1) | (F.col("event_id") % 6 == 0)
-    ).write.parquet(feed, mode="append")
-    q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
-
-    streamed = {
-        r["event_type"]: (r["n"], r["s1"], int(r["s2"]))
-        for r in spark.read.parquet(snap).collect()
-    }
-    batch = {
-        r["event_type"]: (r["n"], r["s1"], int(r["s2"]))
-        for r in ev.filter(
-            F.col("value").isNotNull() & F.col("event_id").isNotNull()
-        )
-        .dropDuplicates(["event_id"])
-        .select(
-            "event_type",
-            F.round(F.col("value") * 10000).cast("bigint").alias("v4"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("v4").cast("bigint").alias("s1"),
-            F.sum((F.col("v4") * F.col("v4")).cast("decimal(38,0)")).alias("s2"),
-        )
-        .collect()
-    }
-    assert streamed == batch
 
 
 def test_poisson_weight_ladder_calibration(spark):

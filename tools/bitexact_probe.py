@@ -1,6 +1,5 @@
 #!/usr/bin/env python
-"""Exact-BIT parity probe for every driver-PENDING query (unproven or
-edited since its last green round): runs the Spark query and its DuckDB
+"""Exact-BIT parity probe: runs each selected Spark query and its DuckDB
 oracle at sf0.01 and compares float columns by raw int64 bit pattern — the
 comparison the driver's value-hash actually performs. The pytest parity
 suite allows atol=1e-9 on floats, which can hide a 1-ulp divergence the
@@ -10,7 +9,15 @@ driver would flag red; run THIS before round end to preempt that.
 graph_kcore returning the edge relation because a helper def had slipped
 between @register and its target function.)
 
-Run from the repo root: python tools/bitexact_probe.py
+Run from the repo root:
+    python tools/bitexact_probe.py                    # every driver-PENDING query
+    python tools/bitexact_probe.py --all              # every oracle-bearing query
+    python tools/bitexact_probe.py --module pipeline9 # one operator module
+    python tools/bitexact_probe.py name1 name2 ...    # named queries
+
+A driver-PENDING query is unproven or edited since its last green round
+(``registry.needs_driver_proof()``). A selected query without an oracle is
+run and reported as rows-only.
 """
 
 from __future__ import annotations
@@ -38,12 +45,21 @@ def main() -> None:
     spark = get_spark(app_name="mnc-spark-bitexact")
     spark.sparkContext.setLogLevel("ERROR")
     registry._load_all()
-    if "--all" in sys.argv:  # every oracle-bearing query, proven or not
-        pending = [
+    args = sys.argv[1:]
+    if args == ["--all"]:  # every oracle-bearing query, proven or not
+        names = [
             n for n, q in registry._REGISTRY.items() if q.oracle is not None
         ]
+    elif len(args) == 2 and args[0] == "--module":
+        names = [
+            n
+            for n, q in registry._REGISTRY.items()
+            if q.fn.__module__.endswith(args[1])
+        ]
+    elif args:
+        names = args
     else:
-        pending = registry.needs_driver_proof()
+        names = registry.needs_driver_proof()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
@@ -66,10 +82,14 @@ def main() -> None:
     norm = parity_mod._normalize
 
     bad = []
-    for n in sorted(pending):
+    for n in sorted(names):
         try:
-            mine = norm(registry._REGISTRY[n].fn(spark, SF).toPandas())
-            orc = norm(con.sql(registry._REGISTRY[n].oracle).df())
+            q = registry._REGISTRY[n]
+            mine = norm(q.fn(spark, SF).toPandas())
+            if q.oracle is None:
+                print(f"{n}: rows-only, {len(mine)} rows")
+                continue
+            orc = norm(con.sql(q.oracle).df())
             if len(mine) != len(orc) or list(mine.columns) != list(orc.columns):
                 bad.append((n, f"shape {mine.shape}/{list(mine.columns)} vs "
                                f"{orc.shape}/{list(orc.columns)}"))
@@ -95,11 +115,11 @@ def main() -> None:
                         bad.append((n, f"{c}: {int(mism.sum())} value diffs"))
         except Exception as e:  # noqa: BLE001 - report and keep probing
             bad.append((n, f"ERR {type(e).__name__}: {str(e)[:100]}"))
-    print(f"pending queries probed: {len(pending)}")
+    print(f"queries probed: {len(names)}")
     for n, msg in bad:
         print(f"BITDIFF {n}: {msg}")
     if not bad:
-        print("ALL EXACT — pending set is bit-identical to the oracle")
+        print("ALL EXACT — selected set is bit-identical to the oracle")
     spark.stop()
     sys.exit(1 if bad else 0)
 

@@ -10,8 +10,9 @@ reads ~1.0 because queries are overhead-bound (PERF_r14 scaling block).
     SPARK_GRAFT_CPUS=32 python tools/sf1_scaling.py
     SPARK_GRAFT_CPUS=8  python tools/sf1_scaling.py
 
-The replica is built once under spark-warehouse/scaleprobe_sf1 (reused if
-present; delete the directory to rebuild)."""
+The replica is built once under spark-warehouse/scaleprobe_sf1 and reused
+only if its build finished (the _COMPLETE marker); delete the directory to
+rebuild."""
 
 from __future__ import annotations
 
@@ -46,6 +47,8 @@ def _steal() -> float:
 
 
 def build_replica(spark, rep_dir: str) -> None:
+    """Write every replica table, then the _COMPLETE marker ``main`` checks,
+    so a build that crashed part-way is rebuilt, not reused."""
     from pyspark.sql import functions as F
 
     from mongodb_nats_connector_spark.sources.tables import table
@@ -90,6 +93,7 @@ def build_replica(spark, rep_dir: str) -> None:
                 df = df.withColumn(col, F.col(col) + F.col("rep") * shifts[space])
             df = df.drop("rep").repartition(32)
         df.write.mode("overwrite").parquet(os.path.join(rep_dir, f"{name}.parquet"))
+    open(os.path.join(rep_dir, "_COMPLETE"), "w").close()
 
 
 def main() -> None:
@@ -106,7 +110,7 @@ def main() -> None:
         "spark-warehouse",
         "scaleprobe_sf1",
     )
-    if not os.path.isdir(os.path.join(rep_dir, "lineitem.parquet")):
+    if not os.path.exists(os.path.join(rep_dir, "_COMPLETE")):
         build_replica(spark, rep_dir)
 
     # same warmup as bench.py
