@@ -1,11 +1,29 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Batch benchmark harness: times the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+JSON line.
 
-Each query is forced end-to-end with a noop-format write (full computation,
-no sink cost, nothing collected to the driver). A warmup action runs first so
-JVM/codegen spin-up isn't attributed to the first query.
+Each query is built, then forced end-to-end with a noop-format write: full
+computation, no sink cost, nothing collected to the driver (``time_query``).
+``warm_up`` runs first in every session, so JVM start, parquet footer reads
+and the Python worker fork are not billed to the first query.
+
+The run has two phases:
+
+- the suite: every HEADLINE_QUERIES entry, SPARK_GRAFT_BENCH_PASSES times
+  (default 3) in one session;
+- the watch runs: each WATCH_LINES_S query WATCH_MIN_RUNS more times in a
+  fresh session, judged against its line on the minimum of all its runs.
+
+The hold lines are judged on minimums across runs because on a shared host
+the minimum is the reading with the least contention in it: same-code suite
+totals have spread 1.66x (17.9-29.8 s) on one box, so one sample mixes plan
+cost with hypervisor steal. The /proc/stat deltas recorded next to them
+show how much contention a run saw.
+
+``tools/`` imports ``warm_up``, ``time_query``, ``read_proc_stat`` and
+``HEADLINE_QUERIES`` from here, so every batch timing in the repo is taken
+the same way.
 """
 
 from __future__ import annotations
@@ -18,9 +36,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# representative coverage of each operator family, weighted toward the
-# shapes that dominate at 100 TB (fact-table agg, fact-fact join, windows,
-# LSH dedup, similarity)
+# One query per operator family, weighted toward the shapes that dominate at
+# 100 TB (fact-table aggregation, fact-fact join, windows, LSH dedup,
+# similarity). Order matters: the first 24 entries are the common24 series
+# every artifact reports, so new entries go at the end.
 HEADLINE_QUERIES = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -43,11 +62,9 @@ HEADLINE_QUERIES = [
     "events_funnel",
     "text_passage_dedup",
     "embedding_quantize_int8",
-    # round 4: iterative graph, tokenizer-prep counting, one-pass rollup
     "pagerank_nations",
     "bigram_lm_surprisal",
     "events_time_rollup",
-    # round 5: sketching, graph mining, DQ sweep, BLAS-batched linear algebra
     "agg_heavy_hitters_cms",
     "graph_triangle_count",
     "dq_rule_violations",
@@ -55,77 +72,92 @@ HEADLINE_QUERIES = [
     "stream_window_topk",
     "bpe_learn_merges",
     "embedding_pca_power_iteration",
-    # round 6: MERGE upsert, semantic LSH dedup, nucleus curation,
-    # tile-explode rolling distinct
     "merge_upsert_snapshot",
     "dedup_embedding_cosine",
     "docs_topp_quality",
     "events_stickiness_dau_wau",
-    # round 7: mergeable KMV sketch set-ops, exchange-reusing streaks,
-    # engine-exact HLL registers
     "agg_kmv_distinct_setops",
     "events_activity_streaks",
     "agg_hll_registers",
-    # round 7 (cont.): the shuffle-only 100 TB CC workhorse, point-in-time
-    # CDC state reconstruction, sweep-line concurrency
     "graph_cc_bigstar",
     "cdc_apply_asof",
     "events_max_concurrency",
-    # round 9: sparse retrieval scoring, one-pass closed-form OLS, hashed
-    # Poisson-bootstrap resampling (40x map-side explode)
     "text_bm25_topk",
     "orders_ols_multifactor",
     "agg_bootstrap_poisson",
-    # round 8: the two-pass range-partitioned rank (no single-partition
-    # ntile) and the distinct-cell-compacted Spearman moments
     "customer_ltv_deciles",
     "agg_spearman_corr",
 ]
 
-# Per-query watch anchors (round-14 order): each watch-list query's line is
-# judged on an IN-ARTIFACT min across >= WATCH_MIN_RUNS measurements — the
-# main passes plus extra isolated re-runs appended after the suite sweep —
-# so the anchor lives in BENCH_r*.json, not in SCALING.md prose.
+# Hold lines for the watch queries, in seconds of noop-write execution. Each
+# is judged on the query's minimum over all its in-artifact runs (the suite
+# passes plus WATCH_MIN_RUNS fresh-session runs), so the evidence for a line
+# lives in the BENCH artifact itself.
 #
-# Lines are COLD-PROTOCOL anchors (r14 bisect, SCALING.md): the r12-era 0.6
-# and 1.2 lines for bootstrap/bm25 were calibrated on the pre-r13 warm
-# semantics — a second noop-write of the SAME DataFrame, which for queries
-# wrapped in persist_until_collected measured a block-manager cache read
-# (40 rows for bootstrap), not the query. Cold history: bootstrap
-# 1.43-2.30 s across r10-r12, bm25 1.83-2.10 s; the lines below sit under
-# every historical cold reading but above the isolated min-of-5 probes
-# (1.08 / 0.86), so they catch real regressions without protocol red.
+# Every line is a cold-protocol anchor taken on 32 cores (SCALING.md): it
+# sits under every historical cold suite reading of the query (bootstrap
+# 1.43-2.30 s, bm25 1.83-2.10 s) and above its isolated min-of-5 probe
+# (1.08 / 0.86 s), so it catches a real regression without flagging noise.
+# hll's 1.1 sits just above the worst fresh-session minimum observed on
+# unchanged code (0.52-1.02 s over four runs, the 1.02 one under heavy
+# steal) and far below every in-suite cold reading (1.9-2.5 s).
 WATCH_LINES_S = {
     "agg_spearman_corr": 3.0,
     "agg_bootstrap_poisson": 1.6,
     "text_bm25_topk": 1.6,
-    # hll raised 1.0 -> 1.1 (r15, VERDICT r14 item 9): the fresh-session
-    # min-of-5 distribution on the r14 code spans 0.52-1.02 across the four
-    # committed driver-protocol runs (plans/r14/bench_s3_*.json), with the
-    # single 1.021 reading at 160 CPU-s of watch-phase steal. A line AT the
-    # distribution's contended edge turns a steal spike into a false
-    # regression; 1.1 sits just above the worst observed fresh-session min
-    # and far below every in-suite cold reading (1.9-2.5 s).
     "agg_hll_registers": 1.1,
     "agg_heavy_hitters_cms": 0.6,
     "events_max_concurrency": 1.6,
 }
+# Each watch query gets this many full runs in the fresh session, not a
+# top-up to 5: the first one or two runs pay C2-JIT warm-up for the query's
+# operators, and the minimum must be able to land on a post-JIT run
+# (spearman converged 4.67 -> 2.36 s over 5 fresh runs).
 WATCH_MIN_RUNS = 5
 
 
-def _read_proc_stat() -> dict[str, float]:
+def read_proc_stat() -> dict[str, float]:
     """First /proc/stat cpu line in seconds per field (user nice system idle
-    iowait irq softirq steal). Used to record host contention INSIDE the
-    artifact: same-code readings on this box spread 17.9-29.8s (r12), and
-    the exculpatory steal evidence must live in BENCH_r*.json, not prose."""
+    iowait irq softirq steal), so host contention is recorded inside the
+    artifact. Empty where /proc/stat does not exist."""
     try:
         with open("/proc/stat") as f:
             parts = f.readline().split()
         tck = float(os.sysconf("SC_CLK_TCK"))
         names = ["user", "nice", "system", "idle", "iowait", "irq", "softirq", "steal"]
         return {n: int(v) / tck for n, v in zip(names, parts[1:1 + len(names)])}
-    except OSError:  # non-Linux fallback; artifact just omits steal data
+    except OSError:
         return {}
+
+
+def warm_up(spark, table_dir: str) -> None:
+    """Touch the biggest input once (JVM and parquet footer caches) and run
+    one trivial Arrow batch so the Python UDF worker pool is up: steady
+    state is what is measured, not worker fork time."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    spark.read.parquet(os.path.join(table_dir, "lineitem.parquet")).count()
+
+    @pandas_udf("long")
+    def identity(x):
+        return x
+
+    spark.range(1000).select(identity(F.col("id"))).write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+
+def time_query(spark, fn, sf_dir: str) -> tuple[float, float]:
+    """Build ``fn(spark, sf_dir)``, then force it with a noop write; returns
+    (build_s, exec_s). The two are billed separately because driver-loop
+    queries (pagerank, BPE, PCA) run their iteration jobs while the
+    DataFrame is being built; for everything else build is ~0."""
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.perf_counter() - t1
 
 
 def main() -> None:
@@ -135,132 +167,72 @@ def main() -> None:
     n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
 
     from mongodb_nats_connector_spark.registry import queries
-    from mongodb_nats_connector_spark.session import get_spark
+    from mongodb_nats_connector_spark.session import default_parallelism, get_spark
 
     spark = get_spark(app_name="mnc-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
+    warm_up(spark, sf_dir)
 
-    # warmup: touch the biggest input once (JVM + parquet footer caches) and
-    # run one trivial Arrow batch so the Python UDF worker pool is up —
-    # steady-state is what we're measuring, not worker fork time
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(x):
-        return x
-
-    spark.range(1000).select(_warm(F.col("id"))).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    stat0 = _read_proc_stat()
+    stat0 = read_proc_stat()
     wall0 = time.perf_counter()
 
-    # Noise-robust protocol (round 13): the FULL suite runs n_passes times.
-    # Pass 1 is the cold pass (exec_s — directly comparable to every earlier
-    # round's single-run numbers); passes 2..N are warm re-runs of the SAME
-    # build+write protocol. The official hold-line number is the per-query
-    # MINIMUM across passes (exec_best_s): the minimum is the reading with
-    # the least host-contention noise in it — same-code readings on this box
-    # measured a 1.66x spread (17.94-29.76s, r12) with a fixed-probe control
-    # degrading 40% over two idle hours, so any single sample conflates plan
-    # cost with microVM steal. All per-pass sums are emitted so a judge can
-    # see the spread, and the /proc/stat steal delta across the whole run is
-    # recorded alongside.
+    # Suite: every headline query, n_passes whole-suite sweeps.
     build_s: dict[str, float] = {}
     exec_passes: dict[str, list[float]] = {name: [] for name in HEADLINE_QUERIES}
     for pass_i in range(n_passes):
         for name in HEADLINE_QUERIES:
-            # bill build and execute separately: driver-loop queries
-            # (pagerank, BPE, PCA) run their iteration jobs while the
-            # DataFrame is being BUILT (charged to build_s); everything else
-            # should be ~all exec. The headline total counts both.
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            t1 = time.perf_counter()
-            r0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            r1 = time.perf_counter()
-            exec_passes[name].append(round(r1 - r0, 3))
+            b, e = time_query(spark, qs[name], sf_dir)
+            exec_passes[name].append(round(e, 3))
             if pass_i == 0:
-                build_s[name] = round(t1 - t0, 3)
+                build_s[name] = round(b, 3)
 
-    stat_suite = _read_proc_stat()
+    stat_suite = read_proc_stat()
 
-    # Watch anchors (round-14 order): extra ISOLATED re-runs for the
-    # watch-list queries so each reaches >= WATCH_MIN_RUNS measurements —
-    # the per-query hold-line is then judged on the in-artifact min, the
-    # closest thing to an idle-box reading this shared host can produce.
-    # The re-runs happen in a FRESH SparkSession: after 3 whole-suite
-    # sweeps (~1700 jobs) the accumulated JVM heap/GC and scheduler state
-    # inflates sub-second queries ~1.5x (r14 measurement: spearman 3.9 s
+    # Watch runs, appended to each watch query's exec_passes. They run in a
+    # fresh SparkContext (new block manager, scheduler and codegen cache):
+    # after three suite sweeps (~1700 jobs) the accumulated JVM heap, GC and
+    # scheduler state inflates sub-second queries ~1.5x (spearman 3.9 s
     # in-suite vs 2.4 s fresh-session min-of-5 at the same steal), which
-    # would breach hold lines that no fresh run breaches. The watch steal
-    # delta is recorded separately so contention during JUST this phase is
-    # visible in the artifact.
-    spark.stop()  # new SparkContext: fresh block manager, scheduler, codegen
+    # would breach lines that no fresh run breaches.
+    spark.stop()
     spark = get_spark(app_name="mnc-spark-bench-watch")
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    spark.range(1000).select(_warm(F.col("id"))).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # Each watch query gets WATCH_MIN_RUNS full runs in the fresh session
-    # (not a top-up to 5): the first 1-2 fresh runs pay C2-JIT warm-up for
-    # that query's operators — the min must be able to land on a post-JIT
-    # run (probe convergence: spearman 4.67 -> 2.36 across 5 fresh runs).
+    warm_up(spark, sf_dir)
     for name in WATCH_LINES_S:
         if name not in exec_passes:
             continue
         for _ in range(WATCH_MIN_RUNS):
-            df = qs[name](spark, sf_dir)
-            r0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            exec_passes[name].append(round(time.perf_counter() - r0, 3))
+            _, e = time_query(spark, qs[name], sf_dir)
+            exec_passes[name].append(round(e, 3))
 
-    stat1 = _read_proc_stat()
+    stat1 = read_proc_stat()
     wall1 = time.perf_counter()
 
-    exec_s = {n: v[0] for n, v in exec_passes.items()}  # cold, historical
-    # exec_pass2_s replaces the r4-r12 field name exec_warm_s: since r13 the
-    # passes are whole-suite sweeps (rebuild + write), NOT a back-to-back
-    # noop re-write of the same built DataFrame, so the old name conflated
-    # two protocols across rounds (ADVICE r13).
+    exec_s = {n: v[0] for n, v in exec_passes.items()}
     exec_pass2_s = {n: v[1] if len(v) > 1 else v[0] for n, v in exec_passes.items()}
     exec_best_s = {n: min(v) for n, v in exec_passes.items()}
-    # Suite-sweeps-only min (r15, VERDICT r14 item 3): exec_best_s includes
-    # the >=5 fresh-session watch re-runs for exactly the 6 watch queries,
-    # which r13-and-earlier artifacts never had — protocol-favoring their
-    # per-query history. exec_best_suite_s restores a cross-round comparable
-    # series: min over the n_passes whole-suite sweeps ONLY, every query
-    # measured under the identical protocol.
     exec_best_suite_s = {n: min(v[:n_passes]) for n, v in exec_passes.items()}
-    # CPU-aware line for the one genuinely CPU-bound watch anchor (r15):
-    # bootstrap's 1.6 line is a 32-core cold-protocol anchor, but the query
-    # demonstrably scales with cores (2.42x for 32v8 at sf1,
-    # plans/r15/sf1_scaling.md), so the low-core companion run the driver
-    # uses for scaling measurement reads 1.62-2.30 fresh-session on
-    # UNCHANGED code (r15; r14-c8: 1.20-2.15, green only via one lucky
-    # quiet sample — its second-best was 1.61). Judging that distribution
-    # against the 32-core line misreads parallelism as regression; 2.6
-    # clears every observed low-core fresh-session reading while still
-    # catching a real 2x regression (which would read ~3.5+ at 8 cores).
-    # All other anchors are overhead-bound and keep one line at any count.
-    from mongodb_nats_connector_spark.session import default_parallelism
-
+    # Bootstrap is the one CPU-bound watch query (2.42x from 8 to 32 cores
+    # at sf1, plans/r15/sf1_scaling.md): below 16 cores its fresh-session
+    # minimum reads 1.2-2.3 s on unchanged code, so the 32-core anchor would
+    # read parallelism as regression. 2.6 s clears every such reading and
+    # still catches a 2x regression (~3.5 s at 8 cores). The other anchors
+    # are overhead-bound and hold at any core count.
+    parallelism = default_parallelism()
     watch_lines = dict(WATCH_LINES_S)
-    if default_parallelism() < 16:
+    line_rule = dict.fromkeys(watch_lines, "anchor")
+    if parallelism < 16:
         watch_lines["agg_bootstrap_poisson"] = 2.6
+        line_rule["agg_bootstrap_poisson"] = "bootstrap_lt16_cores"
     watch = {
         n: {
             "min_s": min(exec_passes[n]),
             "line_s": watch_lines[n],
             "ok": min(exec_passes[n]) <= watch_lines[n],
             "runs": exec_passes[n],
+            "line_rule": {"rule": line_rule[n], "parallelism": parallelism},
         }
         for n in watch_lines
         if n in exec_passes
@@ -270,20 +242,15 @@ def main() -> None:
     }
 
     total = round(sum(timings.values()), 3)
-    # the 24-query set benchmarked since round 4, summed over exec_s only —
-    # directly comparable to BENCH_r04 (which timed just the noop write):
-    # the honest answer to "did execution regress or did accounting change"
     common24 = HEADLINE_QUERIES[:24]
     common24_exec = round(sum(exec_s[q] for q in common24), 3)
     common24_exec_runs = [
         round(sum(exec_passes[q][i] for q in common24), 3) for i in range(n_passes)
     ]
     common24_exec_best = round(sum(exec_best_s[q] for q in common24), 3)
-    # The <=18s hold-line is judged at the PINNED protocol of 3 suite passes
-    # (ADVICE r13: min-of-N is one-sided, so an env-raised pass count could
-    # nudge the headline down with zero code change). This field always uses
-    # min over exactly the first min(3, n_passes) sweeps, whatever
-    # SPARK_GRAFT_BENCH_PASSES says, and whatever extra watch runs appended.
+    # The common24 hold line is judged on min over exactly the first
+    # min(3, n_passes) sweeps: a minimum only falls as samples are added, so
+    # raising SPARK_GRAFT_BENCH_PASSES must not lower the judged number.
     official_passes = min(3, n_passes)
     common24_exec_best_official3 = round(
         sum(min(exec_passes[q][:official_passes]) for q in common24), 3
@@ -300,16 +267,12 @@ def main() -> None:
         else None
     )
     busy = (
-        round(
-            sum(stat1[k] - stat0[k] for k in ("user", "nice", "system"))
-            , 2)
+        round(sum(stat1[k] - stat0[k] for k in ("user", "nice", "system")), 2)
         if stat0 and stat1
         else None
     )
-    # Field ORDER is load-bearing (round-14 order #4): the driver's capture
-    # window can truncate the artifact's tail, so every cross-round
-    # comparable summary number comes FIRST and the big per-query maps come
-    # LAST — truncation may eat detail, never the headline series.
+    # Field order matters: a capture window that truncates the line eats its
+    # tail, so the summary numbers come first and the per-query maps last.
     print(
         json.dumps(
             {
@@ -328,35 +291,22 @@ def main() -> None:
                 "host_busy_cpu_s": busy,
                 "bench_wall_s": round(wall1 - wall0, 1),
                 "watch": watch,
-                "note": "r14 protocol: the full suite runs bench_passes "
-                "sweeps; exec_s = pass-1 (cold, comparable to earlier "
-                "rounds), exec_pass2_s = pass-2 of the rebuild+write loop "
-                "(RENAMED from exec_warm_s, whose r4-r12 semantics were a "
-                "noop re-write of the same built DataFrame — do not compare "
-                "across the rename), exec_best_s = per-query min across all "
-                "runs incl. watch re-runs. The <=18s hold-line is judged on "
-                "common24_exec_best_official3, pinned to min over the first "
-                "3 sweeps regardless of SPARK_GRAFT_BENCH_PASSES. 'watch' "
-                "holds each watch-list query's in-artifact min-of->=5 "
-                "anchor vs its hold line; watch re-runs execute in a FRESH "
-                "SparkContext after the sweeps (accumulated JVM state "
-                "inflates sub-second queries ~1.5x) with their own "
-                "watch_steal_s contention delta. host_steal_s = /proc/stat "
-                "steal delta across the whole run (contention evidence "
-                "inside the artifact). 'queries' = build_s + exec_s. Watch "
-                "lines recalibrated r14 to cold-protocol anchors (SCALING.md "
-                "r14 bisect: the old 0.6/1.2 lines measured "
-                "persist-cache-backed re-writes, a retired protocol); hll "
-                "line 1.0->1.1 in r15 to clear the observed fresh-session "
-                "distribution edge (see WATCH_LINES_S comment); bootstrap's "
-                "line is 2.6 when SPARK_GRAFT_CPUS < 16 (r15: the one "
-                "CPU-bound anchor scales 2.42x for 32v8, so low-core "
-                "companion runs read 1.6-2.3 on unchanged code — see the "
-                "watch_lines comment). "
-                "exec_best_suite_s (new r15) = per-query min over the suite "
-                "sweeps ONLY — the cross-round comparable series; "
-                "exec_best_s additionally folds in the watch re-runs for "
-                "the 6 watch queries.",
+                "note": "value = sum of queries. queries = build_s + exec_s "
+                "per headline query. exec_s = pass-1 noop-write time (cold). "
+                "exec_pass2_s = each query's second recorded run: suite pass "
+                "2, or with bench_passes 1, pass 1 for a suite-only query and "
+                "the first watch run for a watch query. exec_best_suite_s = "
+                "per-query min over the suite sweeps; exec_best_s = per-query "
+                "min over all runs, watch runs included. common24_* sum the "
+                "first 24 headline queries' exec times: pass 1, each pass, "
+                "best, and best over the first bench_passes_official sweeps "
+                "(the hold line's series). watch = each watch query's min "
+                "over its suite runs and its fresh-session runs against "
+                "line_s; line_rule names the rule that set line_s (anchor, or "
+                "bootstrap_lt16_cores below 16 cores) and the parallelism it "
+                "saw. host_steal_s and host_busy_cpu_s are the /proc/stat "
+                "steal and user+nice+system deltas over the whole run; "
+                "watch_steal_s is the steal over the watch phase.",
                 "queries": timings,
                 "build_s": build_s,
                 "exec_s": exec_s,

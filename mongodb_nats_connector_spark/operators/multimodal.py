@@ -67,22 +67,6 @@ def sniff_image_dims(payload: bytes) -> tuple[int, int, str] | None:
     return None
 
 
-def real_decode(payload: bytes) -> tuple[int, int]:
-    """Full pixel decode via PIL when the library exists (feature-gated);
-    raises NotImplementedError in codec-less environments. Header-only
-    dimension extraction does NOT need this — see sniff_image_dims."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError as exc:
-        raise NotImplementedError(
-            "media codecs are not available in this environment"
-        ) from exc
-    with Image.open(io.BytesIO(payload)) as img:
-        return img.size
-
-
 def fake_decode(payload: bytes) -> tuple[int, int]:
     """Deterministic stand-in: derive fake dimensions from the payload bytes
     so tests are reproducible without codec libraries."""

@@ -78,12 +78,6 @@ def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in plan_string(df)
 
 
-def wholestage_codegen_ids(df: DataFrame) -> int:
-    """How many WholeStageCodegen spans cover the plan (wider = better)."""
-    s = plan_string(df, "simple")
-    return s.count("WholeStageCodegen")
-
-
 def unpartitioned_windows(df: DataFrame) -> list[str]:
     """Window expressions evaluated with an EMPTY partition spec — each one
     funnels its whole input relation through a single task. Returns one

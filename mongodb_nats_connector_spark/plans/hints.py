@@ -75,39 +75,25 @@ def maybe_broadcast(df: DataFrame, threshold_bytes: int | None = None) -> DataFr
     return df
 
 
-def broadcast_if_counted_small(
+def counted_fits_broadcast(
     df: DataFrame, row_bytes: int = 64, threshold_bytes: int | None = None
-) -> DataFrame:
-    """Runtime-informed broadcast hint for PERSISTED derived relations.
+) -> bool:
+    """Runtime-informed broadcast decision for PERSISTED derived relations.
 
     Catalyst's static estimate for an aggregate/filter output inherits the
     INPUT scale (a support-pruned edge list built from a 100 TB fact table
     estimates at terabytes even when 3k edges survive), so ``maybe_broadcast``
-    rightly declines the hint — but then the plan shuffles the big probe side
-    before AQE can notice the build side is tiny. When the relation is
-    already persisted (the wedge-join operators materialize it anyway), one
-    ``count()`` on the cache gives the TRUE cardinality: hint broadcast iff
-    ``count * row_bytes`` fits under the session threshold. This is exactly
-    the statistics-collection step a warehouse ANALYZE would provide, priced
-    at one cheap job on a cached relation, and it can never pin an unbounded
-    relation: the decision is made from materialized reality, not a guess.
+    rightly declines the hint. When the relation is already persisted, one
+    ``count()`` on the cache gives the TRUE cardinality: broadcast iff
+    ``count * row_bytes`` fits under the session threshold. A caller that
+    joins the same relation under several aliases pays for one count and
+    hints every alias consistently.
 
     The caller must have called ``persist()`` on ``df`` (asserted) — both so
     the count is cheap and so the count and the join read the same data.
     """
-    if counted_fits_broadcast(df, row_bytes, threshold_bytes):
-        return F.broadcast(df)
-    return df
-
-
-def counted_fits_broadcast(
-    df: DataFrame, row_bytes: int = 64, threshold_bytes: int | None = None
-) -> bool:
-    """The decision behind ``broadcast_if_counted_small``, exposed so a
-    caller that joins the SAME persisted relation under several aliases can
-    pay for one count and hint every alias consistently."""
     if df.storageLevel.useMemory is False and df.storageLevel.useDisk is False:
-        raise ValueError("broadcast_if_counted_small requires a persisted input")
+        raise ValueError("counted_fits_broadcast requires a persisted input")
     if threshold_bytes is None:
         threshold_bytes = broadcast_threshold_bytes(df.sparkSession)
     if threshold_bytes <= 0:

@@ -127,7 +127,8 @@ def refresh_verified_digests(artifact: Path) -> dict[str, str]:
     Run this at ROUND START, before editing any operator: the artifact was
     produced against the round-end commit, so the current digest equals the
     digest of what the driver verified. Names verified in older rounds keep
-    their previously recorded digests.
+    their previously recorded digests. ``python tools/round_start.py`` is
+    the one entry point that runs it on the newest artifact.
     """
     _load_all()
     rows = json.loads(Path(artifact).read_text())
@@ -229,19 +230,3 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     return {n: q.oracle for n, q in all_queries().items() if q.oracle is not None}
-
-
-if __name__ == "__main__":  # pragma: no cover
-    # Round-start maintenance: record digests for the newest driver
-    # artifact's greens BEFORE editing any operator, e.g.
-    #   python -m mongodb_nats_connector_spark.registry CORRECTNESS_r03.json
-    # Delegate to the canonical package-module instance: under `-m` this file
-    # executes as `__main__`, whose module-level _REGISTRY is a DIFFERENT dict
-    # from the one operator modules register into — calling our own
-    # refresh_verified_digests here would skip every name.
-    import sys
-
-    from mongodb_nats_connector_spark import registry as _canonical
-
-    updated = _canonical.refresh_verified_digests(Path(sys.argv[1]))
-    print(f"verified_digests.json: {len(updated)} names recorded")

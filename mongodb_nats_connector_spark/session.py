@@ -56,10 +56,27 @@ def default_parallelism() -> int:
     return os.cpu_count() or 4
 
 
+_UNIT_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _initial_heap_mb(driver_memory: str) -> int:
+    """A quarter of the driver heap (a Spark size string: "8g", "4096m"; a
+    bare number is MiB), the JVM's starting heap. G1 otherwise starts at
+    1/64 of physical memory and grows only when its pause time asks for it;
+    a connector whose heap stayed near twice its live set (a few hundred MB,
+    a third of it in humongous regions) began a concurrent mark
+    on every humongous allocation, several a second, and spent about 1.6x
+    the CPU per event of one whose heap had grown, depending on nothing but
+    when the growth happened."""
+    s = driver_memory.strip().lower().removesuffix("b")
+    unit = _UNIT_MB.get(s[-1:])
+    mb = float(s[:-1]) * unit if unit else float(s)
+    return max(1, int(mb) // 4)
+
+
 def get_spark(
     app_name: str = "mongodb-nats-connector-spark",
     master: str | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -77,8 +94,7 @@ def get_spark(
     # ~2-3x total executor cores (AQE coalesces the excess anyway).
     conf["spark.sql.shuffle.partitions"] = str(max(cpus, 8))
     conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-    if extra_conf:
-        conf.update(extra_conf)
+    conf["spark.driver.extraJavaOptions"] = f"-Xms{_initial_heap_mb(conf['spark.driver.memory'])}m"
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -32,9 +32,8 @@ DEFAULT_BUCKETS: tuple[float, ...] = (
 class MetricsRegistry:
     """Counters + duration histograms keyed by label tuples, thread-safe."""
 
-    def __init__(self, buckets: tuple[float, ...] = DEFAULT_BUCKETS) -> None:
+    def __init__(self) -> None:
         self._lock = threading.Lock()
-        self.buckets = tuple(sorted(buckets))
         self.counters: dict[tuple[str, tuple], float] = defaultdict(float)
         self.dur_sum: dict[tuple[str, tuple], float] = defaultdict(float)
         self.dur_count: dict[tuple[str, tuple], int] = defaultdict(int)
@@ -53,8 +52,8 @@ class MetricsRegistry:
         with self._lock:
             self.dur_sum[key] += seconds * count
             self.dur_count[key] += count
-            counts = self.dur_buckets.setdefault(key, [0] * len(self.buckets))
-            for i, le in enumerate(self.buckets):
+            counts = self.dur_buckets.setdefault(key, [0] * len(DEFAULT_BUCKETS))
+            for i, le in enumerate(DEFAULT_BUCKETS):
                 if seconds <= le:
                     counts[i] += count
 
@@ -74,8 +73,8 @@ class MetricsRegistry:
                 out.append(f"{name}{self._fmt_labels(labels)} {v:g}")
             for (name, labels), s in sorted(self.dur_sum.items()):
                 c = self.dur_count[(name, labels)]
-                counts = self.dur_buckets.get((name, labels), [0] * len(self.buckets))
-                for le, cum in zip(self.buckets, counts):
+                counts = self.dur_buckets.get((name, labels), [0] * len(DEFAULT_BUCKETS))
+                for le, cum in zip(DEFAULT_BUCKETS, counts):
                     ll = labels + (("le", f"{le:g}"),)
                     out.append(f"{name}_bucket{self._fmt_labels(ll)} {cum}")
                 ll = labels + (("le", "+Inf"),)

@@ -169,10 +169,13 @@ class Connector:
         return handle
 
     def start(self) -> list[PipelineHandle]:
-        for coll in self.config.collections:
-            key = f"{coll.db_name}.{coll.coll_name}"
-            if key not in self.source_paths:
-                raise KeyError(f"no source feed for {key}")
+        # every feed is checked before any query starts, so a missing one
+        # leaves no sibling query running
+        keys = [f"{c.db_name}.{c.coll_name}" for c in self.config.collections]
+        missing = [k for k in keys if k not in self.source_paths]
+        if missing:
+            raise KeyError(f"no source feed for {', '.join(missing)}")
+        for coll, key in zip(self.config.collections, keys):
             sink = JetStreamLikeSink(
                 self.spark,
                 stream_dir=f"{self.sink_root}/streams/{coll.stream_name}",

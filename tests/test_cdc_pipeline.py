@@ -633,6 +633,26 @@ def test_multi_pipeline_fanout(spark, tmp_path):
         assert all(s.startswith(h.config.stream_name + ".") for s in subs)
 
 
+def test_start_with_a_missing_feed_starts_no_query(spark, tmp_path):
+    """A collection without a feed fails ``start()`` before any query runs:
+    the collection listed first, whose feed exists, must not be left
+    running with no handle to stop it."""
+    feed = str(tmp_path / "feed_coll1")
+    write_change_event_feed(spark, feed, n_docs=3, ns_coll="coll1")
+    cfg = ConnectorConfig(
+        collections=[
+            CollectionConfig(db_name="db1", coll_name="coll1"),
+            CollectionConfig(db_name="db1", coll_name="coll2"),
+        ]
+    )
+    conn = Connector(spark, cfg, {"db1.coll1": feed}, sink_root=str(tmp_path / "sink"))
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(KeyError, match="db1.coll2"):
+        conn.start()
+    assert {q.id for q in spark.streams.active} == before
+    assert conn.handles == []
+
+
 @pytest.mark.parametrize("order_within_key", [False, True])
 def test_publish_failure_then_replay_no_duplicates(spark, tmp_path, order_within_key):
     """README.md:118-127 crash matrix row 2: publish fails mid-epoch -> the

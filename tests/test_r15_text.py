@@ -9,8 +9,6 @@ per-position code points, empty/NULL behavior, and non-ASCII code points.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 
 def _poly(text: str) -> int:
     acc = 0
@@ -33,24 +31,20 @@ def test_fingerprint_matches_python_poly_hash(spark, sf_smoke):
     assert got == expected
 
 
-def test_fingerprint_edge_cases(spark):
+def test_fingerprint_edge_cases(spark, tmp_path):
     # empty text folds to 0 (old sequence(1,0) form also landed on 0);
     # NULL propagates; non-ASCII code points hash as full code points.
-    cases = ["", "a", "ab", "x y", "café €", "a" * 600]
-    codes = F.transform(F.split("text", ""), F.ascii)
-    fp = F.aggregate(
-        codes,
-        F.lit(0).cast("bigint"),
-        lambda acc, x: (acc * 31 + x.cast("bigint")) % 1000000007,
-    )
-    df = spark.createDataFrame([(t,) for t in cases], "text string").select(
-        "text", fp.alias("fp")
-    )
-    got = {r["text"]: r["fp"] for r in df.collect()}
-    assert got == {t: _poly(t) for t in cases}
-    null_fp = (
-        spark.createDataFrame([(None,)], "text string")
-        .select(fp.alias("fp"))
-        .collect()[0]["fp"]
-    )
-    assert null_fp is None
+    from mongodb_nats_connector_spark.registry import _REGISTRY, _load_all
+
+    _load_all()
+    cases = ["", "a", "ab", "x y", "café €", "a" * 600, None]
+    spark.createDataFrame(
+        list(enumerate(cases)), "doc_id bigint, text string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    got = {
+        r["doc_id"]: r["fingerprint"]
+        for r in _REGISTRY["text_fingerprint"].fn(spark, str(tmp_path)).collect()
+    }
+    assert got == {
+        i: None if t is None else _poly(t) for i, t in enumerate(cases)
+    }

@@ -274,25 +274,6 @@ def test_multimodal_real_header_decode(spark):
     )
 
 
-def test_multimodal_full_decode_gated():
-    """real_decode works when PIL exists, else raises NotImplementedError —
-    the stub path must stay green either way."""
-    from mongodb_nats_connector_spark.operators.multimodal import real_decode
-
-    try:
-        import PIL  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-
-    if have_pil:
-        assert real_decode(_golden_png(640, 360)) == (640, 360)
-    else:
-        with pytest.raises(NotImplementedError):
-            real_decode(_golden_png(640, 360))
-
-
 def test_asof_forward_never_before_purchase(spark):
     """Forward as-of matches only signups AT-OR-AFTER the purchase, and the
     nearest-direction gap is never larger than the forward-only gap."""
@@ -555,10 +536,7 @@ def test_counted_fits_broadcast_requires_persist_and_gates_on_count(spark):
     count would recompute the full lineage and diverge from what the join
     reads, (b) hint small persisted relations, (c) decline when the
     materialized count exceeds the threshold."""
-    from mongodb_nats_connector_spark.plans.hints import (
-        broadcast_if_counted_small,
-        counted_fits_broadcast,
-    )
+    from mongodb_nats_connector_spark.plans.hints import counted_fits_broadcast
 
     df = spark.range(100)
     with pytest.raises(ValueError, match="persisted"):
@@ -566,12 +544,8 @@ def test_counted_fits_broadcast_requires_persist_and_gates_on_count(spark):
     df = df.persist()
     try:
         assert counted_fits_broadcast(df, row_bytes=8)
-        hinted = broadcast_if_counted_small(df, row_bytes=8)
-        plan = hinted._jdf.queryExecution().analyzed().toString()
-        assert "ResolvedHint" in plan
         # 100 rows * 1 MiB/row >> 64 MiB session threshold -> declined
         assert not counted_fits_broadcast(df, row_bytes=1 << 20)
-        assert broadcast_if_counted_small(df, row_bytes=1 << 20) is df
     finally:
         df.unpersist()
 

@@ -19,6 +19,7 @@ from pathlib import Path
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mongodb_nats_connector_spark import registry  # noqa: E402
+from verify_window import WINDOW  # noqa: E402
 
 
 def main() -> None:
@@ -32,7 +33,7 @@ def main() -> None:
     rank0 = registry.needs_driver_proof()
     print(f"recorded digests from {newest.name}: {len(digests)} total")
     print(f"{len(rank0)} oracle-bearing queries still need driver proof; "
-          f"{max(0, len(rank0) - 50)} will spill past the 50-query window")
+          f"{max(0, len(rank0) - WINDOW)} will spill past the {WINDOW}-query window")
 
 
 if __name__ == "__main__":

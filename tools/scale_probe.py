@@ -20,6 +20,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_query  # noqa: E402
+from sf1_scaling import REPS, key_shifts, replica_dir  # noqa: E402
+
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
 
 
@@ -41,8 +44,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     rows = []
+    sf_dirs = {}
     for sf in SFS:
         sf_dir = f"/root/testdata/{sf}"
+        sf_dirs[sf] = sf_dir
         docs = table(spark, sf_dir, "documents", parallel=True)
         n_docs = docs.count()
         all_pairs = n_docs * (n_docs - 1) // 2
@@ -290,15 +295,10 @@ def main() -> None:
     ]
     import math
 
-    def _wall(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     expo_rows = []
     for name in HEADLINE_SCALING:
-        t_small = _wall(name, "/root/testdata/sf0.01")
-        t_big = _wall(name, "/root/testdata/sf0.1")
+        t_small = sum(time_query(spark, qs[name], sf_dirs["sf0.01"]))
+        t_big = sum(time_query(spark, qs[name], sf_dirs["sf0.1"]))
         expo_rows.append(
             (
                 name,
@@ -309,66 +309,9 @@ def main() -> None:
             )
         )
 
-    # ------------------------------------------------------------------
-    # Full "sf1" replica: 10 key-shifted copies of every sf0.1 table with
-    # CONSISTENT foreign-key shifts (copy r shifts custkey/orderkey/
-    # partkey/suppkey/doc_id by r * max_key), so every join relationship
-    # holds and each copy is a disjoint keyspace — a faithful 10x growth
-    # of facts AND dims, the way TPC-H itself scales. nation/region stay
-    # fixed (as in TPC-H); documents replicate with identical text, which
-    # deliberately multiplies duplicate DENSITY for the dedup stress row.
-    rep_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "spark-warehouse",
-        "scaleprobe_sf1",
-    )
-    REPS = 10
-    shifts = {}
-    for name, keycol in [
-        ("orders", "o_orderkey"),
-        ("customer", "c_custkey"),
-        ("part", "p_partkey"),
-        ("supplier", "s_suppkey"),
-        ("documents", "doc_id"),
-        ("embeddings", "vec_id"),
-        ("events", "event_id"),
-    ]:
-        shifts[name] = (
-            table(spark, "/root/testdata/sf0.1", name).agg(F.max(keycol)).first()[0]
-            + 1
-        )
-    # which columns of each table shift by which table's keyspace
-    SHIFT_COLS = {
-        "lineitem": {
-            "l_orderkey": "orders",
-            "l_partkey": "part",
-            "l_suppkey": "supplier",
-        },
-        "orders": {"o_orderkey": "orders", "o_custkey": "customer"},
-        "customer": {"c_custkey": "customer"},
-        "part": {"p_partkey": "part"},
-        "supplier": {"s_suppkey": "supplier"},
-        "documents": {"doc_id": "documents"},
-        "embeddings": {"vec_id": "embeddings"},
-        "events": {"event_id": "events"},
-        "nation": {},
-        "region": {},
-    }
-    for name, cols in SHIFT_COLS.items():
-        df = table(spark, "/root/testdata/sf0.1", name)
-        if cols:
-            df = df.crossJoin(spark.range(REPS).select(F.col("id").alias("rep")))
-            for col, space in cols.items():
-                df = df.withColumn(col, F.col(col) + F.col("rep") * shifts[space])
-            df = df.drop("rep")
-            # Write a production-like multi-file layout: the crossJoin plan
-            # is map-side over the (single-file) sf0.1 input, so without
-            # this the 78MB replica lands in 1-2 files and — at the default
-            # 128MB maxPartitionBytes — every sf1 scan below runs on 1-2
-            # cores, measuring single-core scan speed instead of the plan.
-            # A real 6M-row dataset is never 2 files.
-            df = df.repartition(32)
-        df.write.mode("overwrite").parquet(os.path.join(rep_dir, f"{name}.parquet"))
+    # The consistent sf1 replica (tools/sf1_scaling.py): 10 key-shifted
+    # copies of every sf0.1 table, a faithful 10x growth of facts AND dims.
+    rep_dir = replica_dir(spark)
 
     # Headline exponents on the replica: a true 10x step ABOVE sf0.1,
     # where fixed overhead no longer dominates. dedup_minhash_lsh is
@@ -378,8 +321,8 @@ def main() -> None:
     # the candidate-volume table at the top already isolates.
     expo1_rows = []
     for name in [q for q in HEADLINE_SCALING if q != "dedup_minhash_lsh"]:
-        t_small = _wall(name, "/root/testdata/sf0.1")
-        t_big = _wall(name, rep_dir)
+        t_small = sum(time_query(spark, qs[name], sf_dirs["sf0.1"]))
+        t_big = sum(time_query(spark, qs[name], rep_dir))
         expo1_rows.append(
             (
                 name,
@@ -407,7 +350,7 @@ def main() -> None:
     # growth.
     def _wall_and_count(name: str, sf_dir: str) -> tuple[float, int]:
         # ONE execution per (stage, SF): time build + the full noop write
-        # (the same build-inclusive wall _wall measures — several stages do
+        # (the same build-inclusive wall time_query measures — several stages do
         # driver-loop work at BUILD time), then count from the persisted
         # cache instead of a second full run (these are the heaviest
         # queries in the probe — a re-execution doubles them)
@@ -487,10 +430,11 @@ def main() -> None:
     # (The consistent replica above shifts part keys too, keeping support
     # flat — that measures pure row-count scaling instead.)
     dense_dir = rep_dir + "_dense"
+    orders_shift = key_shifts(spark)["orders"]
     li01 = table(spark, "/root/testdata/sf0.1", "lineitem")
     (
         li01.crossJoin(spark.range(REPS).select(F.col("id").alias("rep")))
-        .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * shifts["orders"])
+        .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * orders_shift)
         .drop("rep")
         .write.mode("overwrite")
         .parquet(os.path.join(dense_dir, "lineitem.parquet"))

@@ -1,27 +1,29 @@
 #!/usr/bin/env python
-"""SF>=1 scaling evidence (round 15, VERDICT r14 item 6): run the heaviest
-headline queries on the consistent sf1 replica (10 key-shifted copies of
-every sf0.1 table, the scale_probe.py recipe) at the CURRENT
-$SPARK_GRAFT_CPUS, min-of-3 per query, and print one JSON line. Run twice
-(SPARK_GRAFT_CPUS=32 and =8) to measure multi-core speedup at a scale
-where sub-second overheads no longer hide it — at sf0.1 every 8v32 ratio
-reads ~1.0 because queries are overhead-bound (PERF_r14 scaling block).
+"""SF>=1 scaling evidence: run the heaviest headline queries on the sf1
+replica at the current $SPARK_GRAFT_CPUS, min-of-3 per query, and print one
+JSON line. Run it at two core counts to measure multi-core speedup at a
+scale where sub-second overheads no longer hide it (at sf0.1 the queries
+are overhead-bound and every 8-vs-32-core ratio reads ~1.0):
 
     SPARK_GRAFT_CPUS=32 python tools/sf1_scaling.py
     SPARK_GRAFT_CPUS=8  python tools/sf1_scaling.py
 
-The replica is built once under spark-warehouse/scaleprobe_sf1 and reused
-only if its build finished (the _COMPLETE marker); delete the directory to
-rebuild."""
+The replica (see ``build_replica``) lives under
+spark-warehouse/scaleprobe_sf1; this module is its one builder, shared with
+tools/scale_probe.py through ``replica_dir``. A replica is reused only if
+its build finished (the _COMPLETE marker); delete the directory to rebuild.
+"""
 
 from __future__ import annotations
 
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from bench import read_proc_stat, time_query, warm_up  # noqa: E402
 
 QUERIES = [
     "q1_pricing_summary",
@@ -36,19 +38,14 @@ QUERIES = [
     "similarity_topk_bruteforce",
 ]
 
+REPLICA_DIR = os.path.join(ROOT, "spark-warehouse", "scaleprobe_sf1")
 REPS = 10
 N_RUNS = 3
 
 
-def _steal() -> float:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return int(parts[8]) / float(os.sysconf("SC_CLK_TCK"))
-
-
-def build_replica(spark, rep_dir: str) -> None:
-    """Write every replica table, then the _COMPLETE marker ``main`` checks,
-    so a build that crashed part-way is rebuilt, not reused."""
+def key_shifts(spark) -> dict[str, int]:
+    """Per keyspace, the offset between two replica copies: the sf0.1 max
+    key + 1, so each copy's keys are disjoint from every other copy's."""
     from pyspark.sql import functions as F
 
     from mongodb_nats_connector_spark.sources.tables import table
@@ -67,6 +64,30 @@ def build_replica(spark, rep_dir: str) -> None:
             table(spark, "/root/testdata/sf0.1", name).agg(F.max(keycol)).first()[0]
             + 1
         )
+    return shifts
+
+
+def build_replica(spark, rep_dir: str) -> None:
+    """Write the sf1 replica into ``rep_dir``: REPS copies of every sf0.1
+    table, copy r shifting each key and foreign key by r * its keyspace's
+    ``key_shifts`` offset, so every join relationship holds and each copy
+    is a disjoint keyspace — facts and dims grow 10x, the way TPC-H scales.
+    nation/region stay fixed, as in TPC-H; documents and embeddings
+    replicate with identical content, which multiplies duplicate density
+    for the dedup rows.
+
+    The _COMPLETE marker is removed before the first table is written and
+    written after the last, so a build that stops part-way — even over an
+    earlier complete replica — is rebuilt, not reused."""
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.sources.tables import table
+
+    marker = os.path.join(rep_dir, "_COMPLETE")
+    if os.path.exists(marker):
+        os.remove(marker)
+    shifts = key_shifts(spark)
+    # which columns of each table shift by which table's keyspace
     SHIFT_COLS = {
         "lineitem": {
             "l_orderkey": "orders",
@@ -91,9 +112,21 @@ def build_replica(spark, rep_dir: str) -> None:
             )
             for col, space in cols.items():
                 df = df.withColumn(col, F.col(col) + F.col("rep") * shifts[space])
+            # A multi-file layout, as a real 6M-row dataset has: the
+            # crossJoin is map-side over the single-file sf0.1 input, so
+            # without this the replica lands in 1-2 files and every sf1
+            # scan runs on 1-2 cores.
             df = df.drop("rep").repartition(32)
         df.write.mode("overwrite").parquet(os.path.join(rep_dir, f"{name}.parquet"))
-    open(os.path.join(rep_dir, "_COMPLETE"), "w").close()
+    open(marker, "w").close()
+
+
+def replica_dir(spark) -> str:
+    """The sf1 replica directory, built first unless a complete build is
+    already there."""
+    if not os.path.exists(os.path.join(REPLICA_DIR, "_COMPLETE")):
+        build_replica(spark, REPLICA_DIR)
+    return REPLICA_DIR
 
 
 def main() -> None:
@@ -105,44 +138,23 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     cpus = spark.sparkContext.master
 
-    rep_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "spark-warehouse",
-        "scaleprobe_sf1",
-    )
-    if not os.path.exists(os.path.join(rep_dir, "_COMPLETE")):
-        build_replica(spark, rep_dir)
-
-    # same warmup as bench.py
-    spark.read.parquet(os.path.join(rep_dir, "lineitem.parquet")).count()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(x):
-        return x
-
-    spark.range(1000).select(_warm(F.col("id"))).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    rep_dir = replica_dir(spark)
+    warm_up(spark, rep_dir)
 
     qs = {n: q.fn for n, q in registry._REGISTRY.items()}
-    steal0 = _steal()
+    steal0 = read_proc_stat()["steal"]
     out: dict[str, dict] = {}
     for name in QUERIES:
-        runs = []
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            df = qs[name](spark, rep_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
+        runs = [
+            round(sum(time_query(spark, qs[name], rep_dir)), 3) for _ in range(N_RUNS)
+        ]
         out[name] = {"min_s": min(runs), "runs": runs}
     print(
         json.dumps(
             {
                 "master": cpus,
                 "sf": "sf1-replica",
-                "steal_cpu_s": round(_steal() - steal0, 2),
+                "steal_cpu_s": round(read_proc_stat()["steal"] - steal0, 2),
                 "queries": out,
             }
         )

@@ -13,9 +13,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_query, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -29,38 +30,23 @@ def main() -> None:
     spark = get_spark(app_name="mnc-sweep-all")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same warmup as bench.py: parquet footers + Python worker pool
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(x):
-        return x
-
-    spark.range(1000).select(_warm(F.col("id"))).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark, sf_dir)
 
     results: dict[str, dict[str, float]] = {}
     names = sorted(registry._REGISTRY)
     for i, name in enumerate(names):
         fn = registry._REGISTRY[name].fn
         spark.sparkContext.setJobDescription(f"sweep:{name}")
-        t0 = time.perf_counter()
         try:
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
+            build_s, exec_s = time_query(spark, fn, sf_dir)
         except Exception as e:  # record, keep sweeping
             results[name] = {"error": repr(e)[:200]}
             print(f"[{i + 1}/{len(names)}] {name}: ERROR {e!r}", file=sys.stderr)
             continue
         results[name] = {
-            "build": round(t1 - t0, 3),
-            "exec": round(t2 - t1, 3),
-            "total": round(t2 - t0, 3),
+            "build": round(build_s, 3),
+            "exec": round(exec_s, 3),
+            "total": round(build_s + exec_s, 3),
         }
         print(
             f"[{i + 1}/{len(names)}] {name}: {results[name]['total']:.2f}s",

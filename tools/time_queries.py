@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_query, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -31,29 +32,14 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = {n: q.fn for n, q in registry._REGISTRY.items()}
 
-    # same warmup as bench.py: parquet footers + Python worker pool
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(x):
-        return x
-
-    spark.range(1000).select(_warm(F.col("id"))).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark, sf_dir)
 
     for name in args:
         builds, execs = [], []
         for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            builds.append(round(t1 - t0, 3))
-            execs.append(round(t2 - t1, 3))
+            build_s, exec_s = time_query(spark, qs[name], sf_dir)
+            builds.append(round(build_s, 3))
+            execs.append(round(exec_s, 3))
         tot = [round(b + e, 3) for b, e in zip(builds, execs)]
         print(
             f"{name}: total_min={min(tot):.3f} build_min={min(builds):.3f} "
