@@ -211,7 +211,7 @@ def main() -> None:
     wall1 = time.perf_counter()
 
     exec_s = {n: v[0] for n, v in exec_passes.items()}
-    exec_pass2_s = {n: v[1] if len(v) > 1 else v[0] for n, v in exec_passes.items()}
+    exec_pass2_s = {n: v[1] if n_passes > 1 else v[0] for n, v in exec_passes.items()}
     exec_best_s = {n: min(v) for n, v in exec_passes.items()}
     exec_best_suite_s = {n: min(v[:n_passes]) for n, v in exec_passes.items()}
     # Bootstrap is the one CPU-bound watch query (2.42x from 8 to 32 cores
@@ -293,9 +293,8 @@ def main() -> None:
                 "watch": watch,
                 "note": "value = sum of queries. queries = build_s + exec_s "
                 "per headline query. exec_s = pass-1 noop-write time (cold). "
-                "exec_pass2_s = each query's second recorded run: suite pass "
-                "2, or with bench_passes 1, pass 1 for a suite-only query and "
-                "the first watch run for a watch query. exec_best_suite_s = "
+                "exec_pass2_s = each query's suite pass 2, or pass 1 with "
+                "bench_passes 1 (watch runs never count). exec_best_suite_s = "
                 "per-query min over the suite sweeps; exec_best_s = per-query "
                 "min over all runs, watch runs included. common24_* sum the "
                 "first 24 headline queries' exec times: pass 1, each pass, "

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.functions import texthash
@@ -29,12 +29,14 @@ from mongodb_nats_connector_spark.functions.texthash import (
     minhash_signature,
     simhash_signature,
 )
+from mongodb_nats_connector_spark.plans.caching import persist_until_collected
 from mongodb_nats_connector_spark.plans.hints import (
     counted_fits_broadcast,
     maybe_broadcast,
 )
 from mongodb_nats_connector_spark.registry import register
 from mongodb_nats_connector_spark.sources.tables import table
+
 
 JACCARD_THRESHOLD = 0.7
 
@@ -748,4 +750,190 @@ def dedup_survivorship_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("chars_saved"),
         )
+    )
+
+
+PREFIX_K = 8
+
+
+@register(
+    "dedup_prefix_boilerplate",
+    oracle=f"""
+    WITH pre AS (
+      SELECT doc_id,
+             md5(array_to_string(string_split(text, ' ')[1:{PREFIX_K}], ' '))
+               AS prefix_hash
+      FROM documents
+    ),
+    clusters AS (
+      SELECT prefix_hash, CAST(count(*) AS BIGINT) AS cluster_size,
+             CAST(min(doc_id) AS BIGINT) AS canonical_doc_id
+      FROM pre GROUP BY prefix_hash
+      HAVING count(*) > 1
+    )
+    SELECT p.doc_id, p.prefix_hash, c.cluster_size, c.canonical_doc_id,
+           p.doc_id = c.canonical_doc_id AS is_canonical
+    FROM pre p JOIN clusters c USING (prefix_hash)
+    """,
+    doc=f"Boilerplate-prefix duplicate detection: documents sharing their "
+    f"first {PREFIX_K} tokens (template headers, wire-copy lead paragraphs) "
+    "cluster on an md5 of the prefix — catches near-dups whose tails "
+    "diverge, which whole-document exact dedup misses and MinHash may "
+    "under-score. One shuffle on the 16-byte hash; the >1-member filter "
+    "happens in the same aggregation. Keep-rule: smallest doc_id is "
+    "canonical.",
+)
+def dedup_prefix_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = table(spark, sf_dir, "documents", parallel=True)
+    pre = docs.select(
+        "doc_id",
+        F.md5(
+            F.array_join(F.slice(F.split("text", " "), 1, PREFIX_K), " ")
+        ).alias("prefix_hash"),
+    )
+    clusters = (
+        pre.groupBy("prefix_hash")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("cluster_size"),
+            F.min("doc_id").cast("bigint").alias("canonical_doc_id"),
+        )
+        .filter(F.col("cluster_size") > 1)
+    )
+    return persist_until_collected(
+        pre,
+        pre.join(clusters, "prefix_hash").select(
+            "doc_id",
+            "prefix_hash",
+            "cluster_size",
+            "canonical_doc_id",
+            (F.col("doc_id") == F.col("canonical_doc_id")).alias("is_canonical"),
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_embedding_cosine — LSH-bucketed semantic near-duplicate pairs
+# ---------------------------------------------------------------------------
+
+
+# deterministic per-(table, bucket) membership cap — same defense as the
+# text-LSH MAX_BUCKET_MEMBERS: a degenerate cell (e.g. near-zero vectors all
+# hashing to one signature) otherwise expands quadratically. Truncation is
+# by vec_id, so both engines drop the identical members.
+EMB_BUCKET_CAP = 1024
+
+
+def _emb_dedup_oracle() -> str:
+    from mongodb_nats_connector_spark.operators.similarity import (
+        HYPERPLANES,
+        NEARDUP_COS,
+        _L_TABLES,
+        _N_BITS,
+    )
+
+    plane_rows = ",\n      ".join(
+        f"({t}, {b}, [{', '.join(repr(x) for x in HYPERPLANES[t][b])}]::DOUBLE[])"
+        for t in range(_L_TABLES)
+        for b in range(_N_BITS)
+    )
+    return f"""
+    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    planes(tbl, bit, h) AS (VALUES
+      {plane_rows}
+    ),
+    buckets0 AS (
+      SELECT e.vec_id, p.tbl,
+             CAST(sum(CASE WHEN list_sum(list_transform(list_zip(e.v, p.h),
+                                 x -> x[1] * x[2])) > 0
+                           THEN (1 << p.bit) ELSE 0 END) AS BIGINT) AS bucket
+      FROM e CROSS JOIN planes p
+      GROUP BY e.vec_id, p.tbl
+    ),
+    buckets AS (
+      SELECT vec_id, tbl, bucket FROM (
+        SELECT vec_id, tbl, bucket,
+               row_number() OVER (PARTITION BY tbl, bucket
+                                  ORDER BY vec_id) AS rn
+        FROM buckets0
+      ) WHERE rn <= {EMB_BUCKET_CAP}
+    ),
+    cand AS (
+      SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+      FROM buckets a JOIN buckets b
+        ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
+    )
+    SELECT c.vec_a, c.vec_b,
+           round(list_cosine_similarity(ea.v, eb.v), 6) AS cos_sim
+    FROM cand c
+    JOIN e ea ON ea.vec_id = c.vec_a
+    JOIN e eb ON eb.vec_id = c.vec_b
+    WHERE NOT isnan(list_cosine_similarity(ea.v, eb.v))
+      AND round(list_cosine_similarity(ea.v, eb.v), 6) >= {NEARDUP_COS}
+    """
+
+
+@register(
+    "dedup_embedding_cosine",
+    oracle=_emb_dedup_oracle(),
+    doc="Embedding-cosine near-duplicate pairs, LSH-bucketed (the SCALE "
+    "path for similarity_neardup_pairs' quadratic baseline): vectors are "
+    "sign-hashed into 10x8-bit buckets by the same seeded hyperplanes as "
+    "similarity_ann_lsh, candidate pairs are generated only WITHIN a "
+    "(table, bucket) cell, then verified with an exact cosine at the "
+    "threshold. Only (vec_id, tbl, bucket) triples shuffle — never the "
+    "vectors, which re-join by id for the verify step; the candidate "
+    "volume tracks true duplicate density, not n², and a deterministic "
+    f"per-cell membership cap ({EMB_BUCKET_CAP}, truncated by vec_id — the "
+    "same defense as the text-LSH bucket cap) bounds the worst degenerate "
+    "cell. The oracle replays the hyperplanes AND the cap as SQL literals, "
+    "so the approximate index is itself hash-verified. Every emitted pair is exact-verified (precision 1.0, "
+    "asserted as a subset of the quadratic baseline); recall is the "
+    "standard sign-LSH amplification curve — >=0.95 for true near-dups "
+    "(cos >= 0.95, asserted on planted duplicates in tests/test_round6.py) "
+    "while the synthetic corpus's max pair similarity of ~0.5 sits in the "
+    "regime the bucketing intentionally prunes.",
+)
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from mongodb_nats_connector_spark.functions.vectors import cosine_fast
+    from mongodb_nats_connector_spark.operators.similarity import (
+        NEARDUP_COS,
+        _bucket_udf,
+        _emb,
+    )
+
+    e = _emb(spark, sf_dir)
+    buckets = e.select(
+        "vec_id", F.posexplode(_bucket_udf(F.col("v"))).alias("tbl", "bucket")
+    )
+    cap_w = Window.partitionBy("tbl", "bucket").orderBy("vec_id")
+    buckets = (
+        buckets.withColumn("rn", F.row_number().over(cap_w))
+        .filter(F.col("rn") <= EMB_BUCKET_CAP)
+        .drop("rn")
+    )
+    a = buckets.select(
+        F.col("vec_id").alias("vec_a"), F.col("tbl"), F.col("bucket")
+    )
+    b = buckets.select(
+        F.col("vec_id").alias("vec_b"), F.col("tbl"), F.col("bucket")
+    )
+    cand = (
+        a.join(b, ["tbl", "bucket"])
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .distinct()
+    )
+    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
+    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
+    return (
+        cand.join(ea, "vec_a")
+        .join(eb, "vec_b")
+        .select(
+            "vec_a",
+            "vec_b",
+            F.round(cosine_fast(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
+        )
+        # NaN (zero-norm/degenerate vectors) compares greater-than in both
+        # engines' float ordering — guard explicitly or garbage pairs leak
+        .filter(~F.isnan(F.col("cos_sim")) & (F.col("cos_sim") >= NEARDUP_COS))
     )

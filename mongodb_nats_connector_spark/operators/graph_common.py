@@ -2,8 +2,8 @@
 
 No ``@register`` calls live here — this module must stay registration-free
 so importing it from any operator module cannot perturb the registry's
-insertion order (which encodes driver-verification priority; see
-registry._load_all).
+insertion order (the rank tiebreak of driver-verification priority; see
+registry.all_queries).
 """
 
 from __future__ import annotations

@@ -1,2174 +1,5 @@
-"""Round-8 operator family: decision-analytics and curation primitives the
-reference's users run downstream of the connector — skyline/Pareto frontiers,
-iterative k-core mining, rank/statistical tests (Mann-Whitney, Benford,
-Wilson, CUPED), deterministic smoothing folds, interval algebra, link
-prediction, balanced sampling, ensemble document ranking, kNN labeling,
-out-of-order delivery audits, and a Heaps-law corpus fit.
+"""Re-export: digested query bodies import ``_valued_events_prepost`` from here."""
 
-Reference provenance: these extend the analytics surface over the change
-streams the connector publishes (SURVEY.md §2.3/§2.4); none of them exist in
-the reference's Go core (internal/server/connector.go) — they are the
-engine-side query library a connector consumer needs.
-
-Cross-engine determinism rules (same discipline as pipeline7):
-- integer outputs wherever possible (micros, counts, ranks);
-- double outputs rounded at fixed decimals AFTER identical arithmetic;
-- sequential folds (exp smoothing) round at EVERY step so both engines
-  walk the identical representable-double path;
-- window sums evaluate in frame order on both engines, so running shares
-  are deterministic.
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from mongodb_nats_connector_spark.operators.graph_common import trade_edges
-from mongodb_nats_connector_spark.plans.caching import (
-    persist_until_collected,
-    release_on_gc,
+from mongodb_nats_connector_spark.operators.events import (  # noqa: F401
+    _valued_events_prepost,
 )
-from mongodb_nats_connector_spark.plans.hints import maybe_broadcast
-from mongodb_nats_connector_spark.plans.ranking import two_pass_global_rank
-from mongodb_nats_connector_spark.registry import register
-from mongodb_nats_connector_spark.sources.tables import table
-
-# ---------------------------------------------------------------------------
-# orders_skyline_pareto — 2-D skyline (Pareto frontier) via running max
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "orders_skyline_pareto",
-    oracle="""
-    WITH per_cust AS (
-      SELECT o_custkey,
-             CAST(round(sum(o_totalprice) * 100) AS BIGINT) AS spend_c,
-             CAST(count(*) AS BIGINT) AS n_orders
-      FROM orders GROUP BY 1
-    ),
-    grp AS (
-      SELECT spend_c, max(n_orders) AS gmax FROM per_cust GROUP BY 1
-    ),
-    ranked AS (
-      SELECT spend_c, gmax,
-             max(gmax) OVER (ORDER BY spend_c DESC
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING) AS prev_max
-      FROM grp
-    )
-    SELECT p.o_custkey, round(p.spend_c / 100.0, 2) AS spend, p.n_orders
-    FROM per_cust p JOIN ranked r ON r.spend_c = p.spend_c
-    WHERE coalesce(r.prev_max, -1) < p.n_orders
-      AND r.gmax <= p.n_orders
-    """,
-    doc="2-D skyline (Pareto frontier) over customers on (total spend, order "
-    "count): a customer survives iff no other customer is >= on both axes "
-    "and > on one. The naive formulation is an O(n^2) dominance anti-join; "
-    "this is the sort-based 2-D skyline instead — group to distinct spend "
-    "keys (map-side combine), one ordered window computing the running max "
-    "of order counts over STRICTLY higher spend, then a hash join back. "
-    "Spend keys are integer cents so group equality is exact. The "
-    "distinct-spend relation is data-proportional, so the running max of "
-    "order counts over strictly higher spend is the two-pass "
-    "range-partitioned prefix max (plans/ranking.py two_pass_prefix_max, "
-    "exclusive frame: per-bucket prefix maxima partitioned by "
-    "range-bucket + NULL-skipping greatest with the strictly-earlier "
-    "bucket maxima) — max is idempotent and associative, so the "
-    "decomposition is identical to the oracle's single window by "
-    "construction.",
-)
-def orders_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongodb_nats_connector_spark.plans.ranking import (
-        two_pass_prefix_max,
-    )
-
-    o = table(spark, sf_dir, "orders")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.round(F.sum("o_totalprice") * 100).cast("bigint").alias("spend_c"),
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-    )
-    # persisted NOW: the two-pass boundary sketch runs at construction and
-    # would otherwise recompute the fact rollup; released on result GC
-    per_cust = per_cust.persist()
-    grp = per_cust.groupBy("spend_c").agg(F.max("n_orders").alias("gmax"))
-    ranked = two_pass_prefix_max(
-        grp, "spend_c", "spend_c", "gmax",
-        descending=True, cum_col="prev_max", exclusive=True,
-    )
-    out = (
-        per_cust.join(ranked, "spend_c")
-        .filter(
-            (F.coalesce(F.col("prev_max"), F.lit(-1)) < F.col("n_orders"))
-            & (F.col("gmax") <= F.col("n_orders"))
-        )
-        .select(
-            "o_custkey",
-            F.round(F.col("spend_c") / 100.0, 2).alias("spend"),
-            "n_orders",
-        )
-    )
-    return release_on_gc(per_cust, out)
-
-
-# ---------------------------------------------------------------------------
-# graph_kcore — iterative k-core peeling over the thresholded trade graph
-# ---------------------------------------------------------------------------
-
-KCORE_K = 3  # non-empty core at every test SF (k=4 peels sf0.1 to empty)
-KCORE_MAX_ROUNDS = 8
-KCORE_W_FACTOR = 1.15  # edge kept iff weight >= factor * mean weight
-
-_KCORE_EDGE_CTES = f"""
-    dir_edges AS (
-      SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      WHERE c.c_nationkey <> s.s_nationkey GROUP BY 1, 2
-    ),
-    uw AS (
-      SELECT least(src, dst) AS a, greatest(src, dst) AS b, sum(w) AS w
-      FROM dir_edges GROUP BY 1, 2
-    ),
-    avgw AS (SELECT avg(w) AS aw FROM uw),
-    e0 AS MATERIALIZED (
-      SELECT a, b FROM uw, avgw WHERE w >= {KCORE_W_FACTOR} * aw
-    )
-"""
-
-
-def _kcore_peel_ctes(rounds: int) -> tuple[str, str]:
-    """Unrolled peel rounds: nodes_i = nodes with degree >= K among edges
-    induced by nodes_{i-1}. A fixed unroll keeps the oracle plain chained
-    SQL (no recursive-CTE-with-aggregation, which SQL disallows); the Spark
-    side asserts convergence within the same bound."""
-    parts = []
-    prev = "e0"
-    for i in range(1, rounds + 1):
-        parts.append(f"""
-    n{i} AS MATERIALIZED (
-      SELECT u FROM (
-        SELECT a AS u FROM {prev} UNION ALL SELECT b FROM {prev}
-      ) GROUP BY u HAVING count(*) >= {KCORE_K}
-    ),
-    e{i} AS MATERIALIZED (
-      SELECT a, b FROM {prev}
-      WHERE a IN (SELECT u FROM n{i}) AND b IN (SELECT u FROM n{i})
-    )""")
-        prev = f"e{i}"
-    return ",".join(parts), prev
-
-
-_PEEL_SQL, _FINAL_E = _kcore_peel_ctes(KCORE_MAX_ROUNDS)
-
-
-def _thresholded_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected trade edges kept iff summed weight >= KCORE_W_FACTOR x the
-    mean weight (scale-relative, so the graph stays sparse at any SF) —
-    shared by graph_kcore, graph_adamic_adar, and graph_assortativity; its
-    SQL twin is the e0 CTE in _KCORE_EDGE_CTES. (Defined ABOVE the
-    @register block: a def between a decorator call and its target would
-    capture the registration.)"""
-    de = trade_edges(spark, sf_dir)
-    uw = (
-        de.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "w",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    avgw = uw.agg(F.avg("w").alias("aw"))
-    return (
-        uw.crossJoin(F.broadcast(avgw))
-        .filter(F.col("w") >= KCORE_W_FACTOR * F.col("aw"))
-        .select("a", "b")
-    )
-
-
-@register(
-    "graph_kcore",
-    oracle=f"""
-    WITH {_KCORE_EDGE_CTES},{_PEEL_SQL}
-    SELECT nn.n_name AS nation, d.deg AS core_degree
-    FROM (
-      SELECT u, CAST(count(*) AS BIGINT) AS deg FROM (
-        SELECT a AS u FROM {_FINAL_E} UNION ALL SELECT b FROM {_FINAL_E}
-      ) GROUP BY u
-    ) d JOIN nation nn ON nn.n_nationkey = d.u
-    """,
-    doc=f"k-core decomposition (k={KCORE_K}) of the nation trade graph, "
-    f"edges thresholded at {KCORE_W_FACTOR}x the mean weight so the graph "
-    "stays sparse at every scale factor (an absolute weight cutoff would "
-    "degenerate as volume grows): iteratively peel nodes with degree < k "
-    "until fixpoint — the standard dense-subgraph/community-seed mining "
-    "primitive. Each round is ONE map-side-combined degree count plus two "
-    "hash semi-joins keyed on node id — no broadcast of anything "
-    "data-proportional, so the loop is the same shuffle-only shape as "
-    "graph_cc_bigstar and survives a web-scale edge list; rounds are "
-    "bounded by the peeling depth (logarithmic in practice), asserted "
-    f"<= {KCORE_MAX_ROUNDS} here with lineage truncated per round. The "
-    "oracle unrolls the identical peel as chained CTEs.",
-)
-def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _thresholded_und_edges(spark, sf_dir).localCheckpoint(eager=True)
-    # KCORE_MAX_ROUNDS PEEL rounds need MAX_ROUNDS+1 loop iterations: a
-    # depth-d peel changes the count for d rounds and needs one further
-    # confirming round to certify the fixpoint (count equality certifies
-    # set equality — peeling only ever removes edges). Seeding prev_n with
-    # the starting count makes an already-k-core graph confirm in one.
-    prev_n = edges.count()
-    for _ in range(KCORE_MAX_ROUNDS + 1):
-        deg = (
-            edges.select(F.col("a").alias("u"))
-            .unionAll(edges.select(F.col("b").alias("u")))
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= KCORE_K).select("u")
-        nxt = (
-            edges.join(keep.withColumnRenamed("u", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("u", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)  # truncate lineage each round
-        )
-        n = nxt.count()
-        if n == prev_n:
-            edges = nxt
-            break
-        prev_n = n
-        edges = nxt
-    else:
-        raise AssertionError(
-            f"k-core did not converge in {KCORE_MAX_ROUNDS} rounds"
-        )
-    nation = table(spark, sf_dir, "nation")
-    core_deg = (
-        edges.select(F.col("a").alias("u"))
-        .unionAll(edges.select(F.col("b").alias("u")))
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
-    )
-    return core_deg.join(
-        maybe_broadcast(nation), core_deg["u"] == nation["n_nationkey"]
-    ).select(F.col("n_name").alias("nation"), "core_degree")
-
-
-# ---------------------------------------------------------------------------
-# agg_mann_whitney — rank-sum test with tie correction
-# ---------------------------------------------------------------------------
-
-_MW_A, _MW_B = "purchase", "click"
-
-
-@register(
-    "agg_mann_whitney",
-    oracle=f"""
-    WITH s AS (
-      SELECT value AS v, event_type AS t FROM events
-      WHERE event_type IN ('{_MW_A}', '{_MW_B}') AND value IS NOT NULL
-    ),
-    g AS (
-      SELECT v, count(*) AS cnt,
-             sum(CASE WHEN t = '{_MW_A}' THEN 1 ELSE 0 END) AS cnt_a
-      FROM s GROUP BY v
-    ),
-    r AS (
-      SELECT cnt, cnt_a,
-             2 * sum(cnt) OVER (ORDER BY v) - cnt + 1 AS avg_rank2
-      FROM g
-    ),
-    agg AS (
-      SELECT CAST(sum(cnt_a) AS BIGINT) AS n1,
-             CAST(sum(cnt - cnt_a) AS BIGINT) AS n2,
-             CAST(count(*) AS BIGINT) AS n_distinct_v,
-             CAST(sum(CAST(cnt_a AS HUGEINT) * avg_rank2) AS DOUBLE) / 2
-               AS r1,
-             CAST(sum(CAST(cnt AS HUGEINT) * cnt * cnt - cnt) AS DOUBLE)
-               AS tie_t
-      FROM r
-    )
-    SELECT n1, n2,
-           round(r1 - n1 * (n1 + 1) / 2.0, 2) AS u1,
-           round(CAST(n1 AS DOUBLE) * n2 - (r1 - n1 * (n1 + 1) / 2.0), 2)
-             AS u2,
-           CASE WHEN n1 > 0 AND n2 > 0 AND n_distinct_v > 1 THEN
-             round(((r1 - n1 * (n1 + 1) / 2.0) - CAST(n1 AS DOUBLE) * n2 / 2)
-                   / sqrt(CAST(n1 AS DOUBLE) * n2 / 12.0 *
-                          ((n1 + n2 + 1) - tie_t /
-                           (CAST(n1 + n2 AS DOUBLE) * (n1 + n2 - 1)))), 4)
-           END AS z
-    FROM agg
-    """,
-    doc="Mann-Whitney U rank-sum test (purchase vs click values) with "
-    "midrank tie handling and the tie-corrected normal approximation — the "
-    "nonparametric sibling of agg_welch_ttest for skewed metrics. Ranks "
-    "never materialize per row: grouping by distinct value first (map-side "
-    "combine) makes the midrank a closed form over the ordered value-group "
-    "relation (cumulative count window), so the fact table contributes one "
-    "fine-grained shuffle and the ordered window touches only distinct "
-    "values. U, and z round identically from identical double arithmetic. "
-    "Degenerate inputs (one group empty, or every value identical — "
-    "sigma = 0) emit NULL z via an exact-INTEGER guard on both engines: "
-    "a float sigma > 0 test would hand DuckDB >= 1.1 a 0/0 NaN that "
-    "compares greater-than where Spark yields NULL.",
-)
-def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(_MW_A, _MW_B) & F.col("value").isNotNull()
-    )
-    g = ev.groupBy(F.col("value").alias("v")).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(
-            F.when(F.col("event_type") == _MW_A, 1).otherwise(0)
-        ).alias("cnt_a"),
-    )
-    w = Window.orderBy("v")
-    # DOUBLED midranks stay exact integers (2*cum - cnt + 1); the r1 and
-    # tie_t sums accumulate as DECIMAL(38,0) (the oracle's HUGEINT) and
-    # convert to double ONCE — an inexact double sum past 2^53 would be
-    # partition-order-dependent and diverge cross-engine
-    r = g.select(
-        "cnt",
-        "cnt_a",
-        (2 * F.sum("cnt").over(w) - F.col("cnt") + 1).alias("avg_rank2"),
-    )
-    agg = r.agg(
-        F.sum("cnt_a").cast("bigint").alias("n1"),
-        F.sum(F.col("cnt") - F.col("cnt_a")).cast("bigint").alias("n2"),
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct_v"),
-        (
-            F.sum(
-                F.col("cnt_a").cast("decimal(38,0)") * F.col("avg_rank2")
-            ).cast("double")
-            / 2
-        ).alias("r1"),
-        # exact integer accumulation (DECIMAL(38,0) = the oracle's HUGEINT):
-        # cnt^3 terms pass 2^53 long before 100 TB, and an inexact double
-        # sum is partition-order-dependent — cast to double ONCE at the end
-        F.sum(
-            F.col("cnt").cast("decimal(38,0)") * F.col("cnt") * F.col("cnt")
-            - F.col("cnt")
-        )
-        .cast("double")
-        .alias("tie_t"),
-    )
-    u1 = F.col("r1") - F.col("n1") * (F.col("n1") + 1) / 2.0
-    n1d = F.col("n1").cast("double")
-    nd = (F.col("n1") + F.col("n2")).cast("double")
-    sigma = F.sqrt(
-        n1d * F.col("n2") / 12.0
-        * (
-            (F.col("n1") + F.col("n2") + 1)
-            - F.col("tie_t") / (nd * (F.col("n1") + F.col("n2") - 1))
-        )
-    )
-    ok = (
-        (F.col("n1") > 0) & (F.col("n2") > 0) & (F.col("n_distinct_v") > 1)
-    )
-    return agg.select(
-        "n1",
-        "n2",
-        F.round(u1, 2).alias("u1"),
-        F.round(n1d * F.col("n2") - u1, 2).alias("u2"),
-        F.when(
-            ok, F.round((u1 - n1d * F.col("n2") / 2) / sigma, 4)
-        ).alias("z"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# agg_benford_test — first-digit distribution vs Benford's law
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "agg_benford_test",
-    oracle="""
-    WITH d AS (
-      SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
-                              AS VARCHAR), 1, 1) AS BIGINT) AS digit
-      FROM orders WHERE o_totalprice >= 1
-    ),
-    obs AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1),
-    tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM obs)
-    SELECT o.digit, o.n,
-           round(o.n * 1.0 / t.total, 6) AS share,
-           round(log10(1 + 1.0 / o.digit), 6) AS benford_share,
-           round(pow(o.n - t.total * log10(1 + 1.0 / o.digit), 2)
-                 / (t.total * log10(1 + 1.0 / o.digit)), 6) AS chi2_term
-    FROM obs o CROSS JOIN tot t
-    """,
-    doc="Benford first-digit audit over order totals: observed leading-digit "
-    "shares vs log10(1+1/d) with per-digit chi-square contributions — the "
-    "classic synthetic-data / fraud / ingest-corruption screen. The digit "
-    "comes from the INTEGER part formatted as a string (both engines print "
-    "integers identically; float formatting would not be portable). One "
-    "map-side-combined 9-key aggregation; everything after is 9-row math.",
-)
-def agg_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
-    d = o.select(
-        F.substring(
-            F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1
-        )
-        .cast("bigint")
-        .alias("digit")
-    )
-    obs = d.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    tot = obs.agg(F.sum("n").cast("bigint").alias("total"))
-    bshare = F.log10(1 + 1.0 / F.col("digit"))
-    # obs feeds both the total and the output join: persist the 9-row
-    # relation so the orders scan+agg runs once
-    return persist_until_collected(obs, obs.crossJoin(F.broadcast(tot)).select(
-        "digit",
-        "n",
-        F.round(F.col("n") * 1.0 / F.col("total"), 6).alias("share"),
-        F.round(bshare, 6).alias("benford_share"),
-        F.round(
-            F.pow(F.col("n") - F.col("total") * bshare, 2)
-            / (F.col("total") * bshare),
-            6,
-        ).alias("chi2_term"),
-    ))
-
-
-# ---------------------------------------------------------------------------
-# orders_abc_xyz — ABC revenue classification x XYZ variability classification
-# ---------------------------------------------------------------------------
-
-ABC_A, ABC_B = 0.8, 0.95
-XYZ_X, XYZ_Y = 0.5, 1.0
-
-
-@register(
-    "orders_abc_xyz",
-    oracle=f"""
-    WITH rev AS (
-      SELECT l_partkey,
-             CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                           AS BIGINT)) AS BIGINT) AS rev_c
-      FROM lineitem GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(rev_c) AS BIGINT) AS total_c FROM rev),
-    cum AS (
-      SELECT l_partkey, rev_c,
-             sum(rev_c) OVER (ORDER BY rev_c DESC, l_partkey)
-               * 1.0 / t.total_c AS cum_share
-      FROM rev CROSS JOIN tot t
-    ),
-    monthly AS (
-      SELECT l_partkey, date_trunc('month', l_shipdate) AS m,
-             CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                           AS BIGINT)) AS BIGINT) AS mrev_c
-      FROM lineitem GROUP BY 1, 2
-    ),
-    cv AS (
-      SELECT l_partkey,
-             CASE WHEN count(*) > 1 AND avg(mrev_c) <> 0
-                  THEN round(stddev_samp(mrev_c) / avg(mrev_c), 4) END AS cv
-      FROM monthly GROUP BY 1
-    )
-    SELECT c.l_partkey, round(c.rev_c / 100.0, 2) AS revenue,
-           round(c.cum_share, 6) AS cum_share,
-           CASE WHEN c.cum_share <= {ABC_A} THEN 'A'
-                WHEN c.cum_share <= {ABC_B} THEN 'B' ELSE 'C' END AS abc,
-           v.cv,
-           CASE WHEN v.cv IS NULL THEN 'Z'
-                WHEN v.cv < {XYZ_X} THEN 'X'
-                WHEN v.cv < {XYZ_Y} THEN 'Y' ELSE 'Z' END AS xyz
-    FROM cum c JOIN cv v ON v.l_partkey = c.l_partkey
-    """,
-    doc="ABC/XYZ inventory classification per part: ABC buckets by "
-    f"cumulative revenue share ({ABC_A}/{ABC_B} cuts over the revenue-DESC "
-    "running total) and XYZ buckets by demand variability (coefficient of "
-    "variation of monthly revenue; single-month or zero-mean parts fall to "
-    "Z). Two map-side-combined aggregations of the fact table — in exact "
-    "INTEGER CENTS, so the per-part revenue is summation-order-independent "
-    "and both engines agree bit-for-bit — then ALL window/ranking work "
-    "happens on the compacted per-part relation. That relation is "
-    "data-proportional, so the revenue-DESC running total is the two-pass "
-    "range-partitioned prefix sum (plans/ranking.py two_pass_prefix_sum: "
-    "boundary literals, per-bucket running sums, bucket-total offsets) — "
-    "exact-integer addition is associative, so the re-ordered summation "
-    "is identical to the oracle's single window by construction.",
-)
-def orders_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongodb_nats_connector_spark.plans.ranking import (
-        two_pass_prefix_sum,
-    )
-
-    li = table(spark, sf_dir, "lineitem")
-    money_c = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("bigint")
-    rev = li.groupBy("l_partkey").agg(
-        F.sum(money_c).cast("bigint").alias("rev_c")
-    )
-    # persisted NOW: the two-pass boundary sketch runs at construction and
-    # would otherwise recompute the fact-table rollup; released when the
-    # returned result is GC'd (release_on_gc at return)
-    rev = rev.persist()
-    tot = rev.agg(F.sum("rev_c").cast("bigint").alias("total_c"))
-    cum = (
-        two_pass_prefix_sum(
-            rev, "rev_c", "l_partkey", "rev_c",
-            descending=True, cum_col="_cumrev",
-        )
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "cum_share", F.col("_cumrev") * 1.0 / F.col("total_c")
-        )
-    )
-    monthly = li.groupBy(
-        "l_partkey", F.date_trunc("month", "l_shipdate").alias("m")
-    ).agg(F.sum(money_c).cast("bigint").alias("mrev_c"))
-    cv = monthly.groupBy("l_partkey").agg(
-        F.when(
-            (F.count(F.lit(1)) > 1) & (F.avg("mrev_c") != 0),
-            F.round(F.stddev_samp("mrev_c") / F.avg("mrev_c"), 4),
-        ).alias("cv")
-    )
-    # rev feeds the boundary sketch, the grand total and the ranked running
-    # share; it was persisted above so the lineitem scan+agg runs once
-    return release_on_gc(rev, cum.join(cv, "l_partkey").select(
-        "l_partkey",
-        F.round(F.col("rev_c") / 100.0, 2).alias("revenue"),
-        F.round("cum_share", 6).alias("cum_share"),
-        F.when(F.col("cum_share") <= ABC_A, "A")
-        .when(F.col("cum_share") <= ABC_B, "B")
-        .otherwise("C")
-        .alias("abc"),
-        "cv",
-        F.when(F.col("cv").isNull(), "Z")
-        .when(F.col("cv") < XYZ_X, "X")
-        .when(F.col("cv") < XYZ_Y, "Y")
-        .otherwise("Z")
-        .alias("xyz"),
-    ))
-
-
-# ---------------------------------------------------------------------------
-# agg_wilson_ci — Wilson score interval for monthly return rates
-# ---------------------------------------------------------------------------
-
-WILSON_Z = 1.96
-
-
-@register(
-    "agg_wilson_ci",
-    oracle=f"""
-    WITH m AS (
-      SELECT date_trunc('month', l_shipdate) AS month,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS r
-      FROM lineitem GROUP BY 1
-    )
-    SELECT CAST(month AS DATE) AS month, n, r,
-           round(r * 1.0 / n, 6) AS p_hat,
-           round(((r * 1.0 / n) + {WILSON_Z} * {WILSON_Z} / (2.0 * n)
-                  - {WILSON_Z} * sqrt((r * 1.0 / n) * (1 - r * 1.0 / n) / n
-                    + {WILSON_Z} * {WILSON_Z} / (4.0 * n * n)))
-                 / (1 + {WILSON_Z} * {WILSON_Z} / n), 6) AS ci_lo,
-           round(((r * 1.0 / n) + {WILSON_Z} * {WILSON_Z} / (2.0 * n)
-                  + {WILSON_Z} * sqrt((r * 1.0 / n) * (1 - r * 1.0 / n) / n
-                    + {WILSON_Z} * {WILSON_Z} / (4.0 * n * n)))
-                 / (1 + {WILSON_Z} * {WILSON_Z} / n), 6) AS ci_hi
-    FROM m
-    """,
-    doc="Wilson score 95% confidence interval for the monthly return rate "
-    "(share of l_returnflag='R'): the binomial-proportion interval that "
-    "stays inside [0,1] and behaves at small n, i.e. the correct error bar "
-    "for every rate metric a dashboard shows. One conditional "
-    "map-side-combined aggregation per month; the interval itself is pure "
-    "per-row arithmetic on the tiny month relation.",
-)
-def agg_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    m = li.groupBy(
-        F.date_trunc("month", "l_shipdate").cast("date").alias("month")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("r"),
-    )
-    z = F.lit(WILSON_Z)
-    p = F.col("r") * 1.0 / F.col("n")
-    nd = F.col("n")
-    half = z * F.sqrt(p * (1 - p) / nd + z * z / (4.0 * nd * nd))
-    center = p + z * z / (2.0 * nd)
-    denom = 1 + z * z / nd
-    return m.select(
-        "month",
-        "n",
-        "r",
-        F.round(p, 6).alias("p_hat"),
-        F.round((center - half) / denom, 6).alias("ci_lo"),
-        F.round((center + half) / denom, 6).alias("ci_hi"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# events_cuped_adjust — CUPED variance reduction for A/B metrics
-# ---------------------------------------------------------------------------
-
-CUPED_SPLIT_DAYS = 15
-
-
-def _valued_events_prepost(spark: SparkSession, sf_dir: str):
-    """(b, split-crossed b) shared by the experiment-analysis pair
-    (events_cuped_adjust, events_did_uplift): valued events projected to
-    (user_id, day, value) with the min(day)+CUPED_SPLIT_DAYS cutoff
-    broadcast in as a `split` column — one definition so a split-handling
-    fix can never skew only one estimator. (Defined OUTSIDE any
-    @register/def gap; see _thresholded_und_edges.)"""
-    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    b = ev.select(
-        "user_id", F.col("ts").cast("date").alias("day"), "value"
-    )
-    cutoff = b.agg(
-        F.date_add(F.min("day"), CUPED_SPLIT_DAYS).alias("split")
-    )
-    return b.crossJoin(F.broadcast(cutoff))
-
-
-@register(
-    "events_cuped_adjust",
-    oracle=f"""
-    WITH b AS (
-      SELECT user_id, CAST(ts AS DATE) AS day, value FROM events
-      WHERE value IS NOT NULL
-    ),
-    cutoff AS (SELECT min(day) + {CUPED_SPLIT_DAYS} AS split FROM b),
-    per_user AS (
-      SELECT user_id,
-             round(coalesce(sum(CASE WHEN day < split THEN value END), 0), 4)
-               AS pre,
-             round(coalesce(sum(CASE WHEN day >= split THEN value END), 0), 4)
-               AS post
-      FROM b, cutoff GROUP BY user_id
-    ),
-    theta AS (
-      SELECT CASE WHEN count(DISTINCT pre) > 1
-                  THEN covar_samp(pre, post) / var_samp(pre) END AS th,
-             avg(pre) AS pre_mean
-      FROM per_user
-    )
-    SELECT u.user_id, u.pre, u.post,
-           round(t.th, 4) AS theta,
-           round(u.post - t.th * (u.pre - t.pre_mean), 4) AS post_adj
-    FROM per_user u CROSS JOIN theta t
-    """,
-    doc="CUPED (Controlled-experiment Using Pre-Experiment Data) variance "
-    "reduction: per-user pre-period and post-period metric sums around a "
-    "split derived from min(day), theta = cov(pre,post)/var(pre) fit on "
-    "the per-user relation, and the adjusted post metric that removes the "
-    "pre-period component — the industry-standard trick that shrinks A/B "
-    "confidence intervals 30-50% at zero bias. Pre/post sums round before "
-    "the covariance so both engines feed identical doubles into the fit; "
-    "one fact shuffle to per-user rows, a 1-row theta broadcast back. "
-    "A constant pre column (var = 0) yields NULL theta/post_adj via an "
-    "exact-integer distinct-count guard on both engines, never a 0/0 "
-    "whose NULL-vs-NaN result is a DuckDB-version coin flip.",
-)
-def events_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_user = (
-        _valued_events_prepost(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(
-            F.round(
-                F.coalesce(
-                    F.sum(F.when(F.col("day") < F.col("split"), F.col("value"))),
-                    F.lit(0.0),
-                ),
-                4,
-            ).alias("pre"),
-            F.round(
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("day") >= F.col("split"), F.col("value"))
-                    ),
-                    F.lit(0.0),
-                ),
-                4,
-            ).alias("post"),
-        )
-    )
-    theta = per_user.agg(
-        F.when(
-            F.count_distinct(F.col("pre")) > 1,
-            F.covar_samp("pre", "post") / F.var_samp("pre"),
-        ).alias("th"),
-        F.avg("pre").alias("pre_mean"),
-    )
-    out = per_user.crossJoin(F.broadcast(theta)).select(
-        "user_id",
-        "pre",
-        "post",
-        F.round("th", 4).alias("theta"),
-        F.round(
-            F.col("post") - F.col("th") * (F.col("pre") - F.col("pre_mean")), 4
-        ).alias("post_adj"),
-    )
-    return persist_until_collected(per_user, out)
-
-
-# ---------------------------------------------------------------------------
-# orders_exp_smoothing — exponential smoothing as a deterministic fold
-# ---------------------------------------------------------------------------
-
-SMOOTH_ALPHA = 0.3
-
-
-@register(
-    "orders_exp_smoothing",
-    oracle=f"""
-    WITH monthly AS (
-      SELECT o_orderpriority AS priority,
-             CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1, 2
-    ),
-    series AS (
-      SELECT priority, month, rev_c,
-             list(rev_c) OVER (
-               PARTITION BY priority ORDER BY month
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS xs
-      FROM monthly
-    )
-    SELECT priority, month, round(rev_c / 100.0, 2) AS revenue,
-           round(list_reduce(xs,
-                 (acc, x) -> CAST(round(CAST({SMOOTH_ALPHA} AS DOUBLE) * x
-                     + CAST({1 - SMOOTH_ALPHA!r} AS DOUBLE) * acc)
-                   AS BIGINT)) / 100.0, 2)
-             AS smoothed
-    FROM series
-    """,
-    doc=f"Simple exponential smoothing (alpha={SMOOTH_ALPHA}) of monthly "
-    "revenue per order priority — the recursive filter S_t = aX_t + "
-    "(1-a)S_(t-1), which no plain window sum can express order-safely. The "
-    "recursion runs as an explicit sequential FOLD over the series prefix "
-    "(Spark `aggregate` HOF / DuckDB list_reduce) whose state is INTEGER "
-    "CENTS, re-quantized every step: decimal-place rounding of large "
-    "doubles is where the engines' round() conventions diverge (Spark "
-    "rounds the shortest decimal repr half-up, DuckDB the FP-scaled "
-    "product — a real 1-ulp divergence surfaced at sf0.1), while "
-    "round-to-integer only differs on exact .5 doubles, which the dyadic "
-    "smoothing products cannot hit. Inputs are exact integer cents. The fact table reduces map-side to (priority, month) rows; "
-    "prefix arrays exist only on that tiny relation, partitioned per "
-    "series — at 100 TB the per-series state is months-long, never "
-    "fact-proportional.",
-)
-def orders_exp_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").cast("date").alias("month"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
-    w = (
-        Window.partitionBy("priority")
-        .orderBy("month")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    series = monthly.select(
-        "priority",
-        "month",
-        "rev_c",
-        F.collect_list("rev_c").over(w).alias("xs"),
-    )
-    fold = F.expr(
-        f"aggregate(slice(xs, 2, size(xs) - 1), element_at(xs, 1), "
-        f"(acc, x) -> CAST(round({SMOOTH_ALPHA}D * x "
-        f"+ {1 - SMOOTH_ALPHA}D * acc) AS BIGINT))"
-    )
-    return series.select(
-        "priority",
-        "month",
-        F.round(F.col("rev_c") / 100.0, 2).alias("revenue"),
-        F.round(fold / 100.0, 2).alias("smoothed"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# events_intervals_union — interval merge / coverage via prefix-max sweep
-# ---------------------------------------------------------------------------
-
-INTERVAL_US = 600 * 1_000_000  # each event opens a 10-minute activity window
-
-
-@register(
-    "events_intervals_union",
-    oracle=f"""
-    WITH iv AS (
-      SELECT user_id, epoch_us(ts) AS s_us,
-             epoch_us(ts) + {INTERVAL_US} AS e_us, event_id
-      FROM events WHERE ts IS NOT NULL
-    ),
-    sweep AS (
-      SELECT user_id, s_us, e_us,
-             max(e_us) OVER (PARTITION BY user_id ORDER BY s_us, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING) AS prev_end
-      FROM iv
-    )
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(greatest(0, e_us - greatest(s_us,
-                coalesce(prev_end, s_us)))) AS BIGINT) AS covered_us,
-           CAST(sum(CASE WHEN prev_end IS NULL OR s_us >= prev_end
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_blocks
-    FROM sweep GROUP BY user_id
-    """,
-    doc="Interval union per user (each event opens a 10-minute activity "
-    "interval): total covered time and the number of merged activity "
-    "blocks — the classic overlapping-interval coalescing every "
-    "sessionization, SLA, and utilization query needs. The textbook "
-    "algorithm is a sequential sweep; here it is ONE ordered window "
-    "computing the running max of interval ends over preceding rows, so "
-    "each row knows how much genuinely new time it contributes — no "
-    "self-join, no explode to minutes. Pure integer micros end-to-end "
-    "(exact cross-engine). Partitioned per user: the sort is within-key, "
-    "so the operator scales as far as the per-user event count does.",
-)
-def events_intervals_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    iv = ev.select(
-        "user_id",
-        F.unix_micros("ts").alias("s_us"),
-        (F.unix_micros("ts") + INTERVAL_US).alias("e_us"),
-        "event_id",
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("s_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    sweep = iv.withColumn("prev_end", F.max("e_us").over(w))
-    contrib = F.greatest(
-        F.lit(0),
-        F.col("e_us")
-        - F.greatest(F.col("s_us"), F.coalesce("prev_end", "s_us")),
-    )
-    new_block = F.when(
-        F.col("prev_end").isNull() | (F.col("s_us") >= F.col("prev_end")), 1
-    ).otherwise(0)
-    return sweep.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.sum(contrib).cast("bigint").alias("covered_us"),
-        F.sum(new_block).cast("bigint").alias("n_blocks"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# graph_adamic_adar — common-neighbor link prediction scores
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "graph_adamic_adar",
-    oracle=f"""
-    WITH {_KCORE_EDGE_CTES},
-    sym AS (
-      SELECT a AS u, b AS v FROM e0 UNION ALL SELECT b, a FROM e0
-    ),
-    deg AS (SELECT u, count(*) AS d FROM sym GROUP BY u),
-    wedges AS (
-      SELECT s1.u AS na, s2.u AS nb, s1.v AS z
-      FROM sym s1 JOIN sym s2 ON s1.v = s2.v AND s1.u < s2.u
-    ),
-    scored AS (
-      SELECT w.na, w.nb,
-             CAST(count(*) AS BIGINT) AS n_common,
-             round(sum(round(1.0 / ln(d.d), 9)), 6) AS aa_score
-      FROM wedges w JOIN deg d ON d.u = w.z
-      WHERE d.d > 1
-      GROUP BY w.na, w.nb
-    )
-    SELECT x.n_name AS nation_a, y.n_name AS nation_b, s.n_common,
-           s.aa_score,
-           CAST(CASE WHEN EXISTS (SELECT 1 FROM e0
-                                  WHERE a = s.na AND b = s.nb)
-                THEN 1 ELSE 0 END AS BIGINT) AS is_edge
-    FROM scored s
-    JOIN nation x ON x.n_nationkey = s.na
-    JOIN nation y ON y.n_nationkey = s.nb
-    """,
-    doc="Adamic-Adar link prediction over the thresholded trade graph: for "
-    "each node pair, sum 1/ln(degree) across common neighbors — the "
-    "standard 'who should be connected next' score, down-weighting hub "
-    "neighbors. Wedges enumerate through ONE equi-self-join on the shared "
-    "neighbor (hash-partitioned on z, the same wedge shape as "
-    "graph_triangle_count, so the skew gate there applies here); each "
-    "term rounds to 9 decimals before the sum rounds to 6, keeping the "
-    "double path identical cross-engine. The existing-edge flag makes the "
-    "output directly usable as a ranked candidate list.",
-)
-def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e0 = _thresholded_und_edges(spark, sf_dir)
-    sym = e0.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        e0.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    s1 = sym.select(F.col("u").alias("na"), F.col("v").alias("z"))
-    s2 = sym.select(F.col("u").alias("nb"), F.col("v").alias("z2"))
-    wedges = s1.join(
-        s2, (F.col("z") == F.col("z2")) & (F.col("na") < F.col("nb"))
-    ).select("na", "nb", "z")
-    scored = (
-        wedges.join(
-            maybe_broadcast(deg.filter(F.col("d") > 1)),
-            wedges["z"] == F.col("u"),
-        )
-        .groupBy("na", "nb")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_common"),
-            F.round(F.sum(F.round(1.0 / F.log(F.col("d")), 9)), 6).alias(
-                "aa_score"
-            ),
-        )
-    )
-    flagged = scored.join(
-        maybe_broadcast(e0.withColumn("is_e", F.lit(1))),
-        (scored["na"] == e0["a"]) & (scored["nb"] == e0["b"]),
-        "left",
-    ).select(
-        "na",
-        "nb",
-        "n_common",
-        "aa_score",
-        F.coalesce("is_e", F.lit(0)).cast("bigint").alias("is_edge"),
-    )
-    nation = table(spark, sf_dir, "nation")
-    nx = nation.select(
-        F.col("n_nationkey").alias("ka"), F.col("n_name").alias("nation_a")
-    )
-    ny = nation.select(
-        F.col("n_nationkey").alias("kb"), F.col("n_name").alias("nation_b")
-    )
-    out = (
-        flagged.join(maybe_broadcast(nx), F.col("na") == F.col("ka"))
-        .join(maybe_broadcast(ny), F.col("nb") == F.col("kb"))
-        .select("nation_a", "nation_b", "n_common", "aa_score", "is_edge")
-    )
-    # e0 (the 4-table trade-edge join + threshold) feeds sym twice, deg,
-    # and the is_edge probe — persist it for the LIFE OF THE RESULT (tying
-    # the release to e0 itself would unpersist the moment this function
-    # returns, before the caller ever executes the plan)
-    return persist_until_collected(e0, out)
-
-
-# ---------------------------------------------------------------------------
-# sample_balanced_class — downsample every class to the minority count
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "sample_balanced_class",
-    oracle="""
-    WITH m AS (
-      SELECT min(cnt) AS m FROM (
-        SELECT count(*) AS cnt FROM events GROUP BY event_type
-      )
-    ),
-    ranked AS (
-      SELECT event_type, event_id,
-             row_number() OVER (
-               PARTITION BY event_type
-               ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) AS rn
-      FROM events
-    )
-    SELECT event_type, event_id, CAST(rn AS BIGINT) AS rn
-    FROM ranked, m WHERE rn <= m.m
-    """,
-    doc="Class-balanced downsampling: every event_type keeps exactly "
-    "min-class-count rows, chosen by deterministic hash order (md5 of the "
-    "id — a reproducible, restart-stable stand-in for a uniform draw). "
-    "The training-data primitive behind balanced classifier corpora and "
-    "per-domain LLM mixes. One 5-row count aggregate broadcasts the "
-    "minority size; the rank filter shuffles each class once. At 100 TB "
-    "the two passes stay map-side-combined + windowed per key; with a "
-    "LITERAL k the rank filter becomes WindowGroupLimit (see "
-    "sample_reservoir_perkey) — the data-dependent threshold trades that "
-    "pushdown for exact balance.",
-)
-def sample_balanced_class(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    m = (
-        ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(F.min("cnt").alias("m"))
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.md5(F.col("event_id").cast("string")), "event_id"
-    )
-    ranked = ev.select(
-        "event_type",
-        "event_id",
-        F.row_number().over(w).cast("bigint").alias("rn"),
-    )
-    return (
-        ranked.crossJoin(F.broadcast(m))
-        .filter(F.col("rn") <= F.col("m"))
-        .select("event_type", "event_id", "rn")
-    )
-
-
-# ---------------------------------------------------------------------------
-# docs_quality_ensemble_rank — Borda-count ensemble of quality signals
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "docs_quality_ensemble_rank",
-    oracle="""
-    WITH sig AS (
-      SELECT doc_id, n_chars,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-             CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-               AS n_uniq
-      FROM documents WHERE text IS NOT NULL
-    ),
-    ranked AS (
-      SELECT doc_id,
-             row_number() OVER (ORDER BY n_chars DESC, doc_id) AS r_chars,
-             row_number() OVER (ORDER BY n_words DESC, doc_id) AS r_words,
-             row_number() OVER (
-               ORDER BY n_uniq * 1.0 / n_words DESC, doc_id) AS r_uniq
-      FROM sig
-    )
-    SELECT doc_id, CAST(r_chars AS BIGINT) AS r_chars,
-           CAST(r_words AS BIGINT) AS r_words,
-           CAST(r_uniq AS BIGINT) AS r_uniq,
-           CAST(r_chars + r_words + r_uniq AS BIGINT) AS borda,
-           CAST(row_number() OVER (
-             ORDER BY r_chars + r_words + r_uniq, doc_id) AS BIGINT)
-             AS final_rank
-    FROM ranked
-    """,
-    doc="Borda-count ensemble ranking of documents across three quality "
-    "signals (length in chars, length in words, lexical diversity): each "
-    "signal contributes its rank, the rank SUM orders the final list — "
-    "rank aggregation is robust to signals with incomparable scales, "
-    "which is why curation pipelines ensemble this way rather than "
-    "averaging raw scores. Integer ranks end-to-end (exact parity). "
-    "The per-doc signal relation is data-proportional, so each of the "
-    "four ranks is the two-pass range-partitioned rank (plans/ranking.py: "
-    "boundary literals — sketched for the signals, analytic [3, 3n] for "
-    "the borda sum — per-bucket row_number + collected bucket-offset "
-    "literals off the persisted signal relation) — no data-proportional "
-    "single-partition sort anywhere; "
-    "identical to row_number() by construction (the oracle keeps the "
-    "window formulation).",
-)
-def docs_quality_ensemble_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # shared NULL-text guard on BOTH engines: two_pass_global_rank drops
-    # NULL rank keys while the oracle's row_number() would keep them, so
-    # a NULL text row must never reach the rank inputs on either side
-    docs = table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull()
-    )
-    words = F.split("text", " ")
-    sig = docs.select(
-        "doc_id",
-        "n_chars",
-        F.size(words).cast("bigint").alias("n_words"),
-        F.size(F.array_distinct(words)).cast("bigint").alias("n_uniq"),
-    ).withColumn("_lexdiv", F.col("n_uniq") * 1.0 / F.col("n_words"))
-    # persisted NOW: FOUR chained two-pass boundary sketches run at
-    # construction; without the cache each would re-tokenize the corpus.
-    # Released on result GC.
-    sig = sig.persist()
-    # collected_offsets: sig is persisted, so the per-bucket count
-    # collections are cheap cache scans at construction (the first three
-    # calls' construction jobs column-prune earlier rank windows away),
-    # and the executed plan loses all four offset broadcast subplans —
-    # each was a serial broadcast-build job per execution, and the
-    # borda one re-ran the three signal-rank windows inside it.
-    ranked = two_pass_global_rank(
-        sig, "n_chars", "doc_id", descending=True,
-        rank_col="r_chars", total_col="_n1", collected_offsets=True,
-    )
-    ranked = two_pass_global_rank(
-        ranked, "n_words", "doc_id", descending=True,
-        rank_col="r_words", total_col="_n2", collected_offsets=True,
-    )
-    ranked = two_pass_global_rank(
-        ranked, "_lexdiv", "doc_id", descending=True,
-        rank_col="r_uniq", total_col="_n3", collected_offsets=True,
-    )
-    ranked = ranked.withColumn(
-        "borda",
-        (F.col("r_chars") + F.col("r_words") + F.col("r_uniq")).cast(
-            "bigint"
-        ),
-    )
-    # borda = sum of three permutations of 1..n, so its range [3, 3n] is
-    # known analytically: explicit evenly-spaced boundaries skip the
-    # sketch job that would otherwise execute all three rank windows a
-    # second time at construction (any boundary set yields identical
-    # ranks — boundaries only balance work).
-    n_docs = sig.count()
-    borda_bounds = [
-        3 + ((3 * n_docs - 3) * (i + 1)) // 32 for i in range(31)
-    ]
-    ranked = two_pass_global_rank(
-        ranked, "borda", "doc_id", descending=False,
-        rank_col="final_rank", total_col="_n4",
-        collected_offsets=True, boundaries=borda_bounds,
-    )
-    return release_on_gc(
-        sig,
-        ranked.select(
-            "doc_id",
-            "r_chars",
-            "r_words",
-            "r_uniq",
-            "borda",
-            F.col("final_rank").cast("bigint").alias("final_rank"),
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# docs_knn_classify — kNN majority-label classification on embeddings
-# ---------------------------------------------------------------------------
-
-KNN_QUERIES = 50  # labeled query set: vec_id < 50
-KNN_K = 5
-
-
-@register(
-    "docs_knn_classify",
-    oracle=f"""
-    WITH e AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    q AS (SELECT vec_id AS query_id, label AS true_label, v AS qv
-          FROM e WHERE vec_id < {KNN_QUERIES}),
-    scored AS (
-      SELECT q.query_id, q.true_label, e.label,
-             round(list_cosine_similarity(q.qv, e.v), 6) AS cos_sim,
-             e.vec_id
-      FROM q JOIN e ON e.vec_id <> q.query_id
-      WHERE NOT isnan(round(list_cosine_similarity(q.qv, e.v), 6))
-    ),
-    top AS (
-      SELECT query_id, true_label, label FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored
-      ) WHERE rn <= {KNN_K}
-    ),
-    votes AS (
-      SELECT query_id, true_label, label,
-             CAST(count(*) AS BIGINT) AS n_votes
-      FROM top GROUP BY 1, 2, 3
-    )
-    SELECT query_id, CAST(true_label AS BIGINT) AS true_label,
-           CAST(label AS BIGINT) AS pred_label, n_votes,
-           CAST(CASE WHEN label = true_label THEN 1 ELSE 0 END AS BIGINT)
-             AS correct
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY n_votes DESC, label) AS vr
-      FROM votes
-    ) WHERE vr = 1
-    """,
-    doc=f"k-nearest-neighbor label assignment (k={KNN_K}) over the "
-    "embedding table: each of the "
-    f"{KNN_QUERIES} query vectors takes the majority label of its nearest "
-    "neighbors by exact cosine (ties break to the smallest label) — the "
-    "semi-supervised labeling / weak-supervision primitive a curation "
-    "pipeline uses to propagate a seed taxonomy over an unlabeled corpus. "
-    "This is the exact broadcast-NLJ baseline over a BOUNDED query set "
-    "(same contract as similarity_topk_bruteforce); the corpus-scale path "
-    "swaps the scorer for the IVF/LSH candidate generators "
-    "(similarity_ann_ivf / similarity_ann_lsh) and keeps the vote stages "
-    "unchanged — votes shuffle only (query_id, label) pairs.",
-)
-def docs_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongodb_nats_connector_spark.functions.vectors import cosine_fast
-
-    e = table(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = e.filter(F.col("vec_id") < KNN_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("true_label"),
-        F.col("v").alias("qv"),
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "true_label",
-            "label",
-            F.round(cosine_fast(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-            "vec_id",
-        )
-        # NaN guard: Spark's DESC ordering puts NaN FIRST, so one
-        # degenerate (zero-norm) vector would enter EVERY query's top-k
-        # and shift the vote — drop it before ranking (oracle mirrors)
-        .filter(~F.isnan(F.col("cos_sim")))
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    top = scored.withColumn("rn", F.row_number().over(wk)).filter(
-        F.col("rn") <= KNN_K
-    )
-    votes = top.groupBy("query_id", "true_label", "label").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_votes")
-    )
-    wv = Window.partitionBy("query_id").orderBy(
-        F.desc("n_votes"), F.asc("label")
-    )
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select(
-            "query_id",
-            F.col("true_label").cast("bigint").alias("true_label"),
-            F.col("label").cast("bigint").alias("pred_label"),
-            "n_votes",
-            (F.col("label") == F.col("true_label"))
-            .cast("bigint")
-            .alias("correct"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# cdc_out_of_order_audit — delivery-order lateness profile per subject
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "cdc_out_of_order_audit",
-    oracle="""
-    WITH seq AS (
-      SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-             max(epoch_us(ts)) OVER (
-               PARTITION BY event_type ORDER BY event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS prev_max_us
-      FROM events
-    )
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_msgs,
-           CAST(sum(CASE WHEN ts_us < prev_max_us THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_late,
-           round(sum(CASE WHEN ts_us < prev_max_us THEN 1 ELSE 0 END)
-                 * 1.0 / count(*), 6) AS late_share,
-           CAST(max(CASE WHEN ts_us < prev_max_us
-                         THEN prev_max_us - ts_us END) AS BIGINT)
-             AS max_lateness_us,
-           CAST(sum(CASE WHEN ts_us < prev_max_us
-                         THEN prev_max_us - ts_us ELSE 0 END) AS BIGINT)
-             AS total_lateness_us
-    FROM seq GROUP BY event_type
-    """,
-    doc="Out-of-order delivery audit per subject: within each event_type's "
-    "stream (delivery order = the monotone event_id, mirroring the "
-    "connector's per-collection publish order), count events whose "
-    "event TIME regressed below the running max — i.e. late data — and "
-    "report the worst and total lateness. This is the measurement that "
-    "CALIBRATES a streaming watermark: max_lateness_us is exactly the "
-    "delay bound withWatermark needs to avoid dropping rows "
-    "(streaming/windows.py). Window partitions per subject, so no global "
-    "sort exists; integer micros end-to-end.",
-)
-def cdc_out_of_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    seq = ev.select(
-        "event_type",
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-    ).withColumn("prev_max_us", F.max("ts_us").over(w))
-    late = F.col("ts_us") < F.col("prev_max_us")
-    lateness = F.col("prev_max_us") - F.col("ts_us")
-    return seq.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_msgs"),
-        F.sum(F.when(late, 1).otherwise(0)).cast("bigint").alias("n_late"),
-        F.round(
-            F.sum(F.when(late, 1).otherwise(0)) * 1.0 / F.count(F.lit(1)), 6
-        ).alias("late_share"),
-        F.max(F.when(late, lateness)).cast("bigint").alias("max_lateness_us"),
-        F.sum(F.when(late, lateness).otherwise(0))
-        .cast("bigint")
-        .alias("total_lateness_us"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_heaps_law_fit — vocabulary-growth exponent over the corpus
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "text_heaps_law_fit",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-    ),
-    tok AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok
-            FROM w GROUP BY 1),
-    firsts AS (
-      SELECT min(doc_id) AS first_doc FROM w GROUP BY word
-    ),
-    new_per_doc AS (
-      SELECT first_doc AS doc_id, CAST(count(*) AS BIGINT) AS n_new
-      FROM firsts GROUP BY 1
-    ),
-    curve AS (
-      SELECT t.doc_id,
-             sum(t.n_tok) OVER (ORDER BY t.doc_id) AS cum_tok,
-             sum(coalesce(n.n_new, 0)) OVER (ORDER BY t.doc_id) AS cum_vocab
-      FROM tok t LEFT JOIN new_per_doc n ON n.doc_id = t.doc_id
-    )
-    SELECT round(regr_slope(ln(cum_vocab), ln(cum_tok)), 4) AS beta,
-           round(exp(regr_intercept(ln(cum_vocab), ln(cum_tok))), 4) AS k,
-           CAST(max(cum_vocab) AS BIGINT) AS total_vocab,
-           CAST(max(cum_tok) AS BIGINT) AS total_tokens,
-           CAST(count(*) AS BIGINT) AS n_docs
-    FROM curve
-    """,
-    doc="Heaps-law fit of vocabulary growth: V(N) ~ k * N^beta, fit as a "
-    "log-log linear regression over the cumulative (tokens, vocab) curve "
-    "in doc_id order. The curve needs no per-row dedup state: each word's "
-    "FIRST document (one min-aggregate per word) tells exactly where it "
-    "adds 1 to the vocabulary, so cumulative vocab is a prefix sum of "
-    "per-doc first-occurrence counts — both cumulative series are exact "
-    "integers. beta (~0.5 for natural text) is the capacity-planning "
-    "input for any vocabulary-keyed state (BPE lexicons, unigram LMs, "
-    "surprisal filters): it says how the [[text-unigram-surprisal]]-style "
-    "vocab relation grows when the corpus 100x-es. One explode shuffle "
-    "per aggregation; the regression runs over the doc-count-sized curve.",
-)
-def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents", parallel=True)
-    w = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    tok = w.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_tok")
-    )
-    firsts = w.groupBy("word").agg(F.min("doc_id").alias("first_doc"))
-    new_per_doc = firsts.groupBy(F.col("first_doc").alias("doc_id")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_new")
-    )
-    wc = Window.orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    curve = (
-        tok.join(new_per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.sum("n_tok").over(wc).alias("cum_tok"),
-            F.sum(F.coalesce("n_new", F.lit(0))).over(wc).alias("cum_vocab"),
-        )
-    )
-    ln_v, ln_n = F.log(F.col("cum_vocab")), F.log(F.col("cum_tok"))
-    return curve.agg(
-        F.round(F.regr_slope(ln_v, ln_n), 4).alias("beta"),
-        F.round(F.exp(F.regr_intercept(ln_v, ln_n)), 4).alias("k"),
-        F.max("cum_vocab").cast("bigint").alias("total_vocab"),
-        F.max("cum_tok").cast("bigint").alias("total_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# events_funnel_windowed — conversion funnel with a max-window constraint
-# ---------------------------------------------------------------------------
-
-FUNNEL_WINDOW_DAYS = 3
-
-
-@register(
-    "events_funnel_windowed",
-    oracle=f"""
-    WITH s1 AS (
-      SELECT user_id, min(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY 1
-    ),
-    s2 AS (
-      SELECT e.user_id, min(e.ts) AS t2
-      FROM events e JOIN s1 ON s1.user_id = e.user_id
-      WHERE e.event_type = 'click' AND e.ts >= s1.t1
-        AND e.ts <= s1.t1 + INTERVAL {FUNNEL_WINDOW_DAYS} DAY
-      GROUP BY 1
-    ),
-    s3 AS (
-      SELECT e.user_id, min(e.ts) AS t3
-      FROM events e JOIN s2 ON s2.user_id = e.user_id
-      JOIN s1 ON s1.user_id = e.user_id
-      WHERE e.event_type = 'purchase' AND e.ts >= s2.t2
-        AND e.ts <= s1.t1 + INTERVAL {FUNNEL_WINDOW_DAYS} DAY
-      GROUP BY 1
-    )
-    SELECT s1.user_id, s1.t1, s2.t2, s3.t3,
-           CAST(1 + CAST(s2.t2 IS NOT NULL AS INT)
-                  + CAST(s3.t3 IS NOT NULL AS INT) AS BIGINT) AS level
-    FROM s1 LEFT JOIN s2 ON s2.user_id = s1.user_id
-    LEFT JOIN s3 ON s3.user_id = s1.user_id
-    """,
-    doc="Windowed funnel (the windowFunnel shape): view -> click -> "
-    f"purchase must ALL land within {FUNNEL_WINDOW_DAYS} days of the "
-    "user's first view — the constraint that separates a real conversion "
-    "journey from coincidental events months apart, which the plain "
-    "`events_funnel` cannot express. Each step is one pushed-filter scan "
-    "aggregated per user, with the previous step's per-user anchor joined "
-    "back (size-gated broadcast): step ordering and the anchored deadline "
-    "ride in the join predicate, never in per-row state. Timestamps stay "
-    "integer micros end-to-end.",
-)
-def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    win = F.expr(f"INTERVAL {FUNNEL_WINDOW_DAYS} DAYS")
-    s1 = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == "click")
-        .join(maybe_broadcast(s1), "user_id")
-        .filter(
-            (F.col("ts") >= F.col("t1")) & (F.col("ts") <= F.col("t1") + win)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(maybe_broadcast(s2), "user_id")
-        .join(maybe_broadcast(s1), "user_id")
-        .filter(
-            (F.col("ts") >= F.col("t2")) & (F.col("ts") <= F.col("t1") + win)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    out = (
-        s1.join(s2, "user_id", "left")
-        .join(s3, "user_id", "left")
-        .select(
-            "user_id",
-            "t1",
-            "t2",
-            "t3",
-            (
-                1
-                + F.col("t2").isNotNull().cast("int")
-                + F.col("t3").isNotNull().cast("int")
-            ).cast("bigint").alias("level"),
-        )
-    )
-    return persist_until_collected(s1, persist_until_collected(s2, out))
-
-
-# ---------------------------------------------------------------------------
-# docs_pmi_collocations — PMI-scored bigram collocations
-# ---------------------------------------------------------------------------
-
-PMI_MIN_COUNT = 5
-
-
-@register(
-    "docs_pmi_collocations",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    w AS (
-      SELECT doc_id, unnest(t) AS word, generate_subscripts(t, 1) AS pos
-      FROM toks
-    ),
-    big AS (
-      SELECT word AS a,
-             lead(word) OVER (PARTITION BY doc_id ORDER BY pos) AS b
-      FROM w
-    ),
-    bc AS (
-      SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab
-      FROM big WHERE b IS NOT NULL GROUP BY 1, 2
-    ),
-    uc AS (SELECT word, CAST(count(*) AS BIGINT) AS c FROM w GROUP BY 1),
-    n AS (SELECT CAST(count(*) AS BIGINT) AS n_tok FROM w),
-    m AS (SELECT CAST(sum(c_ab) AS BIGINT) AS n_big FROM bc)
-    SELECT bc.a, bc.b, bc.c_ab,
-           round(ln((bc.c_ab * 1.0 / m.n_big)
-                 / ((ua.c * 1.0 / n.n_tok) * (ub.c * 1.0 / n.n_tok))), 6)
-             AS pmi
-    FROM bc JOIN uc ua ON ua.word = bc.a
-    JOIN uc ub ON ub.word = bc.b, n, m
-    WHERE bc.c_ab >= {PMI_MIN_COUNT}
-    """,
-    doc=f"PMI-scored bigram collocations (count >= {PMI_MIN_COUNT}): "
-    "pointwise mutual information ln(p(ab)/(p(a)p(b))) over adjacent word "
-    "pairs — the phrase-mining signal behind multi-word tokenizer entries "
-    "and stop-phrase lists. Adjacency comes from ONE per-doc ordered "
-    "window (lead over token position — no self-join on position); both "
-    "count relations reduce map-side; the PMI arithmetic runs on the "
-    "thresholded bigram relation with the two 1-row totals broadcast. "
-    "Identical division order keeps the doubles engine-exact at 6 "
-    "decimals.",
-)
-def docs_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents", parallel=True)
-    w = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word")
-    )
-    lw = Window.partitionBy("doc_id").orderBy("pos")
-    big = w.select(
-        F.col("word").alias("a"), F.lead("word").over(lw).alias("b")
-    ).filter(F.col("b").isNotNull())
-    # the exploded corpus is scanned exactly TWICE (bigram count, unigram
-    # count); the scalar totals derive from the count relations, not from
-    # fresh corpus scans, and those relations persist for the result's
-    # lifetime since each feeds 2-3 consumers
-    bc0 = big.groupBy("a", "b").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c_ab")
-    )
-    bc = bc0.filter(F.col("c_ab") >= PMI_MIN_COUNT)
-    uc = w.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    n = uc.agg(F.sum("c").cast("bigint").alias("n_tok"))
-    m_tot = bc0.agg(F.sum("c_ab").cast("bigint").alias("n_big"))
-    ua = uc.select(F.col("word").alias("wa"), F.col("c").alias("ca"))
-    ub = uc.select(F.col("word").alias("wb"), F.col("c").alias("cb"))
-    pmi = F.round(
-        F.log(
-            (F.col("c_ab") * 1.0 / F.col("n_big"))
-            / (
-                (F.col("ca") * 1.0 / F.col("n_tok"))
-                * (F.col("cb") * 1.0 / F.col("n_tok"))
-            )
-        ),
-        6,
-    )
-    out = (
-        bc.join(maybe_broadcast(ua), F.col("a") == F.col("wa"))
-        .join(maybe_broadcast(ub), F.col("b") == F.col("wb"))
-        .crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(m_tot))
-        .select("a", "b", "c_ab", pmi.alias("pmi"))
-    )
-    return persist_until_collected(
-        bc0, persist_until_collected(uc, out)
-    )
-
-
-# ---------------------------------------------------------------------------
-# agg_autocorrelation — ACF of the daily revenue series, lags 1..7
-# ---------------------------------------------------------------------------
-
-ACF_MAX_LAG = 7
-
-
-@register(
-    "agg_autocorrelation",
-    oracle=f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
-    idx AS (
-      SELECT rev_c, row_number() OVER (ORDER BY day) AS rn FROM daily
-    ),
-    stats AS (
-      SELECT avg(rev_c) AS mu,
-             sum((rev_c - (SELECT avg(rev_c) FROM daily))
-                 * (rev_c - (SELECT avg(rev_c) FROM daily))) AS ss
-      FROM daily
-    ),
-    lags AS (SELECT unnest(range(1, {ACF_MAX_LAG + 1})) AS lag)
-    SELECT l.lag,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           round(sum((i1.rev_c - s.mu) * (i2.rev_c - s.mu)) / s.ss, 4)
-             AS acf
-    FROM lags l
-    JOIN idx i1 ON true
-    JOIN idx i2 ON i2.rn = i1.rn + l.lag
-    CROSS JOIN stats s
-    GROUP BY l.lag, s.ss ORDER BY l.lag
-    """,
-    doc=f"Autocorrelation function of daily revenue, lags 1..{ACF_MAX_LAG}: "
-    "the seasonality detector that tells a forecaster (and "
-    "events_seasonal_baseline) which period to model — a weekly cycle "
-    "shows as an acf(7) spike. The series first reduces map-side to "
-    "exact-integer daily cents (summation-order-proof); lagged pairs come "
-    "from ONE row-index self-join on the day-count-sized series, lags "
-    "expanded from a 7-row literal; the mean and sum-of-squares compute "
-    "once and broadcast. At 100 TB the fact table contributes one "
-    "aggregation — everything else is calendar-sized.",
-)
-def agg_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
-    idx = daily.select(
-        "rev_c", F.row_number().over(Window.orderBy("day")).alias("rn")
-    )
-    # the mean must exist before the deviation sum (no nested aggregates):
-    # 1-row mean broadcast back into a second moment pass
-    mus = daily.agg(F.avg("rev_c").alias("mu"))
-    stats = (
-        daily.crossJoin(F.broadcast(mus))
-        .agg(
-            F.first("mu").alias("mu"),
-            F.sum(
-                (F.col("rev_c") - F.col("mu"))
-                * (F.col("rev_c") - F.col("mu"))
-            ).alias("ss"),
-        )
-    )
-    lags = spark.range(1, ACF_MAX_LAG + 1).select(
-        F.col("id").cast("bigint").alias("lag")
-    )
-    i1 = idx.select(F.col("rev_c").alias("x1"), F.col("rn").alias("rn1"))
-    i2 = idx.select(F.col("rev_c").alias("x2"), F.col("rn").alias("rn2"))
-    pairs = (
-        i1.crossJoin(F.broadcast(lags))
-        .join(i2, F.col("rn2") == F.col("rn1") + F.col("lag"))
-        .crossJoin(F.broadcast(stats))
-    )
-    out = (
-        pairs.groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.round(
-                F.sum((F.col("x1") - F.col("mu")) * (F.col("x2") - F.col("mu")))
-                / F.first("ss"),
-                4,
-            ).alias("acf"),
-        )
-        .select("lag", "n_pairs", "acf")
-    )
-    return persist_until_collected(daily, persist_until_collected(idx, out))
-
-
-# ---------------------------------------------------------------------------
-# orders_survival_km — Kaplan-Meier repeat-purchase survival curve
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "orders_survival_km",
-    oracle="""
-    WITH o2 AS (
-      SELECT o_custkey, o_orderdate,
-             row_number() OVER (PARTITION BY o_custkey
-                                ORDER BY o_orderdate, o_orderkey) AS rn
-      FROM orders
-    ),
-    firsts AS (SELECT o_custkey, o_orderdate AS t1 FROM o2 WHERE rn = 1),
-    seconds AS (SELECT o_custkey, o_orderdate AS t2 FROM o2 WHERE rn = 2),
-    mx AS (SELECT max(o_orderdate) AS tmax FROM orders),
-    obs AS (
-      SELECT CAST(CASE WHEN s.t2 IS NOT NULL
-                  THEN date_diff('day', CAST(f.t1 AS DATE), CAST(s.t2 AS DATE))
-                  ELSE date_diff('day', CAST(f.t1 AS DATE), CAST(m.tmax AS DATE))
-             END AS BIGINT) AS dur,
-             CAST(CASE WHEN s.t2 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS ev
-      FROM firsts f LEFT JOIN seconds s ON s.o_custkey = f.o_custkey, mx m
-    ),
-    tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM obs),
-    by_d AS (
-      SELECT dur, CAST(sum(ev) AS BIGINT) AS d_ev,
-             CAST(count(*) - sum(ev) AS BIGINT) AS d_cens
-      FROM obs GROUP BY 1
-    ),
-    sw AS (
-      SELECT dur, d_ev, d_cens,
-             t.n - coalesce(sum(d_ev + d_cens) OVER (
-               ORDER BY dur ROWS BETWEEN UNBOUNDED PRECEDING
-               AND 1 PRECEDING), 0) AS n_risk
-      FROM by_d, tot t
-    )
-    SELECT dur AS duration_days, CAST(n_risk AS BIGINT) AS n_risk,
-           d_ev AS n_events, d_cens AS n_censored,
-           CASE WHEN n_risk = d_ev THEN 0.0
-                ELSE round(exp(sum(CASE WHEN n_risk > d_ev
-                      THEN round(ln((n_risk - d_ev) * 1.0 / n_risk), 9)
-                      END) OVER (ORDER BY dur)), 6) END AS survival
-    FROM sw
-    """,
-    doc="Kaplan-Meier survival curve for repeat purchase: time from each "
-    "customer's first to second order, right-CENSORED at the observation "
-    "horizon for one-order customers — the estimator that makes churn/"
-    "retention math honest when most subjects haven't converted yet "
-    "(naive conversion rates ignore censoring). Risk sets are exact "
-    "integers via one cumulative window over the duration-grouped "
-    "relation; the product-limit estimate runs as exp-sum-ln with "
-    "per-term rounding (the no-cumprod-in-SQL standard form, "
-    "deterministic in frame order), and total-extinction rows guard the "
-    "log domain on both engines. Fact work is one per-customer window; "
-    "the curve itself is duration-cardinality-sized.",
-)
-def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    w2 = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    # first + second order in ONE windowed pass (rank filter rewrites to
-    # WindowGroupLimit, then a conditional pivot per customer) — no
-    # separate firsts/seconds scans, no self-join
-    first_two = (
-        o.select(
-            "o_custkey", "o_orderdate", F.row_number().over(w2).alias("rn")
-        )
-        .filter(F.col("rn") <= 2)
-        .groupBy("o_custkey")
-        .agg(
-            F.max(F.when(F.col("rn") == 1, F.col("o_orderdate"))).alias("t1"),
-            F.max(F.when(F.col("rn") == 2, F.col("o_orderdate"))).alias("t2"),
-        )
-    )
-    mx = o.agg(F.max("o_orderdate").alias("tmax"))
-    obs = (
-        first_two.crossJoin(F.broadcast(mx))
-        .select(
-            F.when(
-                F.col("t2").isNotNull(),
-                F.datediff(F.col("t2").cast("date"), F.col("t1").cast("date")),
-            )
-            .otherwise(
-                F.datediff(F.col("tmax").cast("date"), F.col("t1").cast("date"))
-            )
-            .cast("bigint")
-            .alias("dur"),
-            F.col("t2").isNotNull().cast("bigint").alias("ev"),
-        )
-    )
-    tot = obs.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    by_d = obs.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("d_ev"),
-        (F.count(F.lit(1)) - F.sum("ev")).cast("bigint").alias("d_cens"),
-    )
-    wprev = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)
-    sw = by_d.crossJoin(F.broadcast(tot)).select(
-        "dur",
-        "d_ev",
-        "d_cens",
-        (
-            F.col("n")
-            - F.coalesce(
-                F.sum(F.col("d_ev") + F.col("d_cens")).over(wprev), F.lit(0)
-            )
-        ).alias("n_risk"),
-    )
-    term = F.when(
-        F.col("n_risk") > F.col("d_ev"),
-        F.round(
-            F.log((F.col("n_risk") - F.col("d_ev")) * 1.0 / F.col("n_risk")), 9
-        ),
-    )
-    wcum = Window.orderBy("dur").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = sw.select(
-        F.col("dur").alias("duration_days"),
-        F.col("n_risk").cast("bigint").alias("n_risk"),
-        F.col("d_ev").alias("n_events"),
-        F.col("d_cens").alias("n_censored"),
-        F.when(F.col("n_risk") == F.col("d_ev"), F.lit(0.0))
-        .otherwise(F.round(F.exp(F.sum(term).over(wcum)), 6))
-        .alias("survival"),
-    )
-    return persist_until_collected(obs, out)
-
-
-# ---------------------------------------------------------------------------
-# graph_assortativity — degree assortativity of the trade graph
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "graph_assortativity",
-    oracle=f"""
-    WITH {_KCORE_EDGE_CTES},
-    sym AS (SELECT a AS u, b AS v FROM e0 UNION ALL SELECT b, a FROM e0),
-    deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM sym GROUP BY u)
-    SELECT CAST(count(*) AS BIGINT) AS n_dir_edges,
-           round(corr(du.d, dv.d), 4) AS assortativity,
-           round(avg(du.d), 4) AS mean_deg
-    FROM sym JOIN deg du ON du.u = sym.u JOIN deg dv ON dv.u = sym.v
-    """,
-    doc="Degree assortativity (Newman): the Pearson correlation of endpoint "
-    "degrees over the directed edge list of the thresholded trade graph — "
-    "negative means hubs connect to leaves (dissortative, typical of "
-    "trade/technology networks), positive means hubs cluster. One degree "
-    "count plus two joins of the edge list against the node-sized degree "
-    "relation (size-gated broadcast); the correlation is a single "
-    "map-side-combined moment aggregation. The number every skew "
-    "mitigation decision about a graph workload starts from.",
-)
-def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e0 = _thresholded_und_edges(spark, sf_dir)
-    sym = e0.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        e0.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    du = deg.select(F.col("u").alias("ku"), F.col("d").alias("d_u"))
-    dv = deg.select(F.col("u").alias("kv"), F.col("d").alias("d_v"))
-    out = (
-        sym.join(maybe_broadcast(du), F.col("u") == F.col("ku"))
-        .join(maybe_broadcast(dv), F.col("v") == F.col("kv"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_dir_edges"),
-            F.round(F.corr("d_u", "d_v"), 4).alias("assortativity"),
-            F.round(F.avg("d_u"), 4).alias("mean_deg"),
-        )
-    )
-    return persist_until_collected(e0, out)
-
-
-# ---------------------------------------------------------------------------
-# events_did_uplift — difference-in-differences estimator
-# ---------------------------------------------------------------------------
-
-# DiD shares the CUPED pre/post split (one definition, one constant)
-DID_SPLIT_DAYS = CUPED_SPLIT_DAYS
-
-
-@register(
-    "events_did_uplift",
-    oracle=f"""
-    WITH b AS (
-      SELECT user_id, CAST(ts AS DATE) AS day, value FROM events
-      WHERE value IS NOT NULL
-    ),
-    cutoff AS (SELECT min(day) + {DID_SPLIT_DAYS} AS split FROM b),
-    cells AS (
-      SELECT CAST(user_id % 2 AS BIGINT) AS treat,
-             CAST(CASE WHEN day >= split THEN 1 ELSE 0 END AS BIGINT)
-               AS post,
-             CAST(count(*) AS BIGINT) AS n,
-             round(avg(value), 6) AS mean_v
-      FROM b, cutoff GROUP BY 1, 2
-    ),
-    w AS (
-      SELECT
-        max(CASE WHEN treat = 1 AND post = 1 THEN mean_v END) AS t_post,
-        max(CASE WHEN treat = 1 AND post = 0 THEN mean_v END) AS t_pre,
-        max(CASE WHEN treat = 0 AND post = 1 THEN mean_v END) AS c_post,
-        max(CASE WHEN treat = 0 AND post = 0 THEN mean_v END) AS c_pre
-      FROM cells
-    )
-    SELECT c.treat, c.post, c.n, c.mean_v,
-           round((w.t_post - w.t_pre) - (w.c_post - w.c_pre), 6) AS did
-    FROM cells c CROSS JOIN w
-    """,
-    doc="Difference-in-differences uplift estimator over the classic 2x2 "
-    "(treatment x pre/post around a min(day)-derived split; the synthetic "
-    "assignment is the deterministic user_id parity — in production the "
-    "treat column is the experiment flag): DiD = (T_post - T_pre) - "
-    "(C_post - C_pre), the estimator that nets out secular trends a naive "
-    "post-only comparison absorbs. ONE conditional aggregation collapses "
-    "the fact table to 4 cells; cell means round before the 4-cell pivot "
-    "so the estimate is engine-exact. Companion to events_cuped_adjust "
-    "(variance reduction) and events_ab_uplift (post-only readout).",
-)
-def events_did_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cells = (
-        _valued_events_prepost(spark, sf_dir)
-        .groupBy(
-            (F.col("user_id") % 2).cast("bigint").alias("treat"),
-            (F.col("day") >= F.col("split")).cast("bigint").alias("post"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.avg("value"), 6).alias("mean_v"),
-        )
-    )
-    cell = lambda t, p: F.max(  # noqa: E731 - 4-cell pivot extractor
-        F.when((F.col("treat") == t) & (F.col("post") == p), F.col("mean_v"))
-    )
-    w = cells.agg(
-        cell(1, 1).alias("t_post"),
-        cell(1, 0).alias("t_pre"),
-        cell(0, 1).alias("c_post"),
-        cell(0, 0).alias("c_pre"),
-    )
-    out = cells.crossJoin(F.broadcast(w)).select(
-        "treat",
-        "post",
-        "n",
-        "mean_v",
-        F.round(
-            (F.col("t_post") - F.col("t_pre"))
-            - (F.col("c_post") - F.col("c_pre")),
-            6,
-        ).alias("did"),
-    )
-    return persist_until_collected(cells, out)
-
-
-# ---------------------------------------------------------------------------
-# similarity_contamination_check — eval-vs-train embedding contamination
-# ---------------------------------------------------------------------------
-
-CONTAM_EVAL_N = 25  # held-out eval set: vec_id < 25
-CONTAM_COS = 0.5
-
-
-@register(
-    "similarity_contamination_check",
-    oracle=f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    ev AS (SELECT vec_id AS eval_id, v AS evv FROM e
-           WHERE vec_id < {CONTAM_EVAL_N}),
-    tr AS (SELECT vec_id AS train_id, v AS trv FROM e
-           WHERE vec_id >= {CONTAM_EVAL_N}),
-    hits AS (
-      SELECT ev.eval_id, tr.train_id,
-             round(list_cosine_similarity(ev.evv, tr.trv), 6) AS cos_sim
-      FROM ev JOIN tr ON true
-      WHERE NOT isnan(round(list_cosine_similarity(ev.evv, tr.trv), 6))
-        AND round(list_cosine_similarity(ev.evv, tr.trv), 6) >= {CONTAM_COS}
-    ),
-    ranked AS (
-      SELECT eval_id, train_id, cos_sim,
-             row_number() OVER (PARTITION BY eval_id
-                                ORDER BY cos_sim DESC, train_id) AS rn
-      FROM hits
-    ),
-    agg AS (
-      SELECT eval_id, CAST(count(*) AS BIGINT) AS n_contaminated,
-             max(cos_sim) AS worst_cos
-      FROM hits GROUP BY eval_id
-    )
-    SELECT e2.eval_id,
-           coalesce(a.n_contaminated, 0) AS n_contaminated,
-           a.worst_cos,
-           r.train_id AS worst_train_id
-    FROM ev e2
-    LEFT JOIN agg a ON a.eval_id = e2.eval_id
-    LEFT JOIN ranked r ON r.eval_id = e2.eval_id AND r.rn = 1
-    """,
-    doc="Embedding-space contamination audit: for each held-out eval "
-    f"vector, every training vector with cosine >= {CONTAM_COS} is a "
-    "potential leak — the semantic companion to the n-gram "
-    "`contamination_ngram_overlap` audit (paraphrased or reformatted "
-    "leaks that exact n-grams miss). Per eval row: hit count, the worst "
-    "similarity, and the offending train id (ties to the smaller id). "
-    "This is the exact small-eval-set scorer (the eval side broadcasts, "
-    "the same contract as every eval-vs-corpus audit here); at corpus "
-    "scale the train side streams through the scorer map-only, or the "
-    "sign-LSH bucketer (similarity_ann_lsh) pre-filters candidates and "
-    "this verify stage keeps its shape.",
-)
-def similarity_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mongodb_nats_connector_spark.functions.vectors import cosine_fast
-    from mongodb_nats_connector_spark.operators.similarity import _emb
-
-    e = _emb(spark, sf_dir)
-    ev = e.filter(F.col("vec_id") < CONTAM_EVAL_N).select(
-        F.col("vec_id").alias("eval_id"), F.col("v").alias("evv")
-    )
-    tr = e.filter(F.col("vec_id") >= CONTAM_EVAL_N).select(
-        F.col("vec_id").alias("train_id"), F.col("v").alias("trv")
-    )
-    cos = F.round(cosine_fast(F.col("evv"), F.col("trv")), 6)
-    hits = (
-        tr.crossJoin(F.broadcast(ev))
-        .select("eval_id", "train_id", cos.alias("cos_sim"))
-        # NaN guard (zero-norm / degenerate vectors): Spark sorts NaN
-        # ABOVE every real similarity, so an unguarded NaN would pass the
-        # >= filter and win worst_cos — same fix as dedup_embedding_cosine
-        .filter(~F.isnan(F.col("cos_sim")) & (F.col("cos_sim") >= CONTAM_COS))
-    )
-    # hits feeds both the worst-hit rank and the count/max agg; the persist
-    # is tied to the RESULT at the return below (never to hits itself —
-    # that releases the cache the moment this function returns)
-    wr = Window.partitionBy("eval_id").orderBy(
-        F.desc("cos_sim"), F.asc("train_id")
-    )
-    worst = (
-        hits.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
-        .select("eval_id", F.col("train_id").alias("worst_train_id"))
-    )
-    agg = hits.groupBy("eval_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_contaminated"),
-        F.max("cos_sim").alias("worst_cos"),
-    )
-    out = (
-        ev.select("eval_id")
-        .join(agg, "eval_id", "left")
-        .join(worst, "eval_id", "left")
-        .select(
-            "eval_id",
-            F.coalesce("n_contaminated", F.lit(0))
-            .cast("bigint")
-            .alias("n_contaminated"),
-            "worst_cos",
-            "worst_train_id",
-        )
-    )
-    return persist_until_collected(hits, out)
-
-
-# ---------------------------------------------------------------------------
-# events_paired_ttest — paired pre/post t statistic per user
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "events_paired_ttest",
-    oracle=f"""
-    WITH b AS (
-      SELECT user_id, CAST(ts AS DATE) AS day, value FROM events
-      WHERE value IS NOT NULL
-    ),
-    cutoff AS (SELECT min(day) + {CUPED_SPLIT_DAYS} AS split FROM b),
-    per_user AS (
-      SELECT user_id,
-             round(coalesce(sum(CASE WHEN day < split THEN value END), 0), 4)
-               AS pre,
-             round(coalesce(sum(CASE WHEN day >= split THEN value END), 0), 4)
-               AS post
-      FROM b, cutoff GROUP BY user_id
-    ),
-    d AS (SELECT round(post - pre, 4) AS diff FROM per_user)
-    SELECT CAST(count(*) AS BIGINT) AS n_users,
-           round(avg(diff), 4) AS mean_diff,
-           round(stddev_samp(diff), 4) AS sd_diff,
-           CASE WHEN count(*) > 1 AND count(DISTINCT diff) > 1 THEN
-             round(avg(diff) / (stddev_samp(diff) / sqrt(count(*))), 4)
-           END AS t_stat
-    FROM d
-    """,
-    doc="Paired t statistic on per-user pre/post metric sums (the same "
-    "min(day)-derived split as CUPED/DiD — one shared definition): each "
-    "user is their own control, so the pairing removes between-user "
-    "variance that the unpaired agg_welch_ttest must carry. Differences "
-    "round to 4 decimals before the moments so both engines feed the "
-    "identical doubles into the t. One fact shuffle to per-user rows, "
-    "then a single 1-row moment aggregation — the before/after readout "
-    "every feature launch asks for.",
-)
-def events_paired_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_user = (
-        _valued_events_prepost(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(
-            F.round(
-                F.coalesce(
-                    F.sum(F.when(F.col("day") < F.col("split"), F.col("value"))),
-                    F.lit(0.0),
-                ),
-                4,
-            ).alias("pre"),
-            F.round(
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("day") >= F.col("split"), F.col("value"))
-                    ),
-                    F.lit(0.0),
-                ),
-                4,
-            ).alias("post"),
-        )
-    )
-    d = per_user.select(
-        F.round(F.col("post") - F.col("pre"), 4).alias("diff")
-    )
-    # NULL t on degenerate inputs (n < 2 or all diffs equal -> sd = 0) via
-    # exact-integer guards both engines: 0/0's NULL-vs-NaN depends on the
-    # DuckDB version, so the division must never run.
-    return d.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.round(F.avg("diff"), 4).alias("mean_diff"),
-        F.round(F.stddev_samp("diff"), 4).alias("sd_diff"),
-        F.when(
-            (F.count(F.lit(1)) > 1) & (F.count_distinct(F.col("diff")) > 1),
-            F.round(
-                F.avg("diff")
-                / (F.stddev_samp("diff") / F.sqrt(F.count(F.lit(1)))),
-                4,
-            ),
-        ).alias("t_stat"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# orders_shewhart_control — 3-sigma control chart over the daily series
-# ---------------------------------------------------------------------------
-
-SHEWHART_SIGMA = 3.0
-
-
-@register(
-    "orders_shewhart_control",
-    oracle=f"""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
-    lim AS (
-      SELECT avg(rev_c) AS center, stddev_samp(rev_c) AS sigma FROM daily
-    )
-    SELECT d.day, round(d.rev_c / 100.0, 2) AS revenue,
-           round(l.center / 100.0, 2) AS center,
-           round((l.center - {SHEWHART_SIGMA} * l.sigma) / 100.0, 2) AS lcl,
-           round((l.center + {SHEWHART_SIGMA} * l.sigma) / 100.0, 2) AS ucl,
-           CAST(CASE WHEN d.rev_c < l.center - {SHEWHART_SIGMA} * l.sigma
-                       OR d.rev_c > l.center + {SHEWHART_SIGMA} * l.sigma
-                THEN 1 ELSE 0 END AS BIGINT) AS out_of_control
-    FROM daily d CROSS JOIN lim l
-    """,
-    doc=f"Shewhart individuals control chart ({SHEWHART_SIGMA}-sigma) over "
-    "daily revenue: center line, lower/upper control limits, and the "
-    "out-of-control flag per day — the SPC primitive behind every "
-    "pipeline-health dashboard (its event-series siblings here are "
-    "events_daily_anomaly's rolling z-score and the CUSUM changepoint; "
-    "Shewhart detects SPIKES, CUSUM detects sustained shifts). The fact "
-    "table reduces map-side to exact-integer daily cents; limits are one "
-    "1-row moment aggregation broadcast back over the calendar-sized "
-    "series. Flags are decided on the same arithmetic in both engines.",
-)
-def orders_shewhart_control(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
-    lim = daily.agg(
-        F.avg("rev_c").alias("center"), F.stddev_samp("rev_c").alias("sigma")
-    )
-    lo = F.col("center") - SHEWHART_SIGMA * F.col("sigma")
-    hi = F.col("center") + SHEWHART_SIGMA * F.col("sigma")
-    out = daily.crossJoin(F.broadcast(lim)).select(
-        "day",
-        F.round(F.col("rev_c") / 100.0, 2).alias("revenue"),
-        F.round(F.col("center") / 100.0, 2).alias("center"),
-        F.round(lo / 100.0, 2).alias("lcl"),
-        F.round(hi / 100.0, 2).alias("ucl"),
-        ((F.col("rev_c") < lo) | (F.col("rev_c") > hi))
-        .cast("bigint")
-        .alias("out_of_control"),
-    )
-    return persist_until_collected(daily, out)

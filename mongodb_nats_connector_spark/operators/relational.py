@@ -15,10 +15,11 @@ returns HUGEINT so oracles cast to BIGINT to match Spark's long.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mongodb_nats_connector_spark.plans.caching import persist_until_collected
 from mongodb_nats_connector_spark.plans.hints import maybe_broadcast
 from mongodb_nats_connector_spark.plans.ranking import (
     ntile_from_rank,
@@ -26,6 +27,7 @@ from mongodb_nats_connector_spark.plans.ranking import (
 )
 from mongodb_nats_connector_spark.registry import register
 from mongodb_nats_connector_spark.sources.tables import table
+
 
 # ---------------------------------------------------------------------------
 # Aggregation: hash agg with group-by, partial aggregation map-side.
@@ -3007,4 +3009,904 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for a, b in _corr_pairs()
         ]
+    )
+
+
+@register(
+    "customer_ltv_deciles",
+    oracle="""
+    WITH ltv AS (
+      SELECT o_custkey,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               AS ltv_c
+      FROM orders
+      GROUP BY 1
+    ),
+    ranked AS (
+      SELECT o_custkey, ltv_c,
+             ntile(10) OVER (ORDER BY ltv_c DESC, o_custkey) AS decile
+      FROM ltv
+    )
+    SELECT decile,
+           CAST(count(*) AS BIGINT) AS n_customers,
+           round(sum(ltv_c) / 100.0, 2) AS total_value,
+           round(min(ltv_c) / 100.0, 2) AS min_value,
+           round(max(ltv_c) / 100.0, 2) AS max_value
+    FROM ranked
+    GROUP BY decile
+    """,
+    doc="Customer lifetime-value decile distribution: per-customer revenue "
+    "rollup in EXACT INTEGER CENTS (so both the decile RANK and the decile "
+    "sums are summation-order-independent — a double sum's last ulp could "
+    "flip a tie-broken ntile boundary), then per-decile summary. The "
+    "per-customer relation is data-proportional, so ntile's global "
+    "single-partition sort is replaced by the two-pass range-partitioned "
+    "rank (plans/ranking.py): quantile-boundary broadcast -> per-bucket "
+    "row_number + bucket-offset prefix sum -> exact ntile arithmetic from "
+    "(rank, n). Identical output to ntile(10) by construction — the "
+    "oracle keeps the ntile formulation — with every data-proportional "
+    "window partitioned by bucket.",
+)
+def customer_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = table(spark, sf_dir, "orders")
+    ltv = orders.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("ltv_c")
+    )
+    # persisted NOW: the two-pass boundary sketch and the collected bucket
+    # offsets both run jobs at construction and would otherwise recompute
+    # the fact rollup; released on result GC
+    ltv = ltv.persist()
+    ranked = two_pass_global_rank(
+        ltv, "ltv_c", "o_custkey", descending=True, collected_offsets=True
+    )
+    decile = ntile_from_rank(F.col("_rank"), F.col("_n"), 10)
+    from mongodb_nats_connector_spark.plans.caching import release_on_gc
+
+    return release_on_gc(
+        ltv,
+        ranked.withColumn("decile", decile)
+        .groupBy("decile")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_customers"),
+            F.round(F.sum("ltv_c") / 100.0, 2).alias("total_value"),
+            F.round(F.min("ltv_c") / 100.0, 2).alias("min_value"),
+            F.round(F.max("ltv_c") / 100.0, 2).alias("max_value"),
+        ),
+    )
+
+
+@register(
+    "customer_order_gaps",
+    oracle="""
+    WITH gaps AS (
+      SELECT o_custkey,
+             date_diff('day',
+                       lag(o_orderdate) OVER (PARTITION BY o_custkey
+                                              ORDER BY o_orderdate, o_orderkey),
+                       o_orderdate) AS gap_days
+      FROM orders
+    )
+    SELECT o_custkey,
+           CAST(count(gap_days) AS BIGINT) AS n_gaps,
+           avg(gap_days) AS avg_gap_days,
+           CAST(max(gap_days) AS BIGINT) AS max_gap_days
+    FROM gaps
+    WHERE gap_days IS NOT NULL
+    GROUP BY o_custkey
+    HAVING count(gap_days) >= 2
+    """,
+    doc="Inter-order gap statistics per customer: lag over (orderdate, "
+    "orderkey) within customer, day deltas, then avg/max per customer with "
+    "at least two gaps. Window and final agg share the o_custkey "
+    "partitioning — one shuffle total.",
+)
+def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = table(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    gap = F.datediff(
+        F.col("o_orderdate").cast("date"),
+        F.lag(F.col("o_orderdate")).over(w).cast("date"),
+    )
+    return (
+        orders.withColumn("gap_days", gap)
+        .filter(F.col("gap_days").isNotNull())
+        .groupBy("o_custkey")
+        .agg(
+            F.count("gap_days").cast("bigint").alias("n_gaps"),
+            F.avg("gap_days").alias("avg_gap_days"),
+            F.max("gap_days").cast("bigint").alias("max_gap_days"),
+        )
+        .filter(F.col("n_gaps") >= 2)
+    )
+
+
+@register(
+    "revenue_yoy",
+    oracle="""
+    WITH yearly AS (
+      SELECT CAST(year(l_shipdate) AS INT) AS ship_year,
+             CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
+                           AS BIGINT)) AS BIGINT) AS rev_c,
+             CAST(count(*) AS BIGINT) AS n_lineitems
+      FROM lineitem
+      GROUP BY 1
+    )
+    SELECT ship_year, round(rev_c / 100.0, 2) AS revenue, n_lineitems,
+           round(rev_c * 1.0 / lag(rev_c) OVER (ORDER BY ship_year) - 1.0, 6)
+             AS yoy_growth
+    FROM yearly
+    """,
+    doc="Year-over-year revenue: yearly rollup of discounted lineitem "
+    "revenue in EXACT INTEGER CENTS (map-side partial agg, one shuffle to "
+    "~7 rows; order-independent, so the growth ratio is engine-exact at "
+    "any partitioning), then lag-based growth over the year series.",
+)
+def revenue_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem")
+    yearly = li.groupBy(
+        F.year("l_shipdate").cast("int").alias("ship_year")
+    ).agg(
+        F.sum(
+            F.round(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
+            ).cast("bigint")
+        )
+        .cast("bigint")
+        .alias("rev_c"),
+        F.count(F.lit(1)).cast("bigint").alias("n_lineitems"),
+    )
+    w = Window.orderBy("ship_year")
+    return yearly.select(
+        "ship_year",
+        F.round(F.col("rev_c") / 100.0, 2).alias("revenue"),
+        "n_lineitems",
+        F.round(
+            F.col("rev_c") * 1.0 / F.lag("rev_c").over(w) - 1.0, 6
+        ).alias("yoy_growth"),
+    )
+
+
+BAND_LO, BAND_WIDTH, N_BANDS = 900.0, 10.0, 10
+
+
+@register(
+    "join_range_bucketed",
+    oracle=f"""
+    WITH bands AS (
+      SELECT CAST(i AS INT) AS band_id,
+             {BAND_LO} + i * {BAND_WIDTH} AS lo,
+             {BAND_LO} + (i + 1) * {BAND_WIDTH} AS hi
+      FROM range({N_BANDS}) t(i)
+    )
+    SELECT band_id,
+           CAST(count(*) AS BIGINT) AS n_parts,
+           round(sum(p_retailprice), 4) AS sum_price,
+           avg(p_size * 1.0) AS avg_size
+    FROM part JOIN bands
+      ON p_retailprice >= lo AND p_retailprice < hi
+    GROUP BY band_id
+    """,
+    doc="Range join equi-ized by bucketing: band_id = floor((price - lo) / "
+    "width) replaces the BETWEEN predicate, turning a nested-loop range "
+    "join into a map-only computed key + hash aggregation. The oracle runs "
+    "the textbook non-equi join against the generated band table to prove "
+    "the bucketing exact (half-open bands, width-aligned).",
+)
+def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    part = table(spark, sf_dir, "part")
+    band = F.floor((F.col("p_retailprice") - BAND_LO) / BAND_WIDTH).cast("int")
+    return (
+        part.withColumn("band_id", band)
+        .filter((F.col("band_id") >= 0) & (F.col("band_id") < N_BANDS))
+        .groupBy("band_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_parts"),
+            F.round(F.sum("p_retailprice"), 4).alias("sum_price"),
+            F.avg(F.col("p_size") * 1.0).alias("avg_size"),
+        )
+    )
+
+
+N_PROMOS, PROMO_STRIDE_DAYS, PROMO_LEN_DAYS = 6, 5, 3
+PROMO_START = "2024-01-01"
+
+
+@register(
+    "join_point_in_interval",
+    oracle=f"""
+    WITH promos AS (
+      SELECT CAST(i AS INT) AS promo_id,
+             TIMESTAMP '{PROMO_START}' + INTERVAL (i * {PROMO_STRIDE_DAYS}) DAY
+               AS start_ts,
+             TIMESTAMP '{PROMO_START}'
+               + INTERVAL (i * {PROMO_STRIDE_DAYS} + {PROMO_LEN_DAYS}) DAY AS end_ts
+      FROM range({N_PROMOS}) t(i)
+    )
+    SELECT promo_id,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           round(sum(value), 4) AS sum_value
+    FROM events JOIN promos
+      ON ts >= start_ts AND ts < end_ts
+    GROUP BY promo_id
+    """,
+    doc="Point-in-interval join equi-ized by day bucketing: each promo "
+    "window explodes into its covered calendar days (intervals are "
+    "dimension-sized, so the explode is tiny and broadcast), and events "
+    "join on the exact day key with a residual ts filter. The fact side "
+    "never evaluates a range predicate in a nested loop. Oracle is the "
+    "plain BETWEEN join.",
+)
+def join_point_in_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    promos = spark.range(N_PROMOS).select(
+        F.col("id").cast("int").alias("promo_id"),
+        F.timestamp_seconds(
+            F.unix_timestamp(F.lit(PROMO_START).cast("timestamp"))
+            + F.col("id") * (PROMO_STRIDE_DAYS * 86400)
+        ).alias("start_ts"),
+        F.timestamp_seconds(
+            F.unix_timestamp(F.lit(PROMO_START).cast("timestamp"))
+            + (F.col("id") * PROMO_STRIDE_DAYS + PROMO_LEN_DAYS) * 86400
+        ).alias("end_ts"),
+    )
+    promo_days = promos.select(
+        "promo_id",
+        "start_ts",
+        "end_ts",
+        F.explode(
+            F.sequence(
+                F.col("start_ts").cast("date"),
+                F.date_sub(F.col("end_ts").cast("date"), 0),
+            )
+        ).alias("day"),
+    )
+    return (
+        ev.withColumn("day", F.col("ts").cast("date"))
+        .join(F.broadcast(promo_days), "day")
+        .filter((F.col("ts") >= F.col("start_ts")) & (F.col("ts") < F.col("end_ts")))
+        .groupBy("promo_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.countDistinct("user_id").cast("bigint").alias("n_users"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
+        )
+    )
+
+
+BLOOM_M, PROBE_N = 4096, 3000
+
+
+def _pos_sql(salt: str, key: str) -> str:
+    return (
+        f"CAST(CAST('0x' || substr(md5('{salt}' || CAST({key} AS VARCHAR)), 1, 15)"
+        f" AS BIGINT) % {BLOOM_M} AS BIGINT)"
+    )
+
+
+def _pos_col(salt: str, key: Column) -> Column:
+    h = F.conv(
+        F.substring(F.md5(F.encode(F.concat(F.lit(salt), key.cast("string")), "utf-8")), 1, 15),
+        16,
+        10,
+    ).cast("bigint")
+    return (h % BLOOM_M).cast("bigint")
+
+
+@register(
+    "join_bloom_semi",
+    oracle=f"""
+    WITH bits AS (
+      SELECT DISTINCT {_pos_sql('b1:', 'o_custkey')} AS pos FROM orders
+      UNION
+      SELECT DISTINCT {_pos_sql('b2:', 'o_custkey')} AS pos FROM orders
+    ),
+    probe AS (
+      SELECT CAST(i AS BIGINT) AS probe_key,
+             {_pos_sql('b1:', 'i')} AS h1,
+             {_pos_sql('b2:', 'i')} AS h2
+      FROM range({PROBE_N}) t(i)
+    ),
+    flagged AS (
+      SELECT probe_key,
+             (h1 IN (SELECT pos FROM bits)
+              AND h2 IN (SELECT pos FROM bits)) AS bloom_member,
+             probe_key IN (SELECT DISTINCT o_custkey FROM orders) AS actual_member
+      FROM probe
+    )
+    SELECT bloom_member, actual_member,
+           CAST(count(*) AS BIGINT) AS n_keys
+    FROM flagged
+    GROUP BY 1, 2
+    """,
+    doc="Bloom-filter semi-join sketch with measured confusion matrix: a "
+    f"2-hash, {BLOOM_M}-bit filter is built from the orders build side "
+    "(md5-derived positions — portable arithmetic, no engine-specific "
+    "hash), broadcast, and probed map-side over a key range twice the true "
+    "key domain. Output counts true/false positives/negatives — false "
+    "negatives must be zero by construction, and the FP rate is what a "
+    "runtime bloom pushdown would save before a shuffle. The filter "
+    "(distinct positions) is dimension-sized regardless of fact row count.",
+)
+def join_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = table(spark, sf_dir, "orders")
+    keys = orders.select("o_custkey").distinct()
+    bits = (
+        keys.select(_pos_col("b1:", F.col("o_custkey")).alias("pos"))
+        .union(keys.select(_pos_col("b2:", F.col("o_custkey")).alias("pos")))
+        .distinct()
+    )
+    probe = spark.range(PROBE_N).select(
+        F.col("id").cast("bigint").alias("probe_key"),
+        _pos_col("b1:", F.col("id")).alias("h1"),
+        _pos_col("b2:", F.col("id")).alias("h2"),
+    )
+    b1 = bits.select(F.col("pos").alias("p1"))
+    b2 = bits.select(F.col("pos").alias("p2"))
+    truth = keys.select(F.col("o_custkey").alias("t_key"))
+    flagged = (
+        probe.join(maybe_broadcast(b1), F.col("h1") == F.col("p1"), "left")
+        .join(maybe_broadcast(b2), F.col("h2") == F.col("p2"), "left")
+        .join(maybe_broadcast(truth), F.col("probe_key") == F.col("t_key"), "left")
+        .select(
+            (F.col("p1").isNotNull() & F.col("p2").isNotNull()).alias("bloom_member"),
+            F.col("t_key").isNotNull().alias("actual_member"),
+        )
+    )
+    return persist_until_collected(
+        keys,
+        flagged.groupBy("bloom_member", "actual_member").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_keys")
+        ),
+    )
+
+
+@register(
+    "join_asof_nearest",
+    oracle="""
+    WITH tagged AS (
+      SELECT user_id, ts, event_id, event_type,
+             CASE WHEN event_type = 'signup' THEN ts END AS signup_ts
+      FROM events WHERE event_type IN ('signup', 'purchase')
+        AND ts IS NOT NULL
+    ), filled AS (
+      SELECT user_id, ts, event_id, event_type,
+             max(signup_ts) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS prev_signup_ts,
+             min(signup_ts) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                  ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+               AS next_signup_ts
+      FROM tagged
+    )
+    SELECT event_id, user_id, ts,
+           CASE
+             WHEN prev_signup_ts IS NULL THEN next_signup_ts
+             WHEN next_signup_ts IS NULL THEN prev_signup_ts
+             WHEN epoch_us(ts) - epoch_us(prev_signup_ts)
+                  <= epoch_us(next_signup_ts) - epoch_us(ts)
+               THEN prev_signup_ts
+             ELSE next_signup_ts
+           END AS nearest_signup_ts,
+           CAST(CASE WHEN prev_signup_ts IS NULL AND next_signup_ts IS NULL
+                     THEN NULL
+                     ELSE least(coalesce(epoch_us(ts) - epoch_us(prev_signup_ts),
+                                         9223372036854775807),
+                                coalesce(epoch_us(next_signup_ts) - epoch_us(ts),
+                                         9223372036854775807))
+                END AS BIGINT) AS gap_micros
+    FROM filled WHERE event_type = 'purchase'
+    """,
+    doc="Nearest-direction as-of join (kdb nearest-aj): each purchase "
+    "matches its closest signup in EITHER time direction (tie -> the "
+    "earlier one). Same union+window trick as join_asof — both the "
+    "backward running-max and the forward running-min ride ONE shuffle "
+    "and ONE sort on (user_id, ts): no second window sort (Spark reuses "
+    "the ordering for the mirrored frame), no range self-join, linear at "
+    "any scale. Purchases whose user never signed up get NULL "
+    "nearest_signup_ts AND NULL gap_micros (not a Long.MAX sentinel), so "
+    "downstream latency aggregates skip them.",
+)
+def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # NULL-ts guard on both engines: an unordered-able row would land at
+    # opposite partition ends (Spark NULLS FIRST asc, DuckDB NULLS LAST).
+    ev = table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("signup", "purchase")
+        & F.col("ts").isNotNull()
+    )
+    tagged = ev.select(
+        "user_id",
+        "ts",
+        "event_id",
+        "event_type",
+        F.when(F.col("event_type") == "signup", F.col("ts")).alias("signup_ts"),
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    filled = tagged.select(
+        "user_id",
+        "ts",
+        "event_id",
+        "event_type",
+        F.max("signup_ts")
+        .over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("prev_signup_ts"),
+        F.min("signup_ts")
+        .over(w.rowsBetween(0, Window.unboundedFollowing))
+        .alias("next_signup_ts"),
+    )
+    prev_gap = F.unix_micros("ts") - F.unix_micros("prev_signup_ts")
+    next_gap = F.unix_micros("next_signup_ts") - F.unix_micros("ts")
+    big = F.lit(9223372036854775807)
+    nearest = (
+        F.when(F.col("prev_signup_ts").isNull(), F.col("next_signup_ts"))
+        .when(F.col("next_signup_ts").isNull(), F.col("prev_signup_ts"))
+        .when(prev_gap <= next_gap, F.col("prev_signup_ts"))
+        .otherwise(F.col("next_signup_ts"))
+    )
+    return filled.filter(F.col("event_type") == "purchase").select(
+        "event_id",
+        "user_id",
+        "ts",
+        nearest.alias("nearest_signup_ts"),
+        F.when(
+            F.col("prev_signup_ts").isNotNull()
+            | F.col("next_signup_ts").isNotNull(),
+            F.least(F.coalesce(prev_gap, big), F.coalesce(next_gap, big)),
+        ).cast("bigint").alias("gap_micros"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# join_interval_overlap — interval-overlap join via day tiles
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "join_interval_overlap",
+    oracle="""
+    WITH sess AS (
+      SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+             min(ts) AS s_start, max(ts) AS s_end
+      FROM events GROUP BY 1, 2
+    ), promos AS (
+      SELECT day,
+             CASE slot WHEN 0 THEN 'am' ELSE 'pm' END AS promo,
+             day + CASE slot WHEN 0 THEN INTERVAL 9 HOUR
+                             ELSE INTERVAL 14 HOUR END AS p_start,
+             day + CASE slot WHEN 0 THEN INTERVAL 12 HOUR
+                             ELSE INTERVAL 18 HOUR END AS p_end
+      FROM (SELECT DISTINCT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day
+            FROM events),
+           unnest([0, 1]) AS t(slot)
+    )
+    SELECT s.user_id, s.day, p.promo,
+           CAST(epoch_us(least(s.s_end, p.p_end))
+                - epoch_us(greatest(s.s_start, p.p_start)) AS BIGINT)
+             AS overlap_micros
+    FROM sess s JOIN promos p ON s.day = p.day
+    WHERE s.s_start < p.p_end AND p.p_start < s.s_end
+    """,
+    doc="Interval-overlap join (the ad-exposure / maintenance-window "
+    "attribution shape): per-user daily activity intervals joined to "
+    "promo windows on the shared DAY TILE (equi key), with the actual "
+    "overlap predicate and exact microsecond overlap length as a "
+    "post-filter — so Catalyst plans a hash join on the tile, never a "
+    "cartesian range join. Intervals here are day-contained by "
+    "construction; multi-day intervals generalize by exploding each into "
+    "its covering tiles (the standard tiling decomposition), keeping the "
+    "join equi-keyed at any scale.",
+)
+def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    sess = ev.groupBy(
+        "user_id", F.date_trunc("day", "ts").alias("day")
+    ).agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
+    days = ev.select(F.date_trunc("day", "ts").alias("day")).distinct()
+    slots = days.select(
+        "day", F.explode(F.array(F.lit(0), F.lit(1))).alias("slot")
+    )
+    promos = slots.select(
+        "day",
+        F.when(F.col("slot") == 0, "am").otherwise("pm").alias("promo"),
+        F.when(
+            F.col("slot") == 0, F.col("day") + F.expr("INTERVAL 9 HOURS")
+        ).otherwise(F.col("day") + F.expr("INTERVAL 14 HOURS")).alias("p_start"),
+        F.when(
+            F.col("slot") == 0, F.col("day") + F.expr("INTERVAL 12 HOURS")
+        ).otherwise(F.col("day") + F.expr("INTERVAL 18 HOURS")).alias("p_end"),
+    )
+    joined = sess.join(maybe_broadcast(promos), "day").filter(
+        (F.col("s_start") < F.col("p_end")) & (F.col("p_start") < F.col("s_end"))
+    )
+    return joined.select(
+        "user_id",
+        "day",
+        "promo",
+        (
+            F.unix_micros(F.least("s_end", "p_end"))
+            - F.unix_micros(F.greatest("s_start", "p_start"))
+        ).cast("bigint").alias("overlap_micros"),
+    )
+
+
+@register(
+    "q2_min_cost_supplier",
+    oracle="""
+    WITH eu AS (
+      SELECT s_suppkey, s_name, n_name
+      FROM supplier
+      JOIN nation ON s_nationkey = n_nationkey
+      JOIN region ON n_regionkey = r_regionkey
+      WHERE r_name = 'EUROPE'
+    ),
+    per_supp AS (
+      SELECT l_partkey AS p_partkey, s_name, n_name,
+             min(l_extendedprice / l_quantity) AS unit_cost
+      FROM lineitem
+      JOIN eu   ON l_suppkey = s_suppkey
+      JOIN part ON l_partkey = p_partkey
+      WHERE p_type = 'STANDARD' AND p_size <= 15
+      GROUP BY 1, 2, 3
+    )
+    SELECT p_partkey, s_name, n_name, unit_cost AS min_unit_cost
+    FROM (SELECT *, min(unit_cost) OVER (PARTITION BY p_partkey) AS best
+          FROM per_supp)
+    WHERE unit_cost = best
+    """,
+    doc="TPC-H Q2 adaptation (no partsupp: supply cost stands in as the "
+    "observed min unit price l_extendedprice/l_quantity per part+supplier). "
+    "Groupwise-min achiever: agg to (part, supplier), window-min per part, "
+    "keep the achieving suppliers (ties kept — deterministic).",
+)
+def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem")
+    part = table(spark, sf_dir, "part").filter(
+        (F.col("p_type") == "STANDARD") & (F.col("p_size") <= 15)
+    )
+    eu = (
+        table(spark, sf_dir, "supplier")
+        .join(F.broadcast(table(spark, sf_dir, "nation")),
+              F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(table(spark, sf_dir, "region")),
+              F.col("n_regionkey") == F.col("r_regionkey"))
+        .filter(F.col("r_name") == "EUROPE")
+        .select("s_suppkey", "s_name", "n_name")
+    )
+    per_supp = (
+        li.join(maybe_broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(maybe_broadcast(eu), F.col("l_suppkey") == F.col("s_suppkey"))
+        .groupBy("p_partkey", "s_name", "n_name")
+        .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost"))
+    )
+    best = F.min("unit_cost").over(Window.partitionBy("p_partkey"))
+    return (
+        per_supp.withColumn("best", best)
+        .filter(F.col("unit_cost") == F.col("best"))
+        .select("p_partkey", "s_name", "n_name",
+                F.col("unit_cost").alias("min_unit_cost"))
+    )
+
+
+@register(
+    "q11_important_parts",
+    oracle="""
+    WITH nat_value AS (
+      SELECT l_partkey AS p_partkey,
+             sum(l_extendedprice * l_quantity) AS part_value
+      FROM lineitem
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN nation   ON s_nationkey = n_nationkey
+      WHERE n_name = 'NATION_7'
+      GROUP BY 1
+    )
+    SELECT p_partkey, part_value
+    FROM nat_value
+    WHERE part_value > (SELECT 2.0 * avg(part_value) FROM nat_value)
+    """,
+    doc="TPC-H Q11 adaptation (no partsupp: per-part 'stock value' is the "
+    "shipped value sum(extendedprice*quantity) via NATION_7's suppliers). "
+    "Importance threshold is MEAN-RELATIVE (> 2x the average part value) "
+    "rather than TPC-H's fixed share-of-total: the spec scales its "
+    "fraction by 1/SF precisely because a fixed share degenerates to an "
+    "empty answer as the part population grows — the mean-relative form "
+    "is the scale-free equivalent (verified non-degenerate at sf0.01 and "
+    "sf0.1). Scalar subquery over the same aggregate, broadcast back as "
+    "a 1-row literal join.",
+)
+def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem")
+    supp = (
+        table(spark, sf_dir, "supplier")
+        .join(F.broadcast(table(spark, sf_dir, "nation")),
+              F.col("s_nationkey") == F.col("n_nationkey"))
+        .filter(F.col("n_name") == "NATION_7")
+        .select("s_suppkey")
+    )
+    nat_value = (
+        li.join(maybe_broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .groupBy(F.col("l_partkey").alias("p_partkey"))
+        .agg(F.sum(F.col("l_extendedprice") * F.col("l_quantity")).alias("part_value"))
+    )
+    threshold = nat_value.agg(
+        (F.lit(2.0) * F.avg("part_value")).alias("threshold")
+    )
+    # 1-row threshold broadcast: a BroadcastNestedLoopJoin over a scalar,
+    # not a cartesian blow-up (same pattern as curate_dataset_mix).
+    return (
+        nat_value.join(F.broadcast(threshold))
+        .filter(F.col("part_value") > F.col("threshold"))
+        .select("p_partkey", "part_value")
+    )
+
+
+@register(
+    "q12_priority_shipclass",
+    oracle="""
+    SELECT l_returnflag AS ship_class,
+           CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+           CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
+      AND l_shipdate >= TIMESTAMP '1997-01-01'
+      AND l_shipdate <  TIMESTAMP '1998-01-01'
+    GROUP BY l_returnflag
+    """,
+    doc="TPC-H Q12 adaptation (no l_shipmode/commitdate: l_returnflag stands "
+    "in as the ship class; 'late' = shipped >60 days after order date). "
+    "Fact-fact equi-join on orderkey with conditional priority counts; the "
+    "shipdate year filter is pushed to the lineitem scan.",
+)
+def q12_priority_shipclass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
+    )
+    orders = table(spark, sf_dir, "orders")
+    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    return (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .filter(F.col("l_shipdate") > F.expr("o_orderdate + INTERVAL 60 DAYS"))
+        .groupBy(F.col("l_returnflag").alias("ship_class"))
+        .agg(
+            F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
+            F.sum(F.when(~high, 1).otherwise(0)).cast("bigint").alias("low_line_count"),
+        )
+    )
+
+
+@register(
+    "q16_supplier_variety",
+    oracle="""
+    SELECT p_brand, p_type, p_size,
+           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
+    FROM lineitem
+    JOIN part ON l_partkey = p_partkey
+    WHERE p_brand <> 'Brand#2'
+      AND p_type <> 'PROMO'
+      AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
+      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+    GROUP BY 1, 2, 3
+    """,
+    doc="TPC-H Q16 adaptation (no partsupp: lineitem is the part-supplier "
+    "relation; negative-balance suppliers stand in for the complaints NOT "
+    "IN). Broadcast dim filter + broadcast anti-join + count-distinct.",
+)
+def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem")
+    part = table(spark, sf_dir, "part").filter(
+        (F.col("p_brand") != "Brand#2")
+        & (F.col("p_type") != "PROMO")
+        & F.col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45)
+    )
+    bad_supp = table(spark, sf_dir, "supplier").filter(
+        F.col("s_acctbal") < 0
+    ).select("s_suppkey")
+    return (
+        li.join(maybe_broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(maybe_broadcast(bad_supp), F.col("l_suppkey") == F.col("s_suppkey"),
+              "left_anti")
+        .groupBy("p_brand", "p_type", "p_size")
+        .agg(F.countDistinct("l_suppkey").cast("bigint").alias("supplier_cnt"))
+    )
+
+
+@register(
+    "q20_heavy_shippers",
+    oracle="""
+    WITH pair AS (
+      SELECT l_partkey, l_suppkey, sum(l_quantity) AS qty
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        AND l_shipdate <  TIMESTAMP '1997-01-01'
+      GROUP BY 1, 2
+    )
+    SELECT s_name, n_name
+    FROM supplier
+    JOIN nation ON s_nationkey = n_nationkey
+    WHERE n_name IN ('NATION_3', 'NATION_13')
+      AND s_suppkey IN (
+        SELECT l_suppkey FROM pair
+        WHERE qty > (SELECT 2.0 * avg(qty) FROM pair)
+          AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
+      )
+    """,
+    doc="TPC-H Q20 adaptation (no partsupp availqty: a supplier is 'heavy' "
+    "on a part if its 1996 shipped quantity exceeds 2x the global pair "
+    "average). Semi-join chain: part-name filter -> pair agg vs scalar "
+    "threshold -> semi join suppliers of two nations.",
+)
+def q20_heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
+    )
+    pair = li.groupBy("l_partkey", "l_suppkey").agg(F.sum("l_quantity").alias("qty"))
+    threshold = pair.agg((F.lit(2.0) * F.avg("qty")).alias("t"))
+    small_parts = table(spark, sf_dir, "part").filter(
+        F.col("p_name").like("small%")
+    ).select("p_partkey")
+    heavy = (
+        pair.join(F.broadcast(threshold))
+        .filter(F.col("qty") > F.col("t"))
+        .join(maybe_broadcast(small_parts), F.col("l_partkey") == F.col("p_partkey"),
+              "left_semi")
+        .select("l_suppkey")
+    )
+    supp = (
+        table(spark, sf_dir, "supplier")
+        .join(F.broadcast(table(spark, sf_dir, "nation")),
+              F.col("s_nationkey") == F.col("n_nationkey"))
+        .filter(F.col("n_name").isin("NATION_3", "NATION_13"))
+    )
+    return persist_until_collected(
+        pair,
+        supp.join(
+            maybe_broadcast(heavy),
+            F.col("s_suppkey") == F.col("l_suppkey"),
+            "left_semi",
+        ).select("s_name", "n_name"),
+    )
+
+
+@register(
+    "q21_waiting_suppliers",
+    oracle="""
+    SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
+    FROM lineitem l1
+    JOIN orders   ON l1.l_orderkey = o_orderkey
+    JOIN supplier ON l1.l_suppkey = s_suppkey
+    WHERE o_orderstatus = 'F'
+      AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
+      AND EXISTS (SELECT 1 FROM lineitem l2
+                  WHERE l2.l_orderkey = l1.l_orderkey
+                    AND l2.l_suppkey <> l1.l_suppkey)
+      AND NOT EXISTS (SELECT 1 FROM lineitem l3
+                      WHERE l3.l_orderkey = l1.l_orderkey
+                        AND l3.l_suppkey <> l1.l_suppkey
+                        AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
+    GROUP BY s_name
+    ORDER BY numwait DESC, s_name
+    LIMIT 20
+    """,
+    doc="TPC-H Q21 adaptation ('late' = shipped >90 days after order date, "
+    "orders with final status). The double EXISTS/NOT-EXISTS self-"
+    "correlation is reformulated Spark-first as ONE per-order aggregation "
+    "(distinct suppliers + distinct late suppliers), then a filter for "
+    "orders with >=2 suppliers where exactly one supplier — this one — was "
+    "late. One orderkey shuffle instead of two self-joins; the oracle keeps "
+    "the textbook EXISTS form to prove the reformulation equivalent.",
+)
+def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders_f = table(spark, sf_dir, "orders").filter(
+        F.col("o_orderstatus") == "F"
+    ).select("o_orderkey", "o_orderdate")
+    li = (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_suppkey", "l_shipdate")
+        .join(orders_f, F.col("l_orderkey") == F.col("o_orderkey"))
+        .withColumn("late", F.col("l_shipdate") > F.expr("o_orderdate + INTERVAL 90 DAYS"))
+    )
+    per_order = li.groupBy("l_orderkey").agg(
+        F.countDistinct("l_suppkey").alias("n_supp"),
+        F.countDistinct(F.when(F.col("late"), F.col("l_suppkey"))).alias("n_late_supp"),
+    )
+    # Both sides of this join are already hash-partitioned on l_orderkey by
+    # the upstream join/agg — AQE plans it without an extra exchange.
+    cand = (
+        li.filter(F.col("late"))
+        .join(per_order.filter((F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1)),
+              "l_orderkey")
+    )
+    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    return persist_until_collected(li, (
+        cand.join(maybe_broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .groupBy("s_name")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("numwait"))
+        .orderBy(F.col("numwait").desc(), "s_name")
+        .limit(20)
+    ))
+
+
+# ---------------------------------------------------------------------------
+# customer_churn_rates — per-nation churn against a recency horizon
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "customer_churn_rates",
+    oracle="""
+    WITH last AS (
+      SELECT o_custkey, max(o_orderdate) AS last_order
+      FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1
+    ),
+    hz AS (SELECT max(o_orderdate) AS horizon FROM orders),
+    j AS (
+      SELECT c.c_nationkey,
+             CAST(date_diff('day', CAST(l.last_order AS DATE),
+                            CAST(h.horizon AS DATE)) AS BIGINT) AS recency
+      FROM last l
+      JOIN customer c ON c.c_custkey = l.o_custkey
+      CROSS JOIN hz h
+    )
+    SELECT c_nationkey,
+           CAST(count(*) AS BIGINT) AS n_active_customers,
+           CAST(sum(CASE WHEN recency > 180 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_churned,
+           CAST(1000000000 * sum(CASE WHEN recency > 180 THEN 1 ELSE 0 END)
+                // count(*) AS BIGINT) AS churn_ppb,
+           CAST(sum(recency) // count(*) AS BIGINT) AS avg_recency_days
+    FROM j
+    GROUP BY c_nationkey
+    ORDER BY c_nationkey
+    """,
+    doc="Churn rate per nation: customers whose LAST order predates the "
+    "data horizon by more than 180 days, over customers who ever "
+    "ordered — the recency cut of customer_rfm_segments promoted to a "
+    "cohort health metric, with average recency alongside (a nation "
+    "can have low churn but drifting recency — the leading "
+    "indicator). The horizon is the data's own max date (1-row "
+    "broadcast scalar), so the metric is reproducible on any "
+    "snapshot; rates are non-negative ppb floor-divisions. One "
+    "per-customer rollup (keyed), one broadcast dim join, one "
+    "25-group aggregate.",
+)
+def customer_churn_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    last = o.groupBy("o_custkey").agg(
+        F.max("o_orderdate").alias("last_order")
+    )
+    hz = o.agg(F.max("o_orderdate").alias("horizon"))
+    j = (
+        last.join(c, last.o_custkey == c.c_custkey)
+        .crossJoin(F.broadcast(hz))
+        .select(
+            "c_nationkey",
+            F.datediff(
+                F.col("horizon").cast("date"),
+                F.col("last_order").cast("date"),
+            )
+            .cast("bigint")
+            .alias("recency"),
+        )
+    )
+    return (
+        j.groupBy("c_nationkey")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_active_customers"),
+            F.sum(F.when(F.col("recency") > 180, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_churned"),
+            F.expr(
+                "CAST(1000000000 * sum(CASE WHEN recency > 180 THEN 1"
+                " ELSE 0 END) div count(*) AS BIGINT)"
+            ).alias("churn_ppb"),
+            F.expr(
+                "CAST(sum(recency) div count(*) AS BIGINT)"
+            ).alias("avg_recency_days"),
+        )
+        .orderBy("c_nationkey")
     )

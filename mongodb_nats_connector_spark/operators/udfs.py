@@ -17,7 +17,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType
+from pyspark.sql.types import DoubleType, IntegerType, StructType
 
 from mongodb_nats_connector_spark.registry import register
 from mongodb_nats_connector_spark.sources.tables import table
@@ -168,3 +168,105 @@ def udtf_expand_props(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM _udtf_props_in, LATERAL expand_props(props) AS p"
     )
     return out
+
+
+EMB_STUB_DIM = 8
+
+
+@register(
+    "inference_embed_stub",
+    oracle=f"""
+    WITH pos AS (
+      SELECT doc_id, text, unnest(range(1, length(text) + 1)) AS p
+      FROM documents
+    )
+    SELECT doc_id, CAST((p - 1) % {EMB_STUB_DIM} AS BIGINT) AS j,
+           CAST(sum(unicode(substr(text, p, 1))) AS BIGINT) AS v
+    FROM pos GROUP BY 1, 2
+    """,
+    doc=f"Batched pseudo-inference plumbing: an Arrow-batched mapInPandas "
+    "'model' embeds each document as strided code-point sums "
+    f"(dim j = sum of every {EMB_STUB_DIM}th code point) — a deterministic "
+    "stand-in with the exact shape of a quality-classifier / embedding "
+    "forward pass (batch in via Arrow, vectorized numpy per doc, long-form "
+    "(doc_id, dim, value) out). Swap the stride sums for model.forward and "
+    "the Spark-side plumbing — batching, schema, partition parallelism — "
+    "is unchanged. Map-only: zero shuffles before the caller's sink.",
+)
+def inference_embed_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+
+    docs = table(spark, sf_dir, "documents", parallel=True).select("doc_id", "text")
+
+    def embed(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out_doc, out_j, out_v = [], [], []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
+                n = min(EMB_STUB_DIM, len(codes))
+                for j in range(n):
+                    out_doc.append(doc_id)
+                    out_j.append(j)
+                    out_v.append(int(codes[j::EMB_STUB_DIM].sum()))
+            yield pd.DataFrame({"doc_id": out_doc, "j": out_j, "v": out_v})
+
+    schema = StructType.fromDDL("doc_id bigint, j bigint, v bigint")
+    return docs.mapInPandas(embed, schema)
+
+
+# ---------------------------------------------------------------------------
+# udf_map_in_arrow — the Arrow-RecordBatch UDF API (zero-pandas path)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "udf_map_in_arrow",
+    oracle="""
+    SELECT doc_id,
+           CAST(length(text) AS BIGINT) AS n_chars,
+           CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT)
+             AS n_words
+    FROM documents
+    """,
+    doc="``DataFrame.mapInArrow`` — the remaining entry of the Python UDF "
+    "surface (scalar / pandas / grouped / mapInPandas / UDTF are covered "
+    "by the udf_* family): batches arrive as ``pyarrow.RecordBatch`` and "
+    "the transform runs entirely in Arrow compute kernels, skipping the "
+    "Arrow->pandas conversion mapInPandas pays (no index materialization, "
+    "no object boxing for strings — the fastest Python boundary Spark "
+    "offers). Same map-only plan shape as mapInPandas: scan -> Arrow eval, "
+    "no shuffle, pushdown intact; batch size is governed by "
+    "spark.sql.execution.arrow.maxRecordsPerBatch exactly as the other "
+    "Arrow UDFs.",
+)
+def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from collections.abc import Iterator
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def stats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            text = batch.column("text")
+            n_chars = pc.utf8_length(text)
+            # words = chars - spaces + 1, all in Arrow kernels
+            spaces = pc.subtract(
+                n_chars,
+                pc.utf8_length(pc.replace_substring(text, " ", "")),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id"),
+                    pc.cast(n_chars, pa.int64()),
+                    pc.cast(pc.add(spaces, 1), pa.int64()),
+                ],
+                ["doc_id", "n_chars", "n_words"],
+            )
+
+    docs = table(spark, sf_dir, "documents", parallel=True).select(
+        "doc_id", "text"
+    )
+    return docs.mapInArrow(stats, "doc_id BIGINT, n_chars BIGINT, n_words BIGINT")

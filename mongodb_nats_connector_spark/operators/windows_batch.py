@@ -9,9 +9,10 @@ behave identically in batch and streaming — only triggers/watermarks differ.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mongodb_nats_connector_spark.plans.hints import maybe_broadcast
 from mongodb_nats_connector_spark.registry import register
 from mongodb_nats_connector_spark.sources.tables import table
 
@@ -421,4 +422,174 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(1_000_000)
             ).cast("bigint"),
         ).alias("secs_before"),
+    )
+
+
+FUNNEL_RE = "signup.*purchase"
+
+
+@register(
+    "window_pattern_match",
+    oracle=f"""
+    WITH seqs AS (
+      SELECT user_id,
+             count(*) AS n_events,
+             string_agg(event_type, '>' ORDER BY ts, event_id) AS seq
+      FROM events GROUP BY user_id
+    )
+    SELECT user_id, CAST(n_events AS BIGINT) AS n_events,
+           CAST(CASE WHEN regexp_matches(seq, '{FUNNEL_RE}')
+                THEN 1 ELSE 0 END AS BIGINT) AS converted,
+           CAST(length(seq) - length(replace(seq, 'purchase', ''))
+                AS BIGINT) / 8 AS n_purchases
+    FROM seqs
+    """,
+    doc="MATCH_RECOGNIZE-lite sequence pattern match: per-user event-type "
+    f"sequences (ordered by ts within the key — no global sort) tested "
+    f"against the funnel regex '{FUNNEL_RE}'. One shuffle on user_id; "
+    "collect_list+sort_array keeps ordering deterministic under ties via "
+    "the (ts, event_id) sort key. The streaming analogue is "
+    "streaming/windows.py:funnel_conversions — O(1) automaton state per "
+    "key instead of a sequence buffer, equivalence-tested against this "
+    "query.",
+)
+def window_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    seqs = ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        F.array_join(
+            F.transform(
+                F.sort_array(
+                    F.collect_list(F.struct("ts", "event_id", "event_type"))
+                ),
+                lambda x: x.event_type,
+            ),
+            ">",
+        ).alias("seq"),
+    )
+    n_purch = (
+        F.length("seq") - F.length(F.regexp_replace("seq", "purchase", ""))
+    ).cast("bigint") / F.lit(8)
+    return seqs.select(
+        "user_id",
+        "n_events",
+        F.when(F.col("seq").rlike(FUNNEL_RE), 1)
+        .otherwise(0)
+        .cast("bigint")
+        .alias("converted"),
+        n_purch.alias("n_purchases"),
+    )
+
+
+@register(
+    "stream_static_enrich",
+    oracle="""
+    SELECT e.event_id, e.user_id, c.c_name, c.c_mktsegment,
+           e.event_type, round(e.value, 4) AS value
+    FROM events e JOIN customer c ON c.c_custkey = e.user_id
+    """,
+    doc="Stream-static dimension enrich, batch-checkable form: events join "
+    "the customer dimension on user_id with a size-gated broadcast hint — "
+    "the shape Structured Streaming executes per micro-batch with zero stream "
+    "shuffle (stream-static joins never repartition the stream side when "
+    "the static side broadcasts). The streaming mirror is covered by the "
+    "streaming suite's stream-vs-batch equivalence test.",
+)
+def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    c = table(spark, sf_dir, "customer")
+    return ev.join(maybe_broadcast(c), ev.user_id == c.c_custkey).select(
+        "event_id",
+        "user_id",
+        "c_name",
+        "c_mktsegment",
+        "event_type",
+        F.round("value", 4).alias("value"),
+    )
+
+
+TOPK_PER_WINDOW = 3
+
+
+@register(
+    "stream_window_topk",
+    oracle=f"""
+    WITH w AS (
+      SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
+             event_type, count(*) AS n
+      FROM events GROUP BY 1, 2
+    )
+    SELECT window_start, event_type, CAST(n AS BIGINT) AS n,
+           CAST(rn AS BIGINT) AS rn
+    FROM (
+      SELECT *, row_number() OVER (
+               PARTITION BY window_start ORDER BY n DESC, event_type) AS rn
+      FROM w
+    ) WHERE rn <= {TOPK_PER_WINDOW}
+    """,
+    doc=f"Windowed top-{TOPK_PER_WINDOW}: tumbling 1-hour windows, event "
+    "types ranked by count within each window, rank filter rewritten to "
+    "WindowGroupLimit (per-task pre-pruning). In streaming this runs as a "
+    "foreachBatch top-k over the watermarked windowed aggregate — the "
+    "aggregation state is the same tumbling-window state the streaming "
+    "suite already exercises.",
+)
+def stream_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = table(spark, sf_dir, "events")
+    counts = ev.groupBy(
+        F.window("ts", "1 hour").alias("w"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n"))
+    rank_w = Window.partitionBy("w").orderBy(F.desc("n"), "event_type")
+    return (
+        counts.withColumn("rn", F.row_number().over(rank_w).cast("bigint"))
+        .filter(F.col("rn") <= TOPK_PER_WINDOW)
+        .select(
+            F.col("w.start").alias("window_start"),
+            "event_type",
+            "n",
+            "rn",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# window_rolling_median — exact trailing-frame median per key
+# ---------------------------------------------------------------------------
+
+ROLL_FRAME = 6  # trailing 7-row frame (6 preceding + current)
+
+
+@register(
+    "window_rolling_median",
+    oracle=f"""
+    SELECT user_id, event_id,
+           round(median(value) OVER (
+             PARTITION BY user_id ORDER BY ts, event_id
+             ROWS BETWEEN {ROLL_FRAME} PRECEDING AND CURRENT ROW), 6)
+             AS rolling_median
+    FROM events
+    WHERE user_id < 25 AND ts IS NOT NULL
+    """,
+    doc="Exact rolling median (robust smoother for metric streams): per "
+    "user, the interpolated median of the trailing 7-row frame. Spark's "
+    "percentile(value, 0.5) as a frame-bounded window aggregate matches "
+    "DuckDB's median() (both interpolate the even-count midpoint). One "
+    "window shuffle on the partition key; the frame is O(1) rows so state "
+    "per row is constant — the shape survives any fact-table scale, and "
+    "the user_id pushdown predicate reaches the parquet scan.",
+)
+def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # NULL-ts guard on both engines (Spark NULLS FIRST asc vs DuckDB LAST
+    # would put such rows in different frames).
+    ev = table(spark, sf_dir, "events").filter(
+        (F.col("user_id") < 25) & F.col("ts").isNotNull()
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-ROLL_FRAME, 0)
+    )
+    med = F.expr("percentile(value, 0.5)").over(w)
+    return ev.select(
+        "user_id", "event_id", F.round(med, 6).alias("rolling_median")
     )

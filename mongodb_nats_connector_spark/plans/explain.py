@@ -40,10 +40,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan_string(df) or "BroadcastNestedLoopJoin" in plan_string(df)
 
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in plan_string(df)
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges (excludes broadcast exchanges)."""
     s = plan_string(df, "simple")

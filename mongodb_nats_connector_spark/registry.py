@@ -46,50 +46,23 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 
 
 def _load_all() -> None:
-    """Import every operator module for its registration side effects.
-
-    Import order is registration order, which is the rank tiebreak in
-    ``all_queries()`` and so fixes the order of ``queries()``. ``similarity``
-    must come before ``pipeline6``: pipeline6 imports it while registering,
-    so listing pipeline6 first would register similarity's queries in the
-    middle of pipeline6's.
-    """
+    """Import every operator module for its registration side effects."""
     from mongodb_nats_connector_spark.operators import (  # noqa: F401
-        analytics2,
-        analytics3,
         cdc,
-        corpus2,
-        embeddings2,
-        joins2,
         curation,
         dedup,
+        double_sums,
+        events,
         formats,
-        graph2,
-        mining5,
+        graph,
         multimodal,
-        similarity,
-        pipeline6,
-        pipeline6b,
-        quality5,
+        orders,
         relational,
+        similarity,
+        stats,
         text,
-        tpch2,
         udfs,
         windows_batch,
-        pipeline7,
-        pipeline8,
-        pipeline9,
-        pipeline10,
-        pipeline11,
-        pipeline12,
-        pipeline13,
-        pipeline14,
-        pipeline15,
-        pipeline16,
-        pipeline17,
-        pipeline18,
-        pipeline19,
-        pipeline20,
     )
 
 

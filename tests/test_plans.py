@@ -719,9 +719,7 @@ def test_q13_aggregates_orders_before_join(spark):
 def test_reservoir_sample_uses_window_group_limit(spark):
     """The per-key rank filter must rewrite to WindowGroupLimit so each map
     task pre-prunes to k rows per key before the shuffle."""
-    from mongodb_nats_connector_spark.operators.quality5 import (
-        sample_reservoir_perkey,
-    )
+    from mongodb_nats_connector_spark.operators.curation import sample_reservoir_perkey
     from mongodb_nats_connector_spark.plans.explain import plan_string
 
     s = plan_string(sample_reservoir_perkey(spark, SF))
@@ -729,7 +727,7 @@ def test_reservoir_sample_uses_window_group_limit(spark):
 
 
 def test_window_topk_uses_window_group_limit(spark):
-    from mongodb_nats_connector_spark.operators.mining5 import stream_window_topk
+    from mongodb_nats_connector_spark.operators.windows_batch import stream_window_topk
     from mongodb_nats_connector_spark.plans.explain import plan_string
 
     s = plan_string(stream_window_topk(spark, SF))
@@ -739,9 +737,7 @@ def test_window_topk_uses_window_group_limit(spark):
 def test_cms_sketch_broadcasts_into_estimate_join(spark):
     """The d×w counter table (≤1024 rows) must broadcast into the per-key
     estimate join — never shuffle the key relation against it."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
-        agg_heavy_hitters_cms,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_heavy_hitters_cms
     from mongodb_nats_connector_spark.plans.explain import plan_string
 
     df = agg_heavy_hitters_cms(spark, SF)
@@ -753,9 +749,7 @@ def test_cms_sketch_broadcasts_into_estimate_join(spark):
 def test_triangle_count_all_hash_joins(spark):
     """Wedge + closing joins must be hash equi-joins on part keys: no
     cartesian, no broadcast nested loop."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
-        graph_triangle_count,
-    )
+    from mongodb_nats_connector_spark.operators.graph import graph_triangle_count
     from mongodb_nats_connector_spark.plans.explain import plan_string
 
     s = plan_string(graph_triangle_count(spark, SF))
@@ -771,9 +765,7 @@ def test_interval_overlap_is_tile_hash_join(spark):
     """The interval-overlap join must equi-join on the day tile with the
     range predicate as a post-filter — a hash/broadcast join, never a
     cartesian range join."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        join_interval_overlap,
-    )
+    from mongodb_nats_connector_spark.operators.relational import join_interval_overlap
     from mongodb_nats_connector_spark.plans.explain import plan_string
 
     s = plan_string(join_interval_overlap(spark, SF))
@@ -785,9 +777,7 @@ def test_merge_upsert_single_copartitioned_join(spark):
     """MERGE executes as ONE full-outer join co-partitioned on the natural
     key — no broadcast (both sides are data-proportional), no extra
     exchanges beyond the two join-side shuffles."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        merge_upsert_snapshot,
-    )
+    from mongodb_nats_connector_spark.operators.cdc import merge_upsert_snapshot
     from mongodb_nats_connector_spark.plans.explain import plan_string
 
     s = plan_string(merge_upsert_snapshot(spark, SF))
@@ -807,9 +797,7 @@ def test_merge_upsert_single_copartitioned_join(spark):
 def test_epoch_upsample_is_map_only(spark):
     """Hash-tiered explode must not shuffle: tiering + sequence + explode
     are all map-side."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        sample_epoch_upsample,
-    )
+    from mongodb_nats_connector_spark.operators.curation import sample_epoch_upsample
 
     assert count_key_exchanges(sample_epoch_upsample(spark, SF)) == 0
 
@@ -817,7 +805,7 @@ def test_epoch_upsample_is_map_only(spark):
 def test_stream_static_enrich_broadcasts_dim(spark):
     """The dimension side must broadcast: in streaming this is the zero-
     stream-shuffle stream-static join shape."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
+    from mongodb_nats_connector_spark.operators.windows_batch import (
         stream_static_enrich,
     )
 
@@ -828,9 +816,7 @@ def test_gram_matrix_shuffles_only_cells(spark):
     """Only the d(d+1)/2 partial cells may shuffle: a single exchange keyed
     on (i, j) after the Arrow-batched partials, plus at most the input
     repartition round-robin."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
-        embedding_gram_matrix,
-    )
+    from mongodb_nats_connector_spark.operators.similarity import embedding_gram_matrix
     from mongodb_nats_connector_spark.plans.explain import plan_string
 
     df = embedding_gram_matrix(spark, SF)
@@ -857,7 +843,7 @@ def test_ols_is_single_shuffle_moment_sketch(spark):
     """Closed-form OLS must be ONE map-combined aggregation: a single
     exchange carrying the 10-number sufficient-statistic row — the shape
     that makes distributed regression O(1) reduce state."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.double_sums import (
         orders_ols_multifactor,
     )
 
@@ -869,7 +855,7 @@ def test_ols_is_single_shuffle_moment_sketch(spark):
 def test_bm25_topk_is_take_ordered(spark):
     """The BM25 ranking must end in TakeOrderedAndProject, never a full
     sort of the scored relation."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import text_bm25_topk
+    from mongodb_nats_connector_spark.operators.text import text_bm25_topk
 
     assert has_take_ordered(text_bm25_topk(spark, SF))
 
@@ -878,9 +864,7 @@ def test_bootstrap_replicate_agg_combines_map_side(spark):
     """The Poisson bootstrap's 40-key replicate aggregation must partial-
     aggregate before the exchange — the property that keeps the resample
     'shuffle' at 40 rows per partition regardless of fact volume."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        agg_bootstrap_poisson,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_bootstrap_poisson
 
     assert has_partial_aggregation(agg_bootstrap_poisson(spark, SF))
 
@@ -889,9 +873,7 @@ def test_entropy_rate_single_fact_exchange(spark):
     """Everything after the (user_id)-keyed lag window and the joint count
     is cell-sized: the plan may shuffle the facts once for the window and
     once for the (prev, nxt) count, nothing more."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_entropy_rate,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_entropy_rate
 
     # fact-sized exchanges: user_id (window) + prev/nxt (count); the
     # remaining exchanges move cell-sized relations only

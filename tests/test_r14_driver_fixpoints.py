@@ -40,9 +40,7 @@ def test_rw_visit_probs_matches_bruteforce_walk(spark):
     """The driver-side 4-step walk must equal a from-scratch integer
     replay of the per-step (p*w) // s distribution over the pandas-built
     trade graph (the formulation the oracle unrolls as chained CTEs)."""
-    from mongodb_nats_connector_spark.operators.pipeline19 import (
-        graph_rw_visit_probs,
-    )
+    from mongodb_nats_connector_spark.operators.graph import graph_rw_visit_probs
 
     tr = _trade_weights(spark)
     st: dict = {}
@@ -68,9 +66,7 @@ def test_rich_club_matches_bruteforce_profile(spark):
     """The driver-side club sweep must equal a from-scratch recomputation:
     undirected fold, the 20*w*cnt >= 23*s backbone threshold, degree
     floors, club node/edge counts and the exact ppb floor division."""
-    from mongodb_nats_connector_spark.operators.pipeline17 import (
-        graph_rich_club,
-    )
+    from mongodb_nats_connector_spark.operators.graph import graph_rich_club
 
     tr = _trade_weights(spark)
     uw: dict = {}
@@ -138,9 +134,7 @@ def test_theil_sen_driver_round_is_half_up(spark, tmp_path):
     difference yield slope_mc = round(+-0.5) = +-1, never 0."""
     import datetime
 
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        agg_theil_sen,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_theil_sen
 
     base = datetime.date(1992, 1, 1)
     for sign, prices in ((1, (100.00, 100.01)), (-1, (100.01, 100.00))):
@@ -160,9 +154,7 @@ def test_association_metrics_matches_selfjoin_bruteforce(spark):
     """The map-side sorted-array pair expansion must reproduce the former
     distinct + self-join formulation: identical top-20 pair counts,
     supports and every exact-integer metric."""
-    from mongodb_nats_connector_spark.operators.pipeline19 import (
-        orders_association_metrics,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_association_metrics
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()[
         ["l_orderkey", "l_partkey"]

@@ -30,15 +30,18 @@ def test_bpe_learn_driver_matches_distributed(spark, monkeypatch):
     """_bpe_learn's collected driver loop (exact integer pair counts, the
     same greedy fold, the same (count DESC, pair ASC) argmax) returns the
     identical merge table as the distributed per-round loop."""
-    from mongodb_nats_connector_spark.operators import mining5
+    from mongodb_nats_connector_spark.operators import text
 
-    fast = mining5._bpe_learn(spark, SF)
-    monkeypatch.setattr(
-        mining5, "counted_fits_broadcast", lambda *a, **k: False
-    )
-    dist = mining5._bpe_learn(spark, SF)
+    fast = text._bpe_learn(spark, SF)
+
+    def never_fits(*a, **k):
+        return False
+
+    monkeypatch.setattr(text, "counted_fits_broadcast", never_fits)
+    assert text._bpe_learn.__globals__["counted_fits_broadcast"] is never_fits
+    dist = text._bpe_learn(spark, SF)
     assert fast == dist
-    assert len(fast) == mining5.BPE_ROUNDS
+    assert len(fast) == text.BPE_ROUNDS
 
 
 @pytest.mark.parametrize(
@@ -57,9 +60,7 @@ def test_bpe_merge_word_matches_spark_fold(w, pair, merged, expect):
     """The pure-Python fold used by the driver learn loop implements the
     exact whole-symbol greedy semantics of the Spark/DuckDB folds
     (same cases as test_round6's cross-engine suite)."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
-        _bpe_merge_word,
-    )
+    from mongodb_nats_connector_spark.operators.text import _bpe_merge_word
 
     toks = w.split(" ")
     p1, p2 = pair.split(" ")

@@ -8,12 +8,32 @@ full hard verification with no hand-maintained lists.
 
 from __future__ import annotations
 
+import importlib
 import json
+import re
+import types
 from pathlib import Path
 
 import pytest
 
-from mongodb_nats_connector_spark import registry
+from mongodb_nats_connector_spark import operators, registry
+
+# The six queries written against ``double_sum``; every other ``_dsum``
+# caller sums with ``decimal_sum`` (operators/double_sums.py says why).
+DOUBLE_SUM_QUERIES = {
+    "orders_ols_multifactor",
+    "agg_jarque_bera",
+    "events_weibull_gaps",
+    "agg_kendall_tau",
+    "agg_roc_auc",
+    "docs_simpson_diversity",
+}
+# one-name re-exports kept for digested bodies that import them by module
+SHIMS = {
+    "pipeline8": "_valued_events_prepost",
+    "pipeline10": "_minplus_distances",
+    "pipeline14": "_le_hex",
+}
 
 
 def test_driver_verified_parses_artifacts(tmp_path):
@@ -119,3 +139,43 @@ def test_duplicate_registration_rejected():
         @registry.register("q1_pricing_summary")
         def dup(spark, sf_dir):  # pragma: no cover
             raise AssertionError
+
+
+def _code_names(code: types.CodeType) -> set[str]:
+    names = set(code.co_names)
+    for c in code.co_consts:
+        if isinstance(c, types.CodeType):
+            names |= _code_names(c)
+    return names
+
+
+def test_dsum_binding_follows_the_query():
+    """A query keeps the ``_dsum`` it was written and verified against,
+    whichever module holds it."""
+    from mongodb_nats_connector_spark.functions.exactsum import (
+        decimal_sum,
+        double_sum,
+    )
+
+    registry._load_all()
+    bound = {
+        n: q.fn.__globals__.get("_dsum")
+        for n, q in registry._REGISTRY.items()
+        if "_dsum" in _code_names(q.fn.__code__)
+    }
+    assert {n for n, f in bound.items() if f is double_sum} == DOUBLE_SUM_QUERIES
+    others = {n: f for n, f in bound.items() if n not in DOUBLE_SUM_QUERIES}
+    assert others and all(f is decimal_sum for f in others.values())
+
+
+def test_operator_modules_named_by_domain():
+    """No operator module is named for the round that added it, except the
+    re-export shims, and each shim binds only its one name."""
+    ops = Path(operators.__file__).resolve().parent
+    round_named = {
+        p.stem for p in ops.glob("*.py") if re.search(r"pipeline\d|\d$", p.stem)
+    }
+    assert round_named == set(SHIMS)
+    for name, export in SHIMS.items():
+        mod = importlib.import_module(f"{operators.__name__}.{name}")
+        assert {k for k in vars(mod) if not k.startswith("__")} == {export}

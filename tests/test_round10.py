@@ -21,9 +21,7 @@ SF = "/root/testdata/sf0.001"
 def test_kendall_tau_matches_bruteforce(spark):
     """The grid dominance-count tau-b must equal the O(n^2) definition on
     the full sf0.001 lineitem sample."""
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        agg_kendall_tau,
-    )
+    from mongodb_nats_connector_spark.operators.double_sums import agg_kendall_tau
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
     x = li["l_quantity"].round().astype("int64").to_numpy()
@@ -51,9 +49,7 @@ def test_kendall_tau_matches_bruteforce(spark):
 def test_kendall_tau_perfect_orderings(spark, tmp_path):
     """tau-b = +1 on a perfectly concordant relation, -1 on a perfectly
     discordant one (no ties)."""
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        agg_kendall_tau,
-    )
+    from mongodb_nats_connector_spark.operators.double_sums import agg_kendall_tau
 
     def write(rows):
         spark.createDataFrame(
@@ -81,7 +77,7 @@ def test_kneser_ney_probabilities_normalize(spark):
     kn_prob must be a proper probability."""
     from collections import Counter
 
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
+    from mongodb_nats_connector_spark.operators.text import (
         KN_D,
         text_kneser_ney_bigram,
     )
@@ -132,7 +128,7 @@ def test_mmr_topk_greedy_invariants(spark):
     """Step 1 is the pure-relevance argmax; every later pick must be the
     argmax of the MMR objective among the remaining pool, verified against
     an independent numpy recomputation."""
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
+    from mongodb_nats_connector_spark.operators.similarity import (
         MMR_K,
         MMR_LAMBDA,
         MMR_POOL,
@@ -209,9 +205,7 @@ def test_mst_matches_kruskal(spark):
     from mongodb_nats_connector_spark.operators.graph_common import (
         trade_edges,
     )
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        graph_mst_boruvka,
-    )
+    from mongodb_nats_connector_spark.operators.graph import graph_mst_boruvka
 
     de = trade_edges(spark, SF).toPandas()
     und = {}
@@ -355,9 +349,7 @@ def test_two_pass_prefix_max_exclusive_matches_window(spark):
 def test_markov_stationary_sums_to_one(spark):
     """Fixed-point probabilities must sum to ~1e9 ppb (floor-division loss
     bounded by states x iterations) and every state must be emitted."""
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        events_markov_stationary,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_markov_stationary
 
     rows = events_markov_stationary(spark, SF).collect()
     assert len(rows) >= 2
@@ -372,9 +364,7 @@ def test_theil_sen_robust_to_outlier(spark, tmp_path):
     of a clean +100c/day series stays 1.0 dollars/day... scaled check."""
     import datetime
 
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        agg_theil_sen,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_theil_sen
 
     base = datetime.date(1995, 1, 1)
     rows = []
@@ -399,7 +389,7 @@ def test_theil_sen_robust_to_outlier(spark, tmp_path):
 def test_ljung_box_matches_reference(spark):
     """Q must equal the textbook statistic computed independently in numpy
     over the same quantized daily series."""
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         LB_MAX_LAG,
         agg_ljung_box,
     )
@@ -433,9 +423,7 @@ def test_seasonal_decompose_identity_and_centering(spark):
     """revenue = trend + seasonal + residual wherever trend exists, the
     seasonal indices are centered (sum ~ 0 across the 12 calendar months),
     and edge months carry NULL trend/residual."""
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        orders_seasonal_decompose,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_seasonal_decompose
 
     rows = orders_seasonal_decompose(spark, SF).collect()
     assert len(rows) > 24
@@ -463,9 +451,7 @@ def test_closeness_matches_bfs(spark):
     from mongodb_nats_connector_spark.operators.graph_common import (
         trade_edges,
     )
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        graph_closeness_centrality,
-    )
+    from mongodb_nats_connector_spark.operators.graph import graph_closeness_centrality
 
     de = trade_edges(spark, SF).toPandas()
     adj = {}
@@ -507,9 +493,7 @@ def test_eccentricity_matches_bfs(spark):
     from mongodb_nats_connector_spark.operators.graph_common import (
         trade_edges,
     )
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
-        graph_eccentricity_diameter,
-    )
+    from mongodb_nats_connector_spark.operators.graph import graph_eccentricity_diameter
 
     de = trade_edges(spark, SF).toPandas()
     adj = {}
@@ -547,10 +531,8 @@ def test_wilcoxon_matches_pure_python(spark):
     """W+ and z must equal the textbook signed-rank statistic (sorted
     midranks, tie-corrected variance) computed independently in numpy over
     the same quantized per-user differences."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.events import (
         _valued_events_prepost,
-    )
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
         events_wilcoxon_signed_rank,
     )
 
@@ -615,7 +597,7 @@ def test_wilcoxon_known_answer_and_degenerate(spark, tmp_path):
     n = 5, no ties; and an all-zero-difference table emits zero rows."""
     import datetime
 
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
+    from mongodb_nats_connector_spark.operators.events import (
         events_wilcoxon_signed_rank,
     )
 

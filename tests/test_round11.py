@@ -21,7 +21,7 @@ def _li(spark):
 def test_roc_auc_matches_pairwise_definition(spark):
     """AUC from the bucketed Mann-Whitney identity must equal the O(n^2)
     pair-counting definition (ties at half credit) on the same buckets."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import agg_roc_auc
+    from mongodb_nats_connector_spark.operators.double_sums import agg_roc_auc
 
     li = _li(spark)
     s = (li["l_extendedprice"] / 1000).round().astype("int64").to_numpy()
@@ -40,9 +40,7 @@ def test_roc_auc_matches_pairwise_definition(spark):
 def test_kruskal_wallis_matches_rank_formula(spark):
     """H (and its tie correction) must match the direct midrank formula
     computed with pandas average ranks."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_kruskal_wallis,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_kruskal_wallis
 
     li = _li(spark)
     v = li["l_quantity"].round().astype("int64")
@@ -66,9 +64,7 @@ def test_kruskal_wallis_matches_rank_formula(spark):
 def test_ansari_bradley_matches_score_formula(spark):
     """AB statistic and its z must match the literal both-ends score
     definition score = min(rank, N+1-rank) with average midranks."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_ansari_bradley,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_ansari_bradley
 
     li = _li(spark)
     v = (li["l_extendedprice"] / 1000).round().astype("int64")
@@ -103,9 +99,7 @@ def test_ansari_bradley_matches_score_formula(spark):
 def test_wasserstein_matches_cdf_integral(spark):
     """W1 must equal the numpy CDF-difference integral over the bucketed
     values, and be symmetric-positive."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        orders_wasserstein_1d,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_wasserstein_1d
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderpriority"].isin(["1-URGENT", "5-LOW"])]
@@ -126,9 +120,7 @@ def test_wasserstein_matches_cdf_integral(spark):
 def test_page_hinkley_matches_recurrence_replay(spark):
     """The scaled PH columns must replay the textbook recurrence
     m_t = sum(x_i - mean), PH+ = m - min, PH- = max - m (scaled by T)."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        events_page_hinkley,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_page_hinkley
 
     rows = sorted(
         events_page_hinkley(spark, SF).collect(), key=lambda r: r["day"]
@@ -155,9 +147,7 @@ def test_page_hinkley_matches_recurrence_replay(spark):
 def test_grubbs_matches_numpy(spark):
     """G must equal max|x - mean| / sd(ddof=1) over the daily revenue
     series, and the flagged day must attain the max deviation."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_grubbs_test,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_grubbs_test
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderdate"].notna()]
@@ -194,9 +184,7 @@ def test_grubbs_matches_numpy(spark):
 def test_mcnemar_matches_pandas(spark):
     """The 2x2 discordance table and both chi-squares must match a pandas
     recomputation of the above-median flags."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_mcnemar_test,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_mcnemar_test
 
     e = spark.read.parquet(f"{SF}/events.parquet").toPandas()
     e = e[e["value"].notna()].copy()
@@ -232,7 +220,7 @@ def test_mcnemar_matches_pandas(spark):
 def test_cochran_q_matches_direct_formula(spark):
     """Q must match the direct (k-1)(k*sum C^2 - N^2)/(kN - sum R^2) on the
     pandas-built engagement matrix."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         COCHRAN_MIN_DAYS,
         agg_cochran_q,
     )
@@ -264,9 +252,7 @@ def test_cochran_q_matches_direct_formula(spark):
 def test_friedman_matches_rank_formula(spark):
     """Per-treatment rank sums and Q must match a pandas within-block
     average-rank recomputation over complete months."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_friedman_test,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_friedman_test
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderdate"].notna()].copy()
@@ -302,9 +288,7 @@ def test_friedman_matches_rank_formula(spark):
 def test_hodges_lehmann_matches_walsh_median(spark):
     """HL must equal the numpy median of all Walsh averages (i <= j) of the
     daily revenue series."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_hodges_lehmann,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_hodges_lehmann
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderdate"].notna()]
@@ -327,7 +311,7 @@ def test_hodges_lehmann_matches_walsh_median(spark):
 def test_simpson_diversity_matches_token_counts(spark):
     """All three indices must match a direct pandas token-count
     recomputation, and satisfy their algebraic bounds."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
+    from mongodb_nats_connector_spark.operators.double_sums import (
         docs_simpson_diversity,
     )
 
@@ -356,7 +340,7 @@ def test_harmonic_centrality_matches_bfs(spark):
     from mongodb_nats_connector_spark.operators.graph_common import (
         trade_edges,
     )
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
+    from mongodb_nats_connector_spark.operators.graph import (
         _HARMONIC_LCM,
         graph_harmonic_centrality,
     )
@@ -396,7 +380,7 @@ def test_pq_codebook_lloyd_semantics(spark):
     round-2 centroids are the means of the round-1 assignment, and the
     reported per-cell counts/distortions match a numpy recomputation
     against those centroids."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
+    from mongodb_nats_connector_spark.operators.similarity import (
         PQ_K,
         PQ_M,
         PQ_SUBDIM,
@@ -462,7 +446,7 @@ def test_ann_pq_adc_consistency(spark):
     """Every returned candidate's approx distance must equal the sum of its
     two codebook-table entries, the list must be sorted by (approx,
     vec_id), and the query itself must be excluded."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
+    from mongodb_nats_connector_spark.operators.similarity import (
         ANN_PQ_QUERY_ID,
         ANN_PQ_TOPK,
         similarity_ann_pq,
@@ -486,7 +470,7 @@ def test_ann_pq_adc_consistency(spark):
 def test_burst_detection_hysteresis_replay(spark):
     """State, starts and burst ids must replay the two-threshold machine
     exactly from the daily counts."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
+    from mongodb_nats_connector_spark.operators.events import (
         BURST_HI_NUM,
         BURST_LO_NUM,
         events_burst_detection,
@@ -517,9 +501,7 @@ def test_burst_detection_hysteresis_replay(spark):
 def test_logrank_matches_pandas_replay(spark):
     """O1, the observed-expected sum, the variance sum and chi2 must match
     a pandas risk-set replay of the same duration/censoring construction."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        orders_logrank_test,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_logrank_test
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o.sort_values(["o_orderdate", "o_orderkey"])
@@ -566,9 +548,7 @@ def test_logrank_matches_pandas_replay(spark):
 def test_cohen_kappa_matches_po_pe_form(spark):
     """The integer num/den form must equal the textbook (po-pe)/(1-pe), and
     the confusion matrix must match a pandas recomputation."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_cohen_kappa,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_cohen_kappa
 
     li = _li(spark)
     price_c = (li["l_extendedprice"] * 100).round().astype("int64")
@@ -594,9 +574,7 @@ def test_cohen_kappa_matches_po_pe_form(spark):
 def test_hellinger_matches_numpy(spark):
     """BC and H must match the numpy sum-of-sqrt over the same bucketed
     histograms, and satisfy 0 <= BC <= 1, H = sqrt(1-BC)."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_hellinger_distance,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_hellinger_distance
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderpriority"].isin(["1-URGENT", "5-LOW"])]
@@ -622,9 +600,7 @@ def test_tukey_pairwise_matches_anova_pooling(spark):
     """Every pair's mean difference, pooled-MSE standard error and |t|
     must match a pandas one-way ANOVA recomputation (micro-cents^2
     within-SS quantization respected)."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        orders_tukey_pairwise,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_tukey_pairwise
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     cents = (o["o_totalprice"] * 100).round().astype("int64")
@@ -659,7 +635,7 @@ def test_clustering_coefficient_matches_bruteforce(spark):
     from mongodb_nats_connector_spark.operators.graph_common import (
         trade_edges,
     )
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
+    from mongodb_nats_connector_spark.operators.graph import (
         graph_clustering_coefficient,
     )
 
@@ -695,9 +671,7 @@ def test_clustering_coefficient_matches_bruteforce(spark):
 def test_trimmed_mean_matches_numpy(spark):
     """Trimmed/winsorized means and fences must match a numpy sort-based
     recomputation, and bracket the robustness hierarchy."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
-        agg_trimmed_mean,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_trimmed_mean
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderdate"].notna()]
@@ -726,10 +700,8 @@ def test_gini_split_matches_entropy_ordering_and_formula(spark):
     """Gini gains must match the direct rational formula per threshold, and
     the best Gini threshold must score positively on the entropy criterion
     too (criterion cross-check)."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         agg_gini_impurity_split,
-    )
-    from mongodb_nats_connector_spark.operators.pipeline10 import (
         agg_info_gain_split,
     )
 

@@ -15,12 +15,8 @@ SF = "/root/testdata/sf0.001"
 def test_mann_kendall_matches_pairwise(spark):
     """S, 18*Var and z must match the O(n^2) definition with tie
     correction, and agree in direction with agg_theil_sen's slope sign."""
-    from mongodb_nats_connector_spark.operators.pipeline11 import (  # noqa: F401
-        agg_roc_auc,  # ensures pipeline11 imported first (registry order)
-    )
-    from mongodb_nats_connector_spark.operators.pipeline12 import (
-        agg_mann_kendall,
-    )
+    from mongodb_nats_connector_spark.operators.double_sums import agg_roc_auc
+    from mongodb_nats_connector_spark.operators.stats import agg_mann_kendall
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderdate"].notna()]
@@ -55,9 +51,7 @@ def test_mann_kendall_matches_pairwise(spark):
 def test_theil_u_matches_direct_ratio(spark):
     """U^2 must equal the direct MA3-vs-naive squared-error ratio (nano
     floor-division replicated), and the skill verdict must follow U < 1."""
-    from mongodb_nats_connector_spark.operators.pipeline12 import (
-        orders_theil_u,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_theil_u
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderdate"].notna()].copy()
@@ -89,9 +83,7 @@ def test_theil_u_matches_direct_ratio(spark):
 def test_croston_matches_integer_fold_replay(spark):
     """Per-part Croston state must replay the integer recurrence exactly,
     and the rate must be positive and bounded by the max demand."""
-    from mongodb_nats_connector_spark.operators.pipeline12 import (
-        orders_croston,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_croston
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
     li = li[li["l_shipdate"].notna()].copy()
@@ -130,9 +122,7 @@ def test_flesch_matches_direct_formula(spark):
     Python recomputation with the same vowel-group heuristic."""
     import re
 
-    from mongodb_nats_connector_spark.operators.pipeline12 import (
-        text_readability_flesch,
-    )
+    from mongodb_nats_connector_spark.operators.text import text_readability_flesch
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
     got = {

@@ -26,9 +26,7 @@ def test_kleinberg_viterbi_is_optimal(spark):
     segment-boundary perturbations of the decoded path, threshold
     baselines, and 100k seeded random paths. For short series (n <= 20)
     the check is the FULL 2^n enumeration instead."""
-    from mongodb_nats_connector_spark.operators.pipeline13 import (
-        events_kleinberg_burst,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_kleinberg_burst
 
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
     ev = ev[ev["ts"].notna()]
@@ -99,9 +97,7 @@ def test_holt_winters_fold_matches_python_replay(spark):
     """The Spark HOF fold must equal a direct Python replay of the
     integer recurrence (floor division semantics, twelfth-cent units),
     including every seasonal index and the 12 forecasts."""
-    from mongodb_nats_connector_spark.operators.pipeline13 import (
-        orders_holt_winters,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_holt_winters
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o[o["o_orderdate"].notna()]
@@ -135,7 +131,7 @@ def test_holt_winters_fold_matches_python_replay(spark):
 def test_mtld_fold_matches_python_replay(spark):
     """Every emitted (factors, partial, mtld_milli) must equal the
     reference MTLD walk over the same filtered lowercase tokens."""
-    from mongodb_nats_connector_spark.operators.pipeline13 import (
+    from mongodb_nats_connector_spark.operators.text import (
         MTLD_TTR_NUM,
         text_mtld_diversity,
     )
@@ -169,9 +165,7 @@ def test_mtld_fold_matches_python_replay(spark):
 def test_brunner_munzel_matches_direct_ranks(spark):
     """W and p_hat must match the direct midrank computation (scipy's
     published formulation) on the raw rows."""
-    from mongodb_nats_connector_spark.operators.pipeline13 import (
-        agg_brunner_munzel,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_brunner_munzel
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
     cents = (li["l_extendedprice"] * 100).round().astype("int64")
@@ -206,9 +200,7 @@ def test_brunner_munzel_matches_direct_ranks(spark):
 def test_survival_cindex_matches_pairwise(spark):
     """conc2/usable must equal the O(n^2) definition over per-customer
     (duration, event, score-bucket) observations."""
-    from mongodb_nats_connector_spark.operators.pipeline13 import (
-        orders_survival_cindex,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_survival_cindex
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o.sort_values(["o_custkey", "o_orderdate", "o_orderkey"])
@@ -252,9 +244,7 @@ def test_pyramidal_construction_exact_for_all_residues():
     (DuckDB evaluation; the Spark text differs only in the div token)."""
     import duckdb
 
-    from mongodb_nats_connector_spark.operators.pipeline13 import (
-        _pyramidal_duck,
-    )
+    from mongodb_nats_connector_spark.operators.stats import _pyramidal_duck
 
     con = duckdb.connect()
     ns = list(range(1, 50)) + [
@@ -299,9 +289,7 @@ def test_median_polish_reconstructs_grid(spark):
     """effects + residual must reconstruct the original x16 cell values
     exactly, and each row/column residual median after the final sweep
     must be zero for the dimension polished LAST."""
-    from mongodb_nats_connector_spark.operators.pipeline13 import (
-        orders_median_polish,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_median_polish
 
     rows = orders_median_polish(spark, SF).collect()
     assert rows

@@ -201,10 +201,10 @@ def test_kendall_w_operator_literal_constants():
     round-11 advisor finding)."""
     import inspect
 
-    from mongodb_nats_connector_spark.operators import pipeline17
+    from mongodb_nats_connector_spark.operators import stats
     from mongodb_nats_connector_spark.registry import _REGISTRY
 
-    src = inspect.getsource(pipeline17.agg_kendall_w)
+    src = inspect.getsource(stats.agg_kendall_w)
     oracle = _REGISTRY["agg_kendall_w"].oracle
     for text in (src, oracle):
         assert "(12 * s4)" in text

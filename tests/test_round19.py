@@ -147,7 +147,7 @@ def test_footrule_max_is_72_for_n12():
 
 
 def test_ndcg_discount_literals():
-    from mongodb_nats_connector_spark.operators.pipeline19 import _NDCG_W
+    from mongodb_nats_connector_spark.operators.stats import _NDCG_W
 
     table = eval(_NDCG_W)  # noqa: S307 - literal list
     assert table == [
@@ -161,9 +161,11 @@ def test_ndcg_discount_literals():
 
 
 def test_trig_literal_tables():
-    from mongodb_nats_connector_spark.operators.pipeline19 import (
+    from mongodb_nats_connector_spark.operators.events import (
         _CIRC_COS,
         _CIRC_SIN,
+    )
+    from mongodb_nats_connector_spark.operators.orders import (
         _DFT_COS,
         _DFT_SIN,
     )
@@ -188,7 +190,7 @@ def test_trig_literal_tables():
 
 
 def test_sprt_literals():
-    from mongodb_nats_connector_spark.operators.pipeline19 import (
+    from mongodb_nats_connector_spark.operators.orders import (
         _SPRT_A,
         _SPRT_L0,
         _SPRT_L1,
@@ -497,9 +499,7 @@ def test_wav_pcm_decoder_roundtrip():
 
 
 def test_rademacher_signs_deterministic_and_balanced():
-    from mongodb_nats_connector_spark.operators.pipeline19 import (
-        _rademacher_signs,
-    )
+    from mongodb_nats_connector_spark.operators.similarity import _rademacher_signs
 
     s1 = _rademacher_signs()
     s2 = _rademacher_signs()
@@ -532,10 +532,10 @@ def test_rademacher_signs_deterministic_and_balanced():
 def test_gumbel_literal_constants():
     import inspect
 
-    from mongodb_nats_connector_spark.operators import pipeline19
+    from mongodb_nats_connector_spark.operators import stats
     from mongodb_nats_connector_spark.registry import _REGISTRY
 
-    src = inspect.getsource(pipeline19.agg_gumbel_fit)
+    src = inspect.getsource(stats.agg_gumbel_fit)
     oracle = _REGISTRY["agg_gumbel_fit"].oracle
     sqrt6_over_pi = repr(math.sqrt(6) / math.pi)
     euler_gamma = "0.5772156649015329"
@@ -553,7 +553,7 @@ def test_gumbel_literal_constants():
 
 
 def test_benford_second_digit_table():
-    from mongodb_nats_connector_spark.operators.pipeline19 import _BENF2
+    from mongodb_nats_connector_spark.operators.orders import _BENF2
 
     table = eval(_BENF2)  # noqa: S307
     for d in range(10):

@@ -25,7 +25,7 @@ def test_pagerank_mass_conserved_and_partition_invariant(spark):
     (each // drops < 1 micro-unit per edge), and the BIGINT results are
     bit-identical when the fact input is repartitioned differently —
     the property float PageRank cannot give."""
-    from mongodb_nats_connector_spark.operators.graph2 import (
+    from mongodb_nats_connector_spark.operators.graph import (
         PR_SCALE,
         pagerank_nations,
     )
@@ -51,7 +51,7 @@ def test_pagerank_final_plan_is_map_only(spark):
     """The iterations run as driver-loop jobs over the cached edge relation;
     the RETURNED DataFrame must be a map-only literal lookup over the nation
     dimension — no exchange, no join left in its plan."""
-    from mongodb_nats_connector_spark.operators.graph2 import pagerank_nations
+    from mongodb_nats_connector_spark.operators.graph import pagerank_nations
 
     s = plan_string(pagerank_nations(spark, SF))
     assert "Exchange" not in s
@@ -68,7 +68,7 @@ def test_fuzzy_join_recall_and_plan(spark):
     """Every generated misspelling must match its source word at distance
     exactly 1 (deleting the 2nd char of a >=4-char word always yields
     distance 1), and the block join must be a hash join, not a nested loop."""
-    from mongodb_nats_connector_spark.operators.corpus2 import (
+    from mongodb_nats_connector_spark.operators.text import (
         FUZZY_MIN_LEN,
         fuzzy_join_blocked,
     )
@@ -105,9 +105,7 @@ def test_zorder_tiles_bound_locality(spark):
     """A 256-wide z-range is a 16x16 tile of the key grid: no tile may touch
     more than 16 distinct buckets of either dimension — the locality
     guarantee that makes z-sorted files prunable on either key."""
-    from mongodb_nats_connector_spark.operators.analytics3 import (
-        layout_zorder_tiles,
-    )
+    from mongodb_nats_connector_spark.operators.curation import layout_zorder_tiles
 
     rows = layout_zorder_tiles(spark, SF01).collect()
     assert rows
@@ -156,7 +154,7 @@ def test_weighted_median_windows_over_reduced_relation(spark):
     """The ordered window must consume the per-(group, value) aggregate, not
     the raw fact table: exactly one shuffle on the fact, then the window's
     partial exchange over the reduced relation."""
-    from mongodb_nats_connector_spark.operators.graph2 import agg_weighted_median
+    from mongodb_nats_connector_spark.operators.stats import agg_weighted_median
 
     s = plan_string(agg_weighted_median(spark, SF))
     below_window = s[s.index("Window"):]
@@ -174,9 +172,7 @@ def test_weighted_median_windows_over_reduced_relation(spark):
 def test_gap_fill_is_dense_and_consistent(spark):
     """Output must cover every (event_type, day) cell of the calendar; filled
     values on observed rows equal the daily aggregate."""
-    from mongodb_nats_connector_spark.operators.analytics3 import (
-        events_time_gap_fill,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_time_gap_fill
 
     out = events_time_gap_fill(spark, SF).toPandas()
     n_types = out["event_type"].nunique()
@@ -188,7 +184,7 @@ def test_gap_fill_is_dense_and_consistent(spark):
 
 def test_time_rollup_grand_total_matches(spark):
     """The grain-3 row is the grand total: its n_events equals the raw count."""
-    from mongodb_nats_connector_spark.operators.analytics3 import events_time_rollup
+    from mongodb_nats_connector_spark.operators.events import events_time_rollup
     from mongodb_nats_connector_spark.sources.tables import table
 
     out = events_time_rollup(spark, SF).collect()
@@ -209,9 +205,7 @@ def test_time_rollup_grand_total_matches(spark):
 def test_prefix_dedup_clusters_are_well_formed(spark):
     """Every cluster has >= 2 members and exactly one canonical doc (the
     smallest id)."""
-    from mongodb_nats_connector_spark.operators.graph2 import (
-        dedup_prefix_boilerplate,
-    )
+    from mongodb_nats_connector_spark.operators.dedup import dedup_prefix_boilerplate
 
     out = dedup_prefix_boilerplate(spark, SF01).toPandas()
     assert len(out) > 0
@@ -227,7 +221,7 @@ def test_prefix_dedup_clusters_are_well_formed(spark):
 
 
 def test_bpe_pair_counts_orders_and_bounds(spark):
-    from mongodb_nats_connector_spark.operators.corpus2 import (
+    from mongodb_nats_connector_spark.operators.text import (
         PAIR_TOPK,
         bpe_pair_counts,
     )
@@ -243,7 +237,7 @@ def test_bpe_pair_counts_orders_and_bounds(spark):
 def test_bigram_surprisal_nonnegative_and_complete(spark):
     """MLE probabilities are <= 1 so surprisal >= 0; every multi-token doc
     appears with n_bigrams = token_count - 1."""
-    from mongodb_nats_connector_spark.operators.corpus2 import bigram_lm_surprisal
+    from mongodb_nats_connector_spark.operators.text import bigram_lm_surprisal
     from mongodb_nats_connector_spark.sources.tables import table
 
     out = {r["doc_id"]: r for r in bigram_lm_surprisal(spark, SF).collect()}
@@ -262,7 +256,7 @@ def test_bigram_surprisal_nonnegative_and_complete(spark):
 
 
 def test_profile_covers_all_columns_consistently(spark):
-    from mongodb_nats_connector_spark.operators.analytics3 import (
+    from mongodb_nats_connector_spark.operators.curation import (
         _PROFILE_COLS,
         profile_orders_columns,
     )
@@ -284,7 +278,7 @@ def test_profile_covers_all_columns_consistently(spark):
 
 
 def test_price_records_strictly_increase(spark):
-    from mongodb_nats_connector_spark.operators.analytics3 import orders_price_records
+    from mongodb_nats_connector_spark.operators.orders import orders_price_records
 
     rows = sorted(orders_price_records(spark, SF).collect(), key=lambda r: r["day"])
     assert rows

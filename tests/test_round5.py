@@ -7,26 +7,32 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from mongodb_nats_connector_spark.operators.mining5 import (
+from mongodb_nats_connector_spark.operators.graph import (
+    MIN_SUPPORT,
+    graph_triangle_count,
+)
+from mongodb_nats_connector_spark.operators.similarity import embedding_gram_matrix
+from mongodb_nats_connector_spark.operators.stats import (
     CMS_DEPTH,
     CMS_WIDTH,
-    EMB_STUB_DIM,
-    MIN_SUPPORT,
-    TOPK_PER_WINDOW,
     agg_heavy_hitters_cms,
-    embedding_gram_matrix,
-    graph_triangle_count,
+)
+from mongodb_nats_connector_spark.operators.udfs import (
+    EMB_STUB_DIM,
     inference_embed_stub,
+)
+from mongodb_nats_connector_spark.operators.windows_batch import (
+    TOPK_PER_WINDOW,
     stream_window_topk,
     window_pattern_match,
 )
-from mongodb_nats_connector_spark.operators.quality5 import (
+from mongodb_nats_connector_spark.operators.curation import (
     SAMPLE_K,
     dq_rule_violations,
-    events_time_to_convert,
     profile_key_skew,
     sample_reservoir_perkey,
 )
+from mongodb_nats_connector_spark.operators.events import events_time_to_convert
 from mongodb_nats_connector_spark.sources.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -186,7 +192,7 @@ def test_pca_matches_numpy_power_iteration(spark):
     as a numpy replay over the same round-4 Gram matrix, and after 3
     iterations the eigenvalue estimate must be close to numpy's true top
     eigenvalue of that matrix."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
+    from mongodb_nats_connector_spark.operators.similarity import (
         PCA_ITERS,
         embedding_pca_power_iteration,
     )
@@ -219,14 +225,14 @@ def test_r5c_statistics_invariants(spark):
     """Sanity bounds that hold on ANY data: chi² >= 0 with the right cell
     count; Welch t finite with positive group sizes; Pareto shares sum to 1
     and decrease; lift and Jaccard positive with Jaccard <= 1."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
-        graph_jaccard_neighbors,
+    from mongodb_nats_connector_spark.operators.graph import graph_jaccard_neighbors
+    from mongodb_nats_connector_spark.operators.orders import (
         orders_basket_lift,
+        orders_pareto_curve,
     )
-    from mongodb_nats_connector_spark.operators.quality5 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         agg_chi_square,
         agg_welch_ttest,
-        orders_pareto_curve,
     )
 
     chi = agg_chi_square(spark, SF).toPandas().iloc[0]
@@ -255,9 +261,7 @@ def test_incremental_merge_equals_full_recompute(spark):
     single-pass aggregation over the whole table."""
     from pyspark.sql import functions as F
 
-    from mongodb_nats_connector_spark.operators.quality5 import (
-        agg_incremental_merge,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_incremental_merge
 
     merged = (
         agg_incremental_merge(spark, SF)
@@ -283,9 +287,7 @@ def test_incremental_merge_equals_full_recompute(spark):
 
 
 def test_funnel_paths_counts_partition_users(spark):
-    from mongodb_nats_connector_spark.operators.mining5 import (
-        events_funnel_paths_topk,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_funnel_paths_topk
 
     out = events_funnel_paths_topk(spark, SF).toPandas()
     n_users = table(spark, SF, "events").select("user_id").distinct().count()
@@ -296,7 +298,7 @@ def test_funnel_paths_counts_partition_users(spark):
 def test_bpe_apply_compression_invariants(spark):
     """Applying merges can only shrink token counts: chars/token >= 1,
     n_tokens <= char count, and every learned merge is a 2-symbol pair."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
+    from mongodb_nats_connector_spark.operators.text import (
         bpe_apply_merges,
         bpe_learn_merges,
     )
@@ -314,8 +316,10 @@ def test_bpe_apply_compression_invariants(spark):
 def test_asof_nearest_never_farther_than_backward(spark):
     """The nearest match is at most as far as the backward-only match for
     every purchase that has a preceding signup."""
-    from mongodb_nats_connector_spark.operators.mining5 import join_asof_nearest
-    from mongodb_nats_connector_spark.operators.relational import join_asof
+    from mongodb_nats_connector_spark.operators.relational import (
+        join_asof,
+        join_asof_nearest,
+    )
 
     near = (
         join_asof_nearest(spark, SF).toPandas().set_index("event_id")

@@ -10,7 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from mongodb_nats_connector_spark.operators.mining5 import (
+from mongodb_nats_connector_spark.operators.text import (
     _duck_merge,
     _merge_pair_arr,
 )
@@ -140,25 +140,21 @@ def test_no_sql_cache_leak_after_results_dropped(spark):
     GC-reclaimed on its own, so a missing finalizer would leak here)."""
     import gc
 
-    from mongodb_nats_connector_spark.operators.corpus2 import (
+    from mongodb_nats_connector_spark.operators.text import (
         bigram_lm_surprisal,
         fuzzy_join_blocked,
     )
-    from mongodb_nats_connector_spark.operators.graph2 import (
-        dedup_prefix_boilerplate,
-    )
-    from mongodb_nats_connector_spark.operators.joins2 import join_bloom_semi
-    from mongodb_nats_connector_spark.operators.mining5 import (
+    from mongodb_nats_connector_spark.operators.dedup import dedup_prefix_boilerplate
+    from mongodb_nats_connector_spark.operators.relational import join_bloom_semi
+    from mongodb_nats_connector_spark.operators.graph import (
         graph_jaccard_neighbors,
         graph_triangle_count,
-        orders_basket_lift,
     )
-    from mongodb_nats_connector_spark.operators.quality5 import (
-        agg_chi_square,
-        events_seasonal_baseline,
-        orders_pareto_curve,
-    )
-    from mongodb_nats_connector_spark.operators.tpch2 import (
+    from mongodb_nats_connector_spark.operators.orders import orders_basket_lift
+    from mongodb_nats_connector_spark.operators.events import events_seasonal_baseline
+    from mongodb_nats_connector_spark.operators.orders import orders_pareto_curve
+    from mongodb_nats_connector_spark.operators.stats import agg_chi_square
+    from mongodb_nats_connector_spark.operators.relational import (
         q20_heavy_shippers,
         q21_waiting_suppliers,
     )
@@ -277,8 +273,10 @@ def test_multimodal_real_header_decode(spark):
 def test_asof_forward_never_before_purchase(spark):
     """Forward as-of matches only signups AT-OR-AFTER the purchase, and the
     nearest-direction gap is never larger than the forward-only gap."""
-    from mongodb_nats_connector_spark.operators.mining5 import join_asof_nearest
-    from mongodb_nats_connector_spark.operators.relational import join_asof_forward
+    from mongodb_nats_connector_spark.operators.relational import (
+        join_asof_forward,
+        join_asof_nearest,
+    )
 
     sf = "/root/testdata/sf0.001"
     fwd = join_asof_forward(spark, sf).toPandas().set_index("event_id")
@@ -306,98 +304,50 @@ def test_no_new_bare_persists():
     root = pathlib.Path(__file__).resolve().parent.parent
     allowed = {
         # file -> bare-persist count, each paired with an in-function
-        # unpersist (BPE/dedup-clusters/pagerank driver loops) or the
-        # documented session-scoped shingle cache
-        "operators/mining5.py": 5,   # BPE learn loop (lex + nxt; r14:
-        # ONE shared _bpe_learn helper — driver fast path above a
-        # broadcast-size gate — replaced the two duplicated loops);
-        # triangle edges / basket-lift item / jaccard deg (runtime-stat
-        # broadcast gates; each released by persist_until_collected on
-        # the same frame)
-        "operators/dedup.py": 3,     # shingle cache + dedup_clusters loop
-        # (graph2's pagerank no longer persists: r14 moved its fixed
-        # point to driver-round python ints over the collected
-        # nation^2-bounded edge list — the iteration caches went with it)
-        # (pipeline6's label-propagation persist removed r14: the rounds
-        # run as driver python ints over the collected nation^2-bounded
-        # edge list; max-concurrency's sweep-endpoint persist removed
-        # r14 — the day-decomposed sweep needs no boundary-sketch cache)
-        "operators/pipeline7.py": 2,  # gini's two-pass-rank input
-        # (released by release_on_gc) + hll's deduplicated user-day
-        # relation (r14: one distinct pass feeds registers AND both
-        # exact counts; released by release_on_gc on the returned
-        # result). BFS's edge-list persist removed r14: the top-k
-        # filter + rounds run as driver python ints over the collected
-        # nation^2-bounded adjacency; widest-path likewise.
-        "operators/pipeline10.py": 5,  # Kneser-Ney's bigram-type rollup
-        # (r15: cached across the top-k collect and the 1-row stats
-        # collect, explicitly unpersisted before the function returns),
-        # plus the MMR candidate pool (cached
-        # BEFORE its bounded driver-collect loop), plus Ljung-Box's day
-        # series, seasonal-decompose's month series, and the
-        # eccentricity query's nation-sized relation (multi-consumer
-        # bounded relations); all released by
-        # plans.caching.release_on_gc on the returned result (Markov's
-        # transition-matrix persist removed r14: the power iteration
-        # runs as driver-round python ints over the collected
-        # state^2-bounded matrix; Theil-Sen's day-series + slope-group
-        # persists and Boruvka's edge persist removed r14: both collect
-        # their calendar-/nation-bounded relations once and run the
-        # selection/rounds on the driver)
-        # --- two-pass-rank inputs: each cached BEFORE the helper's
+        # unpersist (BPE/dedup-clusters driver loops), the documented
+        # session-scoped shingle cache, or a release_on_gc /
+        # persist_until_collected release on the returned result.
+        # Two-pass-rank inputs are cached BEFORE the helper's
         # construction-time boundary-sketch job (else the upstream rollup
-        # recomputes per pass) and released by release_on_gc at return ---
-        "operators/pipeline11.py": 10,  # cochran-q presence matrix,
-        # friedman month x priority cells + k-sized rank sums,
-        # harmonic-centrality distance relation, PQ codebook +
-        # ANN-PQ embedding relations (cached BEFORE their bounded
-        # k-means training collects), the tukey k-sized group-stat
-        # relation, the clustering-coefficient adjacency + per-node
-        # relations, and the trimmed-mean ranked day series; all
-        # released by release_on_gc / persist_until_collected on the
-        # returned result (hodges-lehmann's day-series + Walsh-group
-        # persists removed r14: driver-side two-pointer selection over
-        # the collected calendar-bounded day revenues)
-        "operators/pipeline12.py": 1,  # mann-kendall day series (feeds
-        # both sign-pair sides; released by release_on_gc)
-        "operators/pipeline13.py": 12,  # hourly-profile 24x7 grid, seasonality-strength detrended
-        # rows (seasonal means + SS consumers), quade monthly grid + gated grid
-        # + score cells (bounded, multi-consumer), regression-diagnostics
-        # month index + residual rows (moments + output consumers),
-        # JT priority x price-domain cells
-        # (grid + group sums), page-test monthly grid (gate + join
-        # sides), decile-lift input (cached BEFORE the two-pass boundary
-        # sketch), c-index duration x bucket cells (grid + distinct
-        # sides), permutation-test daily series (obs + 200-perm
-        # fan-out), katz adjacency (reused across the 5 fixed
-        # iterations); all released by release_on_gc on the returned
-        # result
-        "operators/pipeline14.py": 18,  # cusum daily grid + scaled
-        # increments, bartels day series, durbin-watson + pacf month
-        # indexes + centered values, burstiness (doc, word) counts,
-        # winnowing gram hashes, siegel cells, breslow strata, xmr
-        # moving ranges, dale-chall tokens, vocab-overlap word sets,
-        # cooccurrence user-day grain, reciprocity edges, winsorized
-        # cumulative grid, concordance ranks, demand-class daily grid
-        # (multi-consumer bounded relations); all released by
-        # plans.caching.release_on_gc on the returned result
-        "operators/pipeline16.py": 3,  # gamma's 2D grid cells (densify +
-        # tie marginals), gries' (word, source) counts (parts + topk +
-        # deviation consumers), welch's 5-row weight relation (total +
-        # deviation consumers); all released by release_on_gc on the
-        # returned result (HITS no longer persists: its power loop runs
-        # as driver-round python ints over the collected adjacency)
-        "operators/pipeline19.py": 3,  # random-walk's nation-bounded
-        # adjacency (4 chained step consumers), hubness's and TwoNN's
-        # quantized embedding relation (panel + candidate consumers);
-        # all released by release_on_gc on the returned result
-        "operators/pipeline9.py": 2,   # spearman fact projection +
-        # weibull gaps
-        "operators/pipeline8.py": 3,   # abc rev + skyline per_cust + sig
-        "operators/relational.py": 1,  # rfm per-customer rollup
-        "operators/quality5.py": 1,    # pareto per-customer rollup
-        "operators/analytics2.py": 1,  # ltv per-customer rollup
-        # (pipeline6b's big-star CC loop uses eager localCheckpoint per
+        # recomputes per pass).
+        "operators/dedup.py": 3,  # shingle cache + dedup_clusters loop
+        "operators/double_sums.py": 1,  # weibull gaps
+        "operators/events.py": 2,  # hourly-profile 24x7 grid,
+        # type-cooccurrence user-day grain
+        "operators/graph.py": 7,  # triangle edges, jaccard deg (runtime-
+        # stat broadcast gates), eccentricity's nation-sized relation,
+        # harmonic-centrality distances, clustering-coefficient adjacency
+        # + per-node relations, reciprocity edges
+        "operators/orders.py": 21,  # basket-lift items (broadcast gate),
+        # seasonal-decompose month series, tukey k-sized group stats,
+        # decile-lift input, c-index duration x bucket cells,
+        # regression-diagnostics month index + residual rows,
+        # seasonality-strength detrended rows, cusum daily grid + scaled
+        # increments, bartels day series, durbin-watson month index,
+        # pacf month index + centered values, xmr moving ranges,
+        # demand-class daily grid, association-metrics baskets, gini's
+        # two-pass-rank input, skyline per_cust, abc rev, pareto
+        # per-customer rollup
+        "operators/relational.py": 2,  # ltv + rfm per-customer rollups
+        "operators/similarity.py": 5,  # MMR candidate pool (cached
+        # BEFORE its bounded driver-collect loop), PQ codebook + ANN-PQ
+        # embedding relations (before their bounded k-means collects),
+        # hubness's and TwoNN's quantized embedding relation
+        "operators/stats.py": 20,  # ljung-box day series, cochran-q
+        # presence matrix, friedman month x priority cells + rank sums,
+        # trimmed-mean ranked day series, mann-kendall day series, JT
+        # priority x price-domain cells, page-test monthly grid,
+        # permutation-test daily series, quade monthly grid + gated grid
+        # + score cells, siegel cells, breslow strata, winsorized
+        # cumulative grid, concordance ranks, gamma's 2D grid cells,
+        # welch's weight relation, hll's deduplicated user-day relation,
+        # spearman fact projection
+        "operators/text.py": 9,  # BPE learn loop (lex + nxt),
+        # Kneser-Ney bigram-type rollup (unpersisted before return),
+        # burstiness (doc, word) counts, winnowing gram hashes,
+        # dale-chall tokens, vocab-overlap word sets, gries' (word,
+        # source) counts, quality-ensemble sig
+        # (graph_cc_bigstar's CC loop uses eager localCheckpoint per
         # round — plan truncation, not a bare persist)
     }
     pkg = root / "mongodb_nats_connector_spark"
@@ -448,7 +398,7 @@ def test_asof_nearest_null_gap_when_no_signup(spark, tmp_path):
     aggregates would absorb as a real value."""
     import datetime as dt
 
-    from mongodb_nats_connector_spark.operators.mining5 import join_asof_nearest
+    from mongodb_nats_connector_spark.operators.relational import join_asof_nearest
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     rows = [
@@ -472,9 +422,7 @@ def test_dedup_embedding_cosine_subset_of_exact(spark):
     """Precision is 1.0 by construction: the bucketing only GENERATES
     candidates, the exact cosine verify decides — so the emitted pair set
     must be a subset of the quadratic baseline's."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        dedup_embedding_cosine,
-    )
+    from mongodb_nats_connector_spark.operators.dedup import dedup_embedding_cosine
     from mongodb_nats_connector_spark.operators.similarity import (
         similarity_neardup_pairs,
     )
@@ -500,9 +448,7 @@ def test_dedup_embedding_cosine_recall_on_planted_dups(spark, tmp_path):
     (1 - agree^8)^10 < 1e-3, so all-but-at-most-two must be recovered."""
     import random as _random
 
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        dedup_embedding_cosine,
-    )
+    from mongodb_nats_connector_spark.operators.dedup import dedup_embedding_cosine
 
     rng = _random.Random(99)
     rows = []
@@ -554,7 +500,7 @@ def test_topp_quality_invariants(spark):
     """Per-source nucleus selection: kept docs must (a) be a prefix of the
     score-desc ranking, (b) cover >= TOPP_PCT% of the source's score mass,
     (c) be minimal — dropping the last kept doc falls below the target."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
+    from mongodb_nats_connector_spark.operators.text import (
         TOPP_PCT,
         docs_topp_quality,
     )
@@ -583,9 +529,7 @@ def test_topp_quality_invariants(spark):
 def test_epoch_upsample_invariants(spark):
     """Every document appears exactly n_copies times with copy_idx 1..n,
     n_copies in {1,2,3}, and sample_id is unique."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        sample_epoch_upsample,
-    )
+    from mongodb_nats_connector_spark.operators.curation import sample_epoch_upsample
 
     out = sample_epoch_upsample(spark, "/root/testdata/sf0.01").toPandas()
     assert out["n_copies"].isin([1, 2, 3]).all()
@@ -603,9 +547,7 @@ def test_merge_upsert_invariants(spark):
     """MERGE row accounting: |result| = |base| - |deletes| + |inserts|;
     updated keys carry the new status, deleted keys are gone, inserted keys
     exist above the shift, untouched rows pass through unchanged."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        merge_upsert_snapshot,
-    )
+    from mongodb_nats_connector_spark.operators.cdc import merge_upsert_snapshot
 
     sf = "/root/testdata/sf0.01"
     out = merge_upsert_snapshot(spark, sf).toPandas().set_index("o_orderkey")
@@ -634,9 +576,7 @@ def test_label_propagation_labels_are_reachable_nodes(spark):
     """Every community label must itself be a nation key, and at least one
     community must contain more than one nation (the trade graph is
     connected enough that propagation actually groups)."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        graph_label_propagation,
-    )
+    from mongodb_nats_connector_spark.operators.graph import graph_label_propagation
 
     out = graph_label_propagation(spark, "/root/testdata/sf0.01").toPandas()
     assert len(out) == 25
@@ -648,9 +588,7 @@ def test_stickiness_bounds_and_wau_dominates_dau(spark):
     """stickiness = dau/wau must lie in (0, 1]; WAU >= DAU every day (the
     trailing window contains the day itself); and WAU never exceeds the
     total user population."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        events_stickiness_dau_wau,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_stickiness_dau_wau
 
     sf = "/root/testdata/sf0.01"
     out = events_stickiness_dau_wau(spark, sf).toPandas()
@@ -667,9 +605,7 @@ def test_stickiness_bounds_and_wau_dominates_dau(spark):
 def test_ngram_novelty_bounds_and_first_doc_is_fully_novel(spark):
     """novelty_ratio in [0, 1]; novel_grams <= n_grams; and the smallest
     doc_id (nothing precedes it) is 100% novel."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        docs_ngram_novelty,
-    )
+    from mongodb_nats_connector_spark.operators.text import docs_ngram_novelty
 
     out = docs_ngram_novelty(spark, "/root/testdata/sf0.01").toPandas()
     assert (out["novel_grams"] <= out["n_grams"]).all()
@@ -681,9 +617,7 @@ def test_ngram_novelty_bounds_and_first_doc_is_fully_novel(spark):
 def test_max_concurrency_bounded_by_daily_actives(spark):
     """Peak concurrent sessions on a day can never exceed the number of
     users active that day, and is at least 1 on every reported day."""
-    from mongodb_nats_connector_spark.operators.pipeline6 import (
-        events_max_concurrency,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_max_concurrency
 
     sf = "/root/testdata/sf0.01"
     out = events_max_concurrency(spark, sf).toPandas().set_index("day")

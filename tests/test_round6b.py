@@ -12,7 +12,7 @@ def test_bigstar_labels_on_path_and_triangle(spark):
     """A 10-node path forces multiple large/small-star rounds (the near-dup
     corpus converges in one — it would not catch a wrong star fixpoint);
     the disjoint triangle checks component isolation."""
-    from mongodb_nats_connector_spark.operators.pipeline6b import bigstar_labels
+    from mongodb_nats_connector_spark.operators.graph import bigstar_labels
 
     path = [(i, i + 1) for i in range(9)]  # 0-1-2-...-9
     tri = [(20, 21), (21, 22), (20, 22)]
@@ -27,7 +27,7 @@ def test_bigstar_matches_label_propagation(spark):
     """Two different physical plans (shuffle-only big-star vs broadcast
     label propagation) must reach the identical clustering."""
     from mongodb_nats_connector_spark.operators.dedup import dedup_clusters
-    from mongodb_nats_connector_spark.operators.pipeline6b import graph_cc_bigstar
+    from mongodb_nats_connector_spark.operators.graph import graph_cc_bigstar
 
     a = {tuple(r) for r in graph_cc_bigstar(spark, SF).collect()}
     b = {tuple(r) for r in dedup_clusters(spark, SF).collect()}
@@ -35,9 +35,7 @@ def test_bigstar_matches_label_propagation(spark):
 
 
 def test_bitmap_distinct_equals_exact(spark):
-    from mongodb_nats_connector_spark.operators.pipeline6b import (
-        agg_bitmap_distinct,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_bitmap_distinct
 
     got = {
         r["event_type"]: r["n_users"]
@@ -56,9 +54,7 @@ def test_bitmap_distinct_equals_exact(spark):
 def test_offset_gap_accounting_closes(spark):
     """Per subject: ids skipped between deliveries + ids delivered must
     tile the [first, last] offset interval exactly."""
-    from mongodb_nats_connector_spark.operators.pipeline6b import (
-        cdc_offset_gap_detect,
-    )
+    from mongodb_nats_connector_spark.operators.cdc import cdc_offset_gap_detect
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     firsts = {
@@ -75,10 +71,10 @@ def test_offset_gap_accounting_closes(spark):
 
 
 def test_apply_asof_is_a_prefix_of_latest(spark):
-    from mongodb_nats_connector_spark.operators.cdc import cdc_apply_latest
-    from mongodb_nats_connector_spark.operators.pipeline6b import (
+    from mongodb_nats_connector_spark.operators.cdc import (
         ASOF_SNAPSHOT_TS,
         cdc_apply_asof,
+        cdc_apply_latest,
     )
 
     asof = {r["user_id"]: r["last_ts"] for r in cdc_apply_asof(spark, SF).collect()}

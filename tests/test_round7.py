@@ -19,7 +19,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _bfs_parts(spark):
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
+    from mongodb_nats_connector_spark.operators.graph import (
         BFS_SOURCE_NODE,
         BFS_TOP_OUT,
         graph_bfs_levels,
@@ -39,7 +39,7 @@ def test_bfs_levels_consistent_with_edges(spark):
     """hop(source) = 0; every hop-h>0 node has an in-edge from some node at
     hop h-1 and none from any node at hop < h-1 that would give it a
     shorter path; unreachable nations are NULL."""
-    from mongodb_nats_connector_spark.operators.pipeline7 import BFS_TOP_OUT
+    from mongodb_nats_connector_spark.operators.graph import BFS_TOP_OUT
 
     src, _topk, levels, key_by_name = _bfs_parts(spark)
     # rebuild the same top-k graph independently (pandas, not the operator)
@@ -77,9 +77,7 @@ def test_bfs_levels_consistent_with_edges(spark):
 
 
 def test_cusum_telescopes_and_flags_unique_argmax(spark):
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
-        events_cusum_changepoint,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_cusum_changepoint
 
     rows = events_cusum_changepoint(spark, SF).orderBy("day").collect()
     # telescoping identity: S_n = prefix_n - n*mean = 0 exactly
@@ -97,9 +95,7 @@ def test_kmv_estimates_within_bounds(spark):
     """KMV standard error is ~1/sqrt(k-2) (~13% at k=64); assert a loose
     3-sigma envelope vs the exact counts it carries, plus sketch algebra
     sanity (union >= each side, intersection <= union)."""
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
-        agg_kmv_distinct_setops,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_kmv_distinct_setops
 
     r = agg_kmv_distinct_setops(spark, SF).collect()[0]
     for est, exact in [
@@ -119,7 +115,7 @@ def test_kmv_exact_below_k(spark):
     set and the estimate must be exact. sf0.001 has fewer than k=64
     distinct users per cohort, so the registered query itself exercises
     the exact branch here (sf0.01+ exercises the estimation branch)."""
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         KMV_K,
         agg_kmv_distinct_setops,
     )
@@ -133,7 +129,7 @@ def test_kmv_exact_below_k(spark):
 
 
 def test_temperature_resample_conserves_budget_and_flattens(spark):
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
+    from mongodb_nats_connector_spark.operators.curation import (
         RESAMPLE_BUDGET,
         curate_temperature_resample,
     )
@@ -150,9 +146,7 @@ def test_temperature_resample_conserves_budget_and_flattens(spark):
 
 
 def test_streaks_match_pandas_rederivation(spark):
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
-        events_activity_streaks,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_activity_streaks
 
     got = {
         r["user_id"]: (r["streak_days"], r["streak_start"])
@@ -184,9 +178,7 @@ def test_streaks_two_exchanges_only(spark):
     """The plan claim in the docstring: (user, day) distinct plus ONE
     user_id exchange that serves the window, the streak aggregation, and
     the per-user argmax."""
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
-        events_activity_streaks,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_activity_streaks
     from mongodb_nats_connector_spark.plans.explain import count_key_exchanges
 
     assert count_key_exchanges(events_activity_streaks(spark, SF)) == 2
@@ -196,7 +188,7 @@ def test_widest_path_matches_python_reference(spark):
     """Max-min capacities recomputed in pure Python over the collected
     (nation-sized) edge list via iterate-to-fixpoint — the operator's fixed
     3 rounds must already be at the fixpoint on this dense graph."""
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
+    from mongodb_nats_connector_spark.operators.graph import (
         WIDEST_SOURCE,
         graph_widest_path,
     )
@@ -245,9 +237,7 @@ def test_hll_registers_error_bound_and_merge_monotone(spark):
     loose 4-sigma envelope per cohort, and that the merged-register row
     dominates every cohort estimate (registers are pointwise >=, and the
     estimate is monotone in the registers)."""
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
-        agg_hll_registers,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_hll_registers
 
     rows = {r["cohort"]: r for r in agg_hll_registers(spark, SF).collect()}
     assert "ALL" in rows
@@ -262,7 +252,7 @@ def test_hll_registers_error_bound_and_merge_monotone(spark):
 
 
 def test_gini_hhi_matches_pandas_and_bounds(spark):
-    from mongodb_nats_connector_spark.operators.pipeline7 import orders_gini_hhi
+    from mongodb_nats_connector_spark.operators.orders import orders_gini_hhi
 
     r = orders_gini_hhi(spark, SF).collect()[0]
     per = (
@@ -291,7 +281,7 @@ def test_log2_histogram_counts_and_quantile_flags(spark):
     the numpy-exact quantile of the tick-quantized values."""
     import numpy as np
 
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         _LOG2_SCALE,
         agg_log2_histogram_quantiles,
     )
@@ -323,7 +313,7 @@ def test_log2_histogram_counts_and_quantile_flags(spark):
 def test_ks_statistic_matches_pandas(spark):
     import numpy as np
 
-    from mongodb_nats_connector_spark.operators.pipeline7 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         _KS_G1,
         _KS_G2,
         agg_ks_test,
@@ -355,7 +345,7 @@ def test_streaming_hll_registers_match_batch(spark, tmp_path):
     state exactly-once under replay. Estimates follow from registers."""
     import uuid
 
-    from mongodb_nats_connector_spark.operators.pipeline7 import hll_reg_rows
+    from mongodb_nats_connector_spark.operators.graph_common import hll_reg_rows
     from mongodb_nats_connector_spark.streaming.windows import (
         EVENTS_DDL,
         hll_register_stream,
@@ -394,7 +384,7 @@ def test_streaming_hll_registers_match_batch(spark, tmp_path):
 
 
 def test_locf_matches_pandas_ffill(spark):
-    from mongodb_nats_connector_spark.operators.pipeline7 import events_locf_fill
+    from mongodb_nats_connector_spark.operators.events import events_locf_fill
 
     got = events_locf_fill(spark, SF).toPandas()
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()

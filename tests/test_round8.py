@@ -24,9 +24,7 @@ SF = "/root/testdata/sf0.001"
 def test_skyline_no_dominated_survivor_and_no_missing(spark):
     """Brute-force O(n^2) dominance over the per-customer points must agree
     exactly with the sort-based skyline."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        orders_skyline_pareto,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_skyline_pareto
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     per = (
@@ -71,7 +69,7 @@ def test_kcore_matches_python_peel(spark):
     degrees) as a plain-Python peeling reference over the same thresholded
     edge list."""
     from mongodb_nats_connector_spark.operators.graph_common import trade_edges
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.graph import (
         KCORE_K,
         KCORE_W_FACTOR,
         graph_kcore,
@@ -102,7 +100,7 @@ def test_kcore_matches_python_peel(spark):
 def test_mann_whitney_identities(spark):
     """U1 + U2 = n1*n2 exactly, and U1 recomputed from scipy-free midranks
     in pandas matches."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         _MW_A,
         _MW_B,
         agg_mann_whitney,
@@ -123,9 +121,7 @@ def test_mann_whitney_identities(spark):
 def test_benford_shares_and_chi2(spark):
     """Observed shares sum to 1; expected shares are exactly Benford's law;
     chi2 terms are nonnegative."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        agg_benford_test,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_benford_test
 
     out = agg_benford_test(spark, SF).toPandas().sort_values("digit")
     assert abs(out["share"].sum() - 1.0) < 1e-4
@@ -136,7 +132,7 @@ def test_benford_shares_and_chi2(spark):
 
 def test_wilson_interval_bounds(spark):
     """Wilson bounds are inside [0,1] and bracket p_hat."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import agg_wilson_ci
+    from mongodb_nats_connector_spark.operators.stats import agg_wilson_ci
 
     out = agg_wilson_ci(spark, SF).toPandas()
     assert len(out) > 0
@@ -148,9 +144,7 @@ def test_wilson_interval_bounds(spark):
 def test_cuped_reduces_variance(spark):
     """The CUPED-adjusted metric has variance <= the raw post metric (the
     whole point of the transform), and adjusted means match raw means."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        events_cuped_adjust,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_cuped_adjust
 
     out = events_cuped_adjust(spark, SF).toPandas()
     assert out["post_adj"].var() <= out["post"].var() + 1e-9
@@ -161,7 +155,7 @@ def test_cuped_reduces_variance(spark):
 def test_exp_smoothing_matches_recursion(spark):
     """The fold result equals the plain recursive filter computed in
     Python over the same monthly series."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.orders import (
         SMOOTH_ALPHA,
         orders_exp_smoothing,
     )
@@ -189,7 +183,7 @@ def test_exp_smoothing_matches_recursion(spark):
 def test_intervals_union_matches_sweep(spark):
     """Covered time and block count per user equal a plain-Python
     interval-merge sweep."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.events import (
         INTERVAL_US,
         events_intervals_union,
     )
@@ -222,7 +216,7 @@ def test_adamic_adar_matches_python(spark):
     """AA scores recomputed from the thresholded edge list in plain Python
     agree for every pair."""
     from mongodb_nats_connector_spark.operators.graph_common import trade_edges
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.graph import (
         KCORE_W_FACTOR,
         graph_adamic_adar,
     )
@@ -272,9 +266,7 @@ def test_adamic_adar_matches_python(spark):
 def test_balanced_class_exact_counts(spark):
     """Every class is sampled to exactly the minority count, and the kept
     ids are the hash-order prefix (deterministic across runs)."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        sample_balanced_class,
-    )
+    from mongodb_nats_connector_spark.operators.curation import sample_balanced_class
 
     out = sample_balanced_class(spark, SF).toPandas()
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
@@ -288,9 +280,7 @@ def test_balanced_class_exact_counts(spark):
 def test_borda_rank_is_permutation_and_monotone(spark):
     """final_rank is a permutation of 1..n and ordering by borda (ties by
     doc_id) reproduces it."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        docs_quality_ensemble_rank,
-    )
+    from mongodb_nats_connector_spark.operators.text import docs_quality_ensemble_rank
 
     out = docs_quality_ensemble_rank(spark, SF).toPandas()
     n = len(out)
@@ -306,7 +296,7 @@ def test_knn_classify_matches_python_vote(spark):
     construction — the operator's contract is the vote, not the corpus.)"""
     import numpy as np
 
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.text import (
         KNN_K,
         KNN_QUERIES,
         docs_knn_classify,
@@ -343,9 +333,7 @@ def test_knn_classify_matches_python_vote(spark):
 def test_lateness_audit_integers_consistent(spark):
     """n_late <= n_msgs; total lateness >= max lateness when any row is
     late; zero-late subjects report NULL max and 0 total."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        cdc_out_of_order_audit,
-    )
+    from mongodb_nats_connector_spark.operators.cdc import cdc_out_of_order_audit
 
     out = cdc_out_of_order_audit(spark, SF).toPandas()
     assert (out["n_late"] <= out["n_msgs"]).all()
@@ -359,9 +347,7 @@ def test_lateness_audit_integers_consistent(spark):
 def test_heaps_fit_sane(spark):
     """beta in (0, 1) (vocabulary grows sublinearly), totals consistent
     with direct counts."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        text_heaps_law_fit,
-    )
+    from mongodb_nats_connector_spark.operators.text import text_heaps_law_fit
 
     row = text_heaps_law_fit(spark, SF).collect()[0]
     assert 0 < row["beta"] < 1
@@ -375,7 +361,7 @@ def test_heaps_fit_sane(spark):
 def test_funnel_windowed_ordering_and_window(spark):
     """t1 <= t2 <= t3, every step within the window of t1, level counts
     monotone, and levels match a plain-pandas recompute."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.events import (
         FUNNEL_WINDOW_DAYS,
         events_funnel_windowed,
     )
@@ -414,7 +400,7 @@ def test_funnel_windowed_ordering_and_window(spark):
 
 def test_pmi_matches_python(spark):
     """PMI recomputed from raw counts in Python matches for every pair."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.text import (
         PMI_MIN_COUNT,
         docs_pmi_collocations,
     )
@@ -455,9 +441,7 @@ def test_autocorrelation_bounds_and_lag1(spark):
     """|acf| <= 1, and lag-1 matches a numpy recompute."""
     import numpy as np
 
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        agg_autocorrelation,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_autocorrelation
 
     out = agg_autocorrelation(spark, SF).toPandas().sort_values("lag")
     assert (out["acf"].abs() <= 1.0 + 1e-9).all()
@@ -476,9 +460,7 @@ def test_autocorrelation_bounds_and_lag1(spark):
 def test_survival_km_matches_python(spark):
     """The KM curve recomputed with a plain-Python product-limit estimator
     agrees at every duration, and survival is non-increasing in [0,1]."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        orders_survival_km,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_survival_km
 
     out = orders_survival_km(spark, SF).toPandas().sort_values("duration_days")
     s = out["survival"].to_numpy()
@@ -522,7 +504,7 @@ def test_assortativity_matches_numpy(spark):
     of the same thresholded edge list."""
     import numpy as np
 
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.graph import (
         _thresholded_und_edges,
         graph_assortativity,
     )
@@ -577,9 +559,7 @@ def test_skyline_tie_torture(spark, tmp_path):
         (10, 6, 20.0, "2024-01-02"),
         (11, 6, 10.0, "2024-01-03"),
     ]
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        orders_skyline_pareto,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_skyline_pareto
 
     _write_orders(spark, str(tmp_path), rows)
     got = {
@@ -608,7 +588,7 @@ def test_intervals_union_nesting_and_ties(spark, tmp_path):
     back-to-back touching intervals (half-open semantics: coverage never
     double counts; touching intervals are adjacent-but-disjoint, so they
     count as separate blocks), and a disjoint gap (two blocks)."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.events import (
         INTERVAL_US,
         events_intervals_union,
     )
@@ -651,9 +631,7 @@ def test_survival_km_total_extinction_guard(spark, tmp_path):
         (3, 2, 10.0, "2024-01-01"),
         (4, 2, 10.0, "2024-01-03"),
     ]
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        orders_survival_km,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_survival_km
 
     _write_orders(spark, str(tmp_path), rows)
     out = orders_survival_km(spark, str(tmp_path)).toPandas()
@@ -683,9 +661,7 @@ def test_did_identity_and_cells(spark):
     """The DiD estimate equals (T_post-T_pre)-(C_post-C_pre) recomputed
     from the emitted cell means, and the 4 cells partition all valued
     events."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
-        events_did_uplift,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_did_uplift
 
     out = events_did_uplift(spark, SF).toPandas()
     assert len(out) == 4
@@ -703,7 +679,7 @@ def test_contamination_check_matches_numpy(spark):
     exactly; clean eval rows carry NULLs and a zero count."""
     import numpy as np
 
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.similarity import (
         CONTAM_COS,
         CONTAM_EVAL_N,
         similarity_contamination_check,
@@ -751,7 +727,7 @@ def test_contamination_check_matches_numpy(spark):
 def test_paired_ttest_matches_pandas(spark):
     """t statistic recomputed from per-user pre/post sums in pandas
     matches; pairing uses the same split as CUPED (shared helper)."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.events import (
         CUPED_SPLIT_DAYS,
         events_paired_ttest,
     )
@@ -777,7 +753,7 @@ def test_paired_ttest_matches_pandas(spark):
 def test_shewhart_limits_and_flags(spark):
     """Control limits bracket the center symmetrically, flags agree with a
     pandas recompute, and in-control days dominate (3-sigma ~ 0.3%)."""
-    from mongodb_nats_connector_spark.operators.pipeline8 import (
+    from mongodb_nats_connector_spark.operators.orders import (
         SHEWHART_SIGMA,
         orders_shewhart_control,
     )

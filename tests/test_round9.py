@@ -24,7 +24,7 @@ SF01 = "/root/testdata/sf0.01"
 
 
 def test_bm25_matches_bruteforce(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.text import (
         BM25_B,
         BM25_K1,
         BM25_TERMS,
@@ -65,7 +65,7 @@ def test_bm25_matches_bruteforce(spark):
 
 
 def test_ols_matches_numpy_lstsq(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.double_sums import (
         orders_ols_multifactor,
     )
 
@@ -86,7 +86,7 @@ def test_ols_matches_numpy_lstsq(spark):
 
 
 def test_jarque_bera_matches_numpy(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import agg_jarque_bera
+    from mongodb_nats_connector_spark.operators.double_sums import agg_jarque_bera
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
     got = {r["l_returnflag"]: r for r in agg_jarque_bera(spark, SF).collect()}
@@ -108,7 +108,7 @@ def test_jarque_bera_matches_numpy(spark):
 
 
 def test_levene_bf_matches_pandas(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import agg_levene_bf
+    from mongodb_nats_connector_spark.operators.stats import agg_levene_bf
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o["x"] = (o["o_totalprice"] * 100).round()
@@ -131,7 +131,7 @@ def test_levene_bf_matches_pandas(spark):
 
 
 def test_bootstrap_poisson_ci_brackets_and_deterministic(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         BOOT_B,
         agg_bootstrap_poisson,
     )
@@ -148,9 +148,7 @@ def test_bootstrap_poisson_ci_brackets_and_deterministic(spark):
 
 
 def test_pettitt_matches_sign_double_sum(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_pettitt_changepoint,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_pettitt_changepoint
 
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
     ev = ev[ev["ts"].notna()]
@@ -172,9 +170,7 @@ def test_pettitt_matches_sign_double_sum(spark):
 
 
 def test_weibull_gaps_matches_numpy(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_weibull_gaps,
-    )
+    from mongodb_nats_connector_spark.operators.double_sums import events_weibull_gaps
 
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
     ev = ev[ev["user_id"].notna() & ev["ts"].notna()].copy()
@@ -199,9 +195,7 @@ def test_weibull_gaps_matches_numpy(spark):
 
 
 def test_mutual_information_matches_crosstab(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        agg_mutual_information,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_mutual_information
 
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
     ev = ev[ev["ts"].notna() & ev["event_type"].notna()].copy()
@@ -227,7 +221,7 @@ def test_mutual_information_matches_crosstab(spark):
 
 
 def test_newsvendor_matches_numpy_quantile(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.orders import (
         NV_Q,
         orders_newsvendor_fractile,
     )
@@ -255,9 +249,7 @@ def test_newsvendor_matches_numpy_quantile(spark):
 
 
 def test_dataset_card_share_closure_and_counts(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        curate_dataset_card,
-    )
+    from mongodb_nats_connector_spark.operators.curation import curate_dataset_card
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
     card = curate_dataset_card(spark, SF).toPandas()
@@ -275,9 +267,7 @@ def test_dataset_card_share_closure_and_counts(spark):
 
 
 def test_odds_ratio_ci_brackets_point(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_odds_ratio,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_odds_ratio
 
     rows = events_odds_ratio(spark, SF01).collect()
     assert len(rows) == 1
@@ -291,9 +281,7 @@ def test_odds_ratio_ci_brackets_point(spark):
 
 
 def test_mape_backtest_winner_consistent(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        orders_mape_backtest,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_mape_backtest
 
     r = orders_mape_backtest(spark, SF).collect()[0]
     assert r["n_months"] > 0
@@ -320,9 +308,7 @@ def test_mape_backtest_winner_consistent(spark):
 
 
 def test_effect_size_matches_numpy(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_effect_size,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_effect_size
 
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
     ev = ev[ev["user_id"].notna() & ev["value"].notna()].copy()
@@ -344,7 +330,7 @@ def test_effect_size_matches_numpy(spark):
 
 
 def test_holt_linear_matches_python_fold(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.orders import (
         HOLT_ALPHA,
         HOLT_BETA,
         orders_holt_linear,
@@ -381,7 +367,7 @@ def test_holt_linear_matches_python_fold(spark):
 
 
 def test_rake_phrases_are_stopword_free_runs(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.text import (
         _RAKE_STOPS,
         text_rake_keyphrases,
     )
@@ -414,9 +400,7 @@ def test_rake_phrases_are_stopword_free_runs(spark):
 
 
 def test_price_index_identities(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        orders_price_index,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_price_index
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
     got = orders_price_index(spark, SF).toPandas().sort_values("year")
@@ -449,9 +433,7 @@ def test_price_index_identities(spark):
 
 
 def test_dispersion_matches_pandas(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        agg_dispersion_test,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_dispersion_test
 
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
     ev = ev[ev["ts"].notna() & ev["event_type"].notna()]
@@ -474,7 +456,7 @@ def test_dispersion_matches_pandas(spark):
 
 
 def test_runs_test_matches_python(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import agg_runs_test
+    from mongodb_nats_connector_spark.operators.stats import agg_runs_test
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o["rev_c"] = (o["o_totalprice"] * 100).round().astype("int64")
@@ -523,9 +505,7 @@ def _write_events9(spark, path, rows):
 def test_pettitt_argmax_tie_breaks_to_earliest_day(spark, tmp_path):
     """A symmetric step series where multiple split points share the max
     |U|: the changepoint must be the EARLIEST argmax day in both engines."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_pettitt_changepoint,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_pettitt_changepoint
 
     # counts per day: 1,1,2,2 -> |U| peaks identically at t=2 (and t=2 only
     # by construction), then extend with a flat tail creating a tie plateau
@@ -552,9 +532,7 @@ def test_pettitt_argmax_tie_breaks_to_earliest_day(spark, tmp_path):
 
 
 def test_pettitt_constant_series_k_zero(spark, tmp_path):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_pettitt_changepoint,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_pettitt_changepoint
 
     rows = [
         (i * 10 + d, f"2024-02-{d:02d} 00:30:00", 1, "view")
@@ -571,9 +549,7 @@ def test_bootstrap_single_row_table_no_null_rank_divergence(spark, tmp_path):
     """One order: many replicates draw total weight 0 and MUST be dropped
     before ranking (a NULL mean would rank first in Spark, last in DuckDB).
     Surviving replicate means all equal the single order's value."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        agg_bootstrap_poisson,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_bootstrap_poisson
 
     _write_orders9(spark, str(tmp_path), [(1, 1, 123.45, "2024-01-01")])
     out = agg_bootstrap_poisson(spark, str(tmp_path)).collect()
@@ -589,9 +565,7 @@ def test_bootstrap_single_row_table_no_null_rank_divergence(spark, tmp_path):
 def test_weibull_periodic_gaps_zero_rows(spark, tmp_path):
     """Perfectly periodic events: every gap identical, regression
     denominator exactly 0 -> zero rows, not inf/NaN."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_weibull_gaps,
-    )
+    from mongodb_nats_connector_spark.operators.double_sums import events_weibull_gaps
 
     rows = [
         (i, f"2024-01-01 {i:02d}:00:00", 7, "view") for i in range(10)
@@ -602,9 +576,7 @@ def test_weibull_periodic_gaps_zero_rows(spark, tmp_path):
 
 def test_mutual_information_single_type_zero_rows(spark, tmp_path):
     """One event type -> H(X) = 0 -> NMI undefined -> zero rows."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        agg_mutual_information,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_mutual_information
 
     rows = [
         (i, f"2024-01-{1 + i % 7:02d} 09:00:00", 1, "view") for i in range(20)
@@ -614,7 +586,7 @@ def test_mutual_information_single_type_zero_rows(spark, tmp_path):
 
 
 def test_triplet_mining_matches_bruteforce(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.similarity import (
         TRIPLET_ANCHORS,
         TRIPLET_MARGIN,
         embedding_triplet_mining,
@@ -658,7 +630,7 @@ def test_triplet_mining_matches_bruteforce(spark):
 
 
 def test_median_test_matches_pandas(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import agg_median_test
+    from mongodb_nats_connector_spark.operators.stats import agg_median_test
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     x = (o["o_totalprice"] * 100).round()
@@ -684,7 +656,7 @@ def test_median_test_matches_pandas(spark):
 
 
 def test_power_analysis_formula_and_monotonicity(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.events import (
         POWER_MDE_PP,
         POWER_Z_ALPHA,
         POWER_Z_BETA,
@@ -720,9 +692,9 @@ def test_poisson_weight_ladder_calibration(spark):
     thresholds end-to-end rather than trusting the constants."""
     from pyspark.sql import functions as F
 
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.stats import (
         _POIS_CUM,
-        agg_bootstrap_poisson,  # noqa: F401 - ladder constants under test
+        agg_bootstrap_poisson,
     )
 
     # re-derive thresholds independently from the Poisson(1) pmf
@@ -815,7 +787,7 @@ def test_pettitt_rank_identity_under_ties(xs):
 def test_poisson_ladder_inverts_cdf(u):
     """The CASE ladder is the inverse CDF: for any uniform u, the weight k
     it assigns satisfies CDF(k-1) <= u < CDF(k)."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import _POIS_CUM
+    from mongodb_nats_connector_spark.operators.stats import _POIS_CUM
 
     k = next((i for i, t in enumerate(_POIS_CUM) if u < t), len(_POIS_CUM))
     if k > 0:
@@ -833,7 +805,7 @@ def test_poisson_ladder_inverts_cdf(u):
 def test_holt_integer_fold_is_float_smoothing(xs):
     """The integer-cent Holt fold stays within 1 cent per step of the
     unquantized float recursion — re-quantization bounds the drift."""
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.orders import (
         HOLT_ALPHA,
         HOLT_BETA,
     )
@@ -856,9 +828,7 @@ def test_holt_integer_fold_is_float_smoothing(xs):
 
 
 def test_spearman_matches_scipy_free_rederivation(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        agg_spearman_corr,
-    )
+    from mongodb_nats_connector_spark.operators.stats import agg_spearman_corr
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
     x = li["l_quantity"].round()
@@ -874,9 +844,7 @@ def test_spearman_matches_scipy_free_rederivation(spark):
 
 
 def test_nelson_aalen_matches_lifelines_free_rederivation(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        orders_nelson_aalen,
-    )
+    from mongodb_nats_connector_spark.operators.orders import orders_nelson_aalen
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
     o = o.sort_values(["o_custkey", "o_orderdate", "o_orderkey"])
@@ -917,7 +885,7 @@ def test_nelson_aalen_matches_lifelines_free_rederivation(spark):
 
 
 def test_js_divergence_bounds_and_symmetry(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
+    from mongodb_nats_connector_spark.operators.text import (
         JS_SOURCE_A,
         JS_SOURCE_B,
         docs_js_divergence,
@@ -954,9 +922,7 @@ def test_js_divergence_bounds_and_symmetry(spark):
 
 
 def test_entropy_rate_matches_crosstab(spark):
-    from mongodb_nats_connector_spark.operators.pipeline9 import (
-        events_entropy_rate,
-    )
+    from mongodb_nats_connector_spark.operators.events import events_entropy_rate
 
     ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
     ev = ev[ev["user_id"].notna() & ev["ts"].notna() & ev["event_type"].notna()]

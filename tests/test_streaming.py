@@ -391,7 +391,7 @@ def test_stream_stream_interval_join_left_outer(spark, tmp_path):
 def test_stream_static_enrich_matches_batch_query(spark, events_feed):
     """The registered stream_static_enrich spec (events ⋈ broadcast customer
     on user_id) run as a real stream equals its batch-checkable form."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
+    from mongodb_nats_connector_spark.operators.windows_batch import (
         stream_static_enrich,
     )
 
@@ -423,7 +423,7 @@ def test_stream_window_topk_matches_batch_query(spark, events_feed):
     the registered batch form."""
     from pyspark.sql import Window as W
 
-    from mongodb_nats_connector_spark.operators.mining5 import (
+    from mongodb_nats_connector_spark.operators.windows_batch import (
         TOPK_PER_WINDOW,
         stream_window_topk,
     )
@@ -468,7 +468,7 @@ def test_stateful_funnel_matches_batch_pattern_match(spark, events_feed):
     tuples) agrees with the batch regex over the full closed event set —
     including across micro-batch boundaries, where events arrive out of
     event-time order (the feed splits by event_id % 3, not by time)."""
-    from mongodb_nats_connector_spark.operators.mining5 import (
+    from mongodb_nats_connector_spark.operators.windows_batch import (
         window_pattern_match,
     )
     from mongodb_nats_connector_spark.streaming.windows import funnel_conversions

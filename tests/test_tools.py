@@ -31,6 +31,20 @@ def test_tooling_imports(path, tools_on_path):
     assert callable(module.main)
 
 
+def test_scale_probe_keeps_sections_it_does_not_write(tools_on_path):
+    scale_probe = importlib.import_module("scale_probe")
+    committed = (
+        "# SCALING\nold intro\n\n## Count-Min sketch (sf0.1, 600 rows)\nold\n\n"
+        "## Probe notes (hand-written)\nkept 1\n\n## Later probe\nkept 2\n"
+    )
+    generated = "# SCALING\nnew intro\n\n## Count-Min sketch (sf0.1, 900 rows)\nnew\n"
+    assert scale_probe.merge_scaling(generated, committed) == (
+        generated + "\n## Probe notes (hand-written)\nkept 1\n\n"
+        "## Later probe\nkept 2\n"
+    )
+    assert scale_probe.merge_scaling(generated, "") == generated
+
+
 # one row per replica table: its key and foreign-key columns
 FAKE_TABLES = {
     "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint",

@@ -12,7 +12,7 @@ between @register and its target function.)
 Run from the repo root:
     python tools/bitexact_probe.py                    # every driver-PENDING query
     python tools/bitexact_probe.py --all              # every oracle-bearing query
-    python tools/bitexact_probe.py --module pipeline9 # one operator module
+    python tools/bitexact_probe.py --module stats     # one operator module
     python tools/bitexact_probe.py name1 name2 ...    # named queries
 
 A driver-PENDING query is unproven or edited since its last green round

@@ -10,6 +10,8 @@ join, the shuffle, and executor memory all scale with. That count is exact
 and deterministic at every SF.
 
 Run from the repo root: python tools/scale_probe.py
+It rewrites the sections it generates and keeps every later section of the
+committed file, from the first ``## `` heading it does not write.
 """
 
 from __future__ import annotations
@@ -24,6 +26,22 @@ from bench import time_query  # noqa: E402
 from sf1_scaling import REPS, key_shifts, replica_dir  # noqa: E402
 
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
+
+
+def _heading_stem(line: str) -> str:
+    """A heading without its measured parenthetical (SF, row counts)."""
+    return line.split("(", 1)[0].strip()
+
+
+def merge_scaling(generated: str, committed: str) -> str:
+    """``generated`` followed by the committed file from its first ``## ``
+    heading that ``generated`` does not contain."""
+    own = {_heading_stem(x) for x in generated.splitlines() if x.startswith("## ")}
+    kept = committed.splitlines(keepends=True)
+    for i, line in enumerate(kept):
+        if line.startswith("## ") and _heading_stem(line) not in own:
+            return generated.rstrip("\n") + "\n\n" + "".join(kept[i:])
+    return generated
 
 
 def main() -> None:
@@ -87,7 +105,7 @@ def main() -> None:
     # Count-Min sketch: measured estimate error vs width at the largest SF
     # (evidence for the d×w sizing claim in SCALE.md — error tracks the
     # ~2n/w additive bound, so width is a dial, not a guess).
-    from mongodb_nats_connector_spark.operators.mining5 import CMS_A, CMS_B, CMS_PRIME
+    from mongodb_nats_connector_spark.operators.stats import CMS_A, CMS_B, CMS_PRIME
 
     cms_rows = []
     sf_dir = f"/root/testdata/{SFS[-1]}"
@@ -536,8 +554,12 @@ def main() -> None:
     out_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md"
     )
+    committed = ""
+    if os.path.exists(out_path):
+        with open(out_path) as f:
+            committed = f.read()
     with open(out_path, "w") as f:
-        f.write("\n".join(lines) + "\n")
+        f.write(merge_scaling("\n".join(lines) + "\n", committed))
     print(f"SCALING.md written ({len(rows)} SFs + headline exponents)")
     spark.stop()
 
