@@ -92,13 +92,3 @@ def envelope_to_extjson() -> Column:
         F.lit("}}"),
     ]
     return F.concat(*parts)
-
-
-def extjson_get_oid(json_col: Column, path: str) -> Column:
-    """Extract an ObjectId hex from an ExtJSON doc, e.g. path '$.documentKey._id'."""
-    return F.get_json_object(json_col, f"{path}.$oid")
-
-
-def extjson_get_date(json_col: Column, path: str) -> Column:
-    """Extract a relaxed {"$date": iso} as a timestamp."""
-    return F.to_timestamp(F.get_json_object(json_col, f"{path}.$date"))

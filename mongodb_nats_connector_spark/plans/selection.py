@@ -36,7 +36,7 @@ Spark's own interpolation (Percentile.getPercentile) in IEEE doubles:
 
 Python floats ARE IEEE doubles and +,-,* are correctly rounded, so the
 replay is bit-identical to the JVM evaluation — pinned by the property
-test in tests/test_r15_selection.py, which compares the replay against
+test in tests/test_plans.py, which compares the replay against
 ``F.percentile`` bit-for-bit on adversarial random multisets. For the
 doubled-median integer family (``med2 = round(percentile(x, .5) * 2)``
 over BIGINTs) no float ever appears: position's fraction is exactly 0 or

@@ -148,7 +148,7 @@ def needs_driver_proof(
     hash_verified: set[str] | None = None, digests: dict[str, str] | None = None
 ) -> list[str]:
     """Oracle-bearing queries the driver has not proven in their current
-    form, in registration order: no green hash row in any
+    form, sorted by name: no green hash row in any
     ``CORRECTNESS_r*.json`` artifact, or one recorded for another digest
     (the query or its oracle was edited since). ``hash_verified`` and
     ``digests`` default to the repo's artifacts and ``verified_digests.json``.
@@ -158,12 +158,12 @@ def needs_driver_proof(
         hash_verified, _ = _driver_verified()
     if digests is None:
         digests = _verified_digests()
-    return [
+    return sorted(
         n
         for n, q in _REGISTRY.items()
         if q.oracle is not None
         and not (n in hash_verified and digests.get(n) == query_digest(q))
-    ]
+    )
 
 
 def all_queries() -> dict[str, RegisteredQuery]:
@@ -173,8 +173,9 @@ def all_queries() -> dict[str, RegisteredQuery]:
     (``needs_driver_proof``; the driver's next 50-query window should spend
     its budget here). Rank 1: no oracle and never executed by the driver
     (gets a rows-only record). Rank 2: already driver-verified
-    (hash-matched, or rows-only and still oracle-less). Stable registration
-    order within each rank.
+    (hash-matched, or rows-only and still oracle-less). Names sort
+    alphabetically within each rank, so the order does not depend on which
+    module happens to be imported first.
 
     A past green row only counts while the implementation it proved is the
     current one: verification is keyed by ``query_digest`` (oracle SQL +
@@ -193,7 +194,7 @@ def all_queries() -> dict[str, RegisteredQuery]:
             return 0 if q.name in pending else 2
         return 2 if q.name in proven and digests.get(q.name) == query_digest(q) else 1
 
-    ordered = sorted(_REGISTRY.values(), key=rank)
+    ordered = sorted(_REGISTRY.values(), key=lambda q: (rank(q), q.name))
     return {q.name: q for q in ordered}
 
 

@@ -25,8 +25,6 @@ from mongodb_nats_connector_spark.config import (
 from mongodb_nats_connector_spark.functions.extjson import (
     CHANGE_EVENT_SCHEMA,
     envelope_to_extjson,
-    extjson_get_date,
-    extjson_get_oid,
 )
 from mongodb_nats_connector_spark.sources.change_events import (
     generate_change_event_rows,
@@ -593,8 +591,8 @@ def test_extjson_envelope_roundtrip(spark):
         "document_key_id",
         "wall_time",
         F.get_json_object("j", "$._id._data").alias("token"),
-        extjson_get_oid(F.col("j"), "$.documentKey._id").alias("oid"),
-        extjson_get_date(F.col("j"), "$.wallTime").alias("wall"),
+        F.get_json_object("j", "$.documentKey._id.$oid").alias("oid"),
+        F.to_timestamp(F.get_json_object("j", "$.wallTime.$date")).alias("wall"),
     )
     for r in parsed.collect():
         assert r.token == r._id_data

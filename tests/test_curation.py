@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+from fractions import Fraction
+
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.operators.curation import sample_hash_split
@@ -149,3 +152,31 @@ def test_pii_scrub_removes_all_matches(spark):
         assert r["n_emails"] >= 1  # the synthesized PII is always present
         assert not email.search(r["scrubbed"]), r["scrubbed"]
         assert not phone.search(r["scrubbed"]), r["scrubbed"]
+
+
+def test_pps_systematic_telescopes_to_k():
+    rng = random.Random(509)
+    for _ in range(60):
+        sizes = [rng.randint(1, 500) for _ in range(rng.randint(2, 40))]
+        t = sum(sizes)
+        k = 5
+        cum = 0
+        picks = 0
+        crossings = 0
+        for sz in sizes:
+            before, cum = cum, cum + sz
+            lo, hi = (k * before) // t, (k * cum) // t
+            crossings += hi - lo
+            if lo < hi:
+                picks += 1
+                # a lattice multiple of t/k lies in (before, cum]
+                assert any(
+                    before < Fraction(m * t, k) <= cum
+                    for m in range(1, k + 1)
+                )
+            else:
+                assert not any(
+                    before * k < m * t <= cum * k for m in range(1, k + 1)
+                )
+        assert crossings == k  # telescoping: floor(k*T/T) - floor(0)
+        assert picks <= k

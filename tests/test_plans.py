@@ -1,9 +1,17 @@
 """Plan-quality regression tests: the properties that keep these queries fast
-at 1000-executor / 100 TB scale, asserted on the actual physical plans."""
+at 1000-executor / 100 TB scale, asserted on the actual physical plans.
+
+The ``plans/selection.py`` tests check that the two-pass selection's
+driver-side replay of Spark's percentile interpolation is bit-identical to
+the JVM evaluation, the property the exact-median queries stand on."""
 
 from __future__ import annotations
 
+import random
+import struct
+
 import pytest
+from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.operators.relational import (
     filter_predicates,
@@ -22,6 +30,13 @@ from mongodb_nats_connector_spark.plans.explain import (
     has_take_ordered,
     pushed_filters,
     read_schemas,
+)
+from mongodb_nats_connector_spark.plans.selection import (
+    _median_ranks,
+    doubled_median2,
+    percentile_ranks,
+    selected_order_stats,
+    spark_percentile_replay,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -879,3 +894,84 @@ def test_entropy_rate_single_fact_exchange(spark):
     # remaining exchanges move cell-sized relations only
     df = events_entropy_rate(spark, SF)
     assert has_partial_aggregation(df)
+
+
+def _bits(x: float) -> bytes:
+    return struct.pack("<d", x)
+
+
+FRACS = [0.5, 0.9, 0.95, 0.99, 0.125, 7.0 / 8.0, 1.0 / 3.0]
+
+
+def test_percentile_replay_bit_exact_doubles(spark):
+    """Random multisets (heavy duplicates, odd/even/tiny sizes): replayed
+    percentile values must match F.percentile bit-for-bit for every
+    fraction, including the same-key and integer-position branches."""
+    rng = random.Random(20260818)
+    for n in [1, 2, 3, 4, 5, 7, 10, 33, 100, 101, 837]:
+        base = [rng.uniform(-1e6, 1e6) for _ in range(max(1, n // 3))]
+        vals = [rng.choice(base) for _ in range(n)]
+        df = spark.createDataFrame([(v,) for v in vals], "v double")
+        expected = df.agg(
+            F.percentile("v", F.array(*[F.lit(p) for p in FRACS])).alias(
+                "ps"
+            )
+        ).collect()[0]["ps"]
+        stats = selected_order_stats(
+            df, "v", lambda m: percentile_ranks(m, FRACS)
+        )
+        nn, at = stats[()]
+        assert nn == n
+        for p, e in zip(FRACS, expected):
+            g = spark_percentile_replay(nn, at, p)
+            assert _bits(g) == _bits(e), (n, p, g, e)
+
+
+def test_percentile_replay_bit_exact_grouped(spark):
+    rng = random.Random(77)
+    rows = []
+    for grp in ["A", "B", "C"]:
+        n = rng.choice([6, 11, 40])
+        base = [rng.uniform(0, 1e5) for _ in range(3)]
+        rows += [(grp, rng.choice(base) + rng.random()) for _ in range(n)]
+    df = spark.createDataFrame(rows, "g string, v double")
+    exp = {
+        r["g"]: r["m"]
+        for r in df.groupBy("g")
+        .agg(F.median("v").alias("m"))
+        .collect()
+    }
+    stats = selected_order_stats(df, "v", _median_ranks, ["g"])
+    for (g,), (n, at) in stats.items():
+        got = spark_percentile_replay(n, at, 0.5)
+        assert _bits(got) == _bits(exp[g]), (g, got, exp[g])
+
+
+def test_doubled_median2_exact_ints(spark):
+    """round(percentile(x, .5) * 2) over BIGINTs == v_lo + v_hi exactly."""
+    rng = random.Random(5)
+    for n in [1, 2, 9, 10, 250]:
+        vals = [rng.randrange(-(10**12), 10**12) for _ in range(n)]
+        vals += vals[: n // 2]  # duplicates
+        df = spark.createDataFrame([(v,) for v in vals], "v long")
+        exp = df.agg(
+            F.round(F.percentile("v", F.lit(0.5)) * 2)
+            .cast("bigint")
+            .alias("m2")
+        ).collect()[0]["m2"]
+        stats = selected_order_stats(
+            df, "v", _median_ranks
+        )
+        nn, at = stats[()]
+        assert doubled_median2(nn, at) == exp
+
+
+def test_selection_drops_nulls(spark):
+    df = spark.createDataFrame(
+        [(1.0,), (None,), (3.0,), (None,), (2.0,)], "v double"
+    )
+    exp = df.agg(F.median("v").alias("m")).collect()[0]["m"]
+    stats = selected_order_stats(df, "v", _median_ranks)
+    nn, at = stats[()]
+    assert nn == 3
+    assert _bits(spark_percentile_replay(nn, at, 0.5)) == _bits(exp)

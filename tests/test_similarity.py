@@ -1,0 +1,188 @@
+"""Embedding operators (``operators/similarity.py``, ``embedding_*``):
+pure-Python pins of their integer dot products, sign matrices and
+cluster-validity algebra, each against an independent reference
+(``test_stats.py`` says why).
+"""
+
+from __future__ import annotations
+
+import random
+from fractions import Fraction
+
+
+# ---------------------------------------------------------------------------
+# Truncated-dot agreement frame (embedding_truncation_fidelity)
+# ---------------------------------------------------------------------------
+
+
+def test_truncation_fidelity_integer_dots():
+    import math
+
+    rng = random.Random(109)
+    for _ in range(20):
+        d = 8
+        vecs = {
+            i: [rng.uniform(-1, 1) for _ in range(d)] for i in range(12)
+        }
+        q = {i: [math.floor(x * 1000) for x in v] for i, v in vecs.items()}
+        qid = 0
+        # full and half integer dots, argmax with id tie-break
+        def top1(dims):
+            best = None
+            for nb in vecs:
+                if nb == qid:
+                    continue
+                dot = sum(q[qid][k] * q[nb][k] for k in range(dims))
+                key = (-dot, nb)
+                if best is None or key < best[0]:
+                    best = (key, nb)
+            return best[1]
+
+        t_full, t_half = top1(d), top1(d // 2)
+        # the engine's zip_with/list_transform folds are plain ordered
+        # sums of the same integers — re-derive via reversed iteration
+        def top1_rev(dims):
+            best = None
+            for nb in sorted(vecs, reverse=True):
+                if nb == qid:
+                    continue
+                dot = sum(q[qid][k] * q[nb][k] for k in reversed(range(dims)))
+                key = (-dot, nb)
+                if best is None or key < best[0]:
+                    best = (key, nb)
+            return best[1]
+
+        assert top1(d) == top1_rev(d) == t_full
+        assert top1(d // 2) == top1_rev(d // 2) == t_half
+
+
+# ---------------------------------------------------------------------------
+# Rademacher sign matrix (embedding_rademacher_projection)
+# ---------------------------------------------------------------------------
+
+
+def test_rademacher_signs_deterministic_and_balanced():
+    from mongodb_nats_connector_spark.operators.similarity import _rademacher_signs
+
+    s1 = _rademacher_signs()
+    s2 = _rademacher_signs()
+    assert s1 == s2  # literal stability across calls/engines
+    flat = [v for row in s1 for v in row]
+    assert set(flat) == {-1, 1}
+    # md5 uniformity keeps the matrix roughly balanced
+    assert abs(sum(flat)) < 0.2 * len(flat)
+    # JL expectation: E||Sx||^2 = J * ||x||^2 over random x
+    rng = random.Random(257)
+    ratios = []
+    for _ in range(40):
+        x = [rng.randint(-50, 50) for _ in range(64)]
+        x2 = sum(v * v for v in x)
+        if x2 == 0:
+            continue
+        y2 = sum(
+            sum(s * v for s, v in zip(row, x)) ** 2 for row in s1
+        )
+        ratios.append(y2 / (16 * x2))
+    mean = sum(ratios) / len(ratios)
+    assert 0.7 < mean < 1.3
+
+
+def test_participation_ratio_equals_eigen_form():
+    import numpy as np
+
+    rng = random.Random(491)
+    for _ in range(20):
+        n, d = rng.randint(3, 20), rng.randint(2, 8)
+        X = np.array(
+            [[rng.randint(-50, 50) for _ in range(d)] for _ in range(n)],
+            dtype=np.int64,
+        )
+        M = X.T @ X
+        tr = int(np.trace(M))
+        fro2 = int((M * M).sum())
+        if fro2 == 0:
+            continue
+        lam = np.linalg.eigvalsh(M.astype(float))
+        pr_eig = lam.sum() ** 2 / (lam**2).sum()
+        pr_int = tr * tr / fro2
+        assert abs(pr_int - pr_eig) < 1e-6 * max(1.0, pr_eig)
+        assert 1 - 1e-9 <= pr_int <= d + 1e-9
+        # upper-triangle symmetry weighting matches the full sum
+        upper = sum(
+            (2 if i != j else 1) * int(M[i, j]) ** 2
+            for i in range(d)
+            for j in range(i, d)
+        )
+        assert upper == fro2
+
+
+def test_calinski_harabasz_cleared_terms():
+    rng = random.Random(499)
+    for _ in range(30):
+        k, d = rng.randint(2, 5), rng.randint(1, 4)
+        pts = []
+        for c in range(k):
+            for _ in range(rng.randint(2, 8)):
+                pts.append((c, [rng.randint(-20, 20) for _ in range(d)]))
+        N = len(pts)
+        G = [sum(p[1][j] for p in pts) for j in range(d)]
+        ssb = Fraction(0)
+        ssw = Fraction(0)
+        sst = Fraction(0)
+        gbar = [Fraction(G[j], N) for j in range(d)]
+        for c in range(k):
+            mem = [p[1] for p in pts if p[0] == c]
+            nc = len(mem)
+            S = [sum(x[j] for x in mem) for j in range(d)]
+            T = sum(x[j] ** 2 for x in mem for j in range(d))
+            cbar = [Fraction(S[j], nc) for j in range(d)]
+            ssw_c = sum(
+                sum((x[j] - cbar[j]) ** 2 for j in range(d)) for x in mem
+            )
+            ssb_c = nc * sum((cbar[j] - gbar[j]) ** 2 for j in range(d))
+            # cleared forms used by the operator
+            assert ssw_c == Fraction(
+                nc * T - sum(S[j] ** 2 for j in range(d)), nc
+            )
+            assert ssb_c == Fraction(
+                sum((N * S[j] - nc * G[j]) ** 2 for j in range(d)),
+                nc * N * N,
+            )
+            ssw += ssw_c
+            ssb += ssb_c
+        for _, x in pts:
+            sst += sum((x[j] - gbar[j]) ** 2 for j in range(d))
+        assert sst == ssb + ssw  # the variance decomposition
+
+
+def test_silhouette_and_dunn_distance_clearing():
+    rng = random.Random(503)
+    for _ in range(50):
+        d = rng.randint(1, 5)
+        nc, nd = rng.randint(1, 9), rng.randint(1, 9)
+        q = [rng.randint(-30, 30) for _ in range(d)]
+        S = [rng.randint(-200, 200) for _ in range(d)]
+        S2 = [rng.randint(-200, 200) for _ in range(d)]
+        ref = sum((q[j] - Fraction(S[j], nc)) ** 2 for j in range(d))
+        assert Fraction(
+            sum((nc * q[j] - S[j]) ** 2 for j in range(d)), nc * nc
+        ) == ref
+        ref2 = sum(
+            (Fraction(S[j], nc) - Fraction(S2[j], nd)) ** 2
+            for j in range(d)
+        )
+        assert Fraction(
+            sum((nd * S[j] - nc * S2[j]) ** 2 for j in range(d)),
+            nc * nc * nd * nd,
+        ) == ref2
+    # silhouette sign-split formula vs the textbook (b-a)/max(a,b)
+    for _ in range(50):
+        a, b = rng.randint(0, 10**6), rng.randint(0, 10**6)
+        if max(a, b) == 0:
+            continue
+        ref = Fraction(b - a, max(a, b))
+        if b >= a:
+            got = Fraction((1000 * (b - a)) // max(b, 1), 1000)
+        else:
+            got = -Fraction((1000 * (a - b)) // max(a, 1), 1000)
+        assert abs(got - ref) < Fraction(1, 1000)
