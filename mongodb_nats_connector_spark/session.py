@@ -41,6 +41,16 @@ _SCALE_SAFE_CONF = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     # Structured Streaming: per-epoch correctness over micro-optimization.
     "spark.sql.streaming.forceDeleteTempCheckpointLocation": "true",
+    # Spark's own fallback checkpoint manager: an offset or commit log entry
+    # is published by FileSystem.rename after an exists check — on the local
+    # filesystem File.renameTo. The default, FileContext-based manager
+    # renames through FileContext, whose link-status lookups fork `readlink`
+    # when Hadoop's native library is absent (two dozen forks per epoch).
+    # Both rename atomically on the local filesystem and on HDFS.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
     # NB: spark.sql.legacy.parquet.nanosAsLong is deliberately NOT set here:
     # sources/tables.py scopes it to each events read so other nanos tables
     # read in the same session keep their own semantics.

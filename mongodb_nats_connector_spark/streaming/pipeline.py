@@ -26,11 +26,15 @@ calls every driver of it already makes (``process_all_available`` and the
 serve loop's ``await_any_termination``) — the reference's watch loop likewise
 returns on an invalidate (client.go:232-235).
 
-Cost per epoch: the transform and the invalidate check are column
-expressions built once per pipeline, and the check is an ``Observation``
-riding the sink's write. In total-order mode the sink's window follows its
-``coalesce(1)``, so no Exchange is planned and the epoch is ONE Spark job;
-per-key mode adds the map stage of its shuffle on the document key.
+Cost per epoch: the transform (O4, O7, O8) is part of the streaming query
+itself — ``Connector.start`` projects the stream once, so Spark analyses the
+ExtJSON ``concat`` tree once at query start and hands each epoch's handler a
+planned RDD. The handler only observes, filters and drops on it, and the
+invalidate check is an ``Observation`` riding the sink's write. In total-order
+mode the sink sorts within its ``coalesce(1)``, so no Exchange is planned and
+the epoch is ONE Spark job; per-key mode adds the map stage of its shuffle on
+the document key. No per-epoch value is a literal in any plan, so the
+generated code of one epoch is reused by the next instead of recompiled.
 """
 
 from __future__ import annotations
@@ -59,7 +63,7 @@ def change_event_columns(
     """O4-O8 as column expressions: the publishable-op predicate (O5) and the
     message projection — msg id, routing subject (O8), relaxed-ExtJSON body
     (O7), cluster time and, for the sink's per-key-ordered mode, the document
-    key. Built once per pipeline and applied to every epoch."""
+    key. ``Connector.start`` applies them to the stream, once per pipeline."""
     cols = [
         F.col("_id_data").alias("msg_id"),  # Nats-Msg-Id (nats/client.go:124)
         F.concat(
@@ -142,16 +146,14 @@ class Connector:
         that would interrupt this very epoch before its commit. The
         Connector's next control call stops it (``_stop_invalidated``).
 
-        The invalidate check is an ``Observation`` on the raw batch, so it
-        rides the publish job instead of re-scanning the batch; the filter
-        and projection are built once, here, not per epoch."""
-        publishable, cols = change_event_columns(
-            stream_name, keep_document_key=self.order_within_key
-        )
+        The batch is the stream projected by ``change_event_columns`` plus
+        ``operation_type``. The invalidate check is an ``Observation`` on the
+        unfiltered batch, so it rides the publish job instead of re-scanning
+        the batch."""
+        publishable, _ = change_event_columns(stream_name)
         invalidates = F.count_if(
             F.col("operation_type") == INVALIDATE_OPERATION_TYPE
         ).alias("invalidates")
-        document_key = F.col("document_key_id")
 
         def handle(batch: DataFrame, epoch_id: int) -> None:
             if self.order_within_key:
@@ -159,9 +161,9 @@ class Connector:
                 # under the observation keeps the invalidate count when no
                 # row is publishable: AQE replaces a shuffle stage without
                 # output by an empty relation, observations inside it too.
-                batch = batch.repartition(document_key)
+                batch = batch.repartition("document_key")
             seen = Observation()
-            out = batch.observe(seen, invalidates).filter(publishable).select(*cols)
+            out = batch.observe(seen, invalidates).filter(publishable).drop("operation_type")
             sink.publish_batch(out, epoch_id)
             if seen.get["invalidates"]:
                 lifecycle["invalidated"] = True
@@ -184,7 +186,12 @@ class Connector:
                 metrics=self.metrics,
             )
             sink.add_stream()  # DDL bootstrap, idempotent (O13)
-            events = read_change_event_stream(self.spark, self.source_paths[key])
+            _, cols = change_event_columns(
+                coll.stream_name, keep_document_key=self.order_within_key
+            )
+            events = read_change_event_stream(self.spark, self.source_paths[key]).select(
+                *cols, "operation_type"
+            )
             checkpoint = f"{self.sink_root}/checkpoints/{coll.checkpoint_name}"
             lifecycle: dict = {}
             query = (

@@ -6,20 +6,33 @@ combined with publish-then-commit ordering this yields effectively-once
 delivery (README.md:118-127).
 
 Here the sink is a parquet "stream": one directory per JetStream stream
-(AddStream O13 = idempotent mkdir, internal/nats/client.go:105-118), epoch-
-partitioned writes inside ``foreachBatch``. Idempotency is the epoch trick:
-a replayed epoch overwrites its own partition (`epoch=<id>` subdir,
-dynamic partition overwrite), so a crash between publish and checkpoint
-commit re-publishes the same batch into the same location — at-least-once
-publish, msg-id-keyed storage, exactly-once observable state. Consumers read
-through ``read_messages`` which additionally dedups by msg_id, mirroring the
-NATS consumer-side dedup window.
+(AddStream O13 = idempotent mkdir, internal/nats/client.go:105-118), one
+subdirectory per epoch written inside ``foreachBatch``. Idempotency is the
+epoch trick: a replayed epoch overwrites its own directory, so a crash between
+publish and checkpoint commit re-publishes the same batch into the same
+location — at-least-once publish, msg-id-keyed storage, exactly-once
+observable state. Consumers read through ``read_messages`` which additionally
+dedups by msg_id, mirroring the NATS consumer-side dedup window.
 
-In total-order mode an epoch's publish is ONE Spark job: the ``coalesce(1)``
-comes before the ordering window, so no Exchange is planned and a single task
-reads, serializes, sorts and writes. The NATS counts (and the pipeline's
-invalidate check) are ``Observation`` aggregates riding the write, in either
-mode.
+On-disk layout::
+
+    <stream_dir>/messages/epoch=<id>/part-*.parquet
+        msg_id, subject, data, cluster_time, [document_key,] seq_in_epoch
+
+The epoch number lives only in the directory name; ``read_messages`` turns it
+back into an int ``epoch`` column (epochs written before that, with ``epoch``
+inside the file too, read the same). No ``_SUCCESS`` marker is written: the
+directory is the commit. ``msg_id`` and ``data`` differ from row to row
+within an epoch (but for a replayed token), and so does ``seq_in_epoch`` in
+total order, so they are written without a dictionary, which parquet would
+build and then drop; ``subject`` keeps one.
+
+In total-order mode ``seq_in_epoch`` is the row's position in token order,
+1-based: an epoch's publish is ONE Spark job, in which a ``coalesce(1)`` and a
+sort within that one partition come before a row counter, so no Exchange is
+planned and a single task reads, serializes, sorts and writes. The NATS counts
+(and the pipeline's invalidate check) are ``Observation`` aggregates riding
+the write, in either mode.
 """
 
 from __future__ import annotations
@@ -71,10 +84,13 @@ class JetStreamLikeSink:
         self.order_within_key = order_within_key
         self.metrics = MetricsRegistry() if metrics is None else metrics
         self.messages_dir = os.path.join(stream_dir, "messages")
-        order = (
-            Window.partitionBy("document_key") if order_within_key else Window
-        ).orderBy("msg_id")
-        self._seq_in_epoch = F.row_number().over(order)
+        # Total order numbers the rows of the single sorted partition; per-key
+        # order numbers them within each document key.
+        self._seq_in_epoch = (
+            F.row_number().over(Window.partitionBy("document_key").orderBy("msg_id"))
+            if order_within_key
+            else (F.monotonically_increasing_id() + 1).cast("int")
+        )
         # Subjects are enumerable — `<STREAM>.<operationType>` over the four
         # publishable op types — so the NATS counts are a row of conditional
         # counts riding the write job (no extra Spark job per epoch).
@@ -83,49 +99,53 @@ class JetStreamLikeSink:
             F.count_if(F.col("subject") == s).alias(f"n_{i}")
             for i, s in enumerate(self._subjects)
         ] + [F.count(F.lit(1)).alias("n_total")]
+        # a distinct value per row within an epoch: a dictionary of them
+        # would never be kept
+        unique = ("msg_id", "data") if order_within_key else ("msg_id", "data", "seq_in_epoch")
+        self._write_options = {
+            **{f"parquet.enable.dictionary#{c}": "false" for c in unique},
+            # a session conf would also drop the marker that
+            # operators/formats.py checks for
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs": "false",
+        }
 
     # O13 — idempotent DDL bootstrap (AddStream)
     def add_stream(self) -> None:
         os.makedirs(self.messages_dir, exist_ok=True)
 
-    def epoch_messages(self, batch: DataFrame, epoch_id: int) -> DataFrame:
+    def epoch_messages(self, batch: DataFrame) -> DataFrame:
         """The epoch's messages as written: ``batch`` plus ``seq_in_epoch``
-        (its position in token order) and ``epoch``.
+        (its position in token order).
 
         Total order (the reference's order is token order, client.go:217-257)
-        coalesces to one partition BEFORE the unpartitioned window: a single
-        partition already satisfies the window's all-rows distribution, so no
-        Exchange is planned and one task reads, serializes, sorts and writes
-        the epoch — the price of a total order, exactly like the reference's
-        single-threaded loop. Per-key order numbers rows within each
-        ``document_key``; different documents write concurrently behind the
-        window's one shuffle on the key."""
-        if self.order_within_key:
-            if "document_key" not in batch.columns:
-                raise ValueError(
-                    "order_within_key sink requires a document_key column "
-                    "(transform_change_events(..., keep_document_key=True))"
-                )
-        else:
-            batch = batch.coalesce(1)
-        return batch.withColumns(
-            {"seq_in_epoch": self._seq_in_epoch, "epoch": F.lit(int(epoch_id))}
-        )
+        coalesces to one partition and sorts it: one task reads, serializes,
+        sorts and writes the epoch, with no Exchange and no window buffering
+        the epoch's rows — the price of a total order, exactly like the
+        reference's single-threaded loop. Per-key order numbers rows within
+        each ``document_key``; different documents write concurrently behind
+        the window's one shuffle on the key."""
+        if not self.order_within_key:
+            batch = batch.coalesce(1).sortWithinPartitions("msg_id")
+        elif "document_key" not in batch.columns:
+            raise ValueError(
+                "order_within_key sink requires a document_key column "
+                "(transform_change_events(..., keep_document_key=True))"
+            )
+        return batch.withColumn("seq_in_epoch", self._seq_in_epoch)
 
     # O9 — publish with idempotency key; called per epoch by foreachBatch.
-    # An epoch without publishable rows writes an empty partition: the
+    # An epoch without publishable rows writes an empty epoch directory: the
     # consumer view is unchanged, and no job is spent checking first.
     def publish_batch(self, batch: DataFrame, epoch_id: int) -> None:
         observation = Observation()
-        writer = self.epoch_messages(batch, epoch_id).observe(
-            observation, *self._subject_counts
-        )
+        writer = self.epoch_messages(batch).observe(observation, *self._subject_counts)
         t0 = time.perf_counter()
         try:
             # Epoch-keyed overwrite = replay-safe (idempotent) publish.
             (
                 writer.write.mode("overwrite")
                 .format("parquet")
+                .options(**self._write_options)
                 .save(os.path.join(self.messages_dir, f"epoch={int(epoch_id)}"))
             )
         except Exception:
@@ -163,6 +183,7 @@ class JetStreamLikeSink:
         df = (
             self.spark.read.option("basePath", self.messages_dir)
             .parquet(os.path.join(self.messages_dir, "epoch=*"))
+            .withColumn("epoch", F.col("epoch").cast("int"))
         )
         if not deduped:
             return df

@@ -14,8 +14,10 @@ import json
 import os
 from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from mongodb_nats_connector_spark.config import (
     PUBLISHABLE_OPERATION_TYPES,
@@ -34,6 +36,7 @@ from mongodb_nats_connector_spark.sources.change_events import (
 from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
 from mongodb_nats_connector_spark.streaming.pipeline import (
     Connector,
+    change_event_columns,
     transform_change_events,
 )
 from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
@@ -59,6 +62,13 @@ def _jobs_since(spark, group, before):
     jobs = [tracker.getJobInfo(j) for j in set(tracker.getJobIdsForGroup(group)) - before]
     stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
     return jobs, stages
+
+
+def _projected(events, order_within_key=False):
+    """``events`` as the batch handler receives them: the stream projected
+    by ``change_event_columns`` in ``Connector.start``."""
+    _, cols = change_event_columns("COLL1", keep_document_key=order_within_key)
+    return events.select(*cols, "operation_type")
 
 
 def _connector(spark, tmp_path, n_docs=10, **feed_kw):
@@ -376,7 +386,7 @@ def test_invalidate_detected(spark, tmp_path):
         lifecycle: dict = {}
         ev = generate_change_events(spark, n_docs=2, with_noise_tail=noise)
         assert ev.filter(F.col("operation_type") == "invalidate").count() == int(noise)
-        conn._batch_handler(sink, "COLL1", lifecycle)(ev, epoch)
+        conn._batch_handler(sink, "COLL1", lifecycle)(_projected(ev), epoch)
         assert lifecycle.get("invalidated", False) is noise, f"epoch {epoch}"
 
 
@@ -405,7 +415,7 @@ def test_invalidate_flagged_by_the_publish_job(spark, tmp_path, order_within_key
             batch = generate_change_events(
                 spark, n_docs=n_docs, with_noise_tail=noise, with_duplicates=False
             )
-            handle(batch, epoch)
+            handle(_projected(batch, order_within_key), epoch)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert lifecycle.get("invalidated", False) is flagged, f"epoch {epoch}"
@@ -416,7 +426,7 @@ def test_invalidate_flagged_by_the_publish_job(spark, tmp_path, order_within_key
 
 @pytest.mark.parametrize("order_within_key, n_jobs", [(False, 1), (True, 2)])
 def test_epoch_job_shape(spark, tmp_path, monkeypatch, order_within_key, n_jobs):
-    """One epoch is one Spark job in total-order mode: the window follows the
+    """One epoch is one Spark job in total-order mode: the sort follows the
     ``coalesce(1)``, so the executed plan has no Exchange and one task reads,
     serializes, sorts and writes, with the invalidate check and the NATS
     counts riding it. Per-key mode runs two: its document_key shuffle's map
@@ -424,8 +434,8 @@ def test_epoch_job_shape(spark, tmp_path, monkeypatch, order_within_key, n_jobs)
     plans: list[str] = []
     epoch_messages = JetStreamLikeSink.epoch_messages
 
-    def record(sink, batch, epoch_id):
-        out = epoch_messages(sink, batch, epoch_id)
+    def record(sink, batch):
+        out = epoch_messages(sink, batch)
         plans.append(out._jdf.queryExecution().executedPlan().toString())
         return out
 
@@ -458,12 +468,125 @@ def test_epoch_job_shape(spark, tmp_path, monkeypatch, order_within_key, n_jobs)
     assert len(jobs) == n_jobs, f"batch 1 ran {len(jobs)} jobs"
     if order_within_key:
         assert plans[-1].count("Exchange") == 1, plans[-1]
-        assert "Exchange hashpartitioning(document_key_id" in plans[-1], plans[-1]
+        assert "Exchange hashpartitioning(document_key#" in plans[-1], plans[-1]
         assert max(st.numTasks for st in stages) > 1  # the map stage: one task per split
     else:
         assert "Exchange" not in plans[-1], plans[-1]
         assert [st.numTasks for st in stages] == [1]
     assert h.sink.message_count() == 80
+
+
+@pytest.mark.parametrize("order_within_key", [False, True])
+def test_epochs_reuse_generated_code(spark, tmp_path, order_within_key):
+    """Whole-stage codegen compiles an epoch's plans once: no per-epoch
+    value is a literal in the generated code, so the second and third epochs
+    hit the compiled-class cache and compile nothing."""
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    rows = generate_change_event_rows(n_docs=15, with_noise_tail=False, with_duplicates=False)
+    feed = str(tmp_path / "feed")
+    _land(spark, feed, rows[:20])
+    conn = Connector(
+        spark, COLL1, {"test-connector-db.coll1": feed}, sink_root=str(tmp_path / "sink"),
+        order_within_key=order_within_key, metrics=MetricsRegistry(),
+    )
+    counts = []
+    try:
+        (h,) = conn.start()
+        conn.process_all_available()
+        counts.append(compilations.getCount())
+        for epoch, lo in ((1, 20), (2, 40)):
+            _land(spark, feed, rows[lo : lo + 20])
+            conn.process_all_available()
+            assert h.query.lastProgress["batchId"] == epoch
+            counts.append(compilations.getCount())
+    finally:
+        conn.stop()
+    assert counts == [counts[0]] * 3, counts
+    assert h.sink.message_count() == 60
+
+
+def _parquet_files(path):
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
+
+
+@pytest.mark.parametrize("order_within_key", [False, True])
+def test_epoch_directory_layout(spark, tmp_path, order_within_key):
+    """An epoch directory holds only its part files: no ``_SUCCESS`` marker
+    and no ``epoch`` column (the directory name carries it). The columns
+    unique within an epoch — msg_id, data and, in total order, seq_in_epoch —
+    are written without a dictionary; subject, four values per stream, keeps
+    one, and so does the per-key seq_in_epoch. The consumer view still reads
+    ``epoch`` back as an int."""
+    sink = JetStreamLikeSink(
+        spark, str(tmp_path / "stream"), "COLL1", order_within_key=order_within_key
+    )
+    sink.add_stream()
+    events = generate_change_events(spark, n_docs=50, with_noise_tail=False)
+    sink.publish_batch(
+        transform_change_events(events, "COLL1", keep_document_key=order_within_key), 3
+    )
+    epoch_dir = os.path.join(sink.messages_dir, "epoch=3")
+    assert not os.path.exists(os.path.join(epoch_dir, "_SUCCESS"))
+    files = _parquet_files(epoch_dir)
+    assert files
+    dictionary: dict[str, set[bool]] = {}
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        assert "epoch" not in meta.schema.names
+        for g in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                col = meta.row_group(g).column(c)
+                dictionary.setdefault(col.path_in_schema, set()).add(col.has_dictionary_page)
+    assert dictionary["msg_id"] == dictionary["data"] == {False}
+    assert dictionary["seq_in_epoch"] == {order_within_key}
+    assert dictionary["subject"] == {True}
+    view = sink.read_messages(deduped=False)
+    assert dict(view.dtypes)["epoch"] == "int"
+    assert {r.epoch for r in view.select("epoch").distinct().collect()} == {3}
+
+
+@pytest.mark.parametrize("old_epoch", [0, 2])
+def test_read_messages_over_old_and_new_epoch_layouts(spark, tmp_path, old_epoch):
+    """A stream whose earlier epochs were written with ``epoch`` inside the
+    file as well as in the directory name reads like one written entirely in
+    the current layout: the same rows, the same types and the same dedup
+    (replayed tokens keep their earliest copy). The old-layout epoch is the
+    first or the last of three, so either layout can be the one whose footer
+    the reader infers the schema from."""
+    rows = generate_change_event_rows(n_docs=6, with_noise_tail=False, with_duplicates=False)
+    # epoch 1 replays two tokens of epoch 0, epoch 2 one of epoch 1
+    batches = [rows[:8], rows[6:16], rows[15:]]
+    mixed = JetStreamLikeSink(spark, str(tmp_path / "mixed"), "COLL1")
+    current = JetStreamLikeSink(spark, str(tmp_path / "current"), "COLL1")
+    for epoch, part in enumerate(batches):
+        batch = transform_change_events(
+            spark.createDataFrame(part, CHANGE_EVENT_SCHEMA), "COLL1"
+        )
+        current.publish_batch(batch, epoch)
+        if epoch != old_epoch:
+            mixed.publish_batch(batch, epoch)
+            continue
+        # the layout epochs had before: the window's 1-based token position
+        # and the epoch number inside the file
+        seq = F.row_number().over(Window.orderBy("msg_id"))
+        batch.coalesce(1).withColumns(
+            {"seq_in_epoch": seq, "epoch": F.lit(epoch)}
+        ).write.parquet(os.path.join(mixed.messages_dir, f"epoch={epoch}"))
+
+    def has_epoch_column(sink, epoch):
+        (f,) = _parquet_files(os.path.join(sink.messages_dir, f"epoch={epoch}"))
+        return "epoch" in pq.ParquetFile(f).schema_arrow.names
+
+    assert [has_epoch_column(mixed, e) for e in range(3)] == [e == old_epoch for e in range(3)]
+
+    for deduped in (False, True):
+        want = current.read_messages(deduped)
+        got = mixed.read_messages(deduped)
+        assert got.dtypes == want.dtypes
+        key = ["epoch", "seq_in_epoch"]
+        assert got.orderBy(key).collect() == want.orderBy(key).collect(), deduped
+    assert mixed.message_count(deduped=False) == len(rows) + 3
+    assert mixed.message_count() == len(rows)
 
 
 @pytest.mark.parametrize("order_within_key", [False, True])

@@ -10,7 +10,6 @@ from __future__ import annotations
 import random
 import struct
 
-import pytest
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.operators.relational import (

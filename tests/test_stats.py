@@ -26,7 +26,6 @@ SF = "/root/testdata/sf0.001"
 def test_mann_kendall_matches_pairwise(spark):
     """S, 18*Var and z must match the O(n^2) definition with tie
     correction, and agree in direction with agg_theil_sen's slope sign."""
-    from mongodb_nats_connector_spark.operators.double_sums import agg_roc_auc
     from mongodb_nats_connector_spark.operators.stats import agg_mann_kendall
 
     o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
