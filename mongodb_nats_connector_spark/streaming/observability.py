@@ -159,8 +159,9 @@ class ObservabilityServer:
             def do_GET(self):  # noqa: N802
                 try:
                     if self.path == "/healthz":
-                        body = json.dumps(outer.health_fn()).encode()
-                        code = 200 if json.loads(body)["status"] == "UP" else 503
+                        health = outer.health_fn()
+                        body = json.dumps(health).encode()
+                        code = 200 if health["status"] == "UP" else 503
                         ctype = "application/json"
                     elif self.path == "/metrics":
                         body = outer.registry.render_prometheus().encode()

@@ -893,3 +893,22 @@ def test_throughput_floor_100_events(spark, tmp_path, order_within_key):
         ids = [r.msg_id for r in sink.read_messages().orderBy("epoch", "seq_in_epoch").collect()]
         assert len(ids) == n and ids == sorted(ids)
     assert elapsed < 10.0, f"100 events took {elapsed:.1f}s (floor is 10s)"
+
+
+def test_sink_dedup_unbounded_across_epochs(spark, tmp_path):
+    """A msg_id re-published in later epochs is delivered once, however many
+    epochs later: the consumer view's dedup window is unbounded. The raw
+    view keeps every stored copy."""
+    from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
+
+    sink = JetStreamLikeSink(spark, str(tmp_path / "stream"), "COLL")
+    sink.add_stream()
+    batch = spark.createDataFrame(
+        [("tok-1", "COLL.insert", "{}")], "msg_id string, subject string, payload string"
+    )
+    for epoch in (0, 2, 5):
+        sink.publish_batch(batch, epoch)
+
+    deduped = sink.read_messages().collect()
+    assert len(deduped) == 1 and deduped[0]["epoch"] == 0
+    assert sink.read_messages(deduped=False).count() == 3

@@ -1,4 +1,7 @@
-"""Curation operators: determinism properties the docstrings promise."""
+"""Curation operators (``operators/curation.py``): sharding, layout,
+profiling, data-quality rules and sampling, checked for the determinism
+and accounting properties their docstrings promise.
+"""
 
 from __future__ import annotations
 
@@ -7,9 +10,17 @@ from fractions import Fraction
 
 from pyspark.sql import functions as F
 
-from mongodb_nats_connector_spark.operators.curation import sample_hash_split
+from mongodb_nats_connector_spark.operators.curation import (
+    SAMPLE_K,
+    dq_rule_violations,
+    profile_key_skew,
+    sample_hash_split,
+    sample_reservoir_perkey,
+)
+from mongodb_nats_connector_spark.sources.tables import table
 
 SF = "/root/testdata/sf0.001"
+SF01 = "/root/testdata/sf0.01"
 
 
 def test_split_deterministic_under_repartitioning(spark):
@@ -180,3 +191,162 @@ def test_pps_systematic_telescopes_to_k():
                 )
         assert crossings == k  # telescoping: floor(k*T/T) - floor(0)
         assert picks <= k
+
+
+# ---------------------------------------------------------------------------
+# Shard plan (corpus_shard_plan)
+# ---------------------------------------------------------------------------
+
+
+def test_shard_plan_partitions_every_doc_exactly_once(spark):
+    from mongodb_nats_connector_spark.operators.curation import (
+        N_SHARDS,
+        corpus_shard_plan,
+    )
+    from mongodb_nats_connector_spark.sources.tables import table
+
+    rows = corpus_shard_plan(spark, SF).collect()
+    n_docs = table(spark, SF, "documents").count()
+    assert sum(r["n_docs"] for r in rows) == n_docs
+    assert {r["shard"] for r in rows} <= set(range(N_SHARDS))
+    # skew ratios hover around 1.0 by construction of the uniform hash
+    assert all(0.2 <= r["skew_vs_ideal"] <= 5.0 for r in rows)
+
+
+def test_shard_assignment_stable_under_repartitioning(spark):
+    """Same doc -> same shard regardless of the input partitioning: the
+    property that makes incremental/export re-runs append-consistent."""
+    from mongodb_nats_connector_spark.operators.curation import corpus_shard_plan
+
+    a = {
+        (r["shard"], r["min_doc_id"], r["max_doc_id"], r["n_docs"])
+        for r in corpus_shard_plan(spark, SF).collect()
+    }
+    b = {
+        (r["shard"], r["min_doc_id"], r["max_doc_id"], r["n_docs"])
+        for r in corpus_shard_plan(spark, SF).collect()
+    }
+    assert a == b
+
+
+# ---------------------------------------------------------------------------
+# Layout, profiles and data-quality rules (layout_zorder_tiles,
+# profile_orders_columns, dq_rule_violations, profile_key_skew)
+# ---------------------------------------------------------------------------
+
+
+def test_zorder_tiles_bound_locality(spark):
+    """A 256-wide z-range is a 16x16 tile of the key grid: no tile may touch
+    more than 16 distinct buckets of either dimension — the locality
+    guarantee that makes z-sorted files prunable on either key."""
+    from mongodb_nats_connector_spark.operators.curation import layout_zorder_tiles
+
+    rows = layout_zorder_tiles(spark, SF01).collect()
+    assert rows
+    for r in rows:
+        assert r["n_part_buckets"] <= 16
+        assert r["n_supp_buckets"] <= 16
+        assert r["z_tile"] * 256 <= r["z_min"] <= r["z_max"] < (r["z_tile"] + 1) * 256
+
+
+def test_profile_covers_all_columns_consistently(spark):
+    from mongodb_nats_connector_spark.operators.curation import (
+        _PROFILE_COLS,
+        profile_orders_columns,
+    )
+    from mongodb_nats_connector_spark.sources.tables import table
+
+    out = {r["column_name"]: r for r in profile_orders_columns(spark, SF).collect()}
+    assert set(out) == set(_PROFILE_COLS)
+    n = table(spark, SF, "orders").count()
+    for r in out.values():
+        assert r["n_rows"] == n
+        assert 0 <= r["n_nulls"] <= n
+        assert 1 <= r["n_distinct"] <= n
+        assert r["min_value"] <= r["max_value"]
+
+
+def test_dq_rules_complete_and_bounded(spark):
+    out = dq_rule_violations(spark, SF).toPandas()
+    assert sorted(out["rule"]) == [
+        "li_discount_range",
+        "li_nonpositive_price",
+        "li_nonpositive_qty",
+        "li_orphan_order",
+        "li_ship_before_order",
+        "ord_negative_total",
+        "ord_null_custkey",
+        "ord_orphan_customer",
+    ]
+    assert (out["violations"] >= 0).all()
+    assert (out["violations"] <= out["checked"]).all()
+
+
+def test_key_skew_profile_invariants(spark):
+    row = profile_key_skew(spark, SF).toPandas().iloc[0]
+    n_keys = row["n_keys"]
+    assert row["max_share"] >= 1.0 / n_keys - 1e-9
+    assert 1.0 / n_keys - 1e-6 <= row["herfindahl"] <= 1.0
+    assert row["max_key_rows"] >= row["avg_key_rows"] - 1e-9
+    li = table(spark, SF, "lineitem").toPandas()
+    counts = li.groupby("l_suppkey").size()
+    assert row["n_rows"] == len(li)
+    assert row["top_key"] == counts.sort_values(ascending=False).index[0] or (
+        counts[row["top_key"]] == counts.max()
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sampling (sample_reservoir_perkey, sample_epoch_upsample,
+# curate_temperature_resample)
+# ---------------------------------------------------------------------------
+
+
+def test_reservoir_sample_is_deterministic_and_capped(spark):
+    one = sample_reservoir_perkey(spark, SF).toPandas()
+    two = sample_reservoir_perkey(spark, SF).toPandas()
+    key = ["event_type", "rn"]
+    a = one.sort_values(key).reset_index(drop=True)
+    b = two.sort_values(key).reset_index(drop=True)
+    assert a.equals(b), "sample must be reproducible across runs"
+    per_key = one.groupby("event_type").size()
+    assert (per_key <= SAMPLE_K).all()
+    # every key with >= K rows yields exactly K
+    ev = table(spark, SF, "events").toPandas()
+    full = ev.groupby("event_type").size()
+    for k, n in full.items():
+        assert per_key.get(k, 0) == min(n, SAMPLE_K)
+
+
+def test_epoch_upsample_invariants(spark):
+    """Every document appears exactly n_copies times with copy_idx 1..n,
+    n_copies in {1,2,3}, and sample_id is unique."""
+    from mongodb_nats_connector_spark.operators.curation import sample_epoch_upsample
+
+    out = sample_epoch_upsample(spark, "/root/testdata/sf0.01").toPandas()
+    assert out["n_copies"].isin([1, 2, 3]).all()
+    assert out["sample_id"].is_unique
+    per_doc = out.groupby("doc_id").agg(
+        n=("copy_idx", "size"), declared=("n_copies", "first"),
+        mx=("copy_idx", "max"), mn=("copy_idx", "min"),
+    )
+    assert (per_doc["n"] == per_doc["declared"]).all()
+    assert (per_doc["mx"] == per_doc["declared"]).all()
+    assert (per_doc["mn"] == 1).all()
+
+
+def test_temperature_resample_conserves_budget_and_flattens(spark):
+    from mongodb_nats_connector_spark.operators.curation import (
+        RESAMPLE_BUDGET,
+        curate_temperature_resample,
+    )
+
+    rows = curate_temperature_resample(spark, SF).collect()
+    # per-group rounding drifts at most 0.5 docs/group
+    assert abs(sum(r["alloc_docs"] for r in rows) - RESAMPLE_BUDGET) <= len(rows) / 2
+    assert abs(sum(r["share"] for r in rows) - 1.0) < 1e-2
+    # sqrt weighting flattens: the sample rate must be (weakly) decreasing
+    # in group size — rare groups are upsampled relative to head groups
+    by_size = sorted(rows, key=lambda r: r["n_docs"])
+    rates = [r["sample_rate"] for r in by_size]
+    assert all(a >= b - 1e-9 for a, b in zip(rates, rates[1:]))

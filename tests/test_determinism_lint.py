@@ -1,4 +1,4 @@
-"""Registry-wide determinism lint: float round() on the hash surface.
+"""Package-wide lints: float round() on the hash surface, bare persist().
 
 The last three driver-only hash divergences (orders_exp_smoothing r8,
 orders_nelson_aalen r8 AND r9) were all ONE pattern: ``round()`` applied
@@ -22,6 +22,10 @@ half-away division is ``(2*a + b) div (2*b)`` on exact integers, see
 orders_nelson_aalen — or be added here with a one-line justification in
 the same commit explaining why the argument can never tie on a
 round-half boundary and never passes through libm.
+
+``test_no_new_bare_persists`` pins the count of bare ``.persist()`` sites
+per module, each paired with the release that keeps it from leaking a
+session-lifetime cache entry.
 """
 
 import inspect
@@ -251,3 +255,73 @@ def test_nelson_aalen_hash_surface_is_all_integer():
     src = inspect.getsource(q.fn)
     assert _risky_round_sites(q) == 0
     assert "div (2 * n_risk)" in src and "// (2 * n_risk)" in src
+
+
+def test_no_new_bare_persists():
+    """Bare .persist() in an operator leaks a session-lifetime cache entry
+    unless the function itself unpersists (driver-loop pattern) or the
+    cache is a documented cross-query share. Every allowed site is pinned
+    here; new intermediates that outlive the function must go through
+    plans.caching.persist_until_collected instead."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    allowed = {
+        # file -> bare-persist count, each paired with an in-function
+        # unpersist (BPE/dedup-clusters driver loops), the documented
+        # session-scoped shingle cache, or a release_on_gc /
+        # persist_until_collected release on the returned result.
+        # Two-pass-rank inputs are cached BEFORE the helper's
+        # construction-time boundary-sketch job (else the upstream rollup
+        # recomputes per pass).
+        "operators/dedup.py": 3,  # shingle cache + dedup_clusters loop
+        "operators/double_sums.py": 1,  # weibull gaps
+        "operators/events.py": 2,  # hourly-profile 24x7 grid,
+        # type-cooccurrence user-day grain
+        "operators/graph.py": 7,  # triangle edges, jaccard deg (runtime-
+        # stat broadcast gates), eccentricity's nation-sized relation,
+        # harmonic-centrality distances, clustering-coefficient adjacency
+        # + per-node relations, reciprocity edges
+        "operators/orders.py": 21,  # basket-lift items (broadcast gate),
+        # seasonal-decompose month series, tukey k-sized group stats,
+        # decile-lift input, c-index duration x bucket cells,
+        # regression-diagnostics month index + residual rows,
+        # seasonality-strength detrended rows, cusum daily grid + scaled
+        # increments, bartels day series, durbin-watson month index,
+        # pacf month index + centered values, xmr moving ranges,
+        # demand-class daily grid, association-metrics baskets, gini's
+        # two-pass-rank input, skyline per_cust, abc rev, pareto
+        # per-customer rollup
+        "operators/relational.py": 2,  # ltv + rfm per-customer rollups
+        "operators/similarity.py": 5,  # MMR candidate pool (cached
+        # BEFORE its bounded driver-collect loop), PQ codebook + ANN-PQ
+        # embedding relations (before their bounded k-means collects),
+        # hubness's and TwoNN's quantized embedding relation
+        "operators/stats.py": 20,  # ljung-box day series, cochran-q
+        # presence matrix, friedman month x priority cells + rank sums,
+        # trimmed-mean ranked day series, mann-kendall day series, JT
+        # priority x price-domain cells, page-test monthly grid,
+        # permutation-test daily series, quade monthly grid + gated grid
+        # + score cells, siegel cells, breslow strata, winsorized
+        # cumulative grid, concordance ranks, gamma's 2D grid cells,
+        # welch's weight relation, hll's deduplicated user-day relation,
+        # spearman fact projection
+        "operators/text.py": 9,  # BPE learn loop (lex + nxt),
+        # Kneser-Ney bigram-type rollup (unpersisted before return),
+        # burstiness (doc, word) counts, winnowing gram hashes,
+        # dale-chall tokens, vocab-overlap word sets, gries' (word,
+        # source) counts, quality-ensemble sig
+        # (graph_cc_bigstar's CC loop uses eager localCheckpoint per
+        # round — plan truncation, not a bare persist)
+    }
+    pkg = root / "mongodb_nats_connector_spark"
+    found = {}
+    for sub in ("operators", "streaming", "sources", "functions"):
+        for f in sorted((pkg / sub).glob("*.py")):
+            n = f.read_text().count(".persist()")
+            if n:
+                found[f"{sub}/{f.name}"] = n
+    assert found == allowed, (
+        f"bare persist() sites changed: {found} != {allowed} — use "
+        "persist_until_collected for intermediates the returned plan needs"
+    )

@@ -1,4 +1,5 @@
-"""Event-stream analytics (``operators/events.py``, ``events_*``): burst
+"""Event-stream analytics (``operators/events.py``, ``events_*``): calendar
+fills and rollups, conversion and funnels, activity streaks, burst
 detection, series diagnostics and control rules.
 
 Spark tests recompute a query's result on the smoke tables from its
@@ -15,6 +16,10 @@ from fractions import Fraction
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
+
+from mongodb_nats_connector_spark.operators.events import events_time_to_convert
+from mongodb_nats_connector_spark.sources.tables import table
 
 SF = "/root/testdata/sf0.001"
 
@@ -265,3 +270,186 @@ def test_hampel_threshold_and_window_median():
         flag_int = 10000 * abs(x - med) > 44478 * mad
         flag_frac = abs(x - med) > Fraction(44478, 10000) * mad
         assert flag_int == flag_frac
+
+
+# ---------------------------------------------------------------------------
+# Calendar fill and rollups (events_time_gap_fill, events_time_rollup,
+# events_locf_fill)
+# ---------------------------------------------------------------------------
+
+
+def test_gap_fill_is_dense_and_consistent(spark):
+    """Output must cover every (event_type, day) cell of the calendar; filled
+    values on observed rows equal the daily aggregate."""
+    from mongodb_nats_connector_spark.operators.events import events_time_gap_fill
+
+    out = events_time_gap_fill(spark, SF).toPandas()
+    n_types = out["event_type"].nunique()
+    n_days = out["day"].nunique()
+    assert len(out) == n_types * n_days
+    # forward fill: an unobserved day carries some earlier day's value (or 0)
+    assert (out.loc[~out["observed"], "filled_value"] >= 0).all()
+
+
+def test_time_rollup_grand_total_matches(spark):
+    """The grain-3 row is the grand total: its n_events equals the raw count."""
+    from mongodb_nats_connector_spark.operators.events import events_time_rollup
+    from mongodb_nats_connector_spark.sources.tables import table
+
+    out = events_time_rollup(spark, SF).collect()
+    grand = [r for r in out if r["grain"] == 3]
+    assert len(grand) == 1
+    raw = table(spark, SF, "events").count()
+    assert grand[0]["n_events"] == raw
+    # every grain's events sum to the same total
+    for g in (0, 1, 2):
+        assert sum(r["n_events"] for r in out if r["grain"] == g) == raw
+
+
+def test_locf_matches_pandas_ffill(spark):
+    from mongodb_nats_connector_spark.operators.events import events_locf_fill
+
+    got = events_locf_fill(spark, SF).toPandas()
+    ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
+    # match the operator's SQL semantics: event_type <> 'error' is NULL (not
+    # true) for NULL event_type, so those rows must be gaps too
+    ev["v"] = ev["value"].where(
+        ev["event_type"].notna() & (ev["event_type"] != "error")
+    )
+    ev = ev.sort_values(["user_id", "ts", "event_id"])
+    ev["v_filled"] = ev.groupby("user_id")["v"].ffill()
+    ref = ev.set_index("event_id")[["v", "v_filled"]]
+    assert len(got) == len(ev)  # LOCF is 1:1 — no rows dropped
+    g = got.set_index("event_id")[["v", "v_filled"]].reindex(ref.index)
+    for col in ("v", "v_filled"):
+        assert (
+            (g[col] == ref[col]) | (g[col].isna() & ref[col].isna())
+        ).all(), col
+
+
+# ---------------------------------------------------------------------------
+# Conversion and funnels (events_time_to_convert, events_funnel_paths_topk)
+# ---------------------------------------------------------------------------
+
+
+def test_time_to_convert_nonnegative_and_consistent(spark):
+    out = events_time_to_convert(spark, SF).toPandas()
+    ev = table(spark, SF, "events").toPandas()
+    signups = set(ev[ev["event_type"] == "signup"]["user_id"])
+    assert set(out["user_id"]) == signups
+    conv = out.dropna(subset=["micros_to_convert"])
+    assert (conv["micros_to_convert"] >= 0).all()
+    assert (conv["first_purchase_ts"] >= conv["signup_ts"]).all()
+
+
+def test_funnel_paths_counts_partition_users(spark):
+    from mongodb_nats_connector_spark.operators.events import events_funnel_paths_topk
+
+    out = events_funnel_paths_topk(spark, SF).toPandas()
+    n_users = table(spark, SF, "events").select("user_id").distinct().count()
+    assert out["n_users"].sum() <= n_users
+    assert (np.diff(out["n_users"].values) <= 0).all()
+
+
+# ---------------------------------------------------------------------------
+# Activity (events_stickiness_dau_wau, events_max_concurrency,
+# events_activity_streaks)
+# ---------------------------------------------------------------------------
+
+
+def test_stickiness_bounds_and_wau_dominates_dau(spark):
+    """stickiness = dau/wau must lie in (0, 1]; WAU >= DAU every day (the
+    trailing window contains the day itself); and WAU never exceeds the
+    total user population."""
+    from mongodb_nats_connector_spark.operators.events import events_stickiness_dau_wau
+
+    sf = "/root/testdata/sf0.01"
+    out = events_stickiness_dau_wau(spark, sf).toPandas()
+    users = (
+        spark.read.parquet(f"{sf}/events.parquet").select("user_id").distinct().count()
+    )
+    assert len(out) > 0
+    assert (out["wau"] >= out["dau"]).all()
+    assert (out["dau"] >= 1).all()
+    assert (out["wau"] <= users).all()
+    assert ((out["stickiness"] > 0) & (out["stickiness"] <= 1)).all()
+
+
+def test_max_concurrency_bounded_by_daily_actives(spark):
+    """Peak concurrent sessions on a day can never exceed the number of
+    users active that day, and is at least 1 on every reported day."""
+    from mongodb_nats_connector_spark.operators.events import events_max_concurrency
+
+    sf = "/root/testdata/sf0.01"
+    out = events_max_concurrency(spark, sf).toPandas().set_index("day")
+    ev = spark.read.parquet(f"{sf}/events.parquet")
+    dau = (
+        ev.selectExpr("CAST(date_trunc('day', ts) AS TIMESTAMP) AS day", "user_id")
+        .distinct()
+        .groupBy("day")
+        .count()
+        .toPandas()
+        .set_index("day")["count"]
+    )
+    assert (out["max_concurrent"] >= 1).all()
+    joined = out.join(dau.rename("dau"), how="left")
+    assert (joined["max_concurrent"] <= joined["dau"]).all()
+
+
+def test_streaks_match_pandas_rederivation(spark):
+    from mongodb_nats_connector_spark.operators.events import events_activity_streaks
+
+    got = {
+        r["user_id"]: (r["streak_days"], r["streak_start"])
+        for r in events_activity_streaks(spark, SF).collect()
+    }
+    ev = spark.read.parquet(f"{SF}/events.parquet").select(
+        "user_id", F.col("ts").cast("date").alias("day")
+    )
+    pdf = ev.toPandas().drop_duplicates()
+    ref = {}
+    for uid, grp in pdf.groupby("user_id"):
+        days = sorted(grp["day"])
+        best_len, best_start = 0, None
+        run_len, run_start = 0, None
+        prev = None
+        for d in days:
+            if prev is not None and (d - prev) == pd.Timedelta(days=1):
+                run_len += 1
+            else:
+                run_len, run_start = 1, d
+            if run_len > best_len:
+                best_len, best_start = run_len, run_start
+            prev = d
+        ref[uid] = (best_len, best_start)
+    assert got == ref
+
+
+def test_streaks_two_exchanges_only(spark):
+    """The plan claim in the docstring: (user, day) distinct plus ONE
+    user_id exchange that serves the window, the streak aggregation, and
+    the per-user argmax."""
+    from mongodb_nats_connector_spark.operators.events import events_activity_streaks
+    from mongodb_nats_connector_spark.plans.explain import count_key_exchanges
+
+    assert count_key_exchanges(events_activity_streaks(spark, SF)) == 2
+
+
+# ---------------------------------------------------------------------------
+# CUSUM changepoint (events_cusum_changepoint)
+# ---------------------------------------------------------------------------
+
+
+def test_cusum_telescopes_and_flags_unique_argmax(spark):
+    from mongodb_nats_connector_spark.operators.events import events_cusum_changepoint
+
+    rows = events_cusum_changepoint(spark, SF).orderBy("day").collect()
+    # telescoping identity: S_n = prefix_n - n*mean = 0 exactly
+    assert rows[-1]["cusum"] == 0.0
+    flagged = [r for r in rows if r["is_changepoint"]]
+    assert len(flagged) == 1
+    peak = max(abs(r["cusum"]) for r in rows)
+    assert abs(flagged[0]["cusum"]) == peak
+    # ties break to the earliest day
+    first_at_peak = min(r["day"] for r in rows if abs(r["cusum"]) == peak)
+    assert flagged[0]["day"] == first_at_peak

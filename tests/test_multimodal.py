@@ -427,3 +427,93 @@ def test_ico_walker_roundtrip_and_rejects():
     assert walk_ico_dir(_s.pack("<HHH", 0, 1, 0)) is None
     # truncated directory
     assert walk_ico_dir(ico[:20]) is None
+
+
+# ---------------------------------------------------------------------------
+# Real image headers through the decode operator (sniff_image_dims)
+# ---------------------------------------------------------------------------
+
+
+def _golden_png(w: int, h: int) -> bytes:
+    """Minimal valid grayscale PNG built with stdlib only."""
+    import struct
+    import zlib
+
+    def chunk(typ: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data))
+            + typ
+            + data
+            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
+        )
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    raw = b"".join(b"\x00" + b"\x80" * w for _ in range(h))
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(raw))
+        + chunk(b"IEND", b"")
+    )
+
+
+def _golden_gif(w: int, h: int) -> bytes:
+    import struct
+
+    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00" * 20
+
+
+def _golden_jpeg(w: int, h: int) -> bytes:
+    import struct
+
+    # SOI + APP0 + SOF0 carrying the dimensions + EOI
+    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
+    sof = (
+        b"\xff\xc0"
+        + struct.pack(">H", 11)
+        + b"\x08"
+        + struct.pack(">HH", h, w)
+        + b"\x01\x11\x00"
+    )
+    return b"\xff\xd8" + app0 + sof + b"\xff\xd9"
+
+
+def test_multimodal_real_header_decode(spark):
+    """Image payloads get REAL header-parsed dimensions through the same
+    mapInPandas operator; non-image payloads keep the stub fallback."""
+    from mongodb_nats_connector_spark.operators.multimodal import (
+        DECODED_SCHEMA,
+        _decode_batches,
+        fake_decode,
+        sniff_image_dims,
+    )
+
+    assert sniff_image_dims(_golden_png(640, 360)) == (640, 360, "png")
+    assert sniff_image_dims(_golden_gif(12, 7)) == (12, 7, "gif")
+    assert sniff_image_dims(_golden_jpeg(800, 600)) == (800, 600, "jpeg")
+    assert sniff_image_dims(b"just text") is None
+
+    rows = [
+        (1, _golden_png(640, 360)),
+        (2, _golden_gif(12, 7)),
+        (3, _golden_jpeg(800, 600)),
+        (4, b"plain text payload"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, payload binary")
+    out = {
+        r["doc_id"]: r
+        for r in df.mapInPandas(_decode_batches, DECODED_SCHEMA).collect()
+    }
+    assert (out[1]["fake_width"], out[1]["fake_height"], out[1]["codec"]) == (
+        640, 360, "png",
+    )
+    assert (out[2]["fake_width"], out[2]["fake_height"], out[2]["codec"]) == (
+        12, 7, "gif",
+    )
+    assert (out[3]["fake_width"], out[3]["fake_height"], out[3]["codec"]) == (
+        800, 600, "jpeg",
+    )
+    w, h = fake_decode(rows[3][1])
+    assert (out[4]["fake_width"], out[4]["fake_height"], out[4]["codec"]) == (
+        w, h, "stub",
+    )

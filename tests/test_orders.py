@@ -1,5 +1,6 @@
 """Order and supply-chain analytics (``operators/orders.py``, ``orders_*``):
-forecasting folds, process control, survival and econ indices.
+forecasting folds, process control, survival, concentration and econ
+indices.
 
 Spark tests recompute a query's result on the smoke tables from its
 definition. Pure-Python pins check the algebra both engines share
@@ -13,6 +14,7 @@ import random
 from fractions import Fraction
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
@@ -876,3 +878,41 @@ def test_cumulative_incidence_sums_to_one_minus_km():
             s *= Fraction(at_risk - d, at_risk)
             at_risk -= d + cens
         assert cif[1] + cif[2] + cif[3] == 1 - s
+
+
+# ---------------------------------------------------------------------------
+# Price records and concentration (orders_price_records, orders_gini_hhi)
+# ---------------------------------------------------------------------------
+
+
+def test_price_records_strictly_increase(spark):
+    from mongodb_nats_connector_spark.operators.orders import orders_price_records
+
+    rows = sorted(orders_price_records(spark, SF).collect(), key=lambda r: r["day"])
+    assert rows
+    prices = [r["best_price"] for r in rows]
+    assert all(b > a for a, b in zip(prices, prices[1:]))
+
+
+def test_gini_hhi_matches_pandas_and_bounds(spark):
+    from mongodb_nats_connector_spark.operators.orders import orders_gini_hhi
+
+    r = orders_gini_hhi(spark, SF).collect()[0]
+    per = (
+        spark.read.parquet(f"{SF}/orders.parquet")
+        .groupBy("o_custkey")
+        .agg(F.sum("o_totalprice").alias("rev"))
+        .toPandas()
+        .sort_values(["rev", "o_custkey"])
+        .reset_index(drop=True)
+    )
+    n = len(per)
+    tot = per["rev"].sum()
+    hhi = float(((per["rev"] / tot) ** 2).sum())
+    i = pd.Series(range(1, n + 1), dtype="float64")
+    gini = float(2.0 * (i * per["rev"].values).sum() / (n * tot) - (n + 1.0) / n)
+    assert r["n_customers"] == n
+    assert abs(r["hhi"] - hhi) < 1e-4
+    assert abs(r["gini"] - gini) < 1e-4
+    assert 0.0 <= r["gini"] < 1.0
+    assert 1.0 / n <= r["hhi"] <= 1.0

@@ -3,13 +3,17 @@ at 1000-executor / 100 TB scale, asserted on the actual physical plans.
 
 The ``plans/selection.py`` tests check that the two-pass selection's
 driver-side replay of Spark's percentile interpolation is bit-identical to
-the JVM evaluation, the property the exact-median queries stand on."""
+the JVM evaluation, the property the exact-median queries stand on.
+The ``plans/hints.py`` tests check when a broadcast hint is applied, and
+the ``plans/caching.py`` test that operators release their cached
+intermediates once the result is dropped."""
 
 from __future__ import annotations
 
 import random
 import struct
 
+import pytest
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.operators.relational import (
@@ -259,7 +263,7 @@ _ALLOWED_NESTED_LOOP = {
     "orders_seasonal_decompose",  # 1-row seasonal-center scalar broadcast crossJoin
     "graph_eccentricity_diameter",  # 1-row diameter/radius extremes broadcast crossJoin
     "events_wilcoxon_signed_rank",  # 1-row cutoff scalar broadcast crossJoin
-    # pipeline11 (round 10): all 1-row scalar broadcast crossJoins
+    # all 1-row scalar broadcast crossJoins
     "agg_roc_auc",                # 1-row class-total scalars broadcast crossJoin
     "agg_kruskal_wallis",         # 1-row N/ties + 1-row H-sum broadcast crossJoins
     "agg_ansari_bradley",         # 1-row N/n1 scalar broadcast crossJoin
@@ -279,10 +283,10 @@ _ALLOWED_NESTED_LOOP = {
     "graph_clustering_coefficient",  # 1-row global-ratio scalar broadcast crossJoin
     "agg_trimmed_mean",           # 1-row k/fence/mid scalars broadcast crossJoins
     "agg_gini_impurity_split",    # 1-row total scalar broadcast crossJoin
-    # pipeline12 (round-11 bank)
+
     "agg_mann_kendall",           # calendar-bounded sign-pair NLJ (by design) + 1-row scalars
-    # pipeline13 (round 11): 1-row scalar / bounded-literal broadcast
-    # crossJoins only — no data-proportional NLJ
+    # 1-row scalar / bounded-literal broadcast crossJoins only — no
+    # data-proportional NLJ
     "agg_jonckheere_terpstra",    # 1-row group-moment scalars broadcast crossJoin
     "agg_permutation_test",       # 200-row perm-id literal + 1-row obs/judged scalars
     "agg_quade_test",             # years^2-bounded range-rank NLJ + 1-row scalars
@@ -296,14 +300,13 @@ _ALLOWED_NESTED_LOOP = {
     "orders_survival_cindex",     # 1-row horizon scalar broadcast crossJoin
     "similarity_recall_at_k",     # inherits the bruteforce op's bounded query-set NLJ
     "events_hourly_profile",      # 1-row total + 1-row peak scalar broadcast crossJoins
-    # pipeline16 (round-12 bank): bounded-domain densification + 1-row /
-    # 5-row scalar broadcast crossJoins only
+    # bounded-domain densification + 1-row / 5-row scalar broadcast
+    # crossJoins only
     "agg_goodman_kruskal_gamma",  # ~50x11 domain-grid densify (two DISTINCT
     #                               relations; the jonckheere precedent)
     "text_gries_dp",              # 20-row source-size + 1-row total broadcast crossJoins
     "agg_welch_anova",            # 1-row weighted-center scalar broadcast crossJoin
-    # pipeline17 (round-12 bank, second tranche): 1-row scalar broadcast
-    # crossJoins + two bounded literal grids
+    # 1-row scalar broadcast crossJoins + two bounded literal grids
     "agg_conover_squared_ranks",  # 1-row per-group (n, S) scalars broadcast crossJoin
     "agg_kendall_w",              # 1-row block-count + 1-row tie-total broadcast crossJoins
     "agg_ks_separation",          # 1-row class-total scalars broadcast crossJoin
@@ -325,7 +328,7 @@ _ALLOWED_NESTED_LOOP = {
     "orders_haar_wavelet",        # 1-row power-of-two + 1-row energy-total crossJoins
     "orders_theta_forecast",      # 1-row OLS-coefficient scalars broadcast crossJoin
     "embedding_truncation_fidelity",  # bounded 50-query panel NLJ (by design)
-    # pipeline19 (round-13 bank)
+
     "agg_fowlkes_mallows",        # 1-row pair-count scalars broadcast crossJoins
     "agg_rand_adjusted",          # 1-row pair-count scalars broadcast crossJoins
     "agg_medcouple",              # 1-row doubled-median + bounded 84x84 kernel NLJ
@@ -346,14 +349,14 @@ _ALLOWED_NESTED_LOOP = {
     "events_distribution_drift",  # 1-row split-day + 1-row totals broadcast crossJoins
     "orders_benford_second_digit",  # 1-row digit-total scalar broadcast crossJoin
     "embedding_twonn_intrinsic_dim",  # bounded 100-query panel NLJ (by design)
-    # pipeline20 (round-14 bank seed)
+
     "agg_overlap_coefficient",    # 1-row cohort-total scalars broadcast crossJoin
     "agg_tukey_fences",           # 1-row quartile/fence scalars broadcast crossJoins
     "embedding_cosine_concentration",  # bounded 100-vector panel NLJ (by design)
     "orders_variance_ratio_test",  # 1-row 3-sum moment scalars broadcast crossJoin
     "text_zipf_mandelbrot_grid",  # bounded 6-offset x 200-rank scaffold crossJoin
     "events_exponential_gof",     # 1-row rate scalars + 1-row sup broadcast crossJoins
-    # pipeline20 (round-14 bank, batch 2)
+
     "agg_goodman_kruskal_lambda",  # four 1-row margin scalars broadcast crossJoins
     "agg_stuart_tau_c",           # bounded 15-cell contingency pair NLJ + 1-row total
     "agg_somers_d",               # bounded 350-cell contingency pair NLJ
@@ -492,8 +495,8 @@ _GLOBAL_WINDOWS = {
     "text_rake_keyphrases": (1, "bounded: candidate-phrase scores"),
     "text_vocab_coverage": (1, "bounded: vocabulary relation"),
     "text_zipf_slope": (1, "bounded: vocabulary relation"),
-    # pipeline11 (round 10): every one runs over a value-DOMAIN histogram
-    # (~50-105 distinct buckets) or the calendar-bounded daily series
+    # every one runs over a value-DOMAIN histogram (~50-105 distinct
+    # buckets) or the calendar-bounded daily series
     "agg_roc_auc": (1, "bounded: ~105-bucket score-domain prefix"),
     "agg_kruskal_wallis": (1, "bounded: ~50-value quantity-domain prefix"),
     "agg_ansari_bradley": (1, "bounded: ~105-bucket price-domain prefix"),
@@ -510,8 +513,8 @@ _GLOBAL_WINDOWS = {
     "orders_theil_u": (1, "bounded: monthly series lag window"),
     # agg_hodges_lehmann: r14 driver selection — no offset window left
     # agg_theil_sen: r14 driver selection — no offset window left
-    # pipeline13 (round 11): value-DOMAIN histograms, the calendar-bounded
-    # daily series, or n_buckets/decile offset relations — all bounded
+    # value-DOMAIN histograms, the calendar-bounded daily series, or
+    # n_buckets/decile offset relations — all bounded
     "agg_brunner_munzel": (1, "bounded: ~105-bucket price-domain prefix"),
     "agg_cvm_two_sample": (1, "bounded: ~50-value quantity-domain prefix"),
     "agg_youden_threshold": (1, "bounded: ~105-bucket score-domain "
@@ -526,18 +529,16 @@ _GLOBAL_WINDOWS = {
                                          "index"),
     "orders_seasonality_strength": (2, "bounded: monthly series (row "
                                        "index + MA windows)"),
-    # pipeline15 (round 11): value-DOMAIN histograms only
+    # value-DOMAIN histograms only
     "agg_mood_scale": (2, "bounded: ~50-value quantity-domain grid"),
     "agg_lepage": (2, "bounded: ~50-value quantity-domain grid"),
-    # pipeline16 (round-12 bank): value-DOMAIN histograms only
     "agg_kuiper_test": (2, "bounded: ~50-value quantity-domain grid"),
     "agg_energy_distance": (2, "bounded: ~50-value quantity-domain grid"),
     "agg_anderson_darling": (2, "bounded: ~105-bucket price-domain grid"),
-    # graph_hits_scores dropped from this inventory (round 11): the power
+    # graph_hits_scores dropped from this inventory: the power
     # loop moved to exact python-int driver rounds over the collected
     # nation-bounded adjacency — no Window nodes remain in its plan
-    # pipeline17 (round-12 bank, second tranche): value-DOMAIN histograms
-    # and calendar-bounded series only
+    # value-DOMAIN histograms and calendar-bounded series only
     "agg_conover_squared_ranks": (1, "bounded: ~200-cell scaled-deviation "
                                      "domain grid"),
     "agg_ks_separation": (1, "bounded: ~105-bucket price-domain prefix"),
@@ -559,13 +560,13 @@ _GLOBAL_WINDOWS = {
     "orders_theta_forecast": (2, "bounded: ~84-month series row index "
                                  "(duplicated under the moment and "
                                  "theta-line branches)"),
-    # pipeline18 (round-13 bank)
+
     "agg_uplift_curve": (1, "bounded: ~105-bucket score-domain prefix "
                             "(desc)"),
     "orders_haar_wavelet": (4, "bounded: ~2.4k-day series (row index + "
                                "count, duplicated under the signed-sum "
                                "and power-of-two branches)"),
-    # pipeline19 (round-13 bank)
+
     "agg_g_test": (1, "bounded: 25-cell contingency grid total"),
     "agg_freeman_tukey": (1, "bounded: 25-cell contingency grid total"),
     "agg_f1_sweep": (3, "bounded: ~105-bucket score-domain suffix + "
@@ -591,7 +592,7 @@ _GLOBAL_WINDOWS = {
                                          "index + outer-median rank/"
                                          "count over the bounded "
                                          "per-month medians"),
-    # pipeline20 (round-14 bank seed)
+
     "agg_ks_uniform_gof": (2, "bounded: 11-cell discount-grid prefix + "
                               "total"),
     "events_gini_time_concentration": (1, "bounded: calendar-day rank"),
@@ -604,7 +605,7 @@ _GLOBAL_WINDOWS = {
     "text_zipf_mandelbrot_grid": (1, "bounded: 200-rank top-k window"),
     "events_exponential_gof": (1, "bounded: 1440-cell minute-grid "
                                   "prefix"),
-    # pipeline20 (round-14 bank, batch 2)
+
     "agg_rank_biserial": (1, "bounded: ~50-value quantity-grid "
                              "cumulative midrank"),
     "agg_blomqvist_beta": (4, "bounded: 50-value and 11-value grids, "
@@ -974,3 +975,115 @@ def test_selection_drops_nulls(spark):
     nn, at = stats[()]
     assert nn == 3
     assert _bits(spark_percentile_replay(nn, at, 0.5)) == _bits(exp)
+
+
+# ---------------------------------------------------------------------------
+# Broadcast hints (plans/hints.py)
+# ---------------------------------------------------------------------------
+
+
+def test_maybe_broadcast_hints_only_under_threshold(spark):
+    """maybe_broadcast applies the hint when Catalyst's estimate is under
+    the threshold and declines it (returning the frame unchanged, so AQE
+    keeps the runtime decision) when the side is estimated too big."""
+    from mongodb_nats_connector_spark.plans.hints import (
+        estimated_size_bytes,
+        maybe_broadcast,
+    )
+
+    cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    est = estimated_size_bytes(cust)
+    assert est is not None and est > 0
+    hinted = maybe_broadcast(cust, threshold_bytes=est + 1)
+    assert hinted is not cust
+    # a dangling hint is erased by the optimizer; the analyzed plan keeps it
+    plan = hinted._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint" in plan
+    declined = maybe_broadcast(cust, threshold_bytes=1)
+    assert declined is cust
+
+
+def test_maybe_broadcast_conf_parsing():
+    from mongodb_nats_connector_spark.plans.hints import _parse_bytes
+
+    assert _parse_bytes("10485760b") == 10 << 20
+    assert _parse_bytes("64MB") == 64 << 20
+    assert _parse_bytes("1g") == 1 << 30
+    assert _parse_bytes("-1") == -1
+    assert _parse_bytes("1048576") == 1 << 20
+
+
+def test_counted_fits_broadcast_requires_persist_and_gates_on_count(spark):
+    """The runtime-count gate must (a) refuse un-persisted inputs — the
+    count would recompute the full lineage and diverge from what the join
+    reads, (b) hint small persisted relations, (c) decline when the
+    materialized count exceeds the threshold."""
+    from mongodb_nats_connector_spark.plans.hints import counted_fits_broadcast
+
+    df = spark.range(100)
+    with pytest.raises(ValueError, match="persisted"):
+        counted_fits_broadcast(df)
+    df = df.persist()
+    try:
+        assert counted_fits_broadcast(df, row_bytes=8)
+        # 100 rows * 1 MiB/row >> 64 MiB session threshold -> declined
+        assert not counted_fits_broadcast(df, row_bytes=1 << 20)
+    finally:
+        df.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# Cache release (plans/caching.py)
+# ---------------------------------------------------------------------------
+
+
+def test_no_sql_cache_leak_after_results_dropped(spark):
+    """Operators that persist() an intermediate referenced by the returned
+    plan must release it once the caller drops the result — the SQL
+    CacheManager entry count returns to its pre-call level (it is NOT
+    GC-reclaimed on its own, so a missing finalizer would leak here)."""
+    import gc
+
+    from mongodb_nats_connector_spark.operators.text import (
+        bigram_lm_surprisal,
+        fuzzy_join_blocked,
+    )
+    from mongodb_nats_connector_spark.operators.dedup import dedup_prefix_boilerplate
+    from mongodb_nats_connector_spark.operators.relational import join_bloom_semi
+    from mongodb_nats_connector_spark.operators.graph import (
+        graph_jaccard_neighbors,
+        graph_triangle_count,
+    )
+    from mongodb_nats_connector_spark.operators.orders import orders_basket_lift
+    from mongodb_nats_connector_spark.operators.events import events_seasonal_baseline
+    from mongodb_nats_connector_spark.operators.orders import orders_pareto_curve
+    from mongodb_nats_connector_spark.operators.stats import agg_chi_square
+    from mongodb_nats_connector_spark.operators.relational import (
+        q20_heavy_shippers,
+        q21_waiting_suppliers,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.cachedData().size()
+    for fn in [
+        graph_triangle_count,
+        orders_basket_lift,
+        graph_jaccard_neighbors,
+        orders_pareto_curve,
+        events_seasonal_baseline,
+        agg_chi_square,
+        join_bloom_semi,
+        q20_heavy_shippers,
+        q21_waiting_suppliers,
+        dedup_prefix_boilerplate,
+        bigram_lm_surprisal,
+        fuzzy_join_blocked,
+    ]:
+        df = fn(spark, sf)
+        df.collect()
+        del df
+        gc.collect()
+        assert cm.cachedData().size() == before, (
+            f"{fn.__name__} leaked a CacheManager entry"
+        )

@@ -173,7 +173,7 @@ def test_int8_quantization_scale_invariant(v, c):
     assert sum(1 for a, b in zip(q1, q2) if a != b) <= len(v) // 8
 
 
-# --- doubled-midrank identity (the pipeline8-11 rank-statistic kernel) ---
+# --- doubled-midrank identity (the shared rank-statistic kernel) ---
 
 ints = st.lists(st.integers(min_value=-50, max_value=50), min_size=1, max_size=200)
 

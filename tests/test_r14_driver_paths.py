@@ -59,7 +59,7 @@ def test_bpe_learn_driver_matches_distributed(spark, monkeypatch):
 def test_bpe_merge_word_matches_spark_fold(w, pair, merged, expect):
     """The pure-Python fold used by the driver learn loop implements the
     exact whole-symbol greedy semantics of the Spark/DuckDB folds
-    (same cases as test_round6's cross-engine suite)."""
+    (same cases as test_text.py's cross-engine suite)."""
     from mongodb_nats_connector_spark.operators.text import _bpe_merge_word
 
     toks = w.split(" ")

@@ -40,12 +40,6 @@ SHIMS = {
 ROUND_NAMED_TESTS = {
     "test_r14_driver_fixpoints",
     "test_r14_driver_paths",
-    "test_round3c",
-    "test_round4",
-    "test_round5",
-    "test_round6",
-    "test_round6b",
-    "test_round7",
     "test_round8",
     "test_round9",
     "test_round10",
@@ -212,10 +206,30 @@ def test_operator_modules_named_by_domain():
         assert {k for k in vars(mod) if not k.startswith("__")} == {export}
 
 
+def _top_level_bindings(node) -> list[str]:
+    """Names a module-level ``def``, ``class`` or assignment binds (imports
+    are left out: rebinding an imported module is harmless)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    ]
+
+
 def test_test_modules_named_by_domain():
     """The round-named test modules left are exactly ``ROUND_NAMED_TESTS``,
-    and no test module binds a top-level ``def`` or ``class`` name twice
-    (Python keeps only the later one, and pytest reports nothing)."""
+    and no test module binds a top-level ``def``, ``class`` or assigned
+    name twice (Python keeps only the later one, and pytest reports
+    nothing: a second ``SF = ...`` silently retargets every test above it)."""
     tests = Path(__file__).resolve().parent
     round_named = {
         p.stem
@@ -225,9 +239,9 @@ def test_test_modules_named_by_domain():
     assert round_named == ROUND_NAMED_TESTS
     for path in sorted(tests.glob("*.py")):
         names = [
-            n.name
+            name
             for n in ast.parse(path.read_text()).body
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            for name in _top_level_bindings(n)
         ]
         twice = sorted({n for n in names if names.count(n) > 1})
         assert not twice, f"{path.name} binds {twice} more than once"

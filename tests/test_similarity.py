@@ -1,4 +1,5 @@
 """Embedding operators (``operators/similarity.py``, ``embedding_*``):
+int8 quantization, the Gram matrix and its power iteration, and
 pure-Python pins of their integer dot products, sign matrices and
 cluster-validity algebra, each against an independent reference
 (``test_stats.py`` says why).
@@ -8,6 +9,15 @@ from __future__ import annotations
 
 import random
 from fractions import Fraction
+
+import numpy as np
+from pyspark.sql import functions as F
+
+from mongodb_nats_connector_spark.operators.similarity import embedding_gram_matrix
+from mongodb_nats_connector_spark.plans.explain import plan_string
+from mongodb_nats_connector_spark.sources.tables import table
+
+SF = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
@@ -186,3 +196,120 @@ def test_silhouette_and_dunn_distance_clearing():
         else:
             got = -Fraction((1000 * (a - b)) // max(a, 1), 1000)
         assert abs(got - ref) < Fraction(1, 1000)
+
+
+# ---------------------------------------------------------------------------
+# Int8 quantization (embedding_quantize_int8, similarity_topk_quantized)
+# ---------------------------------------------------------------------------
+
+
+def test_quantization_reconstruction_error_bound(spark):
+    """|v_i - q_i * scale| <= scale / 2 for every dimension of every vector:
+    the defining guarantee of round-to-nearest symmetric quantization."""
+    from mongodb_nats_connector_spark.sources.tables import table
+
+    e = table(spark, SF, "embeddings")
+    v = F.transform("embedding", lambda x: x.cast("double"))
+    m = F.greatest(F.array_max(F.transform(v, lambda x: F.abs(x))), F.lit(1e-30))
+    df = e.select("vec_id", m.alias("m"), v.alias("v"))
+    q = F.transform("v", lambda x: F.floor(x * 127.0 / F.col("m") + 0.5))
+    scale = F.col("m") / 127.0
+    worst = (
+        df.select(
+            F.array_max(
+                F.zip_with("v", q, lambda vi, qi: F.abs(vi - qi * scale) / scale)
+            ).alias("worst_halves")
+        )
+        .agg(F.max("worst_halves").alias("w"))
+        .collect()[0]["w"]
+    )
+    assert worst <= 0.5 + 1e-9, worst
+
+
+def test_quantization_zero_shuffle_plan(spark):
+    """Pure map-side HOF math: the plan must contain no Exchange at all
+    beyond the scan-side repartition the loader adds for parallelism."""
+    from mongodb_nats_connector_spark.operators.similarity import (
+        embedding_quantize_int8,
+    )
+
+    s = plan_string(embedding_quantize_int8(spark, SF))
+    # the only exchange allowed is the loader's round-robin repartition:
+    # no hash/range shuffle anywhere in the plan
+    assert "hashpartitioning" not in s.lower()
+    assert "rangepartitioning" not in s.lower()
+
+
+def test_quantized_topk_recall_vs_exact(spark):
+    """ADC over int8 codes must stay close to the exact float top-k:
+    recall@5 >= 0.8 averaged over the query set (int8 keeps ~2 decimal
+    digits of each coordinate — more than enough to preserve neighborhood
+    structure on 64-dim vectors)."""
+    from mongodb_nats_connector_spark.operators.similarity import (
+        similarity_topk_bruteforce,
+        similarity_topk_quantized,
+    )
+
+    exact = similarity_topk_bruteforce(spark, SF).collect()
+    quant = similarity_topk_quantized(spark, SF).collect()
+    exact_sets: dict = {}
+    quant_sets: dict = {}
+    for r in exact:
+        exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+    for r in quant:
+        quant_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
+    assert set(exact_sets) == set(quant_sets)
+    recalls = [
+        len(exact_sets[q] & quant_sets[q]) / len(exact_sets[q]) for q in exact_sets
+    ]
+    assert sum(recalls) / len(recalls) >= 0.8, recalls
+
+
+# ---------------------------------------------------------------------------
+# Gram matrix and PCA (embedding_gram_matrix, embedding_pca_power_iteration)
+# ---------------------------------------------------------------------------
+
+
+def test_gram_matrix_matches_numpy(spark):
+    out = embedding_gram_matrix(spark, SF).toPandas()
+    emb = table(spark, SF, "embeddings").select("embedding").toPandas()
+    m = np.stack(emb["embedding"].to_numpy()).astype(np.float64)
+    g = m.T @ m
+    d = m.shape[1]
+    assert len(out) == d * (d + 1) // 2
+    for r in out.itertuples():
+        assert abs(r.g - round(g[r.i - 1, r.j - 1], 4)) < 1e-9
+
+
+def test_pca_matches_numpy_power_iteration(spark):
+    """The distributed power iteration must walk the exact same fixed point
+    as a numpy replay over the same round-4 Gram matrix, and after 3
+    iterations the eigenvalue estimate must be close to numpy's true top
+    eigenvalue of that matrix."""
+    from mongodb_nats_connector_spark.operators.similarity import (
+        PCA_ITERS,
+        embedding_pca_power_iteration,
+    )
+
+    out = (
+        embedding_pca_power_iteration(spark, SF)
+        .toPandas()
+        .sort_values("dim")
+        .reset_index(drop=True)
+    )
+    emb = table(spark, SF, "embeddings").select("embedding").toPandas()
+    m = np.stack(emb["embedding"].to_numpy()).astype(np.float64)
+    g = np.round(m.T @ m, 4)
+    v = np.full(g.shape[0], 0.125)
+    for _ in range(PCA_ITERS):
+        mv = g @ v
+        nrm = float(np.sqrt((mv * mv).sum()))
+        v = np.round(mv / nrm, 8)
+    assert np.abs(out["component"].to_numpy() - np.round(v, 4)).max() < 1e-9
+    # ||G v|| for unit v never exceeds the true top eigenvalue (Rayleigh
+    # bound); 3 iterations from a uniform start must already recover a
+    # dominant fraction of it (exact convergence depends on the eigengap)
+    true_top = float(np.linalg.eigvalsh(g).max())
+    eig = out["eigenvalue"].iloc[0]
+    assert 0 < eig <= true_top * (1 + 1e-9)
+    assert eig >= 0.5 * true_top

@@ -7,7 +7,8 @@ oracle share that algebra, so oracle parity cannot catch a closed form
 that is wrong the same way in both engines. With the pin in place, a
 green hash in the correctness run proves the statistic is right, not
 only that the two engines agree. The Spark tests recompute a query's
-result on the smoke tables from its definition.
+result on the smoke tables from its definition, check a sketch's error
+bound against the exact count, or pin a plan shape.
 """
 
 from __future__ import annotations
@@ -19,6 +20,14 @@ from itertools import combinations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
+
+from mongodb_nats_connector_spark.operators.stats import (
+    CMS_WIDTH,
+    agg_heavy_hitters_cms,
+)
+from mongodb_nats_connector_spark.plans.explain import plan_string
+from mongodb_nats_connector_spark.sources.tables import table
 
 SF = "/root/testdata/sf0.001"
 
@@ -1817,3 +1826,287 @@ def test_james_stein_positive_part_contraction():
         if ss > 0 and ss - (k - 3) * vbar >= 0:
             c = 1 - Fraction((k - 3) * vbar, ss)
             assert Fraction(fac_num, ss) == c
+
+
+# ---------------------------------------------------------------------------
+# Weighted median (agg_weighted_median)
+# ---------------------------------------------------------------------------
+
+
+def test_weighted_median_reduces_to_plain_median_on_unit_weights(spark):
+    """With all weights forced to 1 the crossing rule gives the lower median
+    — cross-check against percentile_approx-free exact computation."""
+    import statistics
+
+    df = spark.createDataFrame(
+        [("a", float(v)) for v in [5, 1, 9, 3, 7]]
+        + [("b", float(v)) for v in [4, 2, 8, 6]],
+        "g string, v double",
+    )
+    from pyspark.sql import Window
+
+    per_value = df.groupBy("g", "v").agg(F.count(F.lit(1)).cast("bigint").alias("w"))
+    w_cum = Window.partitionBy("g").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    w_tot = Window.partitionBy("g")
+    cum = per_value.select(
+        "g", "v", F.sum("w").over(w_cum).alias("cw"), F.sum("w").over(w_tot).alias("tw")
+    )
+    got = {
+        r["g"]: r["m"]
+        for r in cum.groupBy("g")
+        .agg(F.min(F.when(2 * F.col("cw") >= F.col("tw"), F.col("v"))).alias("m"))
+        .collect()
+    }
+    assert got["a"] == statistics.median([5, 1, 9, 3, 7])  # odd: true median
+    assert got["b"] == 4.0  # even: lower median
+
+
+def test_weighted_median_windows_over_reduced_relation(spark):
+    """The ordered window must consume the per-(group, value) aggregate, not
+    the raw fact table: exactly one shuffle on the fact, then the window's
+    partial exchange over the reduced relation."""
+    from mongodb_nats_connector_spark.operators.stats import agg_weighted_median
+
+    s = plan_string(agg_weighted_median(spark, SF))
+    below_window = s[s.index("Window"):]
+    # reading top-down from the Window operator, a HashAggregate (the
+    # per-(group, value) pre-agg) must sit between it and the scan
+    assert "HashAggregate" in below_window
+    assert below_window.index("HashAggregate") < below_window.index("Scan parquet")
+
+
+# ---------------------------------------------------------------------------
+# Sketches: count-min, KMV, HLL, bitmap (agg_heavy_hitters_cms,
+# agg_kmv_distinct_setops, agg_hll_registers, agg_bitmap_distinct)
+# ---------------------------------------------------------------------------
+
+
+def test_cms_never_underestimates(spark):
+    """The defining CMS property: est >= true for every reported key, and
+    the heaviest key survives sketching (top-1 by estimate == exact top-1
+    when its true count is strictly dominant)."""
+    out = agg_heavy_hitters_cms(spark, SF).toPandas()
+    n_keys = table(spark, SF, "lineitem").select("l_suppkey").distinct().count()
+    assert len(out) == min(20, n_keys)
+    assert (out["est_count"] >= out["true_count"]).all()
+    exact = (
+        table(spark, SF, "lineitem")
+        .groupBy("l_suppkey")
+        .count()
+        .toPandas()
+        .sort_values(["count", "l_suppkey"], ascending=[False, True])
+    )
+    # the estimate's top key must be among the true heavy hitters (its true
+    # count within the additive CMS error bound of the true max)
+    eps_bound = len(table(spark, SF, "lineitem").toPandas()) * 2.0 / CMS_WIDTH
+    top_est = out.iloc[0]
+    assert top_est["true_count"] >= exact["count"].max() - eps_bound
+
+
+def test_kmv_estimates_within_bounds(spark):
+    """KMV standard error is ~1/sqrt(k-2) (~13% at k=64); assert a loose
+    3-sigma envelope vs the exact counts it carries, plus sketch algebra
+    sanity (union >= each side, intersection <= union)."""
+    from mongodb_nats_connector_spark.operators.stats import agg_kmv_distinct_setops
+
+    r = agg_kmv_distinct_setops(spark, SF).collect()[0]
+    for est, exact in [
+        (r["est_a"], r["exact_a"]),
+        (r["est_b"], r["exact_b"]),
+        (r["est_union"], r["exact_union"]),
+        (r["est_inter"], r["exact_inter"]),
+    ]:
+        assert exact > 0
+        assert abs(est - exact) / exact < 0.4, (est, exact)
+    assert r["est_union"] >= max(r["est_a"], r["est_b"]) * 0.6
+    assert r["est_inter"] <= r["est_union"]
+
+
+def test_kmv_exact_below_k(spark):
+    """When a cohort has fewer than k distinct members the sketch IS the
+    set and the estimate must be exact. sf0.001 has fewer than k=64
+    distinct users per cohort, so the registered query itself exercises
+    the exact branch here (sf0.01+ exercises the estimation branch)."""
+    from mongodb_nats_connector_spark.operators.stats import (
+        KMV_K,
+        agg_kmv_distinct_setops,
+    )
+
+    r = agg_kmv_distinct_setops(spark, SF).collect()[0]
+    if r["exact_a"] < KMV_K:
+        assert r["est_a"] == r["exact_a"]
+    if r["exact_union"] < KMV_K:
+        assert r["est_union"] == r["exact_union"]
+        assert r["est_inter"] == r["exact_inter"]
+
+
+def test_hll_registers_error_bound_and_merge_monotone(spark):
+    """HLL relative error at m=256 is sigma ~ 1.04/16 = 6.5%; assert a
+    loose 4-sigma envelope per cohort, and that the merged-register row
+    dominates every cohort estimate (registers are pointwise >=, and the
+    estimate is monotone in the registers)."""
+    from mongodb_nats_connector_spark.operators.stats import agg_hll_registers
+
+    rows = {r["cohort"]: r for r in agg_hll_registers(spark, SF).collect()}
+    assert "ALL" in rows
+    for cohort, r in rows.items():
+        assert abs(r["est_userdays"] - r["exact_userdays"]) <= max(
+            0.3 * r["exact_userdays"], 3
+        ), (cohort, r)
+    all_est = rows["ALL"]["est_userdays"]
+    for cohort, r in rows.items():
+        if cohort != "ALL":
+            assert all_est >= r["est_userdays"]
+
+
+def test_bitmap_distinct_equals_exact(spark):
+    from mongodb_nats_connector_spark.operators.stats import agg_bitmap_distinct
+
+    got = {
+        r["event_type"]: r["n_users"]
+        for r in agg_bitmap_distinct(spark, SF).collect()
+    }
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    exact = {
+        r["event_type"]: r["n"]
+        for r in ev.groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("n"))
+        .collect()
+    }
+    assert got == exact
+
+
+# ---------------------------------------------------------------------------
+# Tests, merges and histograms (agg_chi_square, agg_incremental_merge,
+# agg_log2_histogram_quantiles, agg_ks_test)
+# ---------------------------------------------------------------------------
+
+
+def test_r5c_statistics_invariants(spark):
+    """Sanity bounds that hold on ANY data: chi² >= 0 with the right cell
+    count; Welch t finite with positive group sizes; Pareto shares sum to 1
+    and decrease; lift and Jaccard positive with Jaccard <= 1."""
+    from mongodb_nats_connector_spark.operators.graph import graph_jaccard_neighbors
+    from mongodb_nats_connector_spark.operators.orders import (
+        orders_basket_lift,
+        orders_pareto_curve,
+    )
+    from mongodb_nats_connector_spark.operators.stats import (
+        agg_chi_square,
+        agg_welch_ttest,
+    )
+
+    chi = agg_chi_square(spark, SF).toPandas().iloc[0]
+    assert chi["chi_square"] >= 0
+    assert chi["n_cells"] > 0 and chi["n_obs"] > 0
+
+    t = agg_welch_ttest(spark, SF).toPandas().iloc[0]
+    assert t["n_purchase"] > 0 and t["n_click"] > 0
+    assert np.isfinite(t["welch_t"])
+
+    par = orders_pareto_curve(spark, SF).toPandas().sort_values("bucket")
+    assert abs(par["revenue_share"].sum() - 1.0) < 1e-3
+    assert (np.diff(par["revenue_share"].values) <= 1e-9).all(), (
+        "revenue share must be non-increasing across rank buckets"
+    )
+
+    lift = orders_basket_lift(spark, SF).toPandas()
+    assert (lift["lift"] > 0).all()
+
+    jac = graph_jaccard_neighbors(spark, SF).toPandas()
+    assert ((jac["jaccard"] > 0) & (jac["jaccard"] <= 1.0)).all()
+
+
+def test_incremental_merge_equals_full_recompute(spark):
+    """The defining property: merging base+delta partials must equal the
+    single-pass aggregation over the whole table."""
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.operators.stats import agg_incremental_merge
+
+    merged = (
+        agg_incremental_merge(spark, SF)
+        .toPandas()
+        .sort_values("month")
+        .reset_index(drop=True)
+    )
+    full = (
+        table(spark, SF, "orders")
+        .groupBy(F.date_trunc("month", "o_orderdate").alias("month"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+            F.round(F.sum("o_totalprice") / F.count(F.lit(1)), 4).alias(
+                "avg_price"
+            ),
+        )
+        .toPandas()
+        .sort_values("month")
+        .reset_index(drop=True)
+    )
+    assert merged.equals(full)
+
+
+def test_log2_histogram_counts_and_quantile_flags(spark):
+    """Bucket counts tile the positive measurements; each quantile flag
+    marks exactly one bucket, and that bucket's [lo, hi] range contains
+    the numpy-exact quantile of the tick-quantized values."""
+    import numpy as np
+
+    from mongodb_nats_connector_spark.operators.stats import (
+        _LOG2_SCALE,
+        agg_log2_histogram_quantiles,
+    )
+
+    rows = agg_log2_histogram_quantiles(spark, SF).orderBy("bucket").collect()
+    vals = (
+        spark.read.parquet(f"{SF}/events.parquet")
+        .filter(F.col("value") > 0)
+        .select("value")
+        .toPandas()["value"]
+        .to_numpy()
+    )
+    ticks = np.round(vals * _LOG2_SCALE).astype("int64")
+    assert sum(r["cnt"] for r in rows) == len(ticks)
+    assert rows[-1]["cum"] == len(ticks)
+    for flag, q in [
+        ("is_p50_bucket", 0.5),
+        ("is_p90_bucket", 0.9),
+        ("is_p99_bucket", 0.99),
+    ]:
+        marked = [r for r in rows if r[flag]]
+        assert len(marked) == 1, flag
+        # the q-quantile by the inverted-CDF definition lands in the bucket
+        k = int(np.ceil(q * len(ticks)))  # 1-indexed order statistic
+        qv = np.sort(ticks)[k - 1] / _LOG2_SCALE
+        assert marked[0]["lo"] <= qv <= marked[0]["hi"], (flag, qv, marked)
+
+
+def test_ks_statistic_matches_pandas(spark):
+    import numpy as np
+
+    from mongodb_nats_connector_spark.operators.stats import (
+        _KS_G1,
+        _KS_G2,
+        agg_ks_test,
+    )
+
+    r = agg_ks_test(spark, SF).collect()[0]
+    o = (
+        spark.read.parquet(f"{SF}/orders.parquet")
+        .select("o_orderstatus", "o_totalprice")
+        .toPandas()
+    )
+    a = np.sort(o[o.o_orderstatus == _KS_G1].o_totalprice.to_numpy())
+    b = np.sort(o[o.o_orderstatus == _KS_G2].o_totalprice.to_numpy())
+    grid = np.unique(np.concatenate([a, b]))
+    f1 = np.searchsorted(a, grid, side="right") / len(a)
+    f2 = np.searchsorted(b, grid, side="right") / len(b)
+    d = float(np.abs(f1 - f2).max())
+    assert r["n1"] == len(a) and r["n2"] == len(b)
+    assert abs(r["ks_d"] - d) < 1e-6
+    crit = 1.3581015157406195 * np.sqrt((len(a) + len(b)) / (len(a) * len(b)))
+    assert abs(r["crit_05"] - crit) < 1e-6
+    assert r["reject_05"] == (d > crit)

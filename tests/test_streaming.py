@@ -221,6 +221,33 @@ def test_observability_endpoints(spark, events_feed):
         spark.streams.removeListener(listener)
 
 
+def test_healthz_status_codes():
+    """A health status other than UP answers 503 with the health JSON as
+    its body; a raising ``health_fn`` answers 500 with ``{"error": ...}``."""
+    down = {"status": "DOWN", "components": [{"name": "pipeline-X", "status": "DOWN"}]}
+    server = ObservabilityServer(health_fn=lambda: down, registry=MetricsRegistry())
+    server.start()
+    url = f"http://127.0.0.1:{server.port}/healthz"
+    try:
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(url, timeout=10)
+        assert err.value.code == 503
+        assert err.value.headers["Content-Type"] == "application/json"
+        assert json.loads(err.value.read()) == down
+
+        def broken():
+            raise RuntimeError("status store unreachable")
+
+        server.health_fn = broken
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(url, timeout=10)
+        assert err.value.code == 500
+        assert err.value.headers["Content-Type"] == "application/json"
+        assert json.loads(err.value.read()) == {"error": "status store unreachable"}
+    finally:
+        server.stop()
+
+
 def test_stream_static_enrichment_join(spark, events_feed):
     """Stream-static join: enrich the unbounded event stream with a static
     (broadcastable) dimension — no state store needed, the static side is
@@ -484,3 +511,48 @@ def test_stateful_funnel_matches_batch_pattern_match(spark, events_feed):
     joined = final.join(batch, lsuffix="_s")
     assert (joined["n_events_s"] == joined["n_events"]).all()
     assert (joined["converted_s"] == joined["converted"]).all()
+
+
+def test_streaming_hll_registers_match_batch(spark, tmp_path):
+    """The streaming register merge (max per (cohort, bucket), complete
+    mode, 3 micro-batches) must produce the IDENTICAL register table the
+    batch query derives — the idempotent-merge property that makes HLL
+    state exactly-once under replay. Estimates follow from registers."""
+    import uuid
+
+    from mongodb_nats_connector_spark.operators.graph_common import hll_reg_rows
+    from mongodb_nats_connector_spark.streaming.windows import (
+        EVENTS_DDL,
+        hll_register_stream,
+    )
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    path = str(tmp_path / "hll_feed")
+    # 3 micro-batches, with batch overlap on user-days (replay-like dupes)
+    ev.filter(F.col("event_id") % 3 == 0).write.parquet(path, mode="append")
+    ev.filter(F.col("event_id") % 3 != 0).write.parquet(path, mode="append")
+    ev.filter(F.col("event_id") % 7 == 0).write.parquet(path, mode="append")
+
+    stream = spark.readStream.schema(EVENTS_DDL).parquet(path)
+    name = "hll" + uuid.uuid4().hex[:10]
+    q = (
+        hll_register_stream(stream)
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    q.processAllAvailable()
+    streamed = {
+        (r["cohort"], r["bucket"]): r["r"]
+        for r in spark.sql(f"SELECT * FROM {name}").collect()
+    }
+    q.stop()
+    batch = {
+        (r["cohort"], r["bucket"]): r["r"]
+        for r in hll_reg_rows(ev)
+        .groupBy("cohort", "bucket")
+        .agg(F.max("rho").alias("r"))
+        .collect()
+    }
+    assert streamed == batch

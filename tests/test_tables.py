@@ -1,7 +1,10 @@
-"""Table loader behavior: the events nanos read must not leak session conf."""
+"""Table loader behavior (``sources/tables.py``): the events nanos read
+must not leak session conf, and the NTZ guard accepts exactly the
+zero-offset session zones."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
@@ -144,3 +147,32 @@ def test_events_reads_on_untuned_foreign_session(spark):
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         a, b = digest(spark, sf), digest(fresh, sf)
         assert a == b, f"epoch drift between tuned and foreign session at {sf}"
+
+
+# ---------------------------------------------------------------------------
+# NTZ guard zone resolution (_is_utc_zone)
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "tz,ok",
+    [
+        ("UTC", True),
+        ("Etc/UTC", True),
+        ("+00:00", True),
+        ("GMT0", True),
+        ("UTC0", True),
+        ("Greenwich", True),
+        ("America/New_York", False),
+        ("+02:00", False),
+        ("Etc/GMT-2", False),
+        (None, False),
+    ],
+)
+def test_ntz_guard_resolves_utc_equivalents(spark, tz, ok):
+    """The NTZ fail-loud guard accepts every zero-offset zone spelling
+    (resolved via ZoneId, not a string allowlist) and still rejects
+    genuinely shifted zones."""
+    from mongodb_nats_connector_spark.sources.tables import _is_utc_zone
+
+    assert _is_utc_zone(spark, tz) is ok

@@ -1,9 +1,13 @@
-"""Text operators (``operators/text.py``): readability, lexical diversity,
+"""Text operators (``operators/text.py``): passage dedup, surprisal,
+BPE, fuzzy joins, quality selection, readability, lexical diversity,
 vocabulary spectra and document fingerprints.
 
 Spark tests recompute a query's result on the smoke tables from its
-definition. Pure-Python pins check the algebra both engines share
-against an independent reference; ``test_stats.py`` says why.
+definition, or pin the physical plan shape that keeps it scalable.
+Pure-Python pins check the algebra both engines share against an
+independent reference; ``test_stats.py`` says why. The BPE merge cases
+run the same greedy whole-symbol semantics through the Spark fold, the
+DuckDB oracle fold and a plain-Python reference.
 """
 
 from __future__ import annotations
@@ -11,6 +15,18 @@ from __future__ import annotations
 import math
 import random
 from fractions import Fraction
+
+import duckdb
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from mongodb_nats_connector_spark.operators.text import (
+    _duck_merge,
+    _merge_pair_arr,
+)
+from mongodb_nats_connector_spark.plans.explain import plan_string
 
 SF = "/root/testdata/sf0.001"
 
@@ -309,3 +325,311 @@ def test_fingerprint_edge_cases(spark, tmp_path):
     assert got == {
         i: None if t is None else _poly(t) for i, t in enumerate(cases)
     }
+
+
+# ---------------------------------------------------------------------------
+# Passage dedup (text_passage_dedup)
+# ---------------------------------------------------------------------------
+
+
+def test_passage_dedup_flags_an_injected_duplicate(spark):
+    """Two documents sharing all passages must both show dup_ratio 1.0 and
+    keep=0; a unique document keeps dup_ratio 0.0 and keep=1."""
+    from mongodb_nats_connector_spark.operators import text as text_ops
+
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(f"w{i}" for i in range(16))),      # 2 passages, cloned
+            (2, " ".join(f"w{i}" for i in range(16))),      # exact clone of 1
+            (3, " ".join(f"u{i}" for i in range(16))),      # unique
+        ],
+        "doc_id long, text string",
+    )
+    docs.createOrReplaceTempView("passage_fixture")
+
+    toks = F.split("text", " ")
+    passages = docs.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(
+                    F.lit(0),
+                    (F.size(toks) / text_ops.PASSAGE_WORDS).cast("int") - 1,
+                ),
+                lambda i: F.concat_ws(
+                    " ",
+                    F.slice(toks, i * text_ops.PASSAGE_WORDS + 1, text_ops.PASSAGE_WORDS),
+                ),
+            )
+        ).alias("passage"),
+    )
+    freq = passages.groupBy("passage").agg(F.count_distinct("doc_id").alias("n_docs"))
+    per_doc = (
+        passages.join(freq, "passage")
+        .groupBy("doc_id")
+        .agg(
+            (F.sum((F.col("n_docs") > 1).cast("int")) / F.count(F.lit(1))).alias("r")
+        )
+        .collect()
+    )
+    ratios = {r["doc_id"]: r["r"] for r in per_doc}
+    assert ratios[1] == 1.0 and ratios[2] == 1.0 and ratios[3] == 0.0
+
+
+def test_passage_dedup_two_finegrained_shuffles_only(spark):
+    """The plan must shuffle on the passage then doc_id — fine-grained keys —
+    and never materialize a join wider than the passage relation (no
+    nested-loop / cartesian shapes)."""
+    from mongodb_nats_connector_spark.operators.text import text_passage_dedup
+
+    s = plan_string(text_passage_dedup(spark, SF))
+    assert "CartesianProduct" not in s and "BroadcastNestedLoopJoin" not in s
+
+
+# ---------------------------------------------------------------------------
+# Unigram surprisal (text_unigram_surprisal)
+# ---------------------------------------------------------------------------
+
+
+def test_surprisal_vocab_joins_broadcast(spark):
+    """The vocabulary and the 1-row total must broadcast: the token stream
+    (the 100 TB side) never shuffles for the join, only for the per-doc
+    mean."""
+    from mongodb_nats_connector_spark.operators.text import text_unigram_surprisal
+
+    s = plan_string(text_unigram_surprisal(spark, SF))
+    assert "BroadcastHashJoin" in s
+
+
+def test_surprisal_is_scale_invariant_of_uniform_text(spark):
+    """On a corpus where every token is equally likely (single repeated
+    token), surprisal is exactly -ln(1/1) = 0 for every doc."""
+    docs = spark.createDataFrame(
+        [(1, "a a a a"), (2, "a a")], "doc_id long, text string"
+    )
+    w = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
+    vocab = w.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+    total = vocab.agg(F.sum("cnt").alias("n"))
+    out = (
+        w.join(F.broadcast(vocab), "word")
+        .crossJoin(F.broadcast(total))
+        .groupBy("doc_id")
+        .agg(F.avg(-F.log(F.col("cnt") / F.col("n"))).alias("s"))
+        .collect()
+    )
+    assert all(abs(r["s"]) < 1e-12 for r in out)
+
+
+# ---------------------------------------------------------------------------
+# Blocked fuzzy join (fuzzy_join_blocked)
+# ---------------------------------------------------------------------------
+
+
+def test_fuzzy_join_recall_and_plan(spark):
+    """Every generated misspelling must match its source word at distance
+    exactly 1 (deleting the 2nd char of a >=4-char word always yields
+    distance 1), and the block join must be a hash join, not a nested loop."""
+    from mongodb_nats_connector_spark.operators.text import (
+        FUZZY_MIN_LEN,
+        fuzzy_join_blocked,
+    )
+
+    out = fuzzy_join_blocked(spark, SF).collect()
+    assert out, "no fuzzy matches found"
+    assert all(r["dist"] <= 1 for r in out)
+
+    part = spark.read.parquet(f"{SF}/part.parquet")
+    words = {
+        w["w"]
+        for w in part.select(
+            F.explode(F.split("p_name", " ")).alias("w")
+        ).distinct().collect()
+    }
+    expected_misspells = {
+        w[0] + w[2:] for w in words if len(w) >= FUZZY_MIN_LEN
+    }
+    got_misspells = {r["m"] for r in out}
+    # every misspelling recovers at least its own source word
+    assert expected_misspells <= got_misspells
+
+    s = plan_string(fuzzy_join_blocked(spark, SF))
+    assert "BroadcastHashJoin" in s
+    assert "BroadcastNestedLoopJoin" not in s
+
+
+# ---------------------------------------------------------------------------
+# BPE pair counts / bigram surprisal (bpe_pair_counts, bigram_lm_surprisal)
+# ---------------------------------------------------------------------------
+
+
+def test_bpe_pair_counts_orders_and_bounds(spark):
+    from mongodb_nats_connector_spark.operators.text import (
+        PAIR_TOPK,
+        bpe_pair_counts,
+    )
+
+    rows = bpe_pair_counts(spark, SF).collect()
+    assert 0 < len(rows) <= PAIR_TOPK
+    counts = [r["pair_count"] for r in rows]
+    assert counts == sorted(counts, reverse=True)
+    s = plan_string(bpe_pair_counts(spark, SF))
+    assert "TakeOrderedAndProject" in s
+
+
+def test_bigram_surprisal_nonnegative_and_complete(spark):
+    """MLE probabilities are <= 1 so surprisal >= 0; every multi-token doc
+    appears with n_bigrams = token_count - 1."""
+    from mongodb_nats_connector_spark.operators.text import bigram_lm_surprisal
+    from mongodb_nats_connector_spark.sources.tables import table
+
+    out = {r["doc_id"]: r for r in bigram_lm_surprisal(spark, SF).collect()}
+    docs = table(spark, SF, "documents").select(
+        "doc_id", F.size(F.split("text", " ")).alias("n")
+    ).collect()
+    for d in docs:
+        if d["n"] >= 2:
+            assert out[d["doc_id"]]["n_bigrams"] == d["n"] - 1
+            assert out[d["doc_id"]]["avg_surprisal_nats"] >= 0.0
+
+
+# ---------------------------------------------------------------------------
+# BPE merges (bpe_learn_merges, bpe_apply_merges)
+# ---------------------------------------------------------------------------
+
+
+def test_bpe_apply_compression_invariants(spark):
+    """Applying merges can only shrink token counts: chars/token >= 1,
+    n_tokens <= char count, and every learned merge is a 2-symbol pair."""
+    from mongodb_nats_connector_spark.operators.text import (
+        bpe_apply_merges,
+        bpe_learn_merges,
+    )
+
+    out = bpe_apply_merges(spark, SF).toPandas()
+    assert (out["n_tokens"] <= out["n_symbols_chars"]).all()
+    assert (out["chars_per_token"] >= 1.0).all()
+    merges = bpe_learn_merges(spark, SF).toPandas()
+    for r in merges.itertuples():
+        a, b = r.pair.split(" ")
+        assert r.merged == a + b
+        assert r.pair_count > 0
+
+
+# (word-as-spaced-symbols, pair, merged, expected greedy-BPE result).
+# 'th t' + pair 'h t' is the boundary case: substring replace would
+# rewrite it to 'tht' by matching the tail of merged symbol 'th'.
+MERGE_CASES = [
+    ("t h t h", "t h", "th", "th th"),
+    ("t h t", "h t", "ht", "t ht"),
+    ("th t", "h t", "ht", "th t"),
+    ("a a a a a", "a a", "aa", "aa aa a"),
+    ("a a a", "a a", "aa", "aa a"),
+    ("", "a b", "ab", ""),
+    ("x", "a b", "ab", "x"),
+]
+
+
+@pytest.mark.parametrize("w,pair,merged,expect", MERGE_CASES)
+def test_bpe_merge_whole_symbols_spark(spark, w, pair, merged, expect):
+    """The Spark fold merges whole symbols only, greedy left-to-right —
+    never a substring match across a previously-merged symbol boundary."""
+    p1, p2 = pair.split(" ")
+    got = (
+        spark.createDataFrame([(w,)], "w string")
+        .select(
+            F.array_join(
+                _merge_pair_arr(F.split("w", " "), p1, p2, merged), " "
+            ).alias("r")
+        )
+        .first()["r"]
+    )
+    assert got == expect
+
+
+@pytest.mark.parametrize("w,pair,merged,expect", MERGE_CASES)
+def test_bpe_merge_whole_symbols_duckdb(w, pair, merged, expect):
+    """The DuckDB oracle fold implements the identical greedy semantics,
+    so the parity gate actually exercises true BPE on both engines."""
+    con = duckdb.connect()
+    q = f"SELECT {_duck_merge(repr(w), repr(pair), repr(merged))} AS r"
+    assert con.execute(q).fetchone()[0] == expect
+    con.close()
+
+
+def _greedy_merge_reference(tokens: list[str], p1: str, p2: str, merged: str) -> list[str]:
+    """Plain-Python greedy left-to-right BPE pair merge — the semantics the
+    SQL/Spark folds must reproduce."""
+    out: list[str] = []
+    for tok in tokens:
+        if out and out[-1] == p1 and tok == p2:
+            out[-1] = merged
+        else:
+            out.append(tok)
+    return out
+
+
+@given(
+    tokens=st.lists(st.sampled_from(["a", "b", "ab", "ba", "c"]), min_size=0, max_size=12),
+    pair=st.sampled_from([("a", "b"), ("b", "a"), ("a", "a"), ("ab", "a"), ("b", "ab")]),
+)
+@settings(max_examples=200, deadline=None)
+def test_bpe_fold_matches_greedy_reference(tokens, pair):
+    """Property: the DuckDB list_reduce fold equals plain greedy merging on
+    arbitrary token sequences, including self-pairs and merged-symbol
+    tokens (the boundary cases substring replace got wrong)."""
+    p1, p2 = pair
+    merged = p1 + p2
+    w = " ".join(tokens)
+    expect = " ".join(_greedy_merge_reference(tokens, p1, p2, merged))
+    con = duckdb.connect()
+    q = f"SELECT {_duck_merge(repr(w), repr(p1 + ' ' + p2), repr(merged))} AS r"
+    got = con.execute(q).fetchone()[0]
+    con.close()
+    assert got == expect
+
+
+# ---------------------------------------------------------------------------
+# Quality selection and novelty (docs_topp_quality, docs_ngram_novelty)
+# ---------------------------------------------------------------------------
+
+
+def test_topp_quality_invariants(spark):
+    """Per-source nucleus selection: kept docs must (a) be a prefix of the
+    score-desc ranking, (b) cover >= TOPP_PCT% of the source's score mass,
+    (c) be minimal — dropping the last kept doc falls below the target."""
+    from mongodb_nats_connector_spark.operators.text import (
+        TOPP_PCT,
+        docs_topp_quality,
+    )
+
+    sf = "/root/testdata/sf0.01"
+    kept = docs_topp_quality(spark, sf).toPandas()
+    full = (
+        spark.read.parquet(f"{sf}/documents.parquet")
+        .selectExpr("source", "doc_id", "CAST(size(split(text, ' ')) AS BIGINT) AS score")
+        .toPandas()
+    )
+    for source, grp in full.groupby("source"):
+        grp = grp.sort_values(["score", "doc_id"], ascending=[False, True])
+        total = grp["score"].sum()
+        k = kept[kept["source"] == source]
+        n = len(k)
+        # (a) prefix of the deterministic ranking
+        assert set(k["doc_id"]) == set(grp.head(n)["doc_id"])
+        mass = grp.head(n)["score"].sum()
+        # (b) coverage reaches the target
+        assert mass * 100 >= TOPP_PCT * total
+        # (c) minimality
+        assert (mass - grp.head(n)["score"].iloc[-1]) * 100 < TOPP_PCT * total
+
+
+def test_ngram_novelty_bounds_and_first_doc_is_fully_novel(spark):
+    """novelty_ratio in [0, 1]; novel_grams <= n_grams; and the smallest
+    doc_id (nothing precedes it) is 100% novel."""
+    from mongodb_nats_connector_spark.operators.text import docs_ngram_novelty
+
+    out = docs_ngram_novelty(spark, "/root/testdata/sf0.01").toPandas()
+    assert (out["novel_grams"] <= out["n_grams"]).all()
+    assert ((out["novelty_ratio"] >= 0) & (out["novelty_ratio"] <= 1)).all()
+    first = out.loc[out["doc_id"].idxmin()]
+    assert first["novel_grams"] == first["n_grams"]
