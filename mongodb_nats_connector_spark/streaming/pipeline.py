@@ -138,7 +138,7 @@ class Connector:
         self.metrics = MetricsRegistry() if metrics is None else metrics
         self.handles: list[PipelineHandle] = []
 
-    def _batch_handler(self, sink: JetStreamLikeSink, stream_name: str, lifecycle: dict):
+    def _batch_handler(self, sink: JetStreamLikeSink, publishable: Column, lifecycle: dict):
         """foreachBatch body: publish the batch's publishable events, then —
         O6 — if the batch carries an invalidate marker, flag the pipeline
         (client.go:232-235: the reference stops resuming the dropped
@@ -147,10 +147,10 @@ class Connector:
         Connector's next control call stops it (``_stop_invalidated``).
 
         The batch is the stream projected by ``change_event_columns`` plus
-        ``operation_type``. The invalidate check is an ``Observation`` on the
+        ``operation_type``; ``publishable`` is the predicate that call
+        returned. The invalidate check is an ``Observation`` on the
         unfiltered batch, so it rides the publish job instead of re-scanning
         the batch."""
-        publishable, _ = change_event_columns(stream_name)
         invalidates = F.count_if(
             F.col("operation_type") == INVALIDATE_OPERATION_TYPE
         ).alias("invalidates")
@@ -186,7 +186,7 @@ class Connector:
                 metrics=self.metrics,
             )
             sink.add_stream()  # DDL bootstrap, idempotent (O13)
-            _, cols = change_event_columns(
+            publishable, cols = change_event_columns(
                 coll.stream_name, keep_document_key=self.order_within_key
             )
             events = read_change_event_stream(self.spark, self.source_paths[key]).select(
@@ -197,7 +197,7 @@ class Connector:
             query = (
                 events.writeStream.outputMode("append")
                 .option("checkpointLocation", checkpoint)
-                .foreachBatch(self._batch_handler(sink, coll.stream_name, lifecycle))
+                .foreachBatch(self._batch_handler(sink, publishable, lifecycle))
                 .queryName(f"cdc-{coll.stream_name}")
                 .start()
             )

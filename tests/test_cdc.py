@@ -1,6 +1,6 @@
 """Batch CDC operators (``operators/cdc.py``): offset-gap accounting,
-as-of snapshots and MERGE upserts, checked for the row accounting each
-docstring promises.
+as-of snapshots, MERGE upserts and the lateness audit, checked for the
+row accounting each docstring promises.
 """
 
 from __future__ import annotations
@@ -84,3 +84,22 @@ def test_merge_upsert_invariants(spark):
     assert (
         out.loc[untouched, "o_orderstatus"] == base.loc[untouched, "o_orderstatus"]
     ).all()
+
+
+# ---------------------------------------------------------------------------
+# Lateness audit (cdc_out_of_order_audit)
+# ---------------------------------------------------------------------------
+
+
+def test_lateness_audit_integers_consistent(spark):
+    """n_late <= n_msgs; total lateness >= max lateness when any row is
+    late; zero-late subjects report NULL max and 0 total."""
+    from mongodb_nats_connector_spark.operators.cdc import cdc_out_of_order_audit
+
+    out = cdc_out_of_order_audit(spark, SF).toPandas()
+    assert (out["n_late"] <= out["n_msgs"]).all()
+    late = out[out["n_late"] > 0]
+    assert (late["total_lateness_us"] >= late["max_lateness_us"]).all()
+    clean = out[out["n_late"] == 0]
+    assert clean["max_lateness_us"].isna().all()
+    assert (clean["total_lateness_us"] == 0).all()

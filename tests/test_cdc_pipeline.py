@@ -382,11 +382,12 @@ def test_invalidate_detected(spark, tmp_path):
     sink = JetStreamLikeSink(spark, str(tmp_path / "stream"), "COLL1")
     sink.add_stream()
     conn = Connector(spark, COLL1, {}, sink_root=str(tmp_path / "sink"))
+    publishable, _ = change_event_columns("COLL1")
     for epoch, noise in enumerate((False, True)):
         lifecycle: dict = {}
         ev = generate_change_events(spark, n_docs=2, with_noise_tail=noise)
         assert ev.filter(F.col("operation_type") == "invalidate").count() == int(noise)
-        conn._batch_handler(sink, "COLL1", lifecycle)(_projected(ev), epoch)
+        conn._batch_handler(sink, publishable, lifecycle)(_projected(ev), epoch)
         assert lifecycle.get("invalidated", False) is noise, f"epoch {epoch}"
 
 
@@ -405,10 +406,11 @@ def test_invalidate_flagged_by_the_publish_job(spark, tmp_path, order_within_key
         spark, COLL1, {}, sink_root=str(tmp_path / "sink"), order_within_key=order_within_key
     )
     sc = spark.sparkContext
+    publishable, _ = change_event_columns("COLL1")
     cases = [(2, False, False), (2, True, True), (0, True, True)]  # docs, noise tail, flagged
     for epoch, (n_docs, noise, flagged) in enumerate(cases):
         lifecycle: dict = {}
-        handle = conn._batch_handler(sink, "COLL1", lifecycle)
+        handle = conn._batch_handler(sink, publishable, lifecycle)
         group = f"invalidate-check-{order_within_key}-{epoch}"
         sc.setJobGroup(group, "one epoch of the batch handler")
         try:

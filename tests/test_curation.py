@@ -1,6 +1,6 @@
 """Curation operators (``operators/curation.py``): sharding, layout,
-profiling, data-quality rules and sampling, checked for the determinism
-and accounting properties their docstrings promise.
+profiling, data-quality rules, sampling and dataset cards, checked for
+the determinism and accounting properties their docstrings promise.
 """
 
 from __future__ import annotations
@@ -350,3 +350,41 @@ def test_temperature_resample_conserves_budget_and_flattens(spark):
     by_size = sorted(rows, key=lambda r: r["n_docs"])
     rates = [r["sample_rate"] for r in by_size]
     assert all(a >= b - 1e-9 for a, b in zip(rates, rates[1:]))
+
+
+# ---------------------------------------------------------------------------
+# Balanced sampling and dataset cards (sample_balanced_class,
+# curate_dataset_card)
+# ---------------------------------------------------------------------------
+
+
+def test_balanced_class_exact_counts(spark):
+    """Every class is sampled to exactly the minority count, and the kept
+    ids are the hash-order prefix (deterministic across runs)."""
+    from mongodb_nats_connector_spark.operators.curation import sample_balanced_class
+
+    out = sample_balanced_class(spark, SF).toPandas()
+    ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
+    m = int(ev.groupby("event_type").size().min())
+    counts = out.groupby("event_type").size()
+    assert (counts == m).all()
+    out2 = sample_balanced_class(spark, SF).toPandas()
+    assert sorted(out["event_id"]) == sorted(out2["event_id"])
+
+
+def test_dataset_card_share_closure_and_counts(spark):
+    from mongodb_nats_connector_spark.operators.curation import curate_dataset_card
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
+    card = curate_dataset_card(spark, SF).toPandas()
+    assert card["n_docs"].sum() == len(docs)
+    assert card["total_chars"].sum() == docs["n_chars"].sum()
+    exp_tokens = docs["text"].str.split(" ").str.len().sum()
+    assert card["total_tokens"].sum() == exp_tokens
+    # rounded basis points must close to ~10000 (one bp slack per source)
+    assert abs(card["token_share_bp"].sum() - 10000) <= len(card)
+    assert (card["dup_docs"] >= 0).all()
+    for r in card.itertuples():
+        sub = docs[docs["source"] == r.source]["n_chars"]
+        assert sub.min() <= r.p50_chars <= sub.max()
+        assert r.n_langs == docs[docs["source"] == r.source]["lang"].nunique()

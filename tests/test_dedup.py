@@ -1,5 +1,6 @@
 """Dedup operators (``operators/dedup.py``): boilerplate-prefix clusters,
-LSH embedding dedup and the survivorship report.
+LSH embedding dedup, the survivorship report and the driver union-find
+path of ``dedup_clusters``.
 
 The embedding dedup's precision is structural (an exact cosine verify
 decides every candidate), so it is pinned as a subset of the quadratic
@@ -8,6 +9,7 @@ baseline; its recall is pinned on planted near-duplicates.
 
 from __future__ import annotations
 
+SF = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
 
 
@@ -110,3 +112,23 @@ def test_survivorship_report_accounts_for_every_document(spark):
     n_docs = spark.read.parquet(f"{sf}/documents.parquet").count()
     assert out["docs_total"].sum() == n_docs
     assert (out.loc[out["docs_dropped"] == 0, "chars_saved"] == 0).all()
+
+
+# ---------------------------------------------------------------------------
+# Driver union-find fast path (dedup_clusters)
+# ---------------------------------------------------------------------------
+
+
+def test_dedup_clusters_driver_matches_loop(spark, monkeypatch):
+    """The driver union-find path (edge list proven broadcast-sized) and
+    the iterative min-label propagation loop are two physical plans for
+    the same fixpoint — identical labels row for row."""
+    from mongodb_nats_connector_spark.operators import dedup
+
+    fast = {tuple(r) for r in dedup.dedup_clusters(spark, SF).collect()}
+    monkeypatch.setattr(
+        dedup, "counted_fits_broadcast", lambda *a, **k: False
+    )
+    loop = {tuple(r) for r in dedup.dedup_clusters(spark, SF).collect()}
+    assert fast == loop
+    assert fast, "fixture corpus should produce labels"

@@ -9,7 +9,6 @@ per-row memory instead of one O(k^2) flattened array row.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.functions import texthash

@@ -1,15 +1,21 @@
 """Graph operators (``operators/graph.py``): PageRank, triangles,
-connected components, BFS levels and widest paths checked against
-independent Python re-derivations, and pure-Python pins of the integer
-algebra behind HITS, Moran/Geary, modularity and k-truss peeling, each
-against an independent reference (``test_stats.py`` says why).
+connected components, BFS levels, widest paths, k-core, Adamic-Adar,
+assortativity, the Boruvka MST, closeness/eccentricity/harmonic
+centrality, clustering coefficients, random-walk visits and the rich-club
+profile checked against independent Python re-derivations, and
+pure-Python pins of the integer algebra behind HITS, Moran/Geary,
+modularity and k-truss peeling, each against an independent reference
+(``test_stats.py`` says why).
 """
 
 from __future__ import annotations
 
+import math
 import random
+from collections import defaultdict
 from fractions import Fraction
 
+import pytest
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.operators.graph import (
@@ -420,3 +426,429 @@ def test_widest_path_matches_python_reference(spark):
         for k, name in names.items()
     }
     assert got == ref
+
+
+# ---------------------------------------------------------------------------
+# k-core, link prediction, MST, centrality, clustering and random walks
+# vs BFS and brute-force references
+# ---------------------------------------------------------------------------
+
+
+def _peel_reference(edges, k):
+    nodes = {x for e in edges for x in e}
+    es = list(edges)
+    while True:
+        deg = defaultdict(int)
+        for a, b in es:
+            deg[a] += 1
+            deg[b] += 1
+        keep = {n for n in nodes if deg[n] >= k}
+        if keep == nodes:
+            return es
+        nodes = keep
+        es = [(a, b) for a, b in es if a in nodes and b in nodes]
+
+
+def test_kcore_matches_python_peel(spark):
+    """The DataFrame peel loop must land on the same core (nodes AND
+    degrees) as a plain-Python peeling reference over the same thresholded
+    edge list."""
+    from mongodb_nats_connector_spark.operators.graph_common import trade_edges
+    from mongodb_nats_connector_spark.operators.graph import (
+        KCORE_K,
+        KCORE_W_FACTOR,
+        graph_kcore,
+    )
+
+    de = trade_edges(spark, SF).toPandas()
+    de["a"] = de[["src", "dst"]].min(axis=1)
+    de["b"] = de[["src", "dst"]].max(axis=1)
+    uw = de.groupby(["a", "b"])["w"].sum().reset_index()
+    thr = KCORE_W_FACTOR * uw["w"].mean()
+    edges = [
+        (int(r.a), int(r.b)) for r in uw.itertuples(index=False) if r.w >= thr
+    ]
+    core_edges = _peel_reference(edges, KCORE_K)
+    deg = defaultdict(int)
+    for a, b in core_edges:
+        deg[a] += 1
+        deg[b] += 1
+    nation = spark.read.parquet(f"{SF}/nation.parquet").toPandas()
+    name_of = dict(zip(nation["n_nationkey"], nation["n_name"]))
+    expected = {name_of[n]: d for n, d in deg.items()}
+    got = {
+        r["nation"]: r["core_degree"] for r in graph_kcore(spark, SF).collect()
+    }
+    assert got == expected
+
+
+def test_adamic_adar_matches_python(spark):
+    """AA scores recomputed from the thresholded edge list in plain Python
+    agree for every pair."""
+    from mongodb_nats_connector_spark.operators.graph_common import trade_edges
+    from mongodb_nats_connector_spark.operators.graph import (
+        KCORE_W_FACTOR,
+        graph_adamic_adar,
+    )
+
+    de = trade_edges(spark, SF).toPandas()
+    de["a"] = de[["src", "dst"]].min(axis=1)
+    de["b"] = de[["src", "dst"]].max(axis=1)
+    uw = de.groupby(["a", "b"])["w"].sum().reset_index()
+    thr = KCORE_W_FACTOR * uw["w"].mean()
+    edges = {
+        (int(r.a), int(r.b)) for r in uw.itertuples(index=False) if r.w >= thr
+    }
+    nbrs = defaultdict(set)
+    for a, b in edges:
+        nbrs[a].add(b)
+        nbrs[b].add(a)
+    nation = spark.read.parquet(f"{SF}/nation.parquet").toPandas()
+    name_of = dict(zip(nation["n_nationkey"], nation["n_name"]))
+    exp = {}
+    nodes = sorted(nbrs)
+    for i, na in enumerate(nodes):
+        for nb in nodes[i + 1:]:
+            common = [
+                z for z in nbrs[na] & nbrs[nb] if len(nbrs[z]) > 1
+            ]
+            if not common:
+                continue
+            score = round(
+                sum(round(1.0 / math.log(len(nbrs[z])), 9) for z in common), 6
+            )
+            exp[(name_of[na], name_of[nb])] = (
+                len(common),
+                score,
+                1 if (na, nb) in edges else 0,
+            )
+    got = {
+        (r["nation_a"], r["nation_b"]): (
+            r["n_common"],
+            r["aa_score"],
+            r["is_edge"],
+        )
+        for r in graph_adamic_adar(spark, SF).collect()
+    }
+    assert got == exp
+
+
+def test_assortativity_matches_numpy(spark):
+    """Degree assortativity equals numpy's corrcoef over endpoint degrees
+    of the same thresholded edge list."""
+    import numpy as np
+
+    from mongodb_nats_connector_spark.operators.graph import (
+        _thresholded_und_edges,
+        graph_assortativity,
+    )
+
+    row = graph_assortativity(spark, SF).collect()[0]
+    assert -1.0 <= row["assortativity"] <= 1.0
+    edges = [(r["a"], r["b"]) for r in _thresholded_und_edges(spark, SF).collect()]
+    deg = defaultdict(int)
+    for a, b in edges:
+        deg[a] += 1
+        deg[b] += 1
+    du = [deg[a] for a, b in edges] + [deg[b] for a, b in edges]
+    dv = [deg[b] for a, b in edges] + [deg[a] for a, b in edges]
+    r = float(np.corrcoef(du, dv)[0, 1])
+    assert abs(row["assortativity"] - round(r, 4)) < 1e-3
+    assert row["n_dir_edges"] == 2 * len(edges)
+
+
+def test_mst_matches_kruskal(spark):
+    """Boruvka (Spark) must return the identical edge set as a driver-side
+    Kruskal under the same (w, a, b) total order — the third independent
+    algorithm (the oracle is Prim)."""
+    from mongodb_nats_connector_spark.operators.graph_common import (
+        trade_edges,
+    )
+    from mongodb_nats_connector_spark.operators.graph import graph_mst_boruvka
+
+    de = trade_edges(spark, SF).toPandas()
+    und = {}
+    for r in de.itertuples():
+        a, b = sorted((int(r.src), int(r.dst)))
+        und[(a, b)] = und.get((a, b), 0) + int(r.w)
+    edges = sorted((w, a, b) for (a, b), w in und.items())
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    kruskal = set()
+    for w, a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+            kruskal.add((a, b, w))
+
+    got = {
+        (r["a"], r["b"], r["w"])
+        for r in graph_mst_boruvka(spark, SF).collect()
+    }
+    assert got == kruskal
+    nodes = {n for e in und for n in e}
+    assert len(got) == len(nodes) - 1  # spanning tree of a connected graph
+
+
+def test_closeness_matches_bfs(spark):
+    """Min-plus doubling distances must equal an independent BFS over the
+    same undirected nation graph."""
+    from collections import deque
+
+    from mongodb_nats_connector_spark.operators.graph_common import (
+        trade_edges,
+    )
+    from mongodb_nats_connector_spark.operators.graph import graph_closeness_centrality
+
+    de = trade_edges(spark, SF).toPandas()
+    adj = {}
+    for r in de.itertuples():
+        a, b = int(r.src), int(r.dst)
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    got = {
+        r["node"]: (r["n_reachable"], r["total_dist"], r["closeness"])
+        for r in graph_closeness_centrality(spark, SF).collect()
+    }
+    for src in adj:
+        dist = {src: 0}
+        dq = deque([src])
+        while dq:
+            u = dq.popleft()
+            for v in adj[u]:
+                if v not in dist:
+                    dist[v] = dist[u] + 1
+                    dq.append(v)
+        reach = len(dist) - 1
+        total = sum(d for n_, d in dist.items() if n_ != src)
+        assert got[src][0] == reach
+        assert got[src][1] == total
+        assert got[src][2] == pytest.approx(reach / total)
+
+
+def test_eccentricity_matches_bfs(spark):
+    """Per-node eccentricity, the diameter, the radius, and the
+    peripheral/central flags must all agree with an independent BFS over
+    the same undirected nation graph."""
+    from collections import deque
+
+    from mongodb_nats_connector_spark.operators.graph_common import (
+        trade_edges,
+    )
+    from mongodb_nats_connector_spark.operators.graph import graph_eccentricity_diameter
+
+    de = trade_edges(spark, SF).toPandas()
+    adj = {}
+    for r in de.itertuples():
+        a, b = int(r.src), int(r.dst)
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    ecc = {}
+    reach = {}
+    for src in adj:
+        dist = {src: 0}
+        dq = deque([src])
+        while dq:
+            u = dq.popleft()
+            for v in adj[u]:
+                if v not in dist:
+                    dist[v] = dist[u] + 1
+                    dq.append(v)
+        ecc[src] = max(d for n_, d in dist.items() if n_ != src)
+        reach[src] = len(dist) - 1
+    diameter = max(ecc.values())
+    radius = min(ecc.values())
+    rows = graph_eccentricity_diameter(spark, SF).collect()
+    assert len(rows) == len(adj)
+    for r in rows:
+        assert r["eccentricity"] == ecc[r["node"]]
+        assert r["n_reachable"] == reach[r["node"]]
+        assert r["diameter"] == diameter
+        assert r["radius"] == radius
+        assert r["is_peripheral"] == (ecc[r["node"]] == diameter)
+        assert r["is_central"] == (ecc[r["node"]] == radius)
+
+
+def test_harmonic_centrality_matches_bfs(spark):
+    """Harmonic sums must equal an independent BFS recomputation, and the
+    exact-LCM numerator must reconstruct them without float error."""
+    from collections import deque
+
+    from mongodb_nats_connector_spark.operators.graph_common import (
+        trade_edges,
+    )
+    from mongodb_nats_connector_spark.operators.graph import (
+        _HARMONIC_LCM,
+        graph_harmonic_centrality,
+    )
+
+    de = trade_edges(spark, SF).toPandas()
+    adj = {}
+    for r in de.itertuples():
+        a, b = int(r.src), int(r.dst)
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    got = {r["node"]: r for r in graph_harmonic_centrality(spark, SF).collect()}
+    assert set(got) == set(adj)
+    for src in adj:
+        dist = {src: 0}
+        dq = deque([src])
+        while dq:
+            u = dq.popleft()
+            for v in adj[u]:
+                if v not in dist:
+                    dist[v] = dist[u] + 1
+                    dq.append(v)
+        num = sum(_HARMONIC_LCM // d for n_, d in dist.items() if n_ != src)
+        assert got[src]["n_reachable"] == len(dist) - 1
+        assert got[src]["harmonic_num"] == num  # exact: every d divides LCM
+        assert got[src]["harmonic"] == num / _HARMONIC_LCM
+        assert (
+            abs(
+                got[src]["harmonic_normalized"]
+                - got[src]["harmonic"] / (len(adj) - 1)
+            )
+            < 1e-15
+        )
+
+
+def test_clustering_coefficient_matches_bruteforce(spark):
+    """Per-node triangles, coefficients and transitivity must match a
+    brute-force adjacency-set recomputation; sum of per-node triangles
+    must equal 3x the global triangle count."""
+    from itertools import combinations
+
+    from mongodb_nats_connector_spark.operators.graph_common import (
+        trade_edges,
+    )
+    from mongodb_nats_connector_spark.operators.graph import (
+        graph_clustering_coefficient,
+    )
+
+    de = trade_edges(spark, SF).toPandas()
+    adj = {}
+    for r in de.itertuples():
+        a, b = int(r.src), int(r.dst)
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    got = {
+        r["node"]: r for r in graph_clustering_coefficient(spark, SF).collect()
+    }
+    assert set(got) == set(adj)
+    tri_total = 0
+    wedges = 0
+    for node, nbrs in adj.items():
+        tri = sum(1 for v, w in combinations(sorted(nbrs), 2) if w in adj[v])
+        d = len(nbrs)
+        tri_total += tri
+        wedges += d * (d - 1)
+        r = got[node]
+        assert r["degree"] == d
+        assert r["triangles"] == tri
+        expected_c = 2 * tri / (d * (d - 1)) if d > 1 else 0.0
+        assert abs(r["clustering"] - expected_c) < 1e-15
+        assert 0.0 <= r["clustering"] <= 1.0
+    any_row = next(iter(got.values()))
+    assert abs(any_row["transitivity"] - 2 * tri_total / wedges) < 1e-15
+    # each triangle is counted once per member node
+    assert tri_total % 3 == 0
+
+
+def _trade_weights(spark):
+    """(src, dst) -> weight of the directed customer->supplier trade graph,
+    recomputed with pandas merges (independent of the operators' rollup)."""
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()[
+        ["l_orderkey", "l_suppkey"]
+    ]
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()[
+        ["o_orderkey", "o_custkey"]
+    ]
+    c = spark.read.parquet(f"{SF}/customer.parquet").toPandas()[
+        ["c_custkey", "c_nationkey"]
+    ]
+    s = spark.read.parquet(f"{SF}/supplier.parquet").toPandas()[
+        ["s_suppkey", "s_nationkey"]
+    ]
+    f = (
+        li.merge(o, left_on="l_orderkey", right_on="o_orderkey")
+        .merge(c, left_on="o_custkey", right_on="c_custkey")
+        .merge(s, left_on="l_suppkey", right_on="s_suppkey")
+    )
+    f = f[f["c_nationkey"] != f["s_nationkey"]]
+    g = f.groupby(["c_nationkey", "s_nationkey"]).size()
+    return {
+        (int(src), int(dst)): int(w) for (src, dst), w in g.items()
+    }
+
+
+def test_rw_visit_probs_matches_bruteforce_walk(spark):
+    """The driver-side 4-step walk must equal a from-scratch integer
+    replay of the per-step (p*w) // s distribution over the pandas-built
+    trade graph (the formulation the oracle unrolls as chained CTEs)."""
+    from mongodb_nats_connector_spark.operators.graph import graph_rw_visit_probs
+
+    tr = _trade_weights(spark)
+    st: dict = {}
+    for (src, _), w in tr.items():
+        st[src] = st.get(src, 0) + w
+    start = min(st, key=lambda k: (-st[k], k))
+    p = {start: 10**12}
+    for _ in range(4):
+        nxt: dict = {}
+        for (src, dst), w in tr.items():
+            if src in p:
+                nxt[dst] = nxt.get(dst, 0) + (p[src] * w) // st[src]
+        p = nxt
+    expected = sorted((k, v) for k, v in p.items() if v > 0)
+    rows = graph_rw_visit_probs(spark, SF).collect()
+    got = [(r["nationkey"], r["p4_pico"]) for r in rows]
+    assert got == expected
+    # picomass can only be lost to per-edge flooring, never created
+    assert sum(v for _, v in got) <= 10**12
+
+
+def test_rich_club_matches_bruteforce_profile(spark):
+    """The driver-side club sweep must equal a from-scratch recomputation:
+    undirected fold, the 20*w*cnt >= 23*s backbone threshold, degree
+    floors, club node/edge counts and the exact ppb floor division."""
+    from mongodb_nats_connector_spark.operators.graph import graph_rich_club
+
+    tr = _trade_weights(spark)
+    uw: dict = {}
+    for (src, dst), w in tr.items():
+        a, b = min(src, dst), max(src, dst)
+        uw[(a, b)] = uw.get((a, b), 0) + w
+    cnt, s_tot = len(uw), sum(uw.values())
+    und = [e for e, w in uw.items() if 20 * w * cnt >= 23 * s_tot]
+    deg: dict = {}
+    for a, b in und:
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    expected = []
+    for k in sorted(set(deg.values())):
+        n_k = sum(1 for d in deg.values() if d >= k)
+        if n_k < 2:
+            continue
+        e_k = sum(1 for a, b in und if deg[a] >= k and deg[b] >= k)
+        expected.append(
+            (k, n_k, e_k, (2000000000 * e_k) // (n_k * (n_k - 1)))
+        )
+    rows = graph_rich_club(spark, SF).collect()
+    got = [
+        (
+            r["degree_floor"],
+            r["n_club_nodes"],
+            r["n_club_edges"],
+            r["phi_ppb"],
+        )
+        for r in rows
+    ]
+    assert got == expected
+    # phi is a density: monotone bounds, never above complete-graph 2e9/2
+    assert all(0 <= phi <= 10**9 for *_rest, phi in got)

@@ -4,9 +4,6 @@ pipelines -> observability, end to end in --once mode."""
 from __future__ import annotations
 
 import json
-import urllib.request
-
-from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.__main__ import main
 from mongodb_nats_connector_spark.sources.change_events import write_change_event_feed

@@ -5,8 +5,6 @@ order-insensitive comparison the driver performs)."""
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import numpy as np
 import pandas as pd

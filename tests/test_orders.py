@@ -1,6 +1,6 @@
 """Order and supply-chain analytics (``operators/orders.py``, ``orders_*``):
 forecasting folds, process control, survival, concentration and econ
-indices.
+indices, skylines, group comparisons and association rules.
 
 Spark tests recompute a query's result on the smoke tables from its
 definition. Pure-Python pins check the algebra both engines share
@@ -13,7 +13,11 @@ import math
 import random
 from fractions import Fraction
 
+import numpy as np
 import pandas as pd
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -916,3 +920,580 @@ def test_gini_hhi_matches_pandas_and_bounds(spark):
     assert abs(r["gini"] - gini) < 1e-4
     assert 0.0 <= r["gini"] < 1.0
     assert 1.0 / n <= r["hhi"] <= 1.0
+
+
+# ---------------------------------------------------------------------------
+# Skylines, smoothing folds, survival, control limits and forecasts,
+# recomputed from their definitions
+# ---------------------------------------------------------------------------
+
+
+def test_skyline_no_dominated_survivor_and_no_missing(spark):
+    """Brute-force O(n^2) dominance over the per-customer points must agree
+    exactly with the sort-based skyline."""
+    from mongodb_nats_connector_spark.operators.orders import orders_skyline_pareto
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    per = (
+        o.groupby("o_custkey")
+        .agg(spend=("o_totalprice", "sum"), n_orders=("o_totalprice", "size"))
+        .reset_index()
+    )
+    per["spend_c"] = (per["spend"] * 100).round().astype("int64")
+    pts = list(per[["o_custkey", "spend_c", "n_orders"]].itertuples(index=False))
+    expected = set()
+    for p in pts:
+        dominated = any(
+            (q.spend_c >= p.spend_c and q.n_orders >= p.n_orders)
+            and (q.spend_c > p.spend_c or q.n_orders > p.n_orders)
+            for q in pts
+        )
+        if not dominated:
+            expected.add(p.o_custkey)
+    got = {
+        r["o_custkey"] for r in orders_skyline_pareto(spark, SF).collect()
+    }
+    assert got == expected
+
+
+def test_exp_smoothing_matches_recursion(spark):
+    """The fold result equals the plain recursive filter computed in
+    Python over the same monthly series."""
+    from mongodb_nats_connector_spark.operators.orders import (
+        SMOOTH_ALPHA,
+        orders_exp_smoothing,
+    )
+
+    import math
+
+    out = orders_exp_smoothing(spark, SF).toPandas()
+    for prio, g in out.groupby("priority"):
+        g = g.sort_values("month")
+        s = None
+        for _, r in g.iterrows():
+            x_c = round(r["revenue"] * 100)
+            # integer-cent fold, half rounding AWAY from zero like both
+            # engines (python round() is half-to-even)
+            s = (
+                x_c
+                if s is None
+                else math.floor(
+                    SMOOTH_ALPHA * x_c + (1 - SMOOTH_ALPHA) * s + 0.5
+                )
+            )
+            assert abs(r["smoothed"] - s / 100.0) < 1e-9, (prio, r["month"])
+
+
+def test_survival_km_matches_python(spark):
+    """The KM curve recomputed with a plain-Python product-limit estimator
+    agrees at every duration, and survival is non-increasing in [0,1]."""
+    from mongodb_nats_connector_spark.operators.orders import orders_survival_km
+
+    out = orders_survival_km(spark, SF).toPandas().sort_values("duration_days")
+    s = out["survival"].to_numpy()
+    assert ((s >= 0) & (s <= 1)).all()
+    assert (s[1:] <= s[:-1] + 1e-9).all()
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o.sort_values(["o_custkey", "o_orderdate", "o_orderkey"])
+    tmax = o["o_orderdate"].max().date()
+    durs = []
+    for cust, g in o.groupby("o_custkey"):
+        dates = list(g["o_orderdate"])
+        t1 = dates[0].date()
+        if len(dates) >= 2:
+            durs.append(((dates[1].date() - t1).days, 1))
+        else:
+            durs.append(((tmax - t1).days, 0))
+    from collections import Counter
+
+    ev_at = Counter(d for d, e in durs if e)
+    all_at = Counter(d for d, e in durs)
+    n = len(durs)
+    surv, at_risk = 1.0, n
+    exp = {}
+    for d in sorted(all_at):
+        d_ev = ev_at.get(d, 0)
+        if at_risk == d_ev:
+            surv = 0.0
+        elif d_ev:
+            surv *= (at_risk - d_ev) / at_risk
+        exp[d] = (at_risk, d_ev, all_at[d] - d_ev, surv)
+        at_risk -= all_at[d]
+    for _, r in out.iterrows():
+        e = exp[r["duration_days"]]
+        assert r["n_risk"] == e[0] and r["n_events"] == e[1]
+        assert r["n_censored"] == e[2]
+        assert abs(r["survival"] - e[3]) < 1e-4, r["duration_days"]
+
+
+def _write_orders(spark, path, rows):
+    """rows: (o_orderkey, o_custkey, o_totalprice, o_orderdate str)."""
+    df = spark.createDataFrame(
+        [
+            (k, c, "O", p, pd.Timestamp(d).to_pydatetime(), "1-URGENT")
+            for k, c, p, d in rows
+        ],
+        "o_orderkey long, o_custkey long, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(f"{path}/orders.parquet")
+
+
+def test_skyline_tie_torture(spark, tmp_path):
+    """Adversarial ties: equal spend with different order counts, equal
+    order counts with different spend, exact duplicates (both kept), and a
+    strictly dominated point — against brute-force dominance."""
+    rows = [
+        # cust 1: spend 300, 1 order  (frontier: highest spend)
+        (1, 1, 300.0, "2024-01-01"),
+        # cust 2: spend 200, 2 orders (frontier)
+        (2, 2, 100.0, "2024-01-01"),
+        (3, 2, 100.0, "2024-01-02"),
+        # cust 3: spend 200, 2 orders — duplicate point of cust 2: BOTH kept
+        (4, 3, 150.0, "2024-01-01"),
+        (5, 3, 50.0, "2024-01-02"),
+        # cust 4: spend 200, 1 order — dominated by cust 2 (same spend, fewer)
+        (6, 4, 200.0, "2024-01-01"),
+        # cust 5: spend 100, 2 orders — dominated by cust 2 (less spend, same)
+        (7, 5, 60.0, "2024-01-01"),
+        (8, 5, 40.0, "2024-01-02"),
+        # cust 6: spend 50, 3 orders (frontier: most orders)
+        (9, 6, 20.0, "2024-01-01"),
+        (10, 6, 20.0, "2024-01-02"),
+        (11, 6, 10.0, "2024-01-03"),
+    ]
+    from mongodb_nats_connector_spark.operators.orders import orders_skyline_pareto
+
+    _write_orders(spark, str(tmp_path), rows)
+    got = {
+        r["o_custkey"]: (r["spend"], r["n_orders"])
+        for r in orders_skyline_pareto(spark, str(tmp_path)).collect()
+    }
+    assert set(got) == {1, 2, 3, 6}
+    assert got[2] == (200.0, 2) and got[3] == (200.0, 2)
+
+
+def test_survival_km_total_extinction_guard(spark, tmp_path):
+    """If every cohort member converts at the same duration (risk set ==
+    events at the last duration), survival must be exactly 0 with no
+    log-domain error."""
+    rows = [
+        (1, 1, 10.0, "2024-01-01"),
+        (2, 1, 10.0, "2024-01-03"),
+        (3, 2, 10.0, "2024-01-01"),
+        (4, 2, 10.0, "2024-01-03"),
+    ]
+    from mongodb_nats_connector_spark.operators.orders import orders_survival_km
+
+    _write_orders(spark, str(tmp_path), rows)
+    out = orders_survival_km(spark, str(tmp_path)).toPandas()
+    assert len(out) == 1
+    r = out.iloc[0]
+    assert r["duration_days"] == 2 and r["n_risk"] == 2
+    assert r["n_events"] == 2 and r["survival"] == 0.0
+
+
+def test_shewhart_limits_and_flags(spark):
+    """Control limits bracket the center symmetrically, flags agree with a
+    pandas recompute, and in-control days dominate (3-sigma ~ 0.3%)."""
+    from mongodb_nats_connector_spark.operators.orders import (
+        SHEWHART_SIGMA,
+        orders_shewhart_control,
+    )
+
+    out = orders_shewhart_control(spark, SF).toPandas()
+    assert ((out["ucl"] - out["center"]) - (out["center"] - out["lcl"])).abs().max() < 0.02
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o["day"] = o["o_orderdate"].dt.date
+    o["cents"] = (o["o_totalprice"] * 100).round().astype("int64")
+    daily = o.groupby("day")["cents"].sum()
+    mu, sd = daily.mean(), daily.std(ddof=1)
+    exp_flags = ((daily < mu - SHEWHART_SIGMA * sd) | (daily > mu + SHEWHART_SIGMA * sd))
+    got = dict(zip(out["day"], out["out_of_control"]))
+    for day, f in exp_flags.items():
+        assert got[day] == int(f), day
+    assert out["out_of_control"].mean() < 0.2
+
+
+def test_newsvendor_matches_numpy_quantile(spark):
+    from mongodb_nats_connector_spark.operators.orders import (
+        NV_Q,
+        orders_newsvendor_fractile,
+    )
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    c = spark.read.parquet(f"{SF}/customer.parquet").toPandas()
+    j = o.merge(c, left_on="o_custkey", right_on="c_custkey")
+    j["day"] = j["o_orderdate"].dt.date
+    d = (
+        j.groupby(["c_mktsegment", "day"]).size().reset_index(name="cnt")
+    )
+    rows = {r["segment"]: r for r in orders_newsvendor_fractile(spark, SF).collect()}
+    for seg, grp in d.groupby("c_mktsegment"):
+        cnt = grp["cnt"].to_numpy(dtype="float64")
+        stock = round(np.quantile(cnt, NV_Q, method="linear") * 10) / 10.0
+        r = rows[seg]
+        assert r["n_days"] == len(cnt)
+        assert abs(r["stock_q90"] - stock) < 1e-9
+        over = np.maximum(0.0, stock - cnt).mean()
+        under = np.maximum(0.0, cnt - stock).mean()
+        assert abs(r["exp_overage"] - over) < 1e-3
+        assert abs(r["exp_underage"] - under) < 1e-3
+        fill = 1.0 - np.maximum(0.0, cnt - stock).sum() / cnt.sum()
+        assert abs(r["fill_rate"] - fill) < 1e-5
+
+
+def test_mape_backtest_winner_consistent(spark):
+    from mongodb_nats_connector_spark.operators.orders import orders_mape_backtest
+
+    r = orders_mape_backtest(spark, SF).collect()[0]
+    assert r["n_months"] > 0
+    assert r["mape_naive_pct"] >= 0 and r["mape_ma3_pct"] >= 0
+    if r["mape_ma3_pct"] < r["mape_naive_pct"]:
+        assert r["winner"] == "ma3"
+    elif r["mape_ma3_pct"] > r["mape_naive_pct"]:
+        assert r["winner"] == "naive"
+    # independent re-derivation of the naive MAPE on monthly integer cents
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o["rev_c"] = (o["o_totalprice"] * 100).round().astype("int64")
+    m = (
+        o.groupby(o["o_orderdate"].dt.to_period("M"))["rev_c"]
+        .sum()
+        .sort_index()
+    )
+    rev = m.to_numpy(dtype="float64")
+    scored = rev[3:]
+    naive = rev[2:-1]
+    ape = np.round(1e6 * np.abs(scored - naive) / scored)
+    exp_naive = ape.mean() / 1e4
+    assert r["n_months"] == len(scored)
+    assert abs(r["mape_naive_pct"] - exp_naive) < 1e-3
+
+
+def test_holt_linear_matches_python_fold(spark):
+    from mongodb_nats_connector_spark.operators.orders import (
+        HOLT_ALPHA,
+        HOLT_BETA,
+        orders_holt_linear,
+    )
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o["rev_c"] = (o["o_totalprice"] * 100).round().astype("int64")
+    o["month"] = o["o_orderdate"].dt.to_period("M")
+    got = orders_holt_linear(spark, SF).toPandas()
+    for prio, grp in o.groupby("o_orderpriority"):
+        series = grp.groupby("month")["rev_c"].sum().sort_index()
+        l, b = int(series.iloc[0]), 0
+        rows = (
+            got[got["priority"] == prio]
+            .sort_values("month")
+            .reset_index(drop=True)
+        )
+        assert abs(rows.loc[0, "level"] - l / 100.0) < 1e-9
+        def round_away(v: float) -> int:
+            # both engines round .5 away from zero; python round() is
+            # half-to-even, so mirror the engine convention explicitly
+            return math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
+
+        for i in range(1, len(series)):
+            x = int(series.iloc[i])
+            l_new = round_away(HOLT_ALPHA * x + (1 - HOLT_ALPHA) * (l + b))
+            b = round_away(HOLT_BETA * (l_new - l) + (1 - HOLT_BETA) * b)
+            l = l_new
+            assert abs(rows.loc[i, "level"] - l / 100.0) < 1e-6, (prio, i)
+            assert abs(rows.loc[i, "trend"] - b / 100.0) < 1e-6, (prio, i)
+        assert abs(
+            rows.loc[len(series) - 1, "forecast_1"] - (l + b) / 100.0
+        ) < 1e-6
+
+
+def test_price_index_identities(spark):
+    from mongodb_nats_connector_spark.operators.orders import orders_price_index
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
+    got = orders_price_index(spark, SF).toPandas().sort_values("year")
+    years = sorted(li["l_shipdate"].dt.year.unique())
+    # one row per non-base year, base = min year
+    assert list(got["year"]) == years[1:]
+    for r in got.itertuples():
+        # Fisher is the geometric mean of Laspeyres and Paasche
+        assert abs(r.fisher - math.sqrt(r.laspeyres * r.paasche)) < 1e-4
+        assert r.laspeyres > 0 and r.paasche > 0
+        assert r.n_parts > 0
+    # independent Laspeyres re-derivation for the first comparison year
+    li["y"] = li["l_shipdate"].dt.year
+    li["price_c"] = (li["l_extendedprice"] * 100).round()
+    li["qty"] = li["l_quantity"].round()
+    py = (
+        li.groupby(["y", "l_partkey"])
+        .agg(ext=("price_c", "sum"), q=("qty", "sum"))
+        .reset_index()
+    )
+    py["p_u"] = (1e4 * py["ext"] / py["q"]).round()
+    y0, y1 = years[0], years[1]
+    base = py[py["y"] == y0].set_index("l_partkey")
+    cur = py[py["y"] == y1].set_index("l_partkey")
+    common = base.index.intersection(cur.index)
+    lasp = (cur.loc[common, "p_u"] * base.loc[common, "q"]).sum() / (
+        base.loc[common, "p_u"] * base.loc[common, "q"]
+    ).sum()
+    assert abs(got.iloc[0]["laspeyres"] - lasp) < 1e-4
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.integers(min_value=0, max_value=10**12), min_size=1, max_size=60
+    )
+)
+def test_holt_integer_fold_is_float_smoothing(xs):
+    """The integer-cent Holt fold stays within 1 cent per step of the
+    unquantized float recursion — re-quantization bounds the drift."""
+    from mongodb_nats_connector_spark.operators.orders import (
+        HOLT_ALPHA,
+        HOLT_BETA,
+    )
+
+    li, bi = xs[0], 0  # integer state
+    lf, bf = float(xs[0]), 0.0  # float state
+    for x in xs[1:]:
+        l_new = math.floor(HOLT_ALPHA * x + (1 - HOLT_ALPHA) * (li + bi) + 0.5)
+        bi = math.floor(
+            HOLT_BETA * (l_new - li) + (1 - HOLT_BETA) * bi + 0.5
+        )
+        li = l_new
+        lf_new = HOLT_ALPHA * x + (1 - HOLT_ALPHA) * (lf + bf)
+        bf = HOLT_BETA * (lf_new - lf) + (1 - HOLT_BETA) * bf
+        lf = lf_new
+        # quantization error is a geometric series with ratio < 1: the
+        # integer state tracks the float recursion within a few cents
+        assert abs(li - lf) < 5.0
+        assert abs(bi - bf) < 5.0
+
+
+def test_nelson_aalen_matches_lifelines_free_rederivation(spark):
+    from mongodb_nats_connector_spark.operators.orders import orders_nelson_aalen
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o.sort_values(["o_custkey", "o_orderdate", "o_orderkey"])
+    tmax = o["o_orderdate"].max().date()
+    durs, evs = [], []
+    for _, g in o.groupby("o_custkey"):
+        t1 = g.iloc[0]["o_orderdate"].date()
+        if len(g) > 1:
+            durs.append((g.iloc[1]["o_orderdate"].date() - t1).days)
+            evs.append(1)
+        else:
+            durs.append((tmax - t1).days)
+            evs.append(0)
+    df = pd.DataFrame({"dur": durs, "ev": evs}).sort_values("dur")
+    n = len(df)
+    got = {
+        r["duration_days"]: r for r in orders_nelson_aalen(spark, SF).collect()
+    }
+    h_nn = 0
+    seen = 0
+    for dur, g in df.groupby("dur"):
+        n_risk = n - seen
+        d = int(g["ev"].sum())
+        seen += len(g)
+        if d == 0:
+            assert dur not in got
+            continue
+        h_nn += round(1e9 * d / n_risk)
+        r = got[dur]
+        assert r["n_events"] == d and r["n_risk"] == n_risk
+        assert abs(r["cum_hazard"] - h_nn / 1e9) < 1e-6
+        # the round-9 hash surface is the exact integer nano-hazard (the
+        # round(exp(-H),6) display column was dropped as libm-ulp-fragile)
+        assert r["cum_hazard_nn"] == h_nn
+    # hazard is nondecreasing, survival nonincreasing, NA >= KM pointwise
+    hs = [got[k]["cum_hazard"] for k in sorted(got)]
+    assert hs == sorted(hs)
+
+
+def test_seasonal_decompose_identity_and_centering(spark):
+    """revenue = trend + seasonal + residual wherever trend exists, the
+    seasonal indices are centered (sum ~ 0 across the 12 calendar months),
+    and edge months carry NULL trend/residual."""
+    from mongodb_nats_connector_spark.operators.orders import orders_seasonal_decompose
+
+    rows = orders_seasonal_decompose(spark, SF).collect()
+    assert len(rows) > 24
+    by_moy = {}
+    n_null = 0
+    for r in rows:
+        if r["trend"] is None:
+            n_null += 1
+            assert r["residual"] is None
+        else:
+            assert r["residual"] == pytest.approx(
+                r["revenue"] - r["trend"] - r["seasonal"], abs=1e-6
+            )
+        by_moy[r["month"].month] = r["seasonal"]
+    assert n_null == 12  # 6 head + 6 tail months lack the centered window
+    assert len(by_moy) == 12
+    assert sum(by_moy.values()) == pytest.approx(0.0, abs=1e-4)
+
+
+def test_wasserstein_matches_cdf_integral(spark):
+    """W1 must equal the numpy CDF-difference integral over the bucketed
+    values, and be symmetric-positive."""
+    from mongodb_nats_connector_spark.operators.orders import orders_wasserstein_1d
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o[o["o_orderpriority"].isin(["1-URGENT", "5-LOW"])]
+    v = (o["o_totalprice"] / 10000).round().astype("int64")
+    u = np.sort(v[o["o_orderpriority"] == "1-URGENT"].to_numpy())
+    l_ = np.sort(v[o["o_orderpriority"] == "5-LOW"].to_numpy())
+    grid = np.unique(np.concatenate([u, l_]))
+    f1 = np.searchsorted(u, grid, side="right") / len(u)
+    f2 = np.searchsorted(l_, grid, side="right") / len(l_)
+    expected = float(np.sum(np.abs(f1 - f2)[:-1] * np.diff(grid)))
+    r = orders_wasserstein_1d(spark, SF).collect()[0]
+    assert r["n_urgent"] == len(u) and r["n_low"] == len(l_)
+    assert abs(r["wasserstein_buckets"] - expected) < 1e-9
+    assert r["wasserstein_dollars"] >= 0
+    assert abs(r["wasserstein_dollars"] - expected * 10000) < 1e-5
+
+
+def test_logrank_matches_pandas_replay(spark):
+    """O1, the observed-expected sum, the variance sum and chi2 must match
+    a pandas risk-set replay of the same duration/censoring construction."""
+    from mongodb_nats_connector_spark.operators.orders import orders_logrank_test
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o.sort_values(["o_orderdate", "o_orderkey"])
+    tmax = o["o_orderdate"].max()
+    firsts = o.groupby("o_custkey").nth(0)
+    seconds = o.groupby("o_custkey").nth(1)
+    t2 = seconds.set_index("o_custkey")["o_orderdate"]
+    rows = []
+    for _, r in firsts.iterrows():
+        cust = r["o_custkey"]
+        end = t2.get(cust, None)
+        ev = end is not None
+        dur = ((end if ev else tmax) - r["o_orderdate"]).days
+        rows.append(
+            (dur, int(ev), int(r["o_orderpriority"] in ("1-URGENT", "2-HIGH")))
+        )
+    df = pd.DataFrame(rows, columns=["dur", "ev", "g"])
+    n, n1 = len(df), int(df["g"].sum())
+    o1 = diff_nn = var_nn = 0
+    for dur in sorted(df["dur"].unique()):
+        at = df[df["dur"] >= dur]
+        here = df[df["dur"] == dur]
+        d, d1 = int(here["ev"].sum()), int((here["ev"] * here["g"]).sum())
+        nr, nr1 = len(at), int(at["g"].sum())
+        if d == 0 or nr == 0:
+            continue
+        o1 += d1
+        diff_nn += int(round(1e9 * (d1 * nr - nr1 * d) / nr))
+        if nr > 1:
+            var_nn += int(
+                round(
+                    1e9 * (float(nr1) * (nr - nr1) * d * (nr - d))
+                    / ((float(nr) * nr) * (nr - 1))
+                )
+            )
+    r = orders_logrank_test(spark, SF).collect()[0]
+    assert r["n1"] == n1 and r["n0"] == n - n1
+    assert r["o1"] == o1
+    assert r["diff_nn"] == diff_nn
+    assert r["var_nn"] == var_nn
+    assert abs(r["logrank_chi2"] - diff_nn**2 / (1e9 * var_nn)) < 1e-9
+
+
+def test_tukey_pairwise_matches_anova_pooling(spark):
+    """Every pair's mean difference, pooled-MSE standard error and |t|
+    must match a pandas one-way ANOVA recomputation (micro-cents^2
+    within-SS quantization respected)."""
+    from mongodb_nats_connector_spark.operators.orders import orders_tukey_pairwise
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    cents = (o["o_totalprice"] * 100).round().astype("int64")
+    grp = o["o_orderpriority"]
+    stats = {}
+    ssw_m = 0
+    for gname, gvals in cents.groupby(grp):
+        n, s, ss = len(gvals), int(gvals.sum()), int((gvals.astype(object) ** 2).sum())
+        stats[gname] = (n, s)
+        ssw_m += (ss * n - s * s) // (n * 1000000)
+    nn, k = len(cents), len(stats)
+    mse = ssw_m * 1e6 / (nn - k)
+    rows = orders_tukey_pairwise(spark, SF).collect()
+    assert len(rows) == k * (k - 1) // 2
+    for r in rows:
+        na, sa = stats[r["grp_a"]]
+        nb, sb = stats[r["grp_b"]]
+        diff = (sa / na - sb / nb) / 100.0
+        se = math.sqrt(mse * (1 / na + 1 / nb)) / 100.0
+        assert r["na"] == na and r["nb"] == nb
+        assert abs(r["mean_diff"] - diff) < 1e-9
+        assert abs(r["se_diff"] - se) < 1e-9
+        assert abs(r["t_stat"] - abs(diff) / se) < 1e-9
+
+
+def test_association_metrics_matches_selfjoin_bruteforce(spark):
+    """The map-side sorted-array pair expansion must reproduce the former
+    distinct + self-join formulation: identical top-20 pair counts,
+    supports and every exact-integer metric."""
+    from mongodb_nats_connector_spark.operators.orders import orders_association_metrics
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()[
+        ["l_orderkey", "l_partkey"]
+    ]
+    b = li.drop_duplicates()
+    n = int(b["l_orderkey"].nunique())
+    supp = b.groupby("l_partkey").size().to_dict()
+    pairs: dict = {}
+    for _, grp in b.groupby("l_orderkey"):
+        parts = sorted(int(p) for p in grp["l_partkey"])
+        for i in range(len(parts)):
+            for j in range(i + 1, len(parts)):
+                key = (parts[i], parts[j])
+                pairs[key] = pairs.get(key, 0) + 1
+    top = sorted(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
+    expected = []
+    for (pa, pb), cab in sorted(
+        top, key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
+    ):
+        n_a, n_b = int(supp[pa]), int(supp[pb])
+        conv = (
+            (1000000 * (n - n_b) * n_a) // (n * (n_a - cab))
+            if n_a > cab
+            else 0
+        )
+        expected.append(
+            (
+                pa,
+                pb,
+                cab,
+                n_a,
+                n_b,
+                (1000000 * cab) // n_a,
+                (1000000 * cab * n) // (n_a * n_b),
+                1 if cab * n >= n_a * n_b else -1,
+                (1000000000 * abs(cab * n - n_a * n_b)) // (n * n),
+                conv,
+                (1000000 * cab) // (n_a + n_b - cab),
+            )
+        )
+    rows = orders_association_metrics(spark, SF).collect()
+    got = [
+        (
+            r["part_a"],
+            r["part_b"],
+            r["n_together"],
+            r["n_a"],
+            r["n_b"],
+            r["confidence_ppm"],
+            r["lift_ppm"],
+            r["leverage_sign"],
+            r["leverage_abs_ppb"],
+            r["conviction_ppm"],
+            r["jaccard_ppm"],
+        )
+        for r in rows
+    ]
+    assert got == expected

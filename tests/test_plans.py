@@ -6,7 +6,9 @@ driver-side replay of Spark's percentile interpolation is bit-identical to
 the JVM evaluation, the property the exact-median queries stand on.
 The ``plans/hints.py`` tests check when a broadcast hint is applied, and
 the ``plans/caching.py`` test that operators release their cached
-intermediates once the result is dropped."""
+intermediates once the result is dropped. The ``plans/ranking.py`` tests
+check that the two-pass distributed rank, ntile and prefix aggregates
+equal the single-partition windows they replace."""
 
 from __future__ import annotations
 
@@ -1087,3 +1089,243 @@ def test_no_sql_cache_leak_after_results_dropped(spark):
         assert cm.cachedData().size() == before, (
             f"{fn.__name__} leaked a CacheManager entry"
         )
+
+
+# ---------------------------------------------------------------------------
+# Two-pass distributed rank (plans/ranking.py)
+# ---------------------------------------------------------------------------
+
+
+def _reference_ntile(n: int, k: int) -> list[int]:
+    """SQL ntile(k) semantics: tile sizes n//k, the first n%k tiles one
+    larger; returns the tile of each 1-based rank."""
+    base, rem = divmod(n, k)
+    out = []
+    for tile in range(1, k + 1):
+        out.extend([tile] * (base + (1 if tile <= rem else 0)))
+    return out
+
+
+def test_ntile_from_rank_formula_matches_sql_semantics():
+    """The exact-integer ntile arithmetic (remainder-first allocation)
+    agrees with the reference allocation for every (n, k) shape class:
+    n < k, n == k, n % k == 0, and ragged remainders."""
+    for n in [1, 3, 7, 10, 11, 19, 20, 100, 101, 997]:
+        for k in [1, 2, 3, 10]:
+            ref = _reference_ntile(n, k)
+            for r in range(1, n + 1):
+                base, rem = divmod(n, k)
+                cut = rem * (base + 1)
+                if r <= cut:
+                    got = (r - 1) // (base + 1) + 1
+                else:
+                    got = rem + (r - 1 - cut) // max(base, 1) + 1
+                assert got == ref[r - 1], (n, k, r)
+
+
+def test_two_pass_rank_matches_global_window(spark):
+    """two_pass_global_rank + ntile_from_rank reproduce the single-partition
+    ntile window exactly — heavy ties included — while every
+    data-proportional window in its plan partitions by bucket."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.plans.ranking import (
+        ntile_from_rank,
+        two_pass_global_rank,
+    )
+
+    for n_rows, k in [(7, 10), (1000, 10), (9973, 7)]:
+        df = spark.range(n_rows).select(
+            F.col("id").alias("tie"),
+            ((F.col("id") * 2654435761) % 97).cast("bigint").alias("v"),
+        )
+        expected = df.withColumn(
+            "t", F.ntile(k).over(Window.orderBy(F.col("v").desc(), "tie"))
+        )
+        ranked = two_pass_global_rank(df, "v", "tie", descending=True)
+        got = ranked.withColumn(
+            "t", ntile_from_rank(F.col("_rank"), F.col("_n"), k)
+        )
+        exp = {r["tie"]: r["t"] for r in expected.collect()}
+        act = {r["tie"]: r["t"] for r in got.collect()}
+        assert act == exp, (n_rows, k)
+
+
+def test_two_pass_rank_ascending(spark):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.plans.ranking import two_pass_global_rank
+
+    df = spark.range(500).select(
+        F.col("id").alias("tie"), ((F.col("id") * 31) % 13).alias("v")
+    )
+    w = Window.orderBy(F.col("v").asc(), "tie")
+    exp = {
+        r["tie"]: r["r"]
+        for r in df.withColumn("r", F.row_number().over(w)).collect()
+    }
+    ranked = two_pass_global_rank(df, "v", "tie", descending=False)
+    act = {r["tie"]: r["_rank"] for r in ranked.collect()}
+    assert act == exp
+
+
+def test_two_pass_rank_edge_cases(spark):
+    """Degenerate shapes: all-equal values (every row one bucket — the cap
+    on correctness is the tie column), fewer rows than boundaries, and an
+    empty relation."""
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.plans.ranking import two_pass_global_rank
+
+    allsame = spark.range(100).select(
+        F.col("id").alias("tie"), F.lit(7).cast("bigint").alias("v")
+    )
+    got = {
+        r["tie"]: r["_rank"]
+        for r in two_pass_global_rank(allsame, "v", "tie").collect()
+    }
+    assert got == {i: i + 1 for i in range(100)}
+
+    tiny = spark.range(3).select(
+        F.col("id").alias("tie"), (10 - F.col("id")).alias("v")
+    )
+    ranked = two_pass_global_rank(tiny, "v", "tie", descending=True)
+    assert {r["tie"]: r["_rank"] for r in ranked.collect()} == {0: 1, 1: 2, 2: 3}
+    assert ranked.select("_n").first()["_n"] == 3
+
+    empty = spark.range(0).select(
+        F.col("id").alias("tie"), F.col("id").alias("v")
+    )
+    assert two_pass_global_rank(empty, "v", "tie").count() == 0
+
+
+def test_two_pass_rank_matches_window_and_drops_nulls(spark):
+    """The two-pass rank must equal a plain row_number() window on the
+    non-NULL subset, and NULL value rows must be dropped (the documented
+    contract — silently ranking them into bucket 0 shifted every ntile
+    boundary before the fix)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.plans.ranking import (
+        ntile_from_rank,
+        two_pass_global_rank,
+    )
+
+    rows = [(i, float(v)) for i, v in enumerate([5, 3, 8, 3, 9, 1, 7, 2])]
+    rows += [(100, None), (101, None)]
+    df = spark.createDataFrame(rows, "id long, v double")
+    got = two_pass_global_rank(
+        df, "v", "id", descending=True, n_buckets=3
+    ).collect()
+    assert len(got) == 8  # NULLs dropped
+    w = Window.orderBy(F.desc("v"), F.asc("id"))
+    exp = {
+        r["id"]: r["rn"]
+        for r in df.filter(F.col("v").isNotNull())
+        .withColumn("rn", F.row_number().over(w))
+        .collect()
+    }
+    for r in got:
+        assert r["_rank"] == exp[r["id"]]
+        assert r["_n"] == 8
+    # ntile reconstruction equals SQL ntile on the same rank
+    wn = Window.orderBy(F.desc("v"), F.asc("id"))
+    nt = {
+        r["id"]: r["nt"]
+        for r in df.filter(F.col("v").isNotNull())
+        .withColumn("nt", F.ntile(3).over(wn))
+        .collect()
+    }
+    for r in got:
+        recon = ntile_from_rank(F.lit(r["_rank"]), F.lit(r["_n"]), 3)
+        val = spark.range(1).select(recon.alias("x")).collect()[0]["x"]
+        assert val == nt[r["id"]]
+
+
+def test_two_pass_prefix_sum_matches_window(spark):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.plans.ranking import (
+        two_pass_prefix_sum,
+    )
+
+    rows = [(i, (i * 37) % 11, (i % 5) - 2) for i in range(50)]
+    df = spark.createDataFrame(rows, "id long, v long, d long")
+    got = {
+        r["id"]: r["cum"]
+        for r in two_pass_prefix_sum(
+            df, "v", "id", "d", descending=False, n_buckets=4, cum_col="cum"
+        ).collect()
+    }
+    w = (
+        Window.orderBy(F.asc("v"), F.asc("id"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    exp = {
+        r["id"]: r["cum"]
+        for r in df.withColumn("cum", F.sum("d").over(w)).collect()
+    }
+    assert got == exp
+
+
+def test_two_pass_prefix_max_exclusive_matches_window(spark):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.plans.ranking import (
+        two_pass_prefix_max,
+    )
+
+    # distinct v values (exclusive ROWS frames require a total order)
+    rows = [(i, (i * 13) % 97, (i * 7) % 23) for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, v long, m long")
+    got = {
+        r["v"]: r["pm"]
+        for r in two_pass_prefix_max(
+            df, "v", "v", "m",
+            descending=True, n_buckets=4, cum_col="pm", exclusive=True,
+        ).collect()
+    }
+    w = Window.orderBy(F.desc("v")).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    exp = {
+        r["v"]: r["pm"]
+        for r in df.withColumn("pm", F.max("m").over(w)).collect()
+    }
+    assert got == exp  # including NULL for the first row
+
+
+def test_explicit_boundaries_rank_identical(spark):
+    """two_pass_global_rank with ANY explicit boundary set returns the
+    same ranks as the sketched path (boundaries only balance work)."""
+    from mongodb_nats_connector_spark.plans.ranking import (
+        two_pass_global_rank,
+    )
+
+    df = spark.range(200).select(
+        (F.col("id") * 37 % 101).alias("v"), F.col("id").alias("tie")
+    )
+    base = {
+        (r["tie"], r["_rank"], r["_n"])
+        for r in two_pass_global_rank(df, "v", "tie").collect()
+    }
+    for bounds in ([], [50], [10, 20, 90], [-5, 0, 1000]):
+        got = {
+            (r["tie"], r["_rank"], r["_n"])
+            for r in two_pass_global_rank(
+                df, "v", "tie", boundaries=bounds
+            ).collect()
+        }
+        assert got == base, bounds
+        coll = {
+            (r["tie"], r["_rank"], r["_n"])
+            for r in two_pass_global_rank(
+                df, "v", "tie", boundaries=bounds, collected_offsets=True
+            ).collect()
+        }
+        assert coll == base, bounds

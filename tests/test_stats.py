@@ -8,7 +8,9 @@ that is wrong the same way in both engines. With the pin in place, a
 green hash in the correctness run proves the statistic is right, not
 only that the two engines agree. The Spark tests recompute a query's
 result on the smoke tables from its definition, check a sketch's error
-bound against the exact count, or pin a plan shape.
+bound against the exact count, or pin a plan shape. The ``agg_*``
+queries of ``operators/double_sums.py`` are tested in
+``test_double_sums.py``.
 """
 
 from __future__ import annotations
@@ -20,6 +22,9 @@ from itertools import combinations
 
 import numpy as np
 import pandas as pd
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mongodb_nats_connector_spark.operators.stats import (
@@ -28,6 +33,8 @@ from mongodb_nats_connector_spark.operators.stats import (
 )
 from mongodb_nats_connector_spark.plans.explain import plan_string
 from mongodb_nats_connector_spark.sources.tables import table
+
+from test_events import _write_events9
 
 SF = "/root/testdata/sf0.001"
 
@@ -2110,3 +2117,765 @@ def test_ks_statistic_matches_pandas(spark):
     crit = 1.3581015157406195 * np.sqrt((len(a) + len(b)) / (len(a) * len(b)))
     assert abs(r["crit_05"] - crit) < 1e-6
     assert r["reject_05"] == (d > crit)
+
+
+# ---------------------------------------------------------------------------
+# Rank, dispersion, agreement and impurity statistics and the Poisson
+# bootstrap, recomputed from their definitions
+# ---------------------------------------------------------------------------
+
+
+def test_mann_whitney_identities(spark):
+    """U1 + U2 = n1*n2 exactly, and U1 recomputed from scipy-free midranks
+    in pandas matches."""
+    from mongodb_nats_connector_spark.operators.stats import (
+        _MW_A,
+        _MW_B,
+        agg_mann_whitney,
+    )
+
+    row = agg_mann_whitney(spark, SF).collect()[0]
+    assert abs((row["u1"] + row["u2"]) - row["n1"] * row["n2"]) < 1e-6
+    ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
+    ev = ev[ev["event_type"].isin([_MW_A, _MW_B]) & ev["value"].notna()]
+    ranks = ev["value"].rank(method="average")
+    r1 = ranks[ev["event_type"] == _MW_A].sum()
+    n1 = int((ev["event_type"] == _MW_A).sum())
+    u1 = r1 - n1 * (n1 + 1) / 2.0
+    assert abs(row["u1"] - round(u1, 2)) < 1e-6
+    assert row["n1"] == n1
+
+
+def test_benford_shares_and_chi2(spark):
+    """Observed shares sum to 1; expected shares are exactly Benford's law;
+    chi2 terms are nonnegative."""
+    from mongodb_nats_connector_spark.operators.stats import agg_benford_test
+
+    out = agg_benford_test(spark, SF).toPandas().sort_values("digit")
+    assert abs(out["share"].sum() - 1.0) < 1e-4
+    for _, r in out.iterrows():
+        assert abs(r["benford_share"] - round(math.log10(1 + 1 / r["digit"]), 6)) < 1e-9
+        assert r["chi2_term"] >= 0
+
+
+def test_wilson_interval_bounds(spark):
+    """Wilson bounds are inside [0,1] and bracket p_hat."""
+    from mongodb_nats_connector_spark.operators.stats import agg_wilson_ci
+
+    out = agg_wilson_ci(spark, SF).toPandas()
+    assert len(out) > 0
+    assert (out["ci_lo"] >= 0).all() and (out["ci_hi"] <= 1).all()
+    assert (out["ci_lo"] <= out["p_hat"] + 1e-9).all()
+    assert (out["ci_hi"] >= out["p_hat"] - 1e-9).all()
+
+
+def test_autocorrelation_bounds_and_lag1(spark):
+    """|acf| <= 1, and lag-1 matches a numpy recompute."""
+    import numpy as np
+
+    from mongodb_nats_connector_spark.operators.stats import agg_autocorrelation
+
+    out = agg_autocorrelation(spark, SF).toPandas().sort_values("lag")
+    assert (out["acf"].abs() <= 1.0 + 1e-9).all()
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o["day"] = o["o_orderdate"].dt.date
+    o["cents"] = (o["o_totalprice"] * 100).round().astype("int64")
+    daily = o.groupby("day")["cents"].sum().sort_index().to_numpy(dtype=float)
+    mu = daily.mean()
+    dev = daily - mu
+    ss = (dev * dev).sum()
+    r1 = (dev[:-1] * dev[1:]).sum() / ss
+    got1 = float(out[out["lag"] == 1]["acf"].iloc[0])
+    assert abs(got1 - round(r1, 4)) < 1e-3
+
+
+def test_levene_bf_matches_pandas(spark):
+    from mongodb_nats_connector_spark.operators.stats import agg_levene_bf
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o["x"] = (o["o_totalprice"] * 100).round()
+    z = o.groupby("o_orderpriority")["x"].transform(
+        lambda s: (s - s.median()).abs()
+    )
+    g = pd.DataFrame({"grp": o["o_orderpriority"], "z": z})
+    k = g["grp"].nunique()
+    n = len(g)
+    zbar = g["z"].mean()
+    per = g.groupby("grp")["z"]
+    ssb = (per.size() * (per.mean() - zbar) ** 2).sum()
+    ssw = ((g["z"] - per.transform("mean")) ** 2).sum()
+    f = (ssb / (k - 1)) / (ssw / (n - k))
+    row = agg_levene_bf(spark, SF).collect()[0]
+    assert row["n_groups"] == k and row["n_rows"] == n
+    # the registered op works on doubled-median integers; F is
+    # scale-invariant, so it must agree with the raw-cents re-derivation
+    assert abs(row["bf_stat"] - f) < max(1e-4, f * 1e-5)
+
+
+def test_bootstrap_poisson_ci_brackets_and_deterministic(spark):
+    from mongodb_nats_connector_spark.operators.stats import (
+        BOOT_B,
+        agg_bootstrap_poisson,
+    )
+
+    r1 = agg_bootstrap_poisson(spark, SF).collect()[0]
+    r2 = agg_bootstrap_poisson(spark, SF).collect()[0]
+    assert r1 == r2  # hash-seeded weights: no run-to-run randomness
+    assert r1["n_reps"] == BOOT_B
+    assert r1["ci_lo"] <= r1["boot_mean"] <= r1["ci_hi"]
+    assert r1["ci_lo"] < r1["ci_hi"]
+    # Poisson(1) resampling is unbiased: the bootstrap mean lands near the
+    # exact mean (loose 5% band — 15 orders at sf0.001)
+    assert abs(r1["boot_mean"] - r1["exact_mean"]) < 0.05 * r1["exact_mean"]
+
+
+def test_mutual_information_matches_crosstab(spark):
+    from mongodb_nats_connector_spark.operators.stats import agg_mutual_information
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
+    ev = ev[ev["ts"].notna() & ev["event_type"].notna()].copy()
+    epoch = pd.Timestamp("1970-01-01")
+    ev["dow"] = (ev["ts"].dt.normalize() - epoch).dt.days % 7
+    ct = pd.crosstab(ev["event_type"], ev["dow"]).to_numpy(dtype="float64")
+    nn = ct.sum()
+    pxy = ct / nn
+    px = pxy.sum(axis=1, keepdims=True)
+    py = pxy.sum(axis=0, keepdims=True)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        terms = np.where(pxy > 0, pxy * np.log(pxy / (px * py)), 0.0)
+    mi = terms.sum()
+    hx = -(px * np.log(px)).sum()
+    hy = -(py * np.log(py)).sum()
+    row = agg_mutual_information(spark, SF).collect()[0]
+    assert row["n_events"] == int(nn)
+    assert abs(row["mi_nats"] - mi) < 1e-5
+    assert abs(row["h_event_type"] - hx) < 1e-5
+    assert abs(row["h_weekday"] - hy) < 1e-5
+    assert -1e-9 <= row["mi_nats"] <= min(hx, hy) + 1e-9
+    assert 0.0 <= row["nmi"] <= 1.0
+
+
+def test_dispersion_matches_pandas(spark):
+    from mongodb_nats_connector_spark.operators.stats import agg_dispersion_test
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").toPandas()
+    ev = ev[ev["ts"].notna() & ev["event_type"].notna()]
+    daily = (
+        ev.groupby(["event_type", ev["ts"].dt.date]).size().reset_index(name="cnt")
+    )
+    got = {r["event_type"]: r for r in agg_dispersion_test(spark, SF).collect()}
+    for et, grp in daily.groupby("event_type"):
+        cnt = grp["cnt"].to_numpy(dtype="float64")
+        if len(cnt) < 2:
+            assert et not in got
+            continue
+        r = got[et]
+        assert r["n_days"] == len(cnt)
+        assert abs(r["mean_cnt"] - cnt.mean()) < 1e-3
+        assert abs(r["var_cnt"] - cnt.var(ddof=1)) < 1e-3
+        d = cnt.var(ddof=1) / cnt.mean()
+        assert abs(r["dispersion"] - d) < 1e-4
+        assert r["overdispersed"] == (1 if d > 1.5 else 0)
+
+
+def test_runs_test_matches_python(spark):
+    from mongodb_nats_connector_spark.operators.stats import agg_runs_test
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o["rev_c"] = (o["o_totalprice"] * 100).round().astype("int64")
+    daily = o.groupby(o["o_orderdate"].dt.date)["rev_c"].sum().sort_index()
+    med = daily.median()
+    hi = (daily > med).astype(int).to_numpy()
+    runs = 1 + int((hi[1:] != hi[:-1]).sum())
+    a, b = int(hi.sum()), int(len(hi) - hi.sum())
+    r = agg_runs_test(spark, SF).collect()[0]
+    assert r["runs"] == runs
+    assert r["n_hi"] == a and r["n_lo"] == b
+    mu = 2.0 * a * b / (a + b) + 1.0
+    sig = math.sqrt(
+        2.0 * a * b * (2.0 * a * b - a - b) / ((a + b) ** 2 * (a + b - 1))
+    )
+    assert abs(r["expected_runs"] - mu) < 1e-3
+    assert abs(r["z_stat"] - (runs - mu) / sig) < 1e-3
+
+
+def _write_orders9(spark, path, rows):
+    """rows: (o_orderkey, o_custkey, o_totalprice, o_orderdate str)."""
+    df = spark.createDataFrame(
+        [
+            (k, c, p, pd.Timestamp(d).to_pydatetime(), "O", "1-URGENT")
+            for k, c, p, d in rows
+        ],
+        "o_orderkey long, o_custkey long, o_totalprice double, "
+        "o_orderdate timestamp, o_orderstatus string, o_orderpriority string",
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(f"{path}/orders.parquet")
+
+
+def test_bootstrap_single_row_table_no_null_rank_divergence(spark, tmp_path):
+    """One order: many replicates draw total weight 0 and MUST be dropped
+    before ranking (a NULL mean would rank first in Spark, last in DuckDB).
+    Surviving replicate means all equal the single order's value."""
+    from mongodb_nats_connector_spark.operators.stats import agg_bootstrap_poisson
+
+    _write_orders9(spark, str(tmp_path), [(1, 1, 123.45, "2024-01-01")])
+    out = agg_bootstrap_poisson(spark, str(tmp_path)).collect()
+    # either the 2nd/39th ranked replicates exist (all equal 123.45) or too
+    # few survive and the result is empty — never a NULL-polluted row
+    if out:
+        r = out[0]
+        assert r["exact_mean"] == 123.45
+        assert r["ci_lo"] == 123.45 and r["ci_hi"] == 123.45
+        assert r["boot_mean"] == 123.45
+
+
+def test_mutual_information_single_type_zero_rows(spark, tmp_path):
+    """One event type -> H(X) = 0 -> NMI undefined -> zero rows."""
+    from mongodb_nats_connector_spark.operators.stats import agg_mutual_information
+
+    rows = [
+        (i, f"2024-01-{1 + i % 7:02d} 09:00:00", 1, "view") for i in range(20)
+    ]
+    _write_events9(spark, str(tmp_path), rows)
+    assert agg_mutual_information(spark, str(tmp_path)).count() == 0
+
+
+def test_median_test_matches_pandas(spark):
+    from mongodb_nats_connector_spark.operators.stats import agg_median_test
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    x = (o["o_totalprice"] * 100).round()
+    hi = (x > x.median()).astype(int)
+    tab = pd.crosstab(o["o_orderpriority"], hi)
+    if 1 not in tab.columns:
+        tab[1] = 0
+    if 0 not in tab.columns:
+        tab[0] = 0
+    n = len(o)
+    a = int(hi.sum())
+    chi2 = 0.0
+    for _, row in tab.iterrows():
+        n_i = row.sum()
+        for col, tot_col in ((1, a), (0, n - a)):
+            exp = n_i * tot_col / n
+            chi2 += (row.get(col, 0) - exp) ** 2 / exp
+    r = agg_median_test(spark, SF).collect()[0]
+    assert r["n_groups"] == tab.shape[0]
+    assert r["n_rows"] == n
+    assert r["dof"] == tab.shape[0] - 1
+    assert abs(r["chi2_stat"] - chi2) < 1e-3
+
+
+def test_poisson_weight_ladder_calibration(spark):
+    """The md5-uniform CDF ladder must actually produce Poisson(1)
+    weights: over the replicated (order, replicate) grid, the empirical
+    mean weight is ~1 and P(w=0) is ~1/e — validating the hard-coded
+    thresholds end-to-end rather than trusting the constants."""
+    from pyspark.sql import functions as F
+
+    from mongodb_nats_connector_spark.operators.stats import (
+        _POIS_CUM,
+        agg_bootstrap_poisson,
+    )
+
+    # re-derive thresholds independently from the Poisson(1) pmf
+    pmf, cum, fact = [], [], 1
+    for k in range(len(_POIS_CUM)):
+        if k:
+            fact *= k
+        pmf.append(math.exp(-1.0) / fact)
+        cum.append(sum(pmf))
+        assert abs(_POIS_CUM[k] - cum[k]) < 1e-15, k
+    # empirical check over a deterministic hash grid
+    n, b = 2000, 40
+    df = (
+        spark.range(n)
+        .withColumn("g", F.explode(F.sequence(F.lit(0), F.lit(b // 4 - 1))))
+        .withColumn(
+            "h",
+            F.md5(
+                F.concat(
+                    F.col("id").cast("string"), F.lit(":"), F.col("g").cast("string")
+                )
+            ),
+        )
+        .withColumn("slot", F.explode(F.sequence(F.lit(0), F.lit(3))))
+        .select(
+            (
+                F.conv(
+                    F.substring(F.col("h"), F.lit(1) + F.col("slot") * 7, F.lit(7)),
+                    16,
+                    10,
+                ).cast("bigint")
+                / F.lit(float(1 << 28))
+            ).alias("u")
+        )
+    )
+    w_expr = F.lit(len(_POIS_CUM))
+    for k in range(len(_POIS_CUM) - 1, -1, -1):
+        w_expr = F.when(F.col("u") < F.lit(_POIS_CUM[k]), F.lit(k)).otherwise(w_expr)
+    stats = df.select(w_expr.alias("w")).agg(
+        F.avg("w").alias("mean_w"),
+        F.avg(F.when(F.col("w") == 0, 1.0).otherwise(0.0)).alias("p0"),
+    ).collect()[0]
+    assert abs(stats["mean_w"] - 1.0) < 0.01
+    assert abs(stats["p0"] - math.exp(-1.0)) < 0.01
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.floats(min_value=0.0, max_value=1.0, exclude_max=True))
+def test_poisson_ladder_inverts_cdf(u):
+    """The CASE ladder is the inverse CDF: for any uniform u, the weight k
+    it assigns satisfies CDF(k-1) <= u < CDF(k)."""
+    from mongodb_nats_connector_spark.operators.stats import _POIS_CUM
+
+    k = next((i for i, t in enumerate(_POIS_CUM) if u < t), len(_POIS_CUM))
+    if k > 0:
+        assert u >= _POIS_CUM[k - 1]
+    if k < len(_POIS_CUM):
+        assert u < _POIS_CUM[k]
+
+
+def test_spearman_matches_scipy_free_rederivation(spark):
+    from mongodb_nats_connector_spark.operators.stats import agg_spearman_corr
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
+    x = li["l_quantity"].round()
+    y = (li["l_extendedprice"] * 100).round()
+    rx = x.rank(method="average")
+    ry = y.rank(method="average")
+    rho = np.corrcoef(rx, ry)[0, 1]
+    r = agg_spearman_corr(spark, SF).collect()[0]
+    assert r["n"] == len(li)
+    assert abs(r["spearman_rho"] - rho) < 1e-5
+    t = rho * math.sqrt((len(li) - 2) / (1.0 - rho * rho))
+    assert abs(r["t_stat"] - t) < 1e-3
+
+
+def test_theil_sen_robust_to_outlier(spark, tmp_path):
+    """A single wild outlier day must not move Theil-Sen (OLS would): slope
+    of a clean +100c/day series stays 1.0 dollars/day... scaled check."""
+    import datetime
+
+    from mongodb_nats_connector_spark.operators.stats import agg_theil_sen
+
+    base = datetime.date(1995, 1, 1)
+    rows = []
+    for i in range(30):
+        price = 100.0 + i  # +1 dollar/day trend
+        if i == 15:
+            price = 100000.0  # outlier day
+        rows.append((i, base + datetime.timedelta(days=i), price))
+    spark.createDataFrame(
+        rows, "o_orderkey long, o_orderdate date, o_totalprice double"
+    ).write.parquet(f"{tmp_path}/orders.parquet", mode="overwrite")
+    r = agg_theil_sen(spark, str(tmp_path)).collect()[0]
+    assert r["n_days"] == 30
+    assert abs(r["theil_sen_slope"] - 1.0) < 0.05
+
+
+def test_ljung_box_matches_reference(spark):
+    """Q must equal the textbook statistic computed independently in numpy
+    over the same quantized daily series."""
+    from mongodb_nats_connector_spark.operators.stats import (
+        LB_MAX_LAG,
+        agg_ljung_box,
+    )
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o[o["o_orderdate"].notna()]
+    daily = (
+        o.assign(rev_c=(o["o_totalprice"] * 100).round().astype("int64"))
+        .groupby("o_orderdate")["rev_c"]
+        .sum()
+        .sort_index()
+        .to_numpy(dtype="float64")
+    )
+    n = len(daily)
+    x = daily - daily.mean()
+    ss = (x * x).sum()
+    q = 0.0
+    for k in range(1, LB_MAX_LAG + 1):
+        r = (x[k:] * x[:-k]).sum() / ss
+        q += r * r / (n - k)
+    q *= n * (n + 2)
+    row = agg_ljung_box(spark, SF).collect()[0]
+    assert row["n_days"] == n
+    # per-lag terms quantize to nano-units before the n(n+2) scale-up, so
+    # the worst-case drift is ~ n(n+2) * lags * 0.5e-9 (~0.02 here)
+    assert row["q_stat"] == pytest.approx(q, abs=n * (n + 2) * 7 * 1e-9)
+    assert row["reject_whiteness_5pct"] == (q > 14.067140449340169)
+
+
+def _li(spark):
+    return spark.read.parquet(f"{SF}/lineitem.parquet").toPandas()
+
+
+def test_kruskal_wallis_matches_rank_formula(spark):
+    """H (and its tie correction) must match the direct midrank formula
+    computed with pandas average ranks."""
+    from mongodb_nats_connector_spark.operators.stats import agg_kruskal_wallis
+
+    li = _li(spark)
+    v = li["l_quantity"].round().astype("int64")
+    g = li["l_returnflag"]
+    ranks = v.rank(method="average")
+    n = len(v)
+    h = 12.0 / (n * (n + 1)) * sum(
+        ranks[g == grp].sum() ** 2 / (g == grp).sum() for grp in g.unique()
+    ) - 3 * (n + 1)
+    ties = v.value_counts().to_numpy()
+    corr = 1 - (ties**3 - ties).sum() / (n**3 - n)
+    rows = {r["grp"]: r for r in agg_kruskal_wallis(spark, SF).collect()}
+    assert set(rows) == set(g.unique())
+    for grp, r in rows.items():
+        assert r["n_g"] == (g == grp).sum()
+        assert r["rank_sum_x2"] == int(round(2 * ranks[g == grp].sum()))
+        assert abs(r["h_stat"] - h) < 1e-6  # nano-quantization granularity
+        assert abs(r["h_tie_corrected"] - h / corr) < 1e-6
+
+
+def test_ansari_bradley_matches_score_formula(spark):
+    """AB statistic and its z must match the literal both-ends score
+    definition score = min(rank, N+1-rank) with average midranks."""
+    from mongodb_nats_connector_spark.operators.stats import agg_ansari_bradley
+
+    li = _li(spark)
+    v = (li["l_extendedprice"] / 1000).round().astype("int64")
+    g1 = (li["l_linestatus"] == "O").to_numpy()
+    ranks = v.rank(method="average").to_numpy()
+    n = len(v)
+    scores = np.minimum(ranks, n + 1 - ranks)
+    ab = scores[g1].sum()
+    n1, n0 = int(g1.sum()), int((~g1).sum())
+    a1 = int(round(2 * scores.sum()))  # doubled-score sum, exact integer
+    a2 = int(round(4 * (scores**2).sum()))  # doubled-score square sum
+    mean = n1 * (a1 / 2) / n
+    # the operator floor-divides the exact variance numerator by N(N-1)
+    # (keeping it below 2^53); replicate that quantization exactly
+    q = (n * a2 - a1 * a1) // (n * (n - 1))
+    var = n1 * n0 * q / (4 * n)
+    r = agg_ansari_bradley(spark, SF).collect()[0]
+    assert r["n1"] == n1 and r["n0"] == n0
+    assert r["ab_x2"] == int(round(2 * ab))
+    assert abs(r["ab_stat"] - ab) < 1e-9
+    assert abs(r["z_stat"] - (ab - mean) / math.sqrt(var)) < 1e-9
+    # the quantized variance sits within 1/q relative of the exact form
+    # (q is the floor-divided integer, so truncation loses at most 1 unit)
+    var_exact = (
+        n1 * n0
+        * (n * (a2 / 4) - (a1 / 2) ** 2)
+        / (n**2 * (n - 1))
+    )
+    assert abs(var - var_exact) / var_exact < 1.0 / q + 1e-12
+
+
+def test_grubbs_matches_numpy(spark):
+    """G must equal max|x - mean| / sd(ddof=1) over the daily revenue
+    series, and the flagged day must attain the max deviation."""
+    from mongodb_nats_connector_spark.operators.stats import agg_grubbs_test
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o[o["o_orderdate"].notna()]
+    daily = (
+        (o["o_totalprice"] * 100).round().astype("int64")
+        .groupby(o["o_orderdate"].astype("datetime64[ns]").dt.date)
+        .sum()
+    )
+    x = daily.to_numpy(dtype="float64")
+    g_exp = np.max(np.abs(x - x.mean())) / x.std(ddof=1)
+    # replicate the operator's exact integer micro-quantization of G^2
+    xi = [int(v) for v in daily.to_numpy()]
+    n_ = len(xi)
+    s_ = sum(xi)
+    ss_ = sum(v * v for v in xi)
+    maxdev = max(abs(v * n_ - s_) for v in xi)
+    g2_u = (maxdev * maxdev * (n_ - 1) * 1000000) // (
+        n_ * (n_ * ss_ - s_ * s_)
+    )
+    r = agg_grubbs_test(spark, SF).collect()[0]
+    assert r["n_days"] == len(x)
+    assert r["grubbs_g2"] == g2_u / 1e6
+    assert r["grubbs_g"] == math.sqrt(g2_u / 1e6)
+    # micro-quantization keeps G within 1e-6 of the float formula
+    assert abs(r["grubbs_g"] - g_exp) < 1e-6
+    assert abs(r["grubbs_g2"] - g_exp**2) < 1e-5
+    dev = np.abs(daily.to_numpy() * len(x) - daily.sum())
+    assert r["max_dev_n"] == dev.max()
+    assert r["outlier_day"] == min(
+        d for d, dv in zip(daily.index, dev) if dv == dev.max()
+    )
+
+
+def test_mcnemar_matches_pandas(spark):
+    """The 2x2 discordance table and both chi-squares must match a pandas
+    recomputation of the above-median flags."""
+    from mongodb_nats_connector_spark.operators.stats import agg_mcnemar_test
+
+    e = spark.read.parquet(f"{SF}/events.parquet").toPandas()
+    e = e[e["value"].notna()].copy()
+    e["day"] = pd.to_datetime(e["ts"]).dt.date
+    split = e["day"].min() + pd.Timedelta(days=15).to_pytimedelta()
+    # dropna=False keeps a NULL user_id group, matching the operator's
+    # groupBy semantics (Spark and DuckDB both group NULL keys)
+    pre = e[e["day"] < split].groupby("user_id", dropna=False)["value"].sum()
+    post = (
+        e[e["day"] >= split].groupby("user_id", dropna=False)["value"].sum()
+    )
+    users = e["user_id"].unique()
+    pre4 = np.array(
+        [int(round(round(pre.get(u, 0.0), 4) * 10000)) for u in users]
+    )
+    post4 = np.array(
+        [int(round(round(post.get(u, 0.0), 4) * 10000)) for u in users]
+    )
+    pre_a = 2 * pre4 > int(round(np.median(pre4) * 2))
+    post_a = 2 * post4 > int(round(np.median(post4) * 2))
+    b = int((pre_a & ~post_a).sum())
+    c = int((~pre_a & post_a).sum())
+    r = agg_mcnemar_test(spark, SF).collect()[0]
+    assert r["n_users"] == len(users)
+    assert r["pre_only"] == b and r["post_only"] == c
+    assert r["both_above"] == int((pre_a & post_a).sum())
+    assert abs(r["mcnemar_chi2"] - (b - c) ** 2 / (b + c)) < 1e-12
+    assert (
+        abs(r["mcnemar_chi2_cc"] - (abs(b - c) - 1) ** 2 / (b + c)) < 1e-12
+    )
+
+
+def test_cochran_q_matches_direct_formula(spark):
+    """Q must match the direct (k-1)(k*sum C^2 - N^2)/(kN - sum R^2) on the
+    pandas-built engagement matrix."""
+    from mongodb_nats_connector_spark.operators.stats import (
+        COCHRAN_MIN_DAYS,
+        agg_cochran_q,
+    )
+
+    e = spark.read.parquet(f"{SF}/events.parquet").toPandas()
+    e = e[e["user_id"].notna() & e["event_type"].notna() & e["ts"].notna()]
+    days = (
+        e.assign(day=pd.to_datetime(e["ts"]).dt.date)
+        .groupby(["user_id", "event_type"])["day"]
+        .nunique()
+    )
+    mat = (days >= COCHRAN_MIN_DAYS).unstack(fill_value=False)
+    # include types engaged by nobody and users engaging nothing: both are
+    # implicit zeros that only enter through k and n_users
+    k = e["event_type"].nunique()
+    rr = mat.sum(axis=1).to_numpy()
+    cc = mat.sum(axis=0).to_numpy()
+    n = int(rr.sum())
+    q_num = (k - 1) * (k * int((cc**2).sum()) - n * n)
+    q_den = k * n - int((rr**2).sum())
+    r = agg_cochran_q(spark, SF).collect()[0]
+    assert r["k"] == k
+    assert r["n_users"] == e["user_id"].nunique()
+    assert r["n_presences"] == n
+    assert r["q_num"] == q_num and r["q_den"] == q_den
+    assert abs(r["cochran_q"] - q_num / q_den) < 1e-12
+
+
+def test_friedman_matches_rank_formula(spark):
+    """Per-treatment rank sums and Q must match a pandas within-block
+    average-rank recomputation over complete months."""
+    from mongodb_nats_connector_spark.operators.stats import agg_friedman_test
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o[o["o_orderdate"].notna()].copy()
+    o["blk"] = pd.to_datetime(o["o_orderdate"]).dt.to_period("M")
+    o["cents"] = (o["o_totalprice"] * 100).round().astype("int64")
+    cell = (
+        o.groupby(["blk", "o_orderpriority"])["cents"]
+        .agg(["sum", "count"])
+        .reset_index()
+    )
+    k = o["o_orderpriority"].nunique()
+    full = cell.groupby("blk").size()
+    full_blocks = set(full[full == k].index)
+    cell = cell[cell["blk"].isin(full_blocks)].copy()
+    # rank treatment means within each block; compare as exact fractions
+    from fractions import Fraction
+
+    cell["avg"] = [
+        Fraction(int(s), int(c)) for s, c in zip(cell["sum"], cell["count"])
+    ]
+    cell["rank"] = cell.groupby("blk")["avg"].rank(method="average")
+    rsum = cell.groupby("o_orderpriority")["rank"].sum()
+    n = len(full_blocks)
+    q = 12.0 / (n * k * (k + 1)) * float((rsum**2).sum()) - 3 * n * (k + 1)
+    rows = {r["priority"]: r for r in agg_friedman_test(spark, SF).collect()}
+    assert set(rows) == set(rsum.index)
+    for trt, r in rows.items():
+        assert r["k"] == k and r["n_blocks"] == n
+        assert r["rank_sum_x2"] == int(round(2 * rsum[trt]))
+        assert abs(r["q_stat"] - q) < 1e-6  # nano-quantization granularity
+
+
+def test_hodges_lehmann_matches_walsh_median(spark):
+    """HL must equal the numpy median of all Walsh averages (i <= j) of the
+    daily revenue series."""
+    from mongodb_nats_connector_spark.operators.stats import agg_hodges_lehmann
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o[o["o_orderdate"].notna()]
+    daily = (
+        (o["o_totalprice"] * 100).round().astype("int64")
+        .groupby(o["o_orderdate"])
+        .sum()
+        .to_numpy()
+    )
+    i, j = np.triu_indices(len(daily))
+    walsh = (daily[i] + daily[j]) / 2.0
+    r = agg_hodges_lehmann(spark, SF).collect()[0]
+    assert r["n_days"] == len(daily)
+    assert r["n_pairs"] == len(walsh)
+    assert abs(r["hl_dollars"] - np.median(walsh) / 100.0) < 1e-9
+    # robustness: HL sits between the min and max daily revenue
+    assert daily.min() / 100.0 <= r["hl_dollars"] <= daily.max() / 100.0
+
+
+def test_cohen_kappa_matches_po_pe_form(spark):
+    """The integer num/den form must equal the textbook (po-pe)/(1-pe), and
+    the confusion matrix must match a pandas recomputation."""
+    from mongodb_nats_connector_spark.operators.stats import agg_cohen_kappa
+
+    li = _li(spark)
+    price_c = (li["l_extendedprice"] * 100).round().astype("int64")
+    m2 = int(round(np.median(price_c) * 2))
+    ra = (2 * price_c > m2).astype(int)
+    rb = (li["l_returnflag"] == "R").astype(int)
+    n = len(li)
+    a11 = int((ra & rb).sum())
+    a10 = int((ra & (1 - rb)).sum())
+    a01 = int(((1 - ra) & rb).sum())
+    a00 = int(((1 - ra) & (1 - rb)).sum())
+    po = (a11 + a00) / n
+    pe = ((a11 + a10) * (a11 + a01) + (a01 + a00) * (a10 + a00)) / n**2
+    r = agg_cohen_kappa(spark, SF).collect()[0]
+    assert (r["n"], r["a11"], r["a10"], r["a01"], r["a00"]) == (
+        n, a11, a10, a01, a00,
+    )
+    assert r["kappa_num"] == n * (a11 + a00) - round(pe * n * n)
+    assert abs(r["cohen_kappa"] - (po - pe) / (1 - pe)) < 1e-12
+    assert -1.0 <= r["cohen_kappa"] <= 1.0
+
+
+def test_hellinger_matches_numpy(spark):
+    """BC and H must match the numpy sum-of-sqrt over the same bucketed
+    histograms, and satisfy 0 <= BC <= 1, H = sqrt(1-BC)."""
+    from mongodb_nats_connector_spark.operators.stats import agg_hellinger_distance
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o[o["o_orderpriority"].isin(["1-URGENT", "5-LOW"])]
+    v = (o["o_totalprice"] / 10000).round().astype("int64")
+    u = v[o["o_orderpriority"] == "1-URGENT"].value_counts()
+    l_ = v[o["o_orderpriority"] == "5-LOW"].value_counts()
+    grid = sorted(set(u.index) | set(l_.index))
+    bc_nn = sum(
+        int(round(1e9 * math.sqrt(float(u.get(x, 0)) * l_.get(x, 0))))
+        for x in grid
+    )
+    n1, n0 = int(u.sum()), int(l_.sum())
+    bc = bc_nn / 1e9 / math.sqrt(float(n1) * n0)
+    r = agg_hellinger_distance(spark, SF).collect()[0]
+    assert r["n_urgent"] == n1 and r["n_low"] == n0
+    assert r["bc_nn"] == bc_nn
+    assert abs(r["bhattacharyya_coef"] - bc) < 1e-12
+    assert 0.0 <= r["bhattacharyya_coef"] <= 1.0
+    assert abs(r["hellinger_dist"] - math.sqrt(1 - bc)) < 1e-12
+
+
+def test_trimmed_mean_matches_numpy(spark):
+    """Trimmed/winsorized means and fences must match a numpy sort-based
+    recomputation, and bracket the robustness hierarchy."""
+    from mongodb_nats_connector_spark.operators.stats import agg_trimmed_mean
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").toPandas()
+    o = o[o["o_orderdate"].notna()]
+    daily = np.sort(
+        (o["o_totalprice"] * 100).round().astype("int64")
+        .groupby(o["o_orderdate"])
+        .sum()
+        .to_numpy()
+    )
+    n = len(daily)
+    k = n // 10
+    mid = daily[k : n - k]
+    r = agg_trimmed_mean(spark, SF).collect()[0]
+    assert r["n_days"] == n and r["n_trimmed_per_tail"] == k
+    assert r["mid_sum"] == int(mid.sum())
+    assert r["lower_fence_c"] == daily[k]
+    assert r["upper_fence_c"] == daily[n - k - 1]
+    assert abs(r["trimmed_mean"] - mid.mean() / 100.0) < 1e-9
+    wins = np.clip(daily, daily[k], daily[n - k - 1])
+    assert abs(r["winsorized_mean"] - wins.mean() / 100.0) < 1e-9
+    # winsorized uses clamped tails, trimmed drops them — both finite
+    assert daily.min() / 100.0 <= r["trimmed_mean"] <= daily.max() / 100.0
+
+
+def test_gini_split_matches_entropy_ordering_and_formula(spark):
+    """Gini gains must match the direct rational formula per threshold, and
+    the best Gini threshold must score positively on the entropy criterion
+    too (criterion cross-check)."""
+    from mongodb_nats_connector_spark.operators.stats import (
+        agg_gini_impurity_split,
+        agg_info_gain_split,
+    )
+
+    li = _li(spark)
+    q = li["l_quantity"].round().astype("int64")
+    pos = (li["l_returnflag"] == "R").astype(int)
+    cells = (
+        pd.DataFrame({"q": q, "p": pos})
+        .groupby("q")
+        .agg(n=("p", "size"), p=("p", "sum"))
+        .sort_index()
+    )
+    nn, pp = int(cells["n"].sum()), int(cells["p"].sum())
+
+    def gini2(p, n):
+        return 2.0 * p * (n - p) / (float(n) * n)
+
+    rows = {r["split_at"]: r for r in agg_gini_impurity_split(spark, SF).collect()}
+    nl = pl = 0
+    for qv, row in cells.iterrows():
+        nl += int(row["n"])
+        pl += int(row["p"])
+        if nl >= nn:
+            assert qv not in rows
+            continue
+        nr, pr = nn - nl, pp - pl
+        gain = (
+            gini2(pp, nn)
+            - gini2(pl, nl) * (float(nl) / nn)
+            - gini2(pr, nr) * (float(nr) / nn)
+        )
+        r = rows[qv]
+        assert r["n_left"] == nl and r["n_right"] == nr
+        assert r["gain_nn"] == int(round(1e9 * gain))
+    best_gini = max(rows.values(), key=lambda r: (r["gain_nn"], -r["split_at"]))
+    ig = {r["split_at"]: r for r in agg_info_gain_split(spark, SF).collect()}
+    assert ig[best_gini["split_at"]]["gain_nn"] > 0
+
+
+def test_theil_sen_driver_round_is_half_up(spark, tmp_path):
+    """The numpy replay of Spark's round() must round exact .5 slope
+    boundaries HALF_UP away from zero (numpy's default rint is half-even
+    and would disagree): two days 2000 apart with a +-1-cent revenue
+    difference yield slope_mc = round(+-0.5) = +-1, never 0."""
+    import datetime
+
+    from mongodb_nats_connector_spark.operators.stats import agg_theil_sen
+
+    base = datetime.date(1992, 1, 1)
+    for sign, prices in ((1, (100.00, 100.01)), (-1, (100.01, 100.00))):
+        spark.createDataFrame(
+            [
+                (1, base, prices[0]),
+                (2, base + datetime.timedelta(days=2000), prices[1]),
+            ],
+            "o_orderkey long, o_orderdate date, o_totalprice double",
+        ).write.parquet(f"{tmp_path}/orders.parquet", mode="overwrite")
+        r = agg_theil_sen(spark, str(tmp_path)).collect()[0]
+        assert r["n_days"] == 2 and r["n_pairs"] == 1
+        assert r["slope_mc_x2"] == 2 * sign

@@ -1,6 +1,7 @@
 """Text operators (``operators/text.py``): passage dedup, surprisal,
 BPE, fuzzy joins, quality selection, readability, lexical diversity,
-vocabulary spectra and document fingerprints.
+vocabulary spectra, document fingerprints, BM25 retrieval, kNN labels,
+keyphrases, collocations and bigram language models.
 
 Spark tests recompute a query's result on the smoke tables from its
 definition, or pin the physical plan shape that keeps it scalable.
@@ -14,6 +15,7 @@ from __future__ import annotations
 
 import math
 import random
+from collections import defaultdict
 from fractions import Fraction
 
 import duckdb
@@ -633,3 +635,315 @@ def test_ngram_novelty_bounds_and_first_doc_is_fully_novel(spark):
     assert ((out["novelty_ratio"] >= 0) & (out["novelty_ratio"] <= 1)).all()
     first = out.loc[out["doc_id"].idxmin()]
     assert first["novel_grams"] == first["n_grams"]
+
+
+# ---------------------------------------------------------------------------
+# Retrieval, keyphrases, language models and the BPE driver learn loop
+# ---------------------------------------------------------------------------
+
+
+def test_borda_rank_is_permutation_and_monotone(spark):
+    """final_rank is a permutation of 1..n and ordering by borda (ties by
+    doc_id) reproduces it."""
+    from mongodb_nats_connector_spark.operators.text import docs_quality_ensemble_rank
+
+    out = docs_quality_ensemble_rank(spark, SF).toPandas()
+    n = len(out)
+    assert sorted(out["final_rank"]) == list(range(1, n + 1))
+    ordered = out.sort_values(["borda", "doc_id"]).reset_index(drop=True)
+    assert list(ordered["final_rank"]) == list(range(1, n + 1))
+
+
+def test_knn_classify_matches_python_vote(spark):
+    """Predictions recomputed with a plain numpy cosine + Counter vote
+    (same rounding, same tiebreaks) agree exactly. (The synthetic labels
+    are NOT clustered in embedding space, so accuracy is chance-level by
+    construction — the operator's contract is the vote, not the corpus.)"""
+    import numpy as np
+
+    from mongodb_nats_connector_spark.operators.text import (
+        KNN_K,
+        KNN_QUERIES,
+        docs_knn_classify,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").toPandas()
+    vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64)
+            for r in emb.itertuples(index=False)}
+    labels = dict(zip(emb["vec_id"], emb["label"]))
+    exp = {}
+    for qid in sorted(vecs):
+        if qid >= KNN_QUERIES:
+            continue
+        qv = vecs[qid]
+        sims = []
+        for vid, v in vecs.items():
+            if vid == qid:
+                continue
+            cs = float(qv @ v / (np.linalg.norm(qv) * np.linalg.norm(v)))
+            sims.append((-round(cs, 6), vid))
+        top = sorted(sims)[:KNN_K]
+        votes = defaultdict(int)
+        for _, vid in top:
+            votes[labels[vid]] += 1
+        pred, n = sorted(votes.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+        exp[qid] = (pred, n, 1 if pred == labels[qid] else 0)
+    got = {
+        r["query_id"]: (r["pred_label"], r["n_votes"], r["correct"])
+        for r in docs_knn_classify(spark, SF).collect()
+    }
+    assert got == exp
+
+
+def test_heaps_fit_sane(spark):
+    """beta in (0, 1) (vocabulary grows sublinearly), totals consistent
+    with direct counts."""
+    from mongodb_nats_connector_spark.operators.text import text_heaps_law_fit
+
+    row = text_heaps_law_fit(spark, SF).collect()[0]
+    assert 0 < row["beta"] < 1
+    docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
+    all_words = [w for t in docs["text"] for w in t.split(" ")]
+    assert row["total_tokens"] == len(all_words)
+    assert row["total_vocab"] == len(set(all_words))
+    assert row["n_docs"] == len(docs)
+
+
+def test_pmi_matches_python(spark):
+    """PMI recomputed from raw counts in Python matches for every pair."""
+    from mongodb_nats_connector_spark.operators.text import (
+        PMI_MIN_COUNT,
+        docs_pmi_collocations,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
+    from collections import Counter
+
+    uni, big = Counter(), Counter()
+    for t in docs["text"]:
+        ws = t.split(" ")
+        uni.update(ws)
+        big.update(zip(ws, ws[1:]))
+    n_tok = sum(uni.values())
+    n_big = sum(big.values())
+    exp = {}
+    for (a, b), c in big.items():
+        if c >= PMI_MIN_COUNT:
+            exp[(a, b)] = (
+                c,
+                round(
+                    math.log(
+                        (c / n_big) / ((uni[a] / n_tok) * (uni[b] / n_tok))
+                    ),
+                    6,
+                ),
+            )
+    got = {
+        (r["a"], r["b"]): (r["c_ab"], r["pmi"])
+        for r in docs_pmi_collocations(spark, SF).collect()
+    }
+    assert set(got) == set(exp)
+    for k in exp:
+        assert got[k][0] == exp[k][0]
+        assert abs(got[k][1] - exp[k][1]) < 1e-5, k
+
+
+def test_bm25_matches_bruteforce(spark):
+    from mongodb_nats_connector_spark.operators.text import (
+        BM25_B,
+        BM25_K1,
+        BM25_TERMS,
+        BM25_TOPK,
+        text_bm25_topk,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
+    words = {r.doc_id: r.text.split(" ") for r in docs.itertuples()}
+    n_docs = len(words)
+    avgdl = sum(len(w) for w in words.values()) / n_docs
+    scores = {}
+    for term in BM25_TERMS:
+        df_t = sum(1 for w in words.values() if term in w)
+        if df_t == 0:
+            continue
+        idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
+        for doc_id, w in words.items():
+            tf = w.count(term)
+            if tf == 0:
+                continue
+            s = (
+                idf
+                * (tf * (BM25_K1 + 1.0))
+                / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * len(w) / avgdl))
+            )
+            scores[doc_id] = scores.get(doc_id, 0.0) + s
+    expected = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:BM25_TOPK]
+    got = (
+        text_bm25_topk(spark, SF)
+        .toPandas()
+        .sort_values("rn")
+        .reset_index(drop=True)
+    )
+    assert list(got["doc_id"]) == [d for d, _ in expected]
+    for (_, exp_s), got_s in zip(expected, got["bm25"]):
+        assert abs(exp_s - got_s) < 1e-5
+
+
+def test_rake_phrases_are_stopword_free_runs(spark):
+    from mongodb_nats_connector_spark.operators.text import (
+        _RAKE_STOPS,
+        text_rake_keyphrases,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
+    # independent phrase extraction: split each text on stopwords
+    phrases = {}
+    for t in docs["text"]:
+        run = []
+        for w in t.split(" ") + [next(iter(_RAKE_STOPS))]:
+            if w.lower() in _RAKE_STOPS:
+                if run:
+                    phrases[" ".join(run)] = phrases.get(" ".join(run), 0) + 1
+                run = []
+            else:
+                run.append(w)
+    got = text_rake_keyphrases(spark, SF).toPandas()
+    assert len(got) > 0
+    for r in got.itertuples():
+        # every ranked phrase is a real extracted run with the right count
+        assert r.phrase in phrases, r.phrase
+        assert r.n_occ == phrases[r.phrase]
+        assert not any(w.lower() in _RAKE_STOPS for w in r.phrase.split(" "))
+        assert r.rake_score > 0
+    # ranking is by score desc then phrase
+    scores = list(got.sort_values("rn")["rake_score"])
+    assert scores == sorted(scores, reverse=True) or all(
+        a >= b - 1e-9 for a, b in zip(scores, scores[1:])
+    )
+
+
+def test_js_divergence_bounds_and_symmetry(spark):
+    from mongodb_nats_connector_spark.operators.text import (
+        JS_SOURCE_A,
+        JS_SOURCE_B,
+        docs_js_divergence,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
+    from collections import Counter
+
+    ca = Counter(
+        w
+        for t in docs[docs["source"] == JS_SOURCE_A]["text"]
+        for w in t.split(" ")
+    )
+    cb = Counter(
+        w
+        for t in docs[docs["source"] == JS_SOURCE_B]["text"]
+        for w in t.split(" ")
+    )
+    na, nb = sum(ca.values()), sum(cb.values())
+    js = 0.0
+    for w in set(ca) | set(cb):
+        p = ca.get(w, 0) / na
+        q = cb.get(w, 0) / nb
+        m = (p + q) / 2
+        if p > 0:
+            js += 0.5 * p * math.log(p / m)
+        if q > 0:
+            js += 0.5 * q * math.log(q / m)
+    r = docs_js_divergence(spark, SF).collect()[0]
+    assert r["n_tokens_a"] == na and r["n_tokens_b"] == nb
+    assert r["vocab_union"] == len(set(ca) | set(cb))
+    assert abs(r["js_nats"] - js) < 1e-5
+    assert 0.0 <= r["js_nats"] <= math.log(2) + 1e-9
+
+
+def test_kneser_ney_probabilities_normalize(spark):
+    """For every context w1 appearing in the top list, the KN distribution
+    over ALL observed continuations of w1 must sum to 1 exactly (the
+    discount mass redistributed by the continuation model), and each
+    kn_prob must be a proper probability."""
+    from collections import Counter
+
+    from mongodb_nats_connector_spark.operators.text import (
+        KN_D,
+        text_kneser_ney_bigram,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").toPandas()
+    big = Counter()
+    for t in docs["text"]:
+        ws = t.split(" ")
+        big.update(zip(ws, ws[1:]))
+    c1 = Counter()
+    nl = Counter()
+    nr = Counter()
+    for (w1, w2), c in big.items():
+        c1[w1] += c
+        nl[w1] += 1
+        nr[w2] += 1
+    tot = len(big)
+
+    rows = text_kneser_ney_bigram(spark, SF).collect()
+    assert len(rows) == 30
+    for r in rows:
+        w1, w2 = r["w1"], r["w2"]
+        assert r["c2"] == big[(w1, w2)]
+        expected = (big[(w1, w2)] - KN_D) / c1[w1] + (
+            (KN_D * nl[w1]) / c1[w1]
+        ) * ((nr[w2] * 1.0) / tot)
+        assert r["kn_prob"] == pytest.approx(expected, rel=1e-12)
+        assert 0.0 < r["kn_prob"] <= 1.0
+        assert r["mle_prob"] == pytest.approx(big[(w1, w2)] / c1[w1])
+    # full-distribution normalization for the most frequent context: the
+    # discounted mass over SEEN continuations plus the continuation-model
+    # backoff over the WHOLE vocabulary (unseen continuations get only
+    # the interpolation term) must sum to exactly 1
+    w1 = rows[0]["w1"]
+    seen = {b for (a, b) in big if a == w1}
+    mass = sum((big[(w1, b)] - KN_D) / c1[w1] for b in seen) + (
+        (KN_D * nl[w1]) / c1[w1]
+    ) * sum(nr[b] / tot for b in nr)
+    assert mass == pytest.approx(1.0, abs=1e-9)
+
+
+def test_bpe_learn_driver_matches_distributed(spark, monkeypatch):
+    """_bpe_learn's collected driver loop (exact integer pair counts, the
+    same greedy fold, the same (count DESC, pair ASC) argmax) returns the
+    identical merge table as the distributed per-round loop."""
+    from mongodb_nats_connector_spark.operators import text
+
+    fast = text._bpe_learn(spark, SF)
+
+    def never_fits(*a, **k):
+        return False
+
+    monkeypatch.setattr(text, "counted_fits_broadcast", never_fits)
+    assert text._bpe_learn.__globals__["counted_fits_broadcast"] is never_fits
+    dist = text._bpe_learn(spark, SF)
+    assert fast == dist
+    assert len(fast) == text.BPE_ROUNDS
+
+
+@pytest.mark.parametrize(
+    "w,pair,merged,expect",
+    [
+        ("t h t h", "t h", "th", "th th"),
+        ("t h t", "h t", "ht", "t ht"),
+        ("th t", "h t", "ht", "th t"),
+        ("a a a a a", "a a", "aa", "aa aa a"),
+        ("a a a", "a a", "aa", "aa a"),
+        ("", "a b", "ab", ""),
+        ("x", "a b", "ab", "x"),
+    ],
+)
+def test_bpe_merge_word_matches_spark_fold(w, pair, merged, expect):
+    """The pure-Python fold used by the driver learn loop implements the
+    exact whole-symbol greedy semantics of the Spark/DuckDB folds
+    (same cases as test_text.py's cross-engine suite)."""
+    from mongodb_nats_connector_spark.operators.text import _bpe_merge_word
+
+    toks = w.split(" ")
+    p1, p2 = pair.split(" ")
+    assert " ".join(_bpe_merge_word(toks, p1, p2, merged)) == expect
