@@ -105,20 +105,30 @@ class ConnectorConfig:
         {"connector": {"collections": [{"dbName": ..., "collName": ...,
          "tokensDbName": ..., "tokensCollName": ..., "tokensCollCapped": ...,
          "tokensCollSizeInBytes": ..., "streamName": ...}]}}
+
+        A value of the wrong type raises ``ConfigError`` naming its field.
         """
-        conn = d.get("connector", d)
-        colls = [
-            CollectionConfig(
-                db_name=c.get("dbName", ""),
-                coll_name=c.get("collName", ""),
-                tokens_db_name=c.get("tokensDbName", "resume-tokens"),
-                tokens_coll_name=c.get("tokensCollName", ""),
-                tokens_coll_capped=bool(c.get("tokensCollCapped", False)),
-                tokens_coll_size_in_bytes=int(c.get("tokensCollSizeInBytes", 0)),
-                stream_name=c.get("streamName", ""),
+        _checked(d, dict, "config")
+        conn = _checked(d.get("connector", d), dict, "connector")
+        colls = []
+        for i, c in enumerate(_checked(conn.get("collections", []), list, "collections")):
+            where = f"collections[{i}]"
+            _checked(c, dict, where)
+            colls.append(
+                CollectionConfig(
+                    db_name=c.get("dbName", ""),
+                    coll_name=c.get("collName", ""),
+                    tokens_db_name=c.get("tokensDbName", "resume-tokens"),
+                    tokens_coll_name=c.get("tokensCollName", ""),
+                    tokens_coll_capped=_checked(
+                        c.get("tokensCollCapped", False), bool, f"{where}.tokensCollCapped"
+                    ),
+                    tokens_coll_size_in_bytes=_checked(
+                        c.get("tokensCollSizeInBytes", 0), int, f"{where}.tokensCollSizeInBytes"
+                    ),
+                    stream_name=c.get("streamName", ""),
+                )
             )
-            for c in conn.get("collections", [])
-        ]
         cfg = ConnectorConfig(collections=colls)
         return apply_env_overrides(cfg)
 
@@ -138,6 +148,17 @@ class ConnectorConfig:
                 raise ConfigError(f"{path} is not JSON and pyyaml is unavailable") from e
             d = yaml.safe_load(raw)
         return ConnectorConfig.from_dict(d)
+
+
+_KIND_NAMES = {dict: "a mapping", list: "a list", bool: "true or false", int: "an integer"}
+
+
+def _checked(value, kind: type, field: str):
+    """``value`` if it is a ``kind`` (a bool is not an integer here), else a
+    ``ConfigError`` naming ``field``: a YAML ``"false"`` must not read as true."""
+    if not isinstance(value, kind) or (kind is int and isinstance(value, bool)):
+        raise ConfigError(f"{field} must be {_KIND_NAMES[kind]}, got {value!r}")
+    return value
 
 
 def apply_env_overrides(cfg: ConnectorConfig) -> ConnectorConfig:

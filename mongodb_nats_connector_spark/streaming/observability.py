@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import threading
+import urllib.parse
 from collections import defaultdict
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
@@ -27,6 +28,9 @@ from pyspark.sql.streaming.listener import JStreamingQueryListener, QueryProgres
 DEFAULT_BUCKETS: tuple[float, ...] = (
     0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0,
 )
+
+
+_LABEL_ESCAPES = str.maketrans({"\\": "\\\\", '"': '\\"', "\n": "\\n"})
 
 
 class MetricsRegistry:
@@ -59,9 +63,11 @@ class MetricsRegistry:
 
     @staticmethod
     def _fmt_labels(labels: tuple) -> str:
+        """``{k="v",...}`` with each value escaped as the text exposition
+        format requires: backslash, double quote and line feed."""
         if not labels:
             return ""
-        inner = ",".join(f'{k}="{v}"' for k, v in labels)
+        inner = ",".join(f'{k}="{str(v).translate(_LABEL_ESCAPES)}"' for k, v in labels)
         return "{" + inner + "}"
 
     def render_prometheus(self) -> str:
@@ -157,13 +163,14 @@ class ObservabilityServer:
 
         class Handler(BaseHTTPRequestHandler):
             def do_GET(self):  # noqa: N802
+                path = urllib.parse.urlsplit(self.path).path
                 try:
-                    if self.path == "/healthz":
+                    if path == "/healthz":
                         health = outer.health_fn()
                         body = json.dumps(health).encode()
                         code = 200 if health["status"] == "UP" else 503
                         ctype = "application/json"
-                    elif self.path == "/metrics":
+                    elif path == "/metrics":
                         body = outer.registry.render_prometheus().encode()
                         code, ctype = 200, "text/plain; version=0.0.4"
                     else:

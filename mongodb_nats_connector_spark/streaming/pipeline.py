@@ -20,7 +20,7 @@ resume token and written atomically per epoch; batch N+1 only commits after
 N (epoch serialization) — the same per-collection total order with batch
 granularity.
 
-Invalidate (O6): the batch handler only flags the pipeline; the
+Invalidate (O6): ``PipelineHandle.publish`` only flags the pipeline; the
 ``Connector`` stops a flagged query itself, on the caller's thread, from the
 calls every driver of it already makes (``process_all_available`` and the
 serve loop's ``await_any_termination``) — the reference's watch loop likewise
@@ -28,20 +28,22 @@ returns on an invalidate (client.go:232-235).
 
 Cost per epoch: the transform (O4, O7, O8) is part of the streaming query
 itself — ``Connector.start`` projects the stream once, so Spark analyses the
-ExtJSON ``concat`` tree once at query start and hands each epoch's handler a
-planned RDD. The handler only observes, filters and drops on it, and the
-invalidate check is an ``Observation`` riding the sink's write. In total-order
-mode the sink sorts within its ``coalesce(1)``, so no Exchange is planned and
-the epoch is ONE Spark job; per-key mode adds the map stage of its shuffle on
-the document key. No per-epoch value is a literal in any plan, so the
-generated code of one epoch is reused by the next instead of recompiled.
+ExtJSON ``concat`` tree once at query start and hands each epoch a planned
+RDD. ``PipelineHandle.publish`` is the whole ``foreachBatch`` body: the sink
+owns the epoch's plan, counting every operation type in one ``Observation``
+that rides its write, then filtering to the publishable events (O5) and
+ordering them. In total-order mode the sink sorts within its ``coalesce(1)``,
+so no Exchange is planned and the epoch is ONE Spark job; per-key mode adds
+the map stage of its shuffle on the document key. No per-epoch value is a
+literal in any plan, so the generated code of one epoch is reused by the next
+instead of recompiled.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -57,13 +59,11 @@ from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
 from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
 
 
-def change_event_columns(
-    stream_name: str, keep_document_key: bool = False
-) -> tuple[Column, list[Column]]:
-    """O4-O8 as column expressions: the publishable-op predicate (O5) and the
-    message projection — msg id, routing subject (O8), relaxed-ExtJSON body
-    (O7), cluster time and, for the sink's per-key-ordered mode, the document
-    key. ``Connector.start`` applies them to the stream, once per pipeline."""
+def change_event_columns(stream_name: str, keep_document_key: bool = False) -> list[Column]:
+    """O4, O7, O8 as column expressions: the message projection — msg id,
+    routing subject (O8), relaxed-ExtJSON body (O7), cluster time and, for the
+    sink's per-key-ordered mode, the document key. ``Connector.start`` applies
+    them to the stream, once per pipeline."""
     cols = [
         F.col("_id_data").alias("msg_id"),  # Nats-Msg-Id (nats/client.go:124)
         F.concat(
@@ -74,7 +74,7 @@ def change_event_columns(
     ]
     if keep_document_key:
         cols.append(F.col("document_key_id").alias("document_key"))
-    return F.col("operation_type").isin(*PUBLISHABLE_OPERATION_TYPES), cols
+    return cols
 
 
 def transform_change_events(
@@ -88,24 +88,31 @@ def transform_change_events(
     map-only stage at any scale. ``keep_document_key`` carries the document
     key through for the sink's per-key-ordered mode.
     """
-    publishable, cols = change_event_columns(stream_name, keep_document_key)
-    return events.filter(publishable).select(*cols)
+    return events.filter(F.col("operation_type").isin(*PUBLISHABLE_OPERATION_TYPES)).select(
+        *change_event_columns(stream_name, keep_document_key)
+    )
 
 
 @dataclass
 class PipelineHandle:
     config: CollectionConfig
-    query: StreamingQuery
     sink: JetStreamLikeSink
-    # {"invalidated": True} once the batch handler saw an invalidate marker;
-    # the Connector's next control call then stops the query gracefully
-    # (reference client.go:232-235 returns from the watch loop without
-    # error — the connector stays alive)
-    lifecycle: dict = field(default_factory=dict)
+    query: StreamingQuery | None = None  # set by Connector.start
+    # True once an epoch carried an invalidate marker; the Connector's next
+    # control call then stops the query gracefully (reference
+    # client.go:232-235 returns from the watch loop without error — the
+    # connector stays alive)
+    invalidated: bool = False
 
-    @property
-    def invalidated(self) -> bool:
-        return bool(self.lifecycle.get("invalidated"))
+    def publish(self, batch: DataFrame, epoch_id: int) -> None:
+        """foreachBatch body: publish the batch's publishable events, then —
+        O6 — if the batch carries an invalidate marker, flag the pipeline
+        (client.go:232-235: the reference stops resuming the dropped
+        collection; siblings keep running). The query is not stopped here:
+        that would interrupt this very epoch before its commit. The
+        Connector's next control call stops it (``_stop_invalidated``)."""
+        if self.sink.publish_batch(batch, epoch_id)[INVALIDATE_OPERATION_TYPE]:
+            self.invalidated = True
 
 
 class Connector:
@@ -138,38 +145,6 @@ class Connector:
         self.metrics = MetricsRegistry() if metrics is None else metrics
         self.handles: list[PipelineHandle] = []
 
-    def _batch_handler(self, sink: JetStreamLikeSink, publishable: Column, lifecycle: dict):
-        """foreachBatch body: publish the batch's publishable events, then —
-        O6 — if the batch carries an invalidate marker, flag the pipeline
-        (client.go:232-235: the reference stops resuming the dropped
-        collection; siblings keep running). The query is not stopped here:
-        that would interrupt this very epoch before its commit. The
-        Connector's next control call stops it (``_stop_invalidated``).
-
-        The batch is the stream projected by ``change_event_columns`` plus
-        ``operation_type``; ``publishable`` is the predicate that call
-        returned. The invalidate check is an ``Observation`` on the
-        unfiltered batch, so it rides the publish job instead of re-scanning
-        the batch."""
-        invalidates = F.count_if(
-            F.col("operation_type") == INVALIDATE_OPERATION_TYPE
-        ).alias("invalidates")
-
-        def handle(batch: DataFrame, epoch_id: int) -> None:
-            if self.order_within_key:
-                # The sink's per-key window reuses this shuffle. Placing it
-                # under the observation keeps the invalidate count when no
-                # row is publishable: AQE replaces a shuffle stage without
-                # output by an empty relation, observations inside it too.
-                batch = batch.repartition("document_key")
-            seen = Observation()
-            out = batch.observe(seen, invalidates).filter(publishable).drop("operation_type")
-            sink.publish_batch(out, epoch_id)
-            if seen.get["invalidates"]:
-                lifecycle["invalidated"] = True
-
-        return handle
-
     def start(self) -> list[PipelineHandle]:
         # every feed is checked before any query starts, so a missing one
         # leaves no sibling query running
@@ -186,22 +161,20 @@ class Connector:
                 metrics=self.metrics,
             )
             sink.add_stream()  # DDL bootstrap, idempotent (O13)
-            publishable, cols = change_event_columns(
-                coll.stream_name, keep_document_key=self.order_within_key
-            )
+            cols = change_event_columns(coll.stream_name, keep_document_key=self.order_within_key)
             events = read_change_event_stream(self.spark, self.source_paths[key]).select(
                 *cols, "operation_type"
             )
             checkpoint = f"{self.sink_root}/checkpoints/{coll.checkpoint_name}"
-            lifecycle: dict = {}
-            query = (
+            handle = PipelineHandle(coll, sink)
+            handle.query = (
                 events.writeStream.outputMode("append")
                 .option("checkpointLocation", checkpoint)
-                .foreachBatch(self._batch_handler(sink, publishable, lifecycle))
+                .foreachBatch(handle.publish)
                 .queryName(f"cdc-{coll.stream_name}")
                 .start()
             )
-            self.handles.append(PipelineHandle(coll, query, sink, lifecycle))
+            self.handles.append(handle)
         return self.handles
 
     def _stop_invalidated(self) -> None:

@@ -27,12 +27,14 @@ within an epoch (but for a replayed token), and so does ``seq_in_epoch`` in
 total order, so they are written without a dictionary, which parquet would
 build and then drop; ``subject`` keeps one.
 
-In total-order mode ``seq_in_epoch`` is the row's position in token order,
-1-based: an epoch's publish is ONE Spark job, in which a ``coalesce(1)`` and a
-sort within that one partition come before a row counter, so no Exchange is
-planned and a single task reads, serializes, sorts and writes. The NATS counts
-(and the pipeline's invalidate check) are ``Observation`` aggregates riding
-the write, in either mode.
+The sink owns the epoch's plan: ONE ``Observation`` riding the write counts
+every operation type of the batch (the four publishable counts feed the NATS
+counters, the ``invalidate`` count goes back to the pipeline), then the
+publishable events are kept and ordered. In total-order mode ``seq_in_epoch``
+is the row's position in token order, 1-based: an epoch's publish is ONE Spark
+job, in which a ``coalesce(1)`` and a sort within that one partition come
+before a row counter, so no Exchange is planned and a single task reads,
+serializes, sorts and writes.
 """
 
 from __future__ import annotations
@@ -45,7 +47,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mongodb_nats_connector_spark.config import PUBLISHABLE_OPERATION_TYPES
+from mongodb_nats_connector_spark.config import (
+    INVALIDATE_OPERATION_TYPE,
+    PUBLISHABLE_OPERATION_TYPES,
+)
 from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
 
 
@@ -75,7 +80,7 @@ class JetStreamLikeSink:
         ``nats_message_duration_seconds{subject}`` — observed once per epoch
         here (the reference observes per message; counter VALUES match).
 
-        The sequence column and the metric aggregates are built here, once:
+        The sequence column, the filter and the counts are built here, once:
         every epoch applies the same column expressions to a new batch, and
         each ``functions`` call costs round trips to the JVM."""
         self.spark = spark
@@ -91,14 +96,13 @@ class JetStreamLikeSink:
             if order_within_key
             else (F.monotonically_increasing_id() + 1).cast("int")
         )
-        # Subjects are enumerable — `<STREAM>.<operationType>` over the four
-        # publishable op types — so the NATS counts are a row of conditional
-        # counts riding the write job (no extra Spark job per epoch).
-        self._subjects = [f"{stream_name}.{op}" for op in PUBLISHABLE_OPERATION_TYPES]
-        self._subject_counts = [
-            F.count_if(F.col("subject") == s).alias(f"n_{i}")
-            for i, s in enumerate(self._subjects)
-        ] + [F.count(F.lit(1)).alias("n_total")]
+        # Operation types are enumerable, so the epoch's counts are one row
+        # of conditional counts riding the write (no extra Spark job).
+        self._publishable = F.col("operation_type").isin(*PUBLISHABLE_OPERATION_TYPES)
+        self._op_counts = [
+            F.count_if(F.col("operation_type") == op).alias(op)
+            for op in (*PUBLISHABLE_OPERATION_TYPES, INVALIDATE_OPERATION_TYPE)
+        ]
         # a distinct value per row within an epoch: a dictionary of them
         # would never be kept
         unique = ("msg_id", "data") if order_within_key else ("msg_id", "data", "seq_in_epoch")
@@ -113,9 +117,12 @@ class JetStreamLikeSink:
     def add_stream(self) -> None:
         os.makedirs(self.messages_dir, exist_ok=True)
 
-    def epoch_messages(self, batch: DataFrame) -> DataFrame:
-        """The epoch's messages as written: ``batch`` plus ``seq_in_epoch``
-        (its position in token order).
+    def epoch_messages(self, batch: DataFrame, observation: Observation) -> DataFrame:
+        """The epoch's messages as written: the publishable events of
+        ``batch`` (the stream projected by ``pipeline.change_event_columns``
+        plus ``operation_type``) without ``operation_type``, plus
+        ``seq_in_epoch`` (their position in token order). ``observation``
+        counts every operation type of the batch, the unpublished ones too.
 
         Total order (the reference's order is token order, client.go:217-257)
         coalesces to one partition and sorts it: one task reads, serializes,
@@ -124,21 +131,34 @@ class JetStreamLikeSink:
         reference's single-threaded loop. Per-key order numbers rows within
         each ``document_key``; different documents write concurrently behind
         the window's one shuffle on the key."""
+        if self.order_within_key:
+            if "document_key" not in batch.columns:
+                raise ValueError(
+                    "order_within_key sink requires a document_key column "
+                    "(change_event_columns(..., keep_document_key=True))"
+                )
+            # The window reuses this shuffle. Placing it under the
+            # observation keeps the counts when no row is publishable: AQE
+            # replaces a shuffle stage without output by an empty relation,
+            # observations inside it too.
+            batch = batch.repartition("document_key")
+        batch = (
+            batch.observe(observation, *self._op_counts)
+            .filter(self._publishable)
+            .drop("operation_type")
+        )
         if not self.order_within_key:
             batch = batch.coalesce(1).sortWithinPartitions("msg_id")
-        elif "document_key" not in batch.columns:
-            raise ValueError(
-                "order_within_key sink requires a document_key column "
-                "(transform_change_events(..., keep_document_key=True))"
-            )
         return batch.withColumn("seq_in_epoch", self._seq_in_epoch)
 
     # O9 — publish with idempotency key; called per epoch by foreachBatch.
     # An epoch without publishable rows writes an empty epoch directory: the
     # consumer view is unchanged, and no job is spent checking first.
-    def publish_batch(self, batch: DataFrame, epoch_id: int) -> None:
+    def publish_batch(self, batch: DataFrame, epoch_id: int) -> dict[str, int]:
+        """Write the epoch and meter it; returns the batch's count of each
+        operation type (``invalidate`` included)."""
         observation = Observation()
-        writer = self.epoch_messages(batch).observe(observation, *self._subject_counts)
+        writer = self.epoch_messages(batch, observation)
         t0 = time.perf_counter()
         try:
             # Epoch-keyed overwrite = replay-safe (idempotent) publish.
@@ -152,28 +172,20 @@ class JetStreamLikeSink:
             # the observation never materialized — fall back to counting
             # the failed batch directly so failure counters stay labeled
             # (rare path; one extra job only on publish failure)
-            for r in batch.groupBy("subject").agg(F.count(F.lit(1)).alias("n")).collect():
+            failed = batch.filter(self._publishable).groupBy("subject").count()
+            for r in failed.collect():
                 self.metrics.inc(
-                    "nats_messages_failed_total", {"subject": r["subject"]}, r["n"]
+                    "nats_messages_failed_total", {"subject": r["subject"]}, r["count"]
                 )
             raise
         elapsed = time.perf_counter() - t0
-        got = observation.get  # blocks until the write's listener fires
-        counted = 0
-        for i, subject in enumerate(self._subjects):
-            n = int(got[f"n_{i}"])
-            counted += n
-            if n:
-                self.metrics.inc("nats_messages_published_total", {"subject": subject}, n)
-                self.metrics.observe(
-                    "nats_message_duration_seconds", {"subject": subject}, elapsed
-                )
-        other = int(got["n_total"]) - counted
-        if other:
-            self.metrics.inc("nats_messages_published_total", {"subject": "other"}, other)
-            self.metrics.observe(
-                "nats_message_duration_seconds", {"subject": "other"}, elapsed
-            )
+        counts = observation.get  # blocks until the write's listener fires
+        for op in PUBLISHABLE_OPERATION_TYPES:
+            if counts[op]:
+                subject = {"subject": f"{self.stream_name}.{op}"}
+                self.metrics.inc("nats_messages_published_total", subject, counts[op])
+                self.metrics.observe("nats_message_duration_seconds", subject, elapsed)
+        return counts
 
     # Consumer view — dedup by msg id. The window is UNBOUNDED, mirroring
     # durable storage: strictly stronger than JetStream, which remembers a

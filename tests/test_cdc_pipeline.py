@@ -36,8 +36,8 @@ from mongodb_nats_connector_spark.sources.change_events import (
 from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
 from mongodb_nats_connector_spark.streaming.pipeline import (
     Connector,
+    PipelineHandle,
     change_event_columns,
-    transform_change_events,
 )
 from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
 
@@ -65,9 +65,9 @@ def _jobs_since(spark, group, before):
 
 
 def _projected(events, order_within_key=False):
-    """``events`` as the batch handler receives them: the stream projected
-    by ``change_event_columns`` in ``Connector.start``."""
-    _, cols = change_event_columns("COLL1", keep_document_key=order_within_key)
+    """``events`` as ``PipelineHandle.publish`` receives them: the stream
+    projected by ``change_event_columns`` in ``Connector.start``."""
+    cols = change_event_columns("COLL1", keep_document_key=order_within_key)
     return events.select(*cols, "operation_type")
 
 
@@ -363,9 +363,7 @@ def test_publish_failure_counted_per_subject(spark, tmp_path):
     sink = JetStreamLikeSink(spark, str(tmp_path / "COLL1"), "COLL1")
     os.makedirs(sink.stream_dir)
     open(sink.messages_dir, "w").close()
-    batch = transform_change_events(
-        spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), "COLL1"
-    )
+    batch = _projected(spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA))
     with pytest.raises(Exception, match="ParentNotDirectoryException"):
         sink.publish_batch(batch, 0)
 
@@ -377,23 +375,21 @@ def test_publish_failure_counted_per_subject(spark, tmp_path):
 
 def test_invalidate_detected(spark, tmp_path):
     """O6: invalidate markers are detectable for stream termination
-    (client.go:232-235): the batch handler flags a batch that carries one,
-    and only such a batch."""
+    (client.go:232-235): ``PipelineHandle.publish`` flags a batch that
+    carries one, and only such a batch."""
     sink = JetStreamLikeSink(spark, str(tmp_path / "stream"), "COLL1")
     sink.add_stream()
-    conn = Connector(spark, COLL1, {}, sink_root=str(tmp_path / "sink"))
-    publishable, _ = change_event_columns("COLL1")
     for epoch, noise in enumerate((False, True)):
-        lifecycle: dict = {}
+        handle = PipelineHandle(COLL1.collections[0], sink)
         ev = generate_change_events(spark, n_docs=2, with_noise_tail=noise)
         assert ev.filter(F.col("operation_type") == "invalidate").count() == int(noise)
-        conn._batch_handler(sink, publishable, lifecycle)(_projected(ev), epoch)
-        assert lifecycle.get("invalidated", False) is noise, f"epoch {epoch}"
+        handle.publish(_projected(ev), epoch)
+        assert handle.invalidated is noise, f"epoch {epoch}"
 
 
 @pytest.mark.parametrize("order_within_key, n_jobs", [(False, 1), (True, 2)])
 def test_invalidate_flagged_by_the_publish_job(spark, tmp_path, order_within_key, n_jobs):
-    """O6 (client.go:232-235): the handler flags a batch carrying an
+    """O6 (client.go:232-235): ``publish`` flags a batch carrying an
     invalidate marker — and not one without — also when no event of the
     batch is publishable (a dropped collection's drop + invalidate). The
     check rides the publish job: one Spark job per epoch in total-order
@@ -402,25 +398,20 @@ def test_invalidate_flagged_by_the_publish_job(spark, tmp_path, order_within_key
         spark, str(tmp_path / "stream"), "COLL1", order_within_key=order_within_key
     )
     sink.add_stream()
-    conn = Connector(
-        spark, COLL1, {}, sink_root=str(tmp_path / "sink"), order_within_key=order_within_key
-    )
     sc = spark.sparkContext
-    publishable, _ = change_event_columns("COLL1")
     cases = [(2, False, False), (2, True, True), (0, True, True)]  # docs, noise tail, flagged
     for epoch, (n_docs, noise, flagged) in enumerate(cases):
-        lifecycle: dict = {}
-        handle = conn._batch_handler(sink, publishable, lifecycle)
+        handle = PipelineHandle(COLL1.collections[0], sink)
         group = f"invalidate-check-{order_within_key}-{epoch}"
         sc.setJobGroup(group, "one epoch of the batch handler")
         try:
             batch = generate_change_events(
                 spark, n_docs=n_docs, with_noise_tail=noise, with_duplicates=False
             )
-            handle(_projected(batch, order_within_key), epoch)
+            handle.publish(_projected(batch, order_within_key), epoch)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        assert lifecycle.get("invalidated", False) is flagged, f"epoch {epoch}"
+        assert handle.invalidated is flagged, f"epoch {epoch}"
         jobs, _ = _jobs_since(spark, group, set())
         assert len(jobs) == n_jobs, f"epoch {epoch} ran {len(jobs)} jobs"
     assert sink.message_count(deduped=False) == 2 * 8  # noise never published
@@ -430,14 +421,14 @@ def test_invalidate_flagged_by_the_publish_job(spark, tmp_path, order_within_key
 def test_epoch_job_shape(spark, tmp_path, monkeypatch, order_within_key, n_jobs):
     """One epoch is one Spark job in total-order mode: the sort follows the
     ``coalesce(1)``, so the executed plan has no Exchange and one task reads,
-    serializes, sorts and writes, with the invalidate check and the NATS
-    counts riding it. Per-key mode runs two: its document_key shuffle's map
-    stage and the write."""
+    serializes, sorts and writes, with one ``Observation`` counting every
+    operation type riding it. Per-key mode runs two: its document_key
+    shuffle's map stage and the write."""
     plans: list[str] = []
     epoch_messages = JetStreamLikeSink.epoch_messages
 
-    def record(sink, batch):
-        out = epoch_messages(sink, batch)
+    def record(sink, batch, observation):
+        out = epoch_messages(sink, batch, observation)
         plans.append(out._jdf.queryExecution().executedPlan().toString())
         return out
 
@@ -468,6 +459,10 @@ def test_epoch_job_shape(spark, tmp_path, monkeypatch, order_within_key, n_jobs)
         for k, v in saved.items():
             spark.conf.set(k, v)
     assert len(jobs) == n_jobs, f"batch 1 ran {len(jobs)} jobs"
+    assert plans[-1].count("CollectMetrics") == 1, plans[-1]
+    (observed,) = [line for line in plans[-1].splitlines() if "CollectMetrics" in line]
+    for op in (*PUBLISHABLE_OPERATION_TYPES, "invalidate"):
+        assert f" AS {op}#" in observed, observed
     if order_within_key:
         assert plans[-1].count("Exchange") == 1, plans[-1]
         assert "Exchange hashpartitioning(document_key#" in plans[-1], plans[-1]
@@ -524,9 +519,7 @@ def test_epoch_directory_layout(spark, tmp_path, order_within_key):
     )
     sink.add_stream()
     events = generate_change_events(spark, n_docs=50, with_noise_tail=False)
-    sink.publish_batch(
-        transform_change_events(events, "COLL1", keep_document_key=order_within_key), 3
-    )
+    sink.publish_batch(_projected(events, order_within_key), 3)
     epoch_dir = os.path.join(sink.messages_dir, "epoch=3")
     assert not os.path.exists(os.path.join(epoch_dir, "_SUCCESS"))
     files = _parquet_files(epoch_dir)
@@ -561,9 +554,7 @@ def test_read_messages_over_old_and_new_epoch_layouts(spark, tmp_path, old_epoch
     mixed = JetStreamLikeSink(spark, str(tmp_path / "mixed"), "COLL1")
     current = JetStreamLikeSink(spark, str(tmp_path / "current"), "COLL1")
     for epoch, part in enumerate(batches):
-        batch = transform_change_events(
-            spark.createDataFrame(part, CHANGE_EVENT_SCHEMA), "COLL1"
-        )
+        batch = _projected(spark.createDataFrame(part, CHANGE_EVENT_SCHEMA))
         current.publish_batch(batch, epoch)
         if epoch != old_epoch:
             mixed.publish_batch(batch, epoch)
@@ -571,7 +562,7 @@ def test_read_messages_over_old_and_new_epoch_layouts(spark, tmp_path, old_epoch
         # the layout epochs had before: the window's 1-based token position
         # and the epoch number inside the file
         seq = F.row_number().over(Window.orderBy("msg_id"))
-        batch.coalesce(1).withColumns(
+        batch.drop("operation_type").coalesce(1).withColumns(
             {"seq_in_epoch": seq, "epoch": F.lit(epoch)}
         ).write.parquet(os.path.join(mixed.messages_dir, f"epoch={epoch}"))
 
@@ -816,16 +807,10 @@ def test_publish_failure_then_replay_no_duplicates(spark, tmp_path, order_within
     from mongodb_nats_connector_spark.sources.change_events import (
         read_change_event_stream,
     )
-    from mongodb_nats_connector_spark.streaming.pipeline import (
-        transform_change_events,
-    )
 
     def start():
         return (
-            transform_change_events(
-                read_change_event_stream(spark, feed), "COLL1",
-                keep_document_key=order_within_key,
-            )
+            _projected(read_change_event_stream(spark, feed), order_within_key)
             .writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint)
             .foreachBatch(sink.publish_batch)
@@ -906,7 +891,8 @@ def test_sink_dedup_unbounded_across_epochs(spark, tmp_path):
     sink = JetStreamLikeSink(spark, str(tmp_path / "stream"), "COLL")
     sink.add_stream()
     batch = spark.createDataFrame(
-        [("tok-1", "COLL.insert", "{}")], "msg_id string, subject string, payload string"
+        [("tok-1", "COLL.insert", "{}", "insert")],
+        "msg_id string, subject string, payload string, operation_type string",
     )
     for epoch in (0, 2, 5):
         sink.publish_batch(batch, epoch)

@@ -4,6 +4,7 @@ and internal/config/config_test.go."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
@@ -84,3 +85,46 @@ def test_from_dict_and_env_override(tmp_path, monkeypatch):
     assert cfg.collections[0].stream_name == "COLL1"
     assert cfg.collections[1].stream_name == "CUSTOM"
     assert cfg.mongo_uri == "mongodb://other:27017"
+
+
+def _one_collection(**fields):
+    return json.dumps({"collections": [{"dbName": "db1", "collName": "coll1", **fields}]})
+
+
+@pytest.mark.parametrize(
+    "text, field",
+    [
+        ("", "config"),  # an empty YAML file
+        ("- dbName: db1\n  collName: coll1\n", "config"),
+        ("connector: db1.coll1\n", "connector"),
+        ("connector:\n  collections:\n", "collections"),
+        ("connector:\n  collections:\n    - db1.coll1\n", "collections[0]"),
+        (_one_collection(tokensCollSizeInBytes="lots"), "collections[0].tokensCollSizeInBytes"),
+        (
+            _one_collection(tokensCollCapped=True, tokensCollSizeInBytes=True),
+            "collections[0].tokensCollSizeInBytes",
+        ),
+        (
+            _one_collection(tokensCollCapped="false", tokensCollSizeInBytes=4096),
+            "collections[0].tokensCollCapped",
+        ),
+    ],
+    ids=[
+        "empty-file",
+        "top-level-list",
+        "connector-string",
+        "collections-empty",
+        "collection-string",
+        "size-string",
+        "size-bool",
+        "capped-string",
+    ],
+)
+def test_malformed_config_raises_config_error(tmp_path, text, field):
+    """A config whose shape or field types are wrong fails to load with a
+    ``ConfigError`` naming the field, not a bare Python error or a silent
+    misreading (a quoted ``"false"`` is not a capped collection)."""
+    path = tmp_path / "connector.yaml"
+    path.write_text(text)
+    with pytest.raises(ConfigError, match=re.escape(field) + " must be"):
+        ConnectorConfig.load(str(path))

@@ -234,6 +234,13 @@ def test_healthz_status_codes():
         assert err.value.code == 503
         assert err.value.headers["Content-Type"] == "application/json"
         assert json.loads(err.value.read()) == down
+        # routes ignore the query string
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(url + "?verbose=1", timeout=10)
+        assert err.value.code == 503
+        metrics = f"http://127.0.0.1:{server.port}/metrics?x=1"
+        with urllib.request.urlopen(metrics, timeout=10) as resp:
+            assert resp.status == 200
 
         def broken():
             raise RuntimeError("status store unreachable")
@@ -246,6 +253,17 @@ def test_healthz_status_codes():
         assert json.loads(err.value.read()) == {"error": "status store unreachable"}
     finally:
         server.stop()
+
+
+def test_prometheus_label_values_escaped():
+    """Label values are escaped as the text exposition format requires, so a
+    stream name holding a quote, a backslash or a line feed still renders a
+    line a scraper parses."""
+    registry = MetricsRegistry()
+    registry.inc("nats_messages_published_total", {"subject": 'A"B\\C\nD.insert'}, 2)
+    assert registry.render_prometheus() == (
+        'nats_messages_published_total{subject="A\\"B\\\\C\\nD.insert"} 2\n'
+    )
 
 
 def test_stream_static_enrichment_join(spark, events_feed):
