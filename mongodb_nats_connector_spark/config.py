@@ -114,19 +114,23 @@ class ConnectorConfig:
         for i, c in enumerate(_checked(conn.get("collections", []), list, "collections")):
             where = f"collections[{i}]"
             _checked(c, dict, where)
+
+            def text(key, default=""):
+                return _checked(c.get(key, default), str, f"{where}.{key}")
+
             colls.append(
                 CollectionConfig(
-                    db_name=c.get("dbName", ""),
-                    coll_name=c.get("collName", ""),
-                    tokens_db_name=c.get("tokensDbName", "resume-tokens"),
-                    tokens_coll_name=c.get("tokensCollName", ""),
+                    db_name=text("dbName"),
+                    coll_name=text("collName"),
+                    tokens_db_name=text("tokensDbName", "resume-tokens"),
+                    tokens_coll_name=text("tokensCollName"),
                     tokens_coll_capped=_checked(
                         c.get("tokensCollCapped", False), bool, f"{where}.tokensCollCapped"
                     ),
                     tokens_coll_size_in_bytes=_checked(
                         c.get("tokensCollSizeInBytes", 0), int, f"{where}.tokensCollSizeInBytes"
                     ),
-                    stream_name=c.get("streamName", ""),
+                    stream_name=text("streamName"),
                 )
             )
         cfg = ConnectorConfig(collections=colls)
@@ -150,7 +154,9 @@ class ConnectorConfig:
         return ConnectorConfig.from_dict(d)
 
 
-_KIND_NAMES = {dict: "a mapping", list: "a list", bool: "true or false", int: "an integer"}
+_KIND_NAMES = {
+    dict: "a mapping", list: "a list", bool: "true or false", int: "an integer", str: "a string"
+}
 
 
 def _checked(value, kind: type, field: str):

@@ -85,9 +85,11 @@ def envelope_to_extjson() -> Column:
         F.coalesce(F.col("full_document_before_change"), F.lit("null")),
         F.lit(',"ns":{"db":"'),
         F.col("ns_db"),
-        F.lit('","coll":"'),
-        F.col("ns_coll"),
-        F.lit('"},"documentKey":{"_id":'),
+        F.lit('","coll":'),
+        # a collection name may hold " and \: emit it as a JSON string
+        # literal, to_json of a one-element array without its brackets
+        F.btrim(F.to_json(F.array(F.col("ns_coll"))), F.lit("[]")),
+        F.lit('},"documentKey":{"_id":'),
         ext_oid(F.col("document_key_id")),
         F.lit("}}"),
     ]

@@ -15,7 +15,7 @@ import json
 import threading
 import urllib.parse
 from collections import defaultdict
-from http.server import BaseHTTPRequestHandler, HTTPServer
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.streaming.listener import JStreamingQueryListener, QueryProgressEvent
@@ -162,6 +162,8 @@ class ObservabilityServer:
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
+            timeout = 10  # s; an idle connection's thread then ends
+
             def do_GET(self):  # noqa: N802
                 path = urllib.parse.urlsplit(self.path).path
                 try:
@@ -187,7 +189,8 @@ class ObservabilityServer:
             def log_message(self, *a):  # silence request logging
                 pass
 
-        self.server = HTTPServer((addr, port), Handler)
+        # a thread per request, so an idle client cannot block /healthz
+        self.server = ThreadingHTTPServer((addr, port), Handler)
         self.port = self.server.server_address[1]
         self._thread: threading.Thread | None = None
 

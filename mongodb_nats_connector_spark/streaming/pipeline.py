@@ -27,23 +27,23 @@ serve loop's ``await_any_termination``) — the reference's watch loop likewise
 returns on an invalidate (client.go:232-235).
 
 Cost per epoch: the transform (O4, O7, O8) is part of the streaming query
-itself — ``Connector.start`` projects the stream once, so Spark analyses the
-ExtJSON ``concat`` tree once at query start and hands each epoch a planned
-RDD. ``PipelineHandle.publish`` is the whole ``foreachBatch`` body: the sink
-owns the epoch's plan, counting every operation type in one ``Observation``
-that rides its write, then filtering to the publishable events (O5) and
-ordering them. In total-order mode the sink sorts within its ``coalesce(1)``,
-so no Exchange is planned and the epoch is ONE Spark job; per-key mode adds
-the map stage of its shuffle on the document key. No per-epoch value is a
-literal in any plan, so the generated code of one epoch is reused by the next
-instead of recompiled.
+itself — ``Connector.start`` applies the sink's projection to the stream once,
+so Spark analyses the ExtJSON ``concat`` tree once at query start and hands
+each epoch a planned RDD. ``PipelineHandle.publish`` is the whole
+``foreachBatch`` body: the sink owns the epoch's plan, counting every
+operation type in one ``Observation`` that rides its write, then filtering to
+the publishable events (O5) and ordering them. In total-order mode the sink
+sorts within its ``coalesce(1)``, so no Exchange is planned and the epoch is
+ONE Spark job; per-key mode adds the map stage of its shuffle on the document
+key. No per-epoch value is a literal in any plan, so the generated code of one
+epoch is reused by the next instead of recompiled.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -53,28 +53,9 @@ from mongodb_nats_connector_spark.config import (
     CollectionConfig,
     ConnectorConfig,
 )
-from mongodb_nats_connector_spark.functions.extjson import envelope_to_extjson
 from mongodb_nats_connector_spark.sources.change_events import read_change_event_stream
 from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
-from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
-
-
-def change_event_columns(stream_name: str, keep_document_key: bool = False) -> list[Column]:
-    """O4, O7, O8 as column expressions: the message projection — msg id,
-    routing subject (O8), relaxed-ExtJSON body (O7), cluster time and, for the
-    sink's per-key-ordered mode, the document key. ``Connector.start`` applies
-    them to the stream, once per pipeline."""
-    cols = [
-        F.col("_id_data").alias("msg_id"),  # Nats-Msg-Id (nats/client.go:124)
-        F.concat(
-            F.lit(stream_name), F.lit("."), F.col("operation_type")
-        ).alias("subject"),
-        envelope_to_extjson().alias("data"),
-        F.col("cluster_time"),
-    ]
-    if keep_document_key:
-        cols.append(F.col("document_key_id").alias("document_key"))
-    return cols
+from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink, message_columns
 
 
 def transform_change_events(
@@ -89,7 +70,7 @@ def transform_change_events(
     key through for the sink's per-key-ordered mode.
     """
     return events.filter(F.col("operation_type").isin(*PUBLISHABLE_OPERATION_TYPES)).select(
-        *change_event_columns(stream_name, keep_document_key)
+        *message_columns(stream_name, keep_document_key)
     )
 
 
@@ -161,10 +142,7 @@ class Connector:
                 metrics=self.metrics,
             )
             sink.add_stream()  # DDL bootstrap, idempotent (O13)
-            cols = change_event_columns(coll.stream_name, keep_document_key=self.order_within_key)
-            events = read_change_event_stream(self.spark, self.source_paths[key]).select(
-                *cols, "operation_type"
-            )
+            events = sink.messages(read_change_event_stream(self.spark, self.source_paths[key]))
             checkpoint = f"{self.sink_root}/checkpoints/{coll.checkpoint_name}"
             handle = PipelineHandle(coll, sink)
             handle.query = (

@@ -27,14 +27,15 @@ within an epoch (but for a replayed token), and so does ``seq_in_epoch`` in
 total order, so they are written without a dictionary, which parquet would
 build and then drop; ``subject`` keeps one.
 
-The sink owns the epoch's plan: ONE ``Observation`` riding the write counts
-every operation type of the batch (the four publishable counts feed the NATS
-counters, the ``invalidate`` count goes back to the pipeline), then the
-publishable events are kept and ordered. In total-order mode ``seq_in_epoch``
-is the row's position in token order, 1-based: an epoch's publish is ONE Spark
-job, in which a ``coalesce(1)`` and a sort within that one partition come
-before a row counter, so no Exchange is planned and a single task reads,
-serializes, sorts and writes.
+The sink owns the message from projection to read: ``messages`` projects the
+change-event stream (O4, O7, O8) once per query. In each epoch ONE
+``Observation`` riding the write counts every operation type of the batch (the
+four publishable counts feed the NATS counters, the ``invalidate`` count goes
+back to the pipeline), then the publishable events are kept and ordered. In
+total-order mode ``seq_in_epoch`` is the row's position in token order,
+1-based: an epoch's publish is ONE Spark job, in which a ``coalesce(1)`` and a
+sort within that one partition come before a row counter, so no Exchange is
+planned and a single task reads, serializes, sorts and writes.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ import glob
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -51,7 +52,23 @@ from mongodb_nats_connector_spark.config import (
     INVALIDATE_OPERATION_TYPE,
     PUBLISHABLE_OPERATION_TYPES,
 )
+from mongodb_nats_connector_spark.functions.extjson import envelope_to_extjson
 from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
+
+
+def message_columns(stream_name: str, keep_document_key: bool = False) -> list[Column]:
+    """O4, O7, O8 as column expressions: the message projection — msg id,
+    routing subject (O8), relaxed-ExtJSON body (O7), cluster time and, for the
+    per-key-ordered mode, the document key."""
+    cols = [
+        F.col("_id_data").alias("msg_id"),  # Nats-Msg-Id (nats/client.go:124)
+        F.concat(F.lit(stream_name), F.lit("."), F.col("operation_type")).alias("subject"),
+        envelope_to_extjson().alias("data"),
+        F.col("cluster_time"),
+    ]
+    if keep_document_key:
+        cols.append(F.col("document_key_id").alias("document_key"))
+    return cols
 
 
 class JetStreamLikeSink:
@@ -70,7 +87,7 @@ class JetStreamLikeSink:
         ``document_key`` only (the guarantee consumers actually rely on —
         NATS subjects partition by document anyway), the epoch writes with
         full partition parallelism, and ``seq_in_epoch`` numbers within the
-        key. Requires the batch to carry a ``document_key`` column.
+        key, which the sink's projection carries through.
 
         ``metrics`` (a ``streaming.observability.MetricsRegistry``; None: a
         fresh one) receives the reference's NATS exposition
@@ -80,15 +97,17 @@ class JetStreamLikeSink:
         ``nats_message_duration_seconds{subject}`` — observed once per epoch
         here (the reference observes per message; counter VALUES match).
 
-        The sequence column, the filter and the counts are built here, once:
-        every epoch applies the same column expressions to a new batch, and
-        each ``functions`` call costs round trips to the JVM."""
+        The projection, sequence column, filter and counts are built here,
+        once: every epoch applies the same column expressions to a new batch,
+        and each ``functions`` call costs round trips to the JVM."""
         self.spark = spark
         self.stream_dir = stream_dir
         self.stream_name = stream_name
         self.order_within_key = order_within_key
         self.metrics = MetricsRegistry() if metrics is None else metrics
         self.messages_dir = os.path.join(stream_dir, "messages")
+        # the message columns plus the type each epoch counts and filters on
+        self._columns = [*message_columns(stream_name, order_within_key), "operation_type"]
         # Total order numbers the rows of the single sorted partition; per-key
         # order numbers them within each document key.
         self._seq_in_epoch = (
@@ -117,10 +136,14 @@ class JetStreamLikeSink:
     def add_stream(self) -> None:
         os.makedirs(self.messages_dir, exist_ok=True)
 
+    def messages(self, events: DataFrame) -> DataFrame:
+        """Change events (a stream or a batch) as this sink's messages plus
+        ``operation_type``: the batches ``publish_batch`` takes."""
+        return events.select(*self._columns)
+
     def epoch_messages(self, batch: DataFrame, observation: Observation) -> DataFrame:
         """The epoch's messages as written: the publishable events of
-        ``batch`` (the stream projected by ``pipeline.change_event_columns``
-        plus ``operation_type``) without ``operation_type``, plus
+        ``batch`` (projected by ``messages``) without ``operation_type``, plus
         ``seq_in_epoch`` (their position in token order). ``observation``
         counts every operation type of the batch, the unpublished ones too.
 
@@ -132,11 +155,6 @@ class JetStreamLikeSink:
         each ``document_key``; different documents write concurrently behind
         the window's one shuffle on the key."""
         if self.order_within_key:
-            if "document_key" not in batch.columns:
-                raise ValueError(
-                    "order_within_key sink requires a document_key column "
-                    "(change_event_columns(..., keep_document_key=True))"
-                )
             # The window reuses this shuffle. Placing it under the
             # observation keeps the counts when no row is publishable: AQE
             # replaces a shuffle stage without output by an empty relation,

@@ -34,11 +34,7 @@ from mongodb_nats_connector_spark.sources.change_events import (
     write_change_event_feed,
 )
 from mongodb_nats_connector_spark.streaming.observability import MetricsRegistry
-from mongodb_nats_connector_spark.streaming.pipeline import (
-    Connector,
-    PipelineHandle,
-    change_event_columns,
-)
+from mongodb_nats_connector_spark.streaming.pipeline import Connector, PipelineHandle
 from mongodb_nats_connector_spark.streaming.sink import JetStreamLikeSink
 
 COLL1 = ConnectorConfig(
@@ -62,13 +58,6 @@ def _jobs_since(spark, group, before):
     jobs = [tracker.getJobInfo(j) for j in set(tracker.getJobIdsForGroup(group)) - before]
     stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
     return jobs, stages
-
-
-def _projected(events, order_within_key=False):
-    """``events`` as ``PipelineHandle.publish`` receives them: the stream
-    projected by ``change_event_columns`` in ``Connector.start``."""
-    cols = change_event_columns("COLL1", keep_document_key=order_within_key)
-    return events.select(*cols, "operation_type")
 
 
 def _connector(spark, tmp_path, n_docs=10, **feed_kw):
@@ -363,7 +352,7 @@ def test_publish_failure_counted_per_subject(spark, tmp_path):
     sink = JetStreamLikeSink(spark, str(tmp_path / "COLL1"), "COLL1")
     os.makedirs(sink.stream_dir)
     open(sink.messages_dir, "w").close()
-    batch = _projected(spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA))
+    batch = sink.messages(spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA))
     with pytest.raises(Exception, match="ParentNotDirectoryException"):
         sink.publish_batch(batch, 0)
 
@@ -383,7 +372,7 @@ def test_invalidate_detected(spark, tmp_path):
         handle = PipelineHandle(COLL1.collections[0], sink)
         ev = generate_change_events(spark, n_docs=2, with_noise_tail=noise)
         assert ev.filter(F.col("operation_type") == "invalidate").count() == int(noise)
-        handle.publish(_projected(ev), epoch)
+        handle.publish(sink.messages(ev), epoch)
         assert handle.invalidated is noise, f"epoch {epoch}"
 
 
@@ -408,7 +397,7 @@ def test_invalidate_flagged_by_the_publish_job(spark, tmp_path, order_within_key
             batch = generate_change_events(
                 spark, n_docs=n_docs, with_noise_tail=noise, with_duplicates=False
             )
-            handle.publish(_projected(batch, order_within_key), epoch)
+            handle.publish(sink.messages(batch), epoch)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert handle.invalidated is flagged, f"epoch {epoch}"
@@ -519,7 +508,7 @@ def test_epoch_directory_layout(spark, tmp_path, order_within_key):
     )
     sink.add_stream()
     events = generate_change_events(spark, n_docs=50, with_noise_tail=False)
-    sink.publish_batch(_projected(events, order_within_key), 3)
+    sink.publish_batch(sink.messages(events), 3)
     epoch_dir = os.path.join(sink.messages_dir, "epoch=3")
     assert not os.path.exists(os.path.join(epoch_dir, "_SUCCESS"))
     files = _parquet_files(epoch_dir)
@@ -554,7 +543,7 @@ def test_read_messages_over_old_and_new_epoch_layouts(spark, tmp_path, old_epoch
     mixed = JetStreamLikeSink(spark, str(tmp_path / "mixed"), "COLL1")
     current = JetStreamLikeSink(spark, str(tmp_path / "current"), "COLL1")
     for epoch, part in enumerate(batches):
-        batch = _projected(spark.createDataFrame(part, CHANGE_EVENT_SCHEMA))
+        batch = current.messages(spark.createDataFrame(part, CHANGE_EVENT_SCHEMA))
         current.publish_batch(batch, epoch)
         if epoch != old_epoch:
             mixed.publish_batch(batch, epoch)
@@ -694,18 +683,24 @@ def test_message_count_zero_only_before_first_epoch(spark, tmp_path):
 
 def test_extjson_envelope_roundtrip(spark):
     """O7 fidelity: serialize the envelope to relaxed ExtJSON and parse the
-    typed fields back out ($oid / $date / $timestamp), insert_test.go:45-52."""
+    typed fields back out ($oid / $date / $timestamp), insert_test.go:45-52.
+    A collection name holding a quote and a backslash (MongoDB allows both)
+    is escaped, so the body still parses and names the collection."""
     ev = generate_change_events(spark, n_docs=3, with_noise_tail=False, with_duplicates=False)
+    ev = ev.unionByName(ev.limit(1).withColumn("ns_coll", F.lit('we"ird\\coll')))
     doc = ev.select(
         "_id_data",
         "document_key_id",
         "wall_time",
+        "ns_coll",
         envelope_to_extjson().alias("j"),
     )
     parsed = doc.select(
         "_id_data",
         "document_key_id",
         "wall_time",
+        "ns_coll",
+        "j",
         F.get_json_object("j", "$._id._data").alias("token"),
         F.get_json_object("j", "$.documentKey._id.$oid").alias("oid"),
         F.to_timestamp(F.get_json_object("j", "$.wallTime.$date")).alias("wall"),
@@ -714,6 +709,7 @@ def test_extjson_envelope_roundtrip(spark):
         assert r.token == r._id_data
         assert r.oid == r.document_key_id
         assert r.wall == r.wall_time
+        assert json.loads(r.j)["ns"]["coll"] == r.ns_coll
 
 
 def test_multi_pipeline_fanout(spark, tmp_path):
@@ -810,7 +806,7 @@ def test_publish_failure_then_replay_no_duplicates(spark, tmp_path, order_within
 
     def start():
         return (
-            _projected(read_change_event_stream(spark, feed), order_within_key)
+            sink.messages(read_change_event_stream(spark, feed))
             .writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint)
             .foreachBatch(sink.publish_batch)

@@ -108,6 +108,9 @@ def _one_collection(**fields):
             _one_collection(tokensCollCapped="false", tokensCollSizeInBytes=4096),
             "collections[0].tokensCollCapped",
         ),
+        (_one_collection(collName=123), "collections[0].collName"),
+        (_one_collection(streamName=7), "collections[0].streamName"),
+        (_one_collection(dbName=["x"]), "collections[0].dbName"),
     ],
     ids=[
         "empty-file",
@@ -118,6 +121,9 @@ def _one_collection(**fields):
         "size-string",
         "size-bool",
         "capped-string",
+        "coll-int",
+        "stream-int",
+        "db-list",
     ],
 )
 def test_malformed_config_raises_config_error(tmp_path, text, field):

@@ -4,6 +4,7 @@ stateful per-key processing, and observability endpoints."""
 from __future__ import annotations
 
 import json
+import socket
 import time
 import urllib.request
 import uuid
@@ -251,6 +252,28 @@ def test_healthz_status_codes():
         assert err.value.code == 500
         assert err.value.headers["Content-Type"] == "application/json"
         assert json.loads(err.value.read()) == {"error": "status store unreachable"}
+    finally:
+        server.stop()
+
+
+def test_healthz_answers_beside_an_idle_client():
+    """A client that connects and sends nothing does not hold up /healthz:
+    each request is served on its own thread, and the server closes the idle
+    connection once its handler's socket timeout passes, ending that thread."""
+    up = {"status": "UP", "components": []}
+    server = ObservabilityServer(health_fn=lambda: up, registry=MetricsRegistry())
+    handler = server.server.RequestHandlerClass
+    assert handler.timeout, "an idle connection must time out"
+    handler.timeout = 0.5  # the same mechanism, without a 10 s wait
+    server.start()
+    try:
+        with socket.create_connection(("127.0.0.1", server.port)) as idle:
+            url = f"http://127.0.0.1:{server.port}/healthz"
+            with urllib.request.urlopen(url, timeout=3) as resp:
+                assert resp.status == 200
+                assert json.loads(resp.read()) == up
+            idle.settimeout(5)
+            assert idle.recv(1) == b""  # closed by the server
     finally:
         server.stop()
 
